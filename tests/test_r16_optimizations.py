@@ -7,22 +7,9 @@ tests/test_r15_optimizations.py.
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 from wri_data_processing_spark.queries.llm_pipeline import _bpe_loop
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("r16-opt-tests")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    yield s
 
 
 def _sequential_bpe(syms, rounds: int, rewrite_last: bool):
@@ -98,14 +85,14 @@ def _assert_same(spark, words, rounds=5, rewrite_last=True):
     assert fin_new == fin_old
 
 
-def test_bpe_fold_matches_sequential_on_real_corpus(spark, sf_dir=None):
+def test_bpe_fold_matches_sequential_on_real_corpus(spark, sf_dir):
     """Real testdata words (sf0.001 vocabulary): the fold certificate fires
     on this distribution (probed), so this replays the FOLDED path against
     the sequential loop end to end."""
     from wri_data_processing_spark.catalog import table
     from wri_data_processing_spark.queries.llm_pipeline import _bpe_word_syms
 
-    d = table(spark, "/root/testdata/sf0.001", "documents")
+    d = table(spark, sf_dir, "documents")
     syms = _bpe_word_syms(d)
     m_new, s_new = _bpe_loop(syms, 5, rewrite_last=True)
     m_old, s_old = _sequential_bpe(syms, 5, rewrite_last=True)
@@ -130,6 +117,14 @@ def test_bpe_fold_certificate_handles_self_pair(spark):
     trajectories agree."""
     words = [("xxxx", 50), ("xxy", 20), ("ab", 60), ("cd", 41)]
     _assert_same(spark, words, rounds=3)
+
+
+def test_bpe_fold_certificate_rejects_self_pair_winner(spark):
+    """(a, a) winner: merging it creates (aa, aa), whose count (100 here)
+    is bounded only by the winner's own and outranks the runner-up (x, y)
+    at 60 — folding (x, y) into the same round would skip it. The
+    certificate must refuse to fold after a self-pair."""
+    _assert_same(spark, [("aaaa", 100), ("xy", 60)], rounds=3)
 
 
 def test_bpe_fold_certificate_handles_merged_symbol_reuse(spark):

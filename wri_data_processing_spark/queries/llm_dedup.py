@@ -1724,6 +1724,8 @@ def dedup_substring_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def winnow_fingerprint_coverage(d: DataFrame, k: int, w: int) -> DataFrame:
     """Per-doc (n_fingerprints, n_dup_fingerprints) over winnowed local-min
     window hashes; a fingerprint is dup when shared by >= 2 distinct docs."""
+    if w < 2:  # least() needs at least two arguments
+        raise ValueError(f"winnow window w={w} must be >= 2")
     d = d.filter(F.length("text") >= k + w - 1)
     hs = F.transform(
         F.sequence(F.lit(1), F.length("text") - (k - 1)),

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def get_spark(
     app_name: str = "wri-data-processing-spark",
@@ -51,6 +53,16 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/wri_spark_warehouse"),
         )
+        # Generated-class cache (static, JVM-wide; Spark's default is 100).
+        # A warm session reuses its compiled classes only if the working set
+        # fits: the first pass of one session compiles 111 distinct classes
+        # for the single-plan benchmark ops, 188 for the iterative ones and
+        # about 820 for bench.py's 38-op headline (sf0.01). At 100 entries
+        # (LRU) the iterative ops recompiled ~181 classes every warm pass,
+        # 0.9-1.3 s of Janino time, and a second headline pass 965; at 2000
+        # they recompile only AQE plan variants not met before (0-26). The
+        # cost is ~5 MB of metaspace after a headline pass (175 vs 170 MB).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         # No carriage-return progress bars on stderr: they pollute captured
         # bench/driver output with nondeterministic noise.
