@@ -295,7 +295,8 @@ def main() -> None:
         ) if pairgen > 0 else 0.0
         detail["dedup_clusters"]["propagation_sec"] = round(max(0.0, residual), 3)
         detail["dedup_clusters"]["propagation_residual_sec"] = round(residual, 3)
-        detail["dedup_clusters"]["propagation_rounds"] = llm_dedup.LAST_PROPAGATION_ROUNDS
+        _labels, rounds = llm_dedup.propagate_min_labels(llm_dedup.cluster_edges(spark, sf_dir))
+        detail["dedup_clusters"]["propagation_rounds"] = rounds
 
     # Same split for the duplication-invariant variant: its pairgen half adds
     # the digest collapse + star edges on top of the rep-space shingle join.
@@ -416,7 +417,7 @@ def main() -> None:
                 .select("doc_id")
             )
             surv = doc.join(keep, "doc_id", "left_semi")
-            return _lm_xent(surv).join(surv.select("doc_id", "lang"), "doc_id")
+            return _lm_xent(surv, passengers=("lang",), share_dt=True)
 
         from pyspark.sql import functions as F_bench
 

@@ -225,20 +225,20 @@ def test_spread_small_scan_skips_post_shuffle_inputs(spark):
     no exchange; pure scans keep the under-parallelism respread."""
     from pyspark.sql import functions as F
 
-    from wri_data_processing_spark.queries.llm_dedup import _spread_small_scan
+    from wri_data_processing_spark.functions.text import spread_small_scan
 
     scan = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     agg = scan.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     # Aggregated input: returned as-is (identical plan object semantics)
-    assert _spread_small_scan(agg) is agg
+    assert spread_small_scan(agg) is agg
     # Scan input on a single split: respread across cores
-    spread = _spread_small_scan(scan.select("doc_id", "text"))
+    spread = spread_small_scan(scan.select("doc_id", "text"))
     plan = spread._jdf.queryExecution().optimizedPlan().toString()
     assert "Repartition" in plan or spread is not scan
 
 
 def test_logical_node_walk_sees_stable_class_names(spark):
-    """Pin the node-class-name contract the _spread_small_scan gate relies
+    """Pin the node-class-name contract the spread_small_scan gate relies
     on (VERDICT r5 item 4): if a Spark upgrade renames the Aggregate / Join /
     Sort / Window / RepartitionByExpression case classes, THIS test fails
     loudly instead of the gate silently re-enabling the probe on post-shuffle
@@ -246,10 +246,10 @@ def test_logical_node_walk_sees_stable_class_names(spark):
     input untouched (the no-execution arm), never probe."""
     from pyspark.sql import functions as F
 
-    from wri_data_processing_spark.queries import llm_dedup
-    from wri_data_processing_spark.queries.llm_dedup import (
-        _logical_node_names,
-        _spread_small_scan,
+    from wri_data_processing_spark.functions import text
+    from wri_data_processing_spark.functions.text import (
+        logical_node_names,
+        spread_small_scan,
     )
 
     scan = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -268,21 +268,21 @@ def test_logical_node_walk_sees_stable_class_names(spark):
     }
     for expected, df in cases.items():
         expected = expected.strip()
-        names = _logical_node_names(df)
+        names = logical_node_names(df)
         assert any(n.startswith(expected) for n in names), (expected, names)
-        assert _spread_small_scan(df) is df, expected
+        assert spread_small_scan(df) is df, expected
     # Pure scan: no shuffle-family node in the walk.
-    names = _logical_node_names(scan.select("doc_id", "text"))
+    names = logical_node_names(scan.select("doc_id", "text"))
     assert not any(
-        n.startswith(p) for n in names for p in llm_dedup._SHUFFLE_NODE_PREFIXES
+        n.startswith(p) for n in names for p in text.SHUFFLE_NODE_PREFIXES
     ), names
     # Fail-safe arm: a broken walker passes the frame through untouched.
-    orig = llm_dedup._logical_node_names
-    llm_dedup._logical_node_names = lambda d: (_ for _ in ()).throw(RuntimeError("py4j"))
+    orig = text.logical_node_names
+    text.logical_node_names = lambda d: (_ for _ in ()).throw(RuntimeError("py4j"))
     try:
-        assert _spread_small_scan(scan) is scan
+        assert spread_small_scan(scan) is scan
     finally:
-        llm_dedup._logical_node_names = orig
+        text.logical_node_names = orig
 
 
 def test_dedup_substring_exchanges_carry_keys_not_text(spark, sf_dir):
@@ -312,13 +312,13 @@ def test_geo_focal_mean_scatter_single_exchange(spark, sf_dir):
 def test_logical_node_walk_recurses_into_subqueries(spark):
     """ADVICE r6: an Aggregate living inside a scalar-subquery expression is
     invisible to a children()-only walk; the subqueries() recursion must
-    surface it so _spread_small_scan never runs its partition probe (which
+    surface it so spread_small_scan never runs its partition probe (which
     would EXECUTE the subquery stage) on such plans."""
     from pyspark.sql import functions as F
 
-    from wri_data_processing_spark.queries.llm_dedup import (
-        _logical_node_names,
-        _spread_small_scan,
+    from wri_data_processing_spark.functions.text import (
+        logical_node_names,
+        spread_small_scan,
     )
 
     scan = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -327,9 +327,9 @@ def test_logical_node_walk_recurses_into_subqueries(spark):
         "SELECT doc_id, text FROM docs_subq_probe "
         "WHERE n_chars > (SELECT AVG(n_chars) FROM docs_subq_probe)"
     )
-    names = _logical_node_names(df)
+    names = logical_node_names(df)
     assert any(n.startswith("Aggregate") for n in names), names
-    assert _spread_small_scan(df) is df
+    assert spread_small_scan(df) is df
 
 
 def test_reservoir_sample_is_take_ordered(spark, sf_dir):
@@ -604,7 +604,7 @@ def test_pii_prevalence_single_shuffle(spark, sf_dir):
 def test_privacy_pipeline_single_shuffle(spark, sf_dir):
     """The 8th flagship's composition contract: detect + redact + verify
     fuse into the scan stage; the ONLY exchanges are the source rollup
-    (+ its ORDER BY range partitioning) and, r16, the _spread_small_scan
+    (+ its ORDER BY range partitioning) and, r16, the spread_small_scan
     repartition of the single-split LOCAL scan (doc-sized rows before the
     regex passes; skipped at real scale). No Python, no join."""
     plan = _plan(spark, sf_dir, "privacy_pipeline")
@@ -686,7 +686,7 @@ def test_r15_lang_id_single_doc_exchange(spark, sf_dir):
     first(lang), because a first() string buffer forces SortAggregate,
     which SORTS every exploded trigram row per partition (measured 22%
     slower). No joins, no Python nodes. r16: a second exchange is allowed
-    — the _spread_small_scan repartition of the single-split LOCAL scan
+    — the spread_small_scan repartition of the single-split LOCAL scan
     (doc-sized rows, before the explode; skipped at real scale), which
     parallelizes the per-trigram sha projection."""
     plan = _plan(spark, sf_dir, "text_lang_id_multi")
@@ -759,7 +759,7 @@ def test_hybrid_rrf_no_data_shuffle(spark, sf_dir):
 
 def test_bleu_one_gram_shuffle(spark, sf_dir):
     """eval_bleu (r14): the ONLY data-sized exchanges are the deliberate
-    _spread_small_scan repartition and the one (pair, n, h) count shuffle —
+    spread_small_scan repartition and the one (pair, n, h) count shuffle —
     cand and ref counts are conditional sums in the SAME aggregate, so
     there is no cand-vs-ref join of any kind; the corpus fold is a
     single-partition 1-row aggregate."""
@@ -774,7 +774,7 @@ def test_bleu_one_gram_shuffle(spark, sf_dir):
 def test_chrf_one_gram_shuffle(spark, sf_dir):
     """eval_chrf (r15): identical topology contract to eval_bleu at
     character grain — the only data-sized exchanges are the deliberate
-    _spread_small_scan repartition and the one (pair, n, h) count shuffle;
+    spread_small_scan repartition and the one (pair, n, h) count shuffle;
     both sides' counts are conditional sums in the SAME aggregate (no
     cand-vs-ref join); per-n and 1-row folds are bounded."""
     plan = _plan(spark, sf_dir, "eval_chrf")
@@ -811,7 +811,7 @@ def test_distinct_n_no_joins(spark, sf_dir):
 
 def test_cer_one_pair_shuffle_no_python(spark, sf_dir):
     """eval_cer (r15): the only data-sized exchanges are the deliberate
-    _spread_small_scan repartition and ONE (pair) groupBy carrying the
+    spread_small_scan repartition and ONE (pair) groupBy carrying the
     paired texts (map-side partial MAX); the O(L^2) Levenshtein DP is the
     built-in JVM expression inside the post-shuffle project — no joins,
     no windows, no Python, 1-row finish."""

@@ -28,6 +28,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import (
+    gram_key,
+    spread_small_scan,
+    word_ngrams,
+    ws_tokens,
+)
 from wri_data_processing_spark.registry import query
 
 # Threshold kept as an exact rational (3/5) so the pair-generation length
@@ -38,84 +44,6 @@ from wri_data_processing_spark.registry import query
 _JT_NUM, _JT_DEN = 3, 5
 _JACCARD_THRESHOLD = _JT_NUM / _JT_DEN  # same double the old 0.6 literal produced
 _MAX_DF = 1000  # document-frequency cap on shingles (scale guard)
-
-
-# Logical node CLASS-NAME prefixes whose presence means the input is
-# post-shuffle (its output parallelism is spark.sql.shuffle.partitions, not
-# file splits) AND that an rdd partition probe would EXECUTE under AQE
-# (df.rdd materializes upstream query stages as a real job — ADVICE r4).
-# Prefixes cover the case-class families: Repartition/RepartitionByExpression/
-# RebalancePartitions, Deduplicate/DeduplicateWithinWatermark, etc.
-_SHUFFLE_NODE_PREFIXES = (
-    "Aggregate",
-    "Join",
-    "Repartition",
-    "Rebalance",
-    "Window",
-    "Deduplicate",
-    "Sort",
-    "Expand",
-)
-
-
-def _logical_node_names(d: DataFrame) -> list[str]:
-    """Class simple-names of every node in the optimized logical plan.
-
-    A JVM-side tree walk (children() recursion over the Catalyst TreeNode) —
-    no execution, no string rendering. Sturdier than matching
-    ``optimizedPlan().toString()``: the rendered text interleaves expression
-    strings, so a column literally named "Sort..." would false-positive a
-    substring probe, and plan-text formatting shifts across Spark versions
-    while case-class names are the stable public surface (VERDICT r5 item 4).
-
-    Recurses into ``subqueries()`` as well as ``children()``: a plan whose
-    Aggregate/Join lives inside a subquery expression (e.g. a filter on a
-    scalar subquery) shows no shuffle-family node in the children-only walk,
-    and _spread_small_scan's partition probe would execute that subquery
-    stage — the exact cost the gate exists to avoid (ADVICE r6).
-    """
-    names: list[str] = []
-    stack = [d._jdf.queryExecution().optimizedPlan()]
-    while stack:
-        node = stack.pop()
-        names.append(node.getClass().getSimpleName())
-        children = node.children()
-        for i in range(children.size()):
-            stack.append(children.apply(i))
-        subqueries = node.subqueries()
-        for i in range(subqueries.size()):
-            stack.append(subqueries.apply(i))
-    return names
-
-
-def _spread_small_scan(d: DataFrame) -> DataFrame:
-    """Repartition ONLY under-parallel pure-scan inputs before a CPU-heavy
-    expression.
-
-    A small local input arrives as one file split, serializing the shingle
-    construction; spreading it across cores is worth one exchange. A 100 TB
-    scan already has thousands of splits — there the exchange would be pure
-    waste. The partition probe is gated on the OPTIMIZED LOGICAL PLAN being
-    shuffle-free: for a scan-only plan ``d.rdd.getNumPartitions()`` is pure
-    file-split planning (no job), but for an aggregated/joined input AQE
-    materializes the upstream stages to answer the probe — executing the
-    aggregation twice. Post-shuffle inputs are already spread across
-    shuffle partitions, so they skip both the probe and the exchange.
-
-    Fail-safe: if the JVM tree walk ever breaks (py4j surface change), the
-    input passes through untouched — the conservative arm (no probe, no
-    exchange, no extra job), never the executing one.
-    """
-    try:
-        names = _logical_node_names(d)
-    except Exception:
-        return d
-    if any(n.startswith(p) for n in names for p in _SHUFFLE_NODE_PREFIXES):
-        return d
-    nparts = d.sparkSession.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < max(2, nparts // 2):
-        return d.repartition(nparts, "doc_id")
-    return d
 
 
 @query(
@@ -133,6 +61,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _distinct_shingles(n: int) -> Column:
+    """Distinct ``word_ngrams`` of the whitespace-normalized text."""
+    norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
+    return F.array_distinct(word_ngrams(norm, n))
+
+
 def _shingle_arrays(d: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per doc as an array: (doc_id, shingles).
 
@@ -142,52 +76,27 @@ def _shingle_arrays(d: DataFrame, n: int = 3) -> DataFrame:
     produce no rows (cheap token-count pre-filter — an independent
     expression, so Catalyst pushing it below the repartition never
     double-evaluates the shingle construction).
-
-    Construction is ONE codegen'd regex pass, not a higher-order function:
-    normalize whitespace runs to single spaces, then every token start
-    (lookbehind ^|\\s) captures the next n space-joined tokens through a
-    zero-width lookahead — overlapping matches, exactly concat_ws(' ',
-    t_i..t_{i+n-1}). The prior F.transform(sequence, concat_ws(element_at
-    ...)) lambda was evaluated INTERPRETED per shingle and dominated the
-    whole MinHash pipeline: measured at sf0.1 reps (260,015 shingles),
-    explode-and-count went 7.81 s -> 0.99 s with a symmetric diff of 0
-    rows (r15b A/B) — identical strings, 8x cheaper, and the sha256 the
-    oracle contract hashes is unchanged.
     """
-    # A small input can arrive as ONE file split; spread it across all
-    # cores before the regex so it parallelizes. At real scale the scan
-    # already has many splits and this exchange is dwarfed by the explode.
-    d2 = _spread_small_scan(d).filter(
-        F.size(F.split(F.trim(F.col("text")), r"\s+")) >= n
-    )
-    norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
-    pat = r"(?<=^|\s)(?=(" + " ".join([r"\S+"] * n) + r"))"
-    arr = F.regexp_extract_all(norm, F.lit(pat), 1)
-    return d2.select("doc_id", F.array_distinct(arr).alias("shingles"))
+    d2 = spread_small_scan(d).filter(F.size(ws_tokens("text")) >= n)
+    return d2.select("doc_id", _distinct_shingles(n).alias("shingles"))
 
 
 def _word_ngram_hashes(d: DataFrame, n: int, *keep: str) -> DataFrame:
     """Distinct word n-gram xxhash64 keys per row: (*keep, shingle: long).
 
-    The codegen'd regex construction of _shingle_arrays (normalize
-    whitespace, overlapping lookahead captures) generalized to carry
-    arbitrary passenger columns, for consumers that shingle with context
+    The _shingle_arrays construction generalized to carry arbitrary
+    passenger columns, for consumers that shingle with context
     (contamination_flag keeps ``source``; corpus_prep_pipeline keeps
-    ``doc_id``). Replaces the interpreted F.transform(F.sequence, ...)
-    higher-order lambda those ops carried — the same hot spot the r15 build
-    round measured at 8x on the 3-gram path. Hashing the space-joined
-    shingle STRING instead of the chained multi-arg xxhash64 changes only
-    internal join-key values (tokens cannot contain spaces, so the join is
-    equivalent up to the 64-bit collision bound both formulations already
-    accept). No _spread_small_scan here: both consumers run the shingling
-    inside larger compositions where the input is either already shuffled
-    or filtered scan-stage work.
+    ``doc_id``). Hashing the space-joined shingle STRING instead of the
+    chained multi-arg xxhash64 changes only internal join-key values
+    (tokens cannot contain spaces, so the join is equivalent up to the
+    64-bit collision bound both formulations already accept). No
+    spread_small_scan here: both consumers run the shingling inside larger
+    compositions where the input is either already shuffled or filtered
+    scan-stage work.
     """
-    d2 = d.filter(F.size(F.split(F.trim(F.col("text")), r"\s+")) >= n)
-    norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
-    pat = r"(?<=^|\s)(?=(" + " ".join([r"\S+"] * n) + r"))"
-    arr = F.array_distinct(F.regexp_extract_all(norm, F.lit(pat), 1))
-    return d2.select(*keep, F.explode_outer(arr).alias("_sh")).select(
+    d2 = d.filter(F.size(ws_tokens("text")) >= n)
+    return d2.select(*keep, F.explode_outer(_distinct_shingles(n)).alias("_sh")).select(
         *keep, F.xxhash64("_sh").alias("shingle")
     )
 
@@ -195,16 +104,13 @@ def _word_ngram_hashes(d: DataFrame, n: int, *keep: str) -> DataFrame:
 def _shingles_hashed(d: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per doc, hashed: (doc_id, n, shingle: long).
 
-    Built on _shingle_arrays' codegen'd regex pass (r15b: the interpreted
-    per-shingle F.transform lambda this helper used to carry dominated the
-    posting-list pipeline — measured at sf0.1, the full Jaccard-pairs path
-    went 4.21 s -> 1.89 s with identical pair output), then xxhash64 over
-    the exploded shingle STRING. The hash keys are internal join/distinct
-    keys only (never emitted, never oracled — the oracle recomputes from
-    strings), so swapping the old token-seed-chained xxhash64(t1..tn) for
-    xxhash64('t1 t2 t3') changes no observable result; distinctness over
-    64-bit hashes equals distinctness over strings up to birthday-bound
-    collisions, the tradeoff the downstream join already accepted.
+    Built on _shingle_arrays, then xxhash64 over the exploded shingle STRING.
+    The hash keys are internal join/distinct keys only (never emitted, never
+    oracled — the oracle recomputes from strings), so swapping the old
+    token-seed-chained xxhash64(t1..tn) for xxhash64('t1 t2 t3') changes no
+    observable result; distinctness over 64-bit hashes equals distinctness
+    over strings up to birthday-bound collisions, the tradeoff the
+    downstream join already accepted.
 
     explode_outer, NOT explode: plain explode lets Catalyst infer
     non-null/non-empty constraints on the array and push a Filter containing
@@ -404,8 +310,7 @@ def _minhash_oracle() -> str:
 
 def _minhash_base_h(shingle_col: str) -> Column:
     """The MinHash base hash: first 60 bits of sha256(shingle) mod P."""
-    base = F.conv(F.substring(F.sha2(shingle_col, 256), 1, 15), 16, 10).cast("long")
-    return base % _MINHASH_P
+    return gram_key(shingle_col) % _MINHASH_P
 
 
 def _minhash_pairs_from_reps(reps: DataFrame) -> DataFrame:
@@ -797,8 +702,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded self-join a plain equi-join downstream.
     """
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
-    h = F.conv(F.substring(F.sha2("tok", 256), 1, 15), 16, 10).cast("long")
+    toks = d.select("doc_id", F.explode(ws_tokens("text")).alias("tok"))
+    h = gram_key("tok")
     bit_sums = toks.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -821,12 +726,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(4)
     ]
     return out.select("doc_id", "simhash", *bands)
-
-
-# Rounds the most recent propagate_min_labels() run took to reach fixpoint
-# (includes the final no-change round that proves convergence). Bench and
-# tests read it; queries never do.
-LAST_PROPAGATION_ROUNDS: int | None = None
 
 
 def cluster_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -867,15 +766,14 @@ def propagate_min_labels(edges: DataFrame, max_rounds: int = 50):
     covers components of diameter ~2^max_rounds, and exhausting it raises
     rather than mislabeling. localCheckpoint per round truncates the
     growing lineage (the standard Spark idiom for iterative algorithms);
-    convergence is an exact fixpoint test. Returns (labels, rounds_run).
+    convergence is an exact fixpoint test. Returns (labels, rounds_run);
+    rounds_run includes the final no-change round that proves convergence.
 
     Loop structure was A/B-measured in r4: one propagation step per
     localCheckpoint with a separate fixpoint count beat both carrying the
     previous label through the aggregation and two hops per checkpoint —
     deeper per-materialization plans lost (~2.1s vs ~3.0s, sf0.1).
     """
-    global LAST_PROPAGATION_ROUNDS
-
     # Convergence via the label-sum invariant: every step takes mins of
     # existing labels, so per-node labels NEVER increase — sum(lbl) is
     # strictly decreasing until the fixpoint and constant exactly there.
@@ -944,7 +842,6 @@ def propagate_min_labels(edges: DataFrame, max_rounds: int = 50):
             f"label propagation did not reach a fixpoint in {max_rounds} rounds"
             " — component diameter exceeds ~2^rounds; raise max_rounds"
         )
-    LAST_PROPAGATION_ROUNDS = rounds
     return labels, rounds
 
 
@@ -973,9 +870,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Split into ``cluster_edges`` (pair generation) + ``propagate_min_labels``
     (iterative closure) so the bench harness can attribute time between the
-    two halves; ``LAST_PROPAGATION_ROUNDS`` records the round count of the
-    latest invocation (pinned against the fixture's diameter bound in
-    tests/test_probabilistic.py). The oracle computes the same components via
+    two halves; the round count propagate_min_labels returns is pinned
+    against the fixture's diameter bound in tests/test_probabilistic.py. The oracle computes the same components via
     a recursive-CTE transitive closure (viable at oracle scale only —
     closure is quadratic per component, label propagation is linear).
     """
@@ -1531,10 +1427,6 @@ def dedup_ngram_crossdoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle keeps plain strings so DuckDB can replay it verbatim.
     """
     d = table(spark, sf_dir, "documents")
-    # r15: the 5-gram strings come from _shingle_arrays' codegen'd regex
-    # pass — identical strings to the old interpreted transform/slice/
-    # concat_ws lambda (the construction equivalence the r15 build round
-    # proved by exceptAll at n=3), at the measured ~8x lower cost.
     g = _shingle_arrays(d, 5).select(
         "doc_id", F.explode_outer("shingles").alias("sh")
     )
@@ -1639,7 +1531,7 @@ def substring_window_coverage(d: DataFrame, k: int) -> DataFrame:
     # window stream — same positions, same sha2, same substring — is
     # byte-identical.
     wins = (
-        _spread_small_scan(d)
+        spread_small_scan(d)
         .select(
             "doc_id",
             "text",
@@ -1741,7 +1633,7 @@ def winnow_fingerprint_coverage(d: DataFrame, k: int, w: int) -> DataFrame:
     # under the 64 KB/JIT limits the r15 unroll rejection hit at 64 wide,
     # and inside an interpreted lambda it is w child evals either way.
     fps = (
-        _spread_small_scan(d)
+        spread_small_scan(d)
         .select("doc_id", hs.alias("hs"))
         .select(
             "doc_id",
@@ -1841,7 +1733,7 @@ def substring_dup_spans(d: DataFrame, k: int) -> DataFrame:
     # same §4.1 rewrite as substring_window_coverage (the transform lambda
     # ran interpreted per window); identical (doc_id, i, wh) stream.
     wins = (
-        _spread_small_scan(d)
+        spread_small_scan(d)
         .select(
             "doc_id",
             "text",

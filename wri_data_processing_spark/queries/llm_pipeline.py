@@ -19,10 +19,24 @@ table layout without a repartition.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import (
+    fingerprint,
+    gram_key,
+    quality_score,
+    split_pair,
+    spread_small_scan,
+    tagged_char_grams,
+    tagged_word_grams,
+    word_ngrams,
+    words,
+    ws_tokens,
+)
 from wri_data_processing_spark.registry import query
 
 _TOKS_CTE = r"""
@@ -34,9 +48,7 @@ _TOKS_CTE = r"""
 
 def _tokens(d: DataFrame) -> DataFrame:
     """(doc_id, tok) one row per token occurrence."""
-    return d.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok")
-    )
+    return d.select("doc_id", F.explode(ws_tokens("text")).alias("tok"))
 
 
 @query(
@@ -117,9 +129,6 @@ def contamination_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wri_data_processing_spark.queries.llm_dedup import _word_ngram_hashes
 
     d = table(spark, sf_dir, "documents")
-    # r15: one codegen'd regex pass builds the distinct 4-gram keys (see
-    # _word_ngram_hashes) — the interpreted transform/sequence/element_at
-    # lambda this op carried was the measured hot-spot class.
     shingles = _word_ngram_hashes(d, 4, "doc_id", "source")
     bench = shingles.filter(F.col("source") == "src0").select("shingle").distinct()
     hits = (
@@ -271,7 +280,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact for any corpus below 2^53 tokens per source.
     """
     d = table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tok = F.size(ws_tokens("text"))
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -372,7 +381,7 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     text = F.col("text")
-    n_tok = F.size(F.split(F.trim(text), r"\s+"))
+    n_tok = F.size(ws_tokens(text))
     density = (
         F.length(F.regexp_replace(text, " ", "")) * F.lit(1.0)
         / F.greatest(F.length(text), F.lit(1))
@@ -523,7 +532,7 @@ def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the sim_topk_batch shape).
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws_tokens("text")
     def _eq(term):
         # NB: a 2-arg lambda (x, t=term) would make F.filter pass the
         # ELEMENT INDEX as the second argument — close over the term.
@@ -677,7 +686,7 @@ def text_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant because distinct terms here are bounded (8).
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws_tokens("text")
 
     def _eq(term):
         # Close over the term: a 2-arg lambda would receive the element
@@ -886,51 +895,31 @@ def _pair_ngram_counts(spark: SparkSession, sf_dir: str, ks: tuple) -> DataFrame
     item 3). Grams hash to the sha256 60-bit slice so only int64 keys
     cross the exchange — text never shuffles; the n-gram expansion is one
     in-row flatten+explode in the scan stage."""
-    from wri_data_processing_spark.queries.llm_dedup import _spread_small_scan
+    return _pair_gram_counts(
+        spark, sf_dir, ks, ws_tokens("text").alias("toks"), tagged_word_grams
+    )
 
+
+def _pair_gram_counts(
+    spark: SparkSession,
+    sf_dir: str,
+    ks: tuple,
+    unit: Column,
+    tagged: Callable[[Column, int], Column],
+) -> DataFrame:
+    """Shared body of the pair-count folds: ``unit`` is the aliased per-doc
+    token array or string, ``tagged(unit, k)`` its (n, g)-tagged k-grams."""
     d = table(spark, sf_dir, "documents")
-    base = _spread_small_scan(d).select(
+    base = spread_small_scan(d).select(
         F.floor(F.col("doc_id") / 2).cast("long").alias("pair"),
         (F.col("doc_id") % 2).cast("int").alias("side"),
-        F.split(F.trim(F.col("text")), r"\s+").alias("toks"),
+        unit,
     )
-
-    # r15: gram STRING construction for k >= 2 moves to the codegen'd
-    # overlapping-regex pass over the space-rejoined token stream (the
-    # _shingle_arrays construction, multiplicity-preserving: no distinct) —
-    # same strings, same order, same count as the old interpreted
-    # transform/element_at/concat_ws lambda. Unigrams stay the token array
-    # ITSELF (zero construction) — this also preserves the engine/oracle
-    # convention that a whitespace-only doc tokenizes as [''] and counts
-    # one unigram, which a \S+-based regex would drop. The k >= 2 arms are
-    # unaffected by that edge case: such docs have size(toks) == 1 and take
-    # the empty-array guard.
-    def _ngrams(k: int):
-        if k == 1:
-            grams = F.col("toks")
-        else:
-            norm = F.array_join("toks", " ")
-            pat = r"(?<=^|\s)(?=(" + " ".join([r"\S+"] * k) + r"))"
-            grams = F.regexp_extract_all(norm, F.lit(pat), 1)
-        arr = F.transform(
-            grams, lambda g: F.struct(F.lit(k).alias("n"), g.alias("g"))
-        )
-        return F.when(F.size("toks") >= k, arr).otherwise(
-            F.array().cast("array<struct<n:int,g:string>>")
-        )
-
+    u = F.col(base.columns[-1])
+    grams = [tagged(u, k) for k in ks]
     g = base.select(
-        "pair",
-        "side",
-        F.explode(F.flatten(F.array(*[_ngrams(k) for k in ks]))).alias("ng"),
-    ).select(
-        "pair",
-        "side",
-        F.col("ng.n").alias("n"),
-        F.conv(F.substring(F.sha2(F.col("ng.g"), 256), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
-    )
+        "pair", "side", F.explode(F.flatten(F.array(*grams))).alias("ng")
+    ).select("pair", "side", F.col("ng.n").alias("n"), gram_key("ng.g").alias("h"))
     return g.groupBy("pair", "n", "h").agg(
         F.sum(F.when(F.col("side") == 1, 1).otherwise(0)).cast("long").alias("c_cnt"),
         F.sum(F.when(F.col("side") == 0, 1).otherwise(0)).cast("long").alias("r_cnt"),
@@ -1164,46 +1153,8 @@ def _pair_chargram_counts(spark: SparkSession, sf_dir: str, ks: tuple) -> DataFr
     Same key discipline: grams hash to the sha256 60-bit slice so only
     int64 keys cross the exchange; the n-gram expansion is one in-row
     transform+flatten+explode in the scan stage."""
-    from wri_data_processing_spark.queries.llm_dedup import _spread_small_scan
-
-    d = table(spark, sf_dir, "documents")
-    base = _spread_small_scan(d).select(
-        F.floor(F.col("doc_id") / 2).cast("long").alias("pair"),
-        (F.col("doc_id") % 2).cast("int").alias("side"),
-        F.regexp_replace(F.col("text"), r"\s+", "").alias("s"),
-    )
-
-    def _grams(k: int):
-        # r15: overlapping char k-grams via ONE codegen'd regex pass ((?s)
-        # so '.' crosses the line separators \s+ doesn't strip) — every
-        # position 1..len-k+1 in order with multiplicity, identical to the
-        # old interpreted transform/substr lambda.
-        grams = F.regexp_extract_all(
-            F.col("s"), F.lit(r"(?s)(?=(" + "." * k + r"))"), 1
-        )
-        arr = F.transform(
-            grams, lambda g: F.struct(F.lit(k).alias("n"), g.alias("g"))
-        )
-        return F.when(F.length("s") >= k, arr).otherwise(
-            F.array().cast("array<struct<n:int,g:string>>")
-        )
-
-    g = base.select(
-        "pair",
-        "side",
-        F.explode(F.flatten(F.array(*[_grams(k) for k in ks]))).alias("ng"),
-    ).select(
-        "pair",
-        "side",
-        F.col("ng.n").alias("n"),
-        F.conv(F.substring(F.sha2(F.col("ng.g"), 256), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
-    )
-    return g.groupBy("pair", "n", "h").agg(
-        F.sum(F.when(F.col("side") == 1, 1).otherwise(0)).cast("long").alias("c_cnt"),
-        F.sum(F.when(F.col("side") == 0, 1).otherwise(0)).cast("long").alias("r_cnt"),
-    )
+    s = F.regexp_replace(F.col("text"), r"\s+", "").alias("s")
+    return _pair_gram_counts(spark, sf_dir, ks, s, tagged_char_grams)
 
 
 @query(
@@ -1521,38 +1472,14 @@ def eval_distinct_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT expand is 2 n-values wide, constant), 1-row finish. No
     joins, no windows, nothing collects.
     """
-    from wri_data_processing_spark.queries.llm_dedup import _spread_small_scan
-
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
-    base = _spread_small_scan(d).select(
-        F.split(F.trim(F.col("text")), r"\s+").alias("toks")
-    )
-
-    # r15: same regex gram construction as _pair_ngram_counts — unigrams
-    # are the token array itself (preserving the [''] empty-doc token
-    # convention), bigrams come from the codegen'd overlapping-regex pass.
-    def _ngrams(k: int):
-        if k == 1:
-            grams = F.col("toks")
-        else:
-            norm = F.array_join("toks", " ")
-            pat = r"(?<=^|\s)(?=(" + " ".join([r"\S+"] * k) + r"))"
-            grams = F.regexp_extract_all(norm, F.lit(pat), 1)
-        arr = F.transform(
-            grams, lambda g: F.struct(F.lit(k).alias("n"), g.alias("g"))
-        )
-        return F.when(F.size("toks") >= k, arr).otherwise(
-            F.array().cast("array<struct<n:int,g:string>>")
-        )
-
+    base = spread_small_scan(d).select(ws_tokens("text").alias("toks"))
+    toks = F.col("toks")
     g = base.select(
-        F.explode(F.flatten(F.array(_ngrams(1), _ngrams(2)))).alias("ng")
-    ).select(
-        F.col("ng.n").alias("n"),
-        F.conv(F.substring(F.sha2(F.col("ng.g"), 256), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
-    )
+        F.explode(
+            F.flatten(F.array(tagged_word_grams(toks, 1), tagged_word_grams(toks, 2)))
+        ).alias("ng")
+    ).select(F.col("ng.n").alias("n"), gram_key("ng.g").alias("h"))
     f = g.agg(
         F.countDistinct(F.when(F.col("n") == 1, F.col("h"))).cast("long").alias("d1"),
         F.count(F.when(F.col("n") == 1, F.lit(1))).cast("long").alias("t1"),
@@ -1646,10 +1573,8 @@ def eval_cer(spark: SparkSession, sf_dir: str) -> DataFrame:
     lengths upstream (the corpus-prep length gates) before pointing it
     at arbitrary web documents.
     """
-    from wri_data_processing_spark.queries.llm_dedup import _spread_small_scan
-
     d = table(spark, sf_dir, "documents")
-    tk = _spread_small_scan(d).select(
+    tk = spread_small_scan(d).select(
         F.floor(F.col("doc_id") / 2).cast("long").alias("pair"),
         (F.col("doc_id") % 2).cast("int").alias("side"),
         F.trim(F.col("text")).alias("t"),
@@ -1747,18 +1672,11 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     after each merge (same plan shape every round).
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws_tokens("text")
     t = d.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 2)
-    # r15: adjacent pairs via the codegen'd overlapping-regex pass (the
-    # text_bigram_lm construction) instead of the interpreted transform/
-    # element_at struct lambda — identical pair multiset and order.
-    bgarr = F.regexp_extract_all(
-        F.array_join("toks", " "), F.lit(r"(?<=^|\s)(?=(\S+ \S+))"), 1
-    )
+    bgarr = word_ngrams(F.array_join("toks", " "), 2)
     bg = t.select("doc_id", F.explode_outer(bgarr).alias("b")).select(
-        "doc_id",
-        F.substring_index("b", " ", 1).alias("left_tok"),
-        F.substring_index("b", " ", -1).alias("right_tok"),
+        "doc_id", *split_pair("b", "left_tok", "right_tok")
     )
     return (
         bg.groupBy("left_tok", "right_tok")
@@ -1805,7 +1723,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     any window function.
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws_tokens("text")
     t = d.select("doc_id", toks.alias("toks"))
     starts = F.sequence(F.lit(1), F.size("toks"), F.lit(64))
     chunks = F.transform(
@@ -2049,21 +1967,9 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         _word_ngram_hashes,
         propagate_min_labels,
     )
-    from wri_data_processing_spark.queries.llm_text import _PUNCT_RE
 
     d = table(spark, sf_dir, "documents")
-    text = F.col("text")
-    n_tokens = F.size(F.split(F.trim(text), r"\s+"))
-    n_chars = F.length(text)
-    punct_ratio = (n_chars - F.length(F.regexp_replace(text, _PUNCT_RE, ""))) / F.greatest(
-        n_chars, F.lit(1)
-    )
-    quality = (
-        0.4 * F.least(n_tokens / 50.0, F.lit(1.0))
-        + 0.3 * (F.lit(1.0) - punct_ratio)
-        + 0.3 * F.least(n_chars / 200.0, F.lit(1.0))
-    )
-    fp = F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
+    fp, quality = fingerprint(F.col("text")), quality_score(F.col("text"))
     base = (
         d.filter((F.col("lang") == "en") & (F.col("source") != "src0"))
         .select("doc_id", "source", "n_chars", "text", fp.alias("fp"), quality.alias("quality"))
@@ -2091,10 +1997,6 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rem = surv.join(nd_drop, "doc_id", "left_anti")
 
-    # r15: the 4-gram decontamination keys come from the codegen'd regex
-    # pass (_word_ngram_hashes) instead of the interpreted transform/
-    # sequence/element_at lambda — same distinct-shingle semantics, same
-    # collision caveat, one whole-stage-codegen'd projection per side.
     bench = (
         _word_ngram_hashes(d.filter(F.col("source") == "src0"), 4)
         .distinct()
@@ -2192,7 +2094,7 @@ def pack_sequences_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ranking.py pattern) without changing the output contract.
     """
     d = table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    n_tok = F.size(ws_tokens("text")).cast("long")
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -2452,7 +2354,7 @@ def packing_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum("seg_tok").cast("long").alias("kept_tok"))
     )
-    n_tok_in = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    n_tok_in = F.size(ws_tokens("text")).cast("long")
     pm = (
         passed.join(kd, "doc_id", "left")
         .select("source", n_tok_in.alias("tok_in"), "kept_tok")
@@ -2541,7 +2443,7 @@ def pack_sequences_emit(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-ready layout directly.
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws_tokens("text")
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -2631,9 +2533,7 @@ def sample_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id",
         "lang",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0))
-        ).alias("w"),
+        F.explode(words("text")).alias("w"),
     )
     dt = tok.groupBy("doc_id", "lang", "w").agg(
         F.count(F.lit(1)).cast("long").alias("c_dw")
@@ -2733,11 +2633,7 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     tok = d.select(
         "lang",
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0))
-        )
-        .cast("long")
-        .alias("n_tok"),
+        F.size(words("text")).cast("long").alias("n_tok"),
     )
     g = tok.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -3212,23 +3108,14 @@ def pack_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "epoch",
         "n_chars",
         (
-            F.conv(
-                F.substring(
-                    F.sha2(
-                        F.concat(
-                            F.lit("ep:"),
-                            F.col("epoch").cast("string"),
-                            F.lit(":"),
-                            F.col("doc_id").cast("string"),
-                        ),
-                        256,
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            gram_key(
+                F.concat(
+                    F.lit("ep:"),
+                    F.col("epoch").cast("string"),
+                    F.lit(":"),
+                    F.col("doc_id").cast("string"),
+                )
+            )
             % F.lit(1073741824).cast("long")
         ).alias("u"),
     )
@@ -3395,15 +3282,7 @@ def stats_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events")
     u = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("lift:"), F.col("event_id").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        gram_key(F.concat(F.lit("lift:"), F.col("event_id").cast("string")))
         % F.lit(1073741824).cast("long")
     )
     s = e.select(
@@ -3638,13 +3517,13 @@ def _bpe_word_syms(d: DataFrame) -> DataFrame:
     """(word, cnt, syms) — the global word-frequency table split to
     character symbols, the frame every BPE round rewrites.
 
-    r16 probe: _spread_small_scan here measured 1.23x WORSE in a 3-way
+    r16 probe: spread_small_scan here measured 1.23x WORSE in a 3-way
     interleave (fold-only 1.72 s vs fold+spread 2.12 s median) — the word
     explode + partial count is not the loop's wall (the per-round rewrite
     checkpoints are), so the spread exchange only added stage boundaries.
     Left unspread, the text_bigram_lm lesson."""
     words = d.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word")
+        F.explode(ws_tokens("text")).alias("word")
     ).filter(F.col("word") != "")
     w = words.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     return w.select(
@@ -3718,22 +3597,14 @@ def _bpe_loop(
     prev_merged: set[str] = set()
     r = 1
     while r <= rounds:
-        # r15: adjacent symbol pairs via the overlapping-regex pass over
-        # the space-rejoined symbol stream (symbols are whitespace-free by
-        # construction — words split on \s+, merges only concatenate), so
-        # every round's pair-count scan is codegen instead of the
-        # interpreted transform/element_at struct lambda.
-        bgarr = F.regexp_extract_all(
-            F.array_join("syms", " "), F.lit(r"(?<=^|\s)(?=(\S+ \S+))"), 1
-        )
+        # Adjacent symbol pairs of the space-rejoined symbol stream
+        # (symbols are whitespace-free: words split on \s+, merges only
+        # concatenate).
+        bgarr = word_ngrams(F.array_join("syms", " "), 2)
         pc = (
             syms.filter(F.size("syms") >= 2)
             .select("cnt", F.explode_outer(bgarr).alias("b"))
-            .select(
-                "cnt",
-                F.substring_index("b", " ", 1).alias("left_tok"),
-                F.substring_index("b", " ", -1).alias("right_tok"),
-            )
+            .select("cnt", *split_pair("b", "left_tok", "right_tok"))
             .groupBy("left_tok", "right_tok")
             .agg(F.sum("cnt").cast("long").alias("n_pairs"))
         )
@@ -3871,15 +3742,7 @@ def sample_ppswor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = table(spark, sf_dir, "orders")
     u = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("pps:"), F.col("o_orderkey").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        gram_key(F.concat(F.lit("pps:"), F.col("o_orderkey").cast("string")))
         % F.lit(1073741824).cast("long")
         + 1
     ).cast("double") / F.lit(1073741826.0)
@@ -3961,7 +3824,7 @@ def tokenizer_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     wl = (
         d.select(
             "lang",
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"),
+            F.explode(ws_tokens("text")).alias("word"),
         )
         .filter(F.col("word") != "")
         .groupBy("lang", "word")

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import ws_tokens
 from wri_data_processing_spark.registry import query
 
 _SEG_TOKENS = 16  # tokens per segment: the delimiter-free "line" proxy
@@ -69,7 +70,7 @@ def _segments(d: DataFrame, n_tokens: int = _SEG_TOKENS) -> DataFrame:
     slice() start is a 1-based column expression; the trailing chunk is
     short and kept (it is a distinct string on both engines).
     """
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = ws_tokens("text")
     nseg = F.ceil(F.size(toks) / F.lit(float(n_tokens))).cast("int")
     segs = F.transform(
         F.sequence(F.lit(0), nseg - 1),

@@ -1830,9 +1830,9 @@ def _mmr_greedy(pool: DataFrame) -> DataFrame:
     retrieval_pool build included): 1.92 -> 0.81 s median; the loop
     variants 'checkpoint every 2nd round' (neutral) and 'fully lazy
     unroll' (1.5x WORSE — 3^4 pool-leaf replays with nested broadcast
-    builds) are recorded in experiments/r15_mmr_ab.py. At 100 TB the pool
-    is still <= _MMR_POOL rows after the rerank cut, so the single-row
-    evaluation holds at any corpus size.
+    builds) are recorded in OPTIMIZATION_r15.md, "retrieval_pipeline /
+    sim_mmr_rerank". At 100 TB the pool is still <= _MMR_POOL rows after
+    the rerank cut, so the single-row evaluation holds at any corpus size.
     """
     one = pool.agg(F.collect_list(F.struct("vec_id", "qv", "rel")).alias("pool"))
     return (

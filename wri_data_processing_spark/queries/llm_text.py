@@ -5,12 +5,9 @@ the scan stage with zero Python and zero shuffle until the final demo
 aggregation. Operators: stats, quality score, token counting (BPE-ish regex),
 language-ID heuristic, document fingerprint.
 
-Cross-engine regex note: ``\\s`` differs between Java (Spark) and RE2
-(DuckDB oracles) — Java's includes vertical tab ``\\x0B``, RE2's does not.
-The corpus fixtures contain no ``\\x0B`` (probed: generator emits only
-space/newline whitespace), so the ops that predate this note keep the
-shared ``\\s`` spelling; new ops use the explicit class ``[ \\t\\n\\f\\r]``
-on BOTH sides so the equivalence never rests on the fixture.
+Tokenization conventions (and the Java-vs-RE2 ``\\s`` note behind the
+explicit ``[ \\t\\n\\f\\r]`` class two ops here spell out) live in
+``wri_data_processing_spark.functions.text``.
 """
 
 from __future__ import annotations
@@ -19,9 +16,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import (
+    char_ngrams,
+    fingerprint,
+    gram_key,
+    punct_ratio,
+    quality_score,
+    split_pair,
+    spread_small_scan,
+    word_ngrams,
+    words,
+    ws_tokens,
+)
 from wri_data_processing_spark.registry import query
-
-_PUNCT_RE = "[.,!?;:]"
 
 
 # text_stats fixture augmentation (r12): the synthetic text contains ZERO
@@ -61,7 +68,7 @@ def _ts_text_col() -> F.Column:
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select("doc_id", _ts_text_col().alias("text"))
     text = F.col("text")
-    n_tokens = F.size(F.split(F.trim(text), r"\s+")).cast("long")
+    n_tokens = F.size(ws_tokens(text)).cast("long")
     return d.select(
         "doc_id",
         F.length(text).cast("long").alias("n_chars_calc"),
@@ -69,10 +76,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.length(F.replace(text, F.lit(" "), F.lit(""))) / F.greatest(n_tokens, F.lit(1))
         ).alias("avg_token_len"),
-        (
-            (F.length(text) - F.length(F.regexp_replace(text, _PUNCT_RE, "")))
-            / F.greatest(F.length(text), F.lit(1))
-        ).alias("punct_ratio"),
+        punct_ratio(text).alias("punct_ratio"),
     )
 
 
@@ -192,18 +196,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite length/punctuation quality score in [0,1]."""
     d = table(spark, sf_dir, "documents")
-    text = F.col("text")
-    n_tokens = F.size(F.split(F.trim(text), r"\s+"))
-    n_chars = F.length(text)
-    punct_ratio = (n_chars - F.length(F.regexp_replace(text, _PUNCT_RE, ""))) / F.greatest(
-        n_chars, F.lit(1)
-    )
-    score = (
-        0.4 * F.least(n_tokens / 50.0, F.lit(1.0))
-        + 0.3 * (F.lit(1.0) - punct_ratio)
-        + 0.3 * F.least(n_chars / 200.0, F.lit(1.0))
-    )
-    return d.select("doc_id", score.alias("quality_score"))
+    return d.select("doc_id", quality_score(F.col("text")).alias("quality_score"))
 
 
 @query(
@@ -217,8 +210,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalization fingerprint: lower, collapse whitespace, md5."""
     d = table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    return d.select("doc_id", F.md5(norm).alias("fingerprint"))
+    return d.select("doc_id", fingerprint(F.col("text")).alias("fingerprint"))
 
 
 @query(
@@ -303,18 +295,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     already dropped the bulk of the bytes before either.
     """
     d = table(spark, sf_dir, "documents").filter(F.col("lang") == "en")
-    text = F.col("text")
-    n_tokens = F.size(F.split(F.trim(text), r"\s+"))
-    n_chars = F.length(text)
-    punct_ratio = (n_chars - F.length(F.regexp_replace(text, _PUNCT_RE, ""))) / F.greatest(
-        n_chars, F.lit(1)
-    )
-    quality = (
-        0.4 * F.least(n_tokens / 50.0, F.lit(1.0))
-        + 0.3 * (F.lit(1.0) - punct_ratio)
-        + 0.3 * F.least(n_chars / 200.0, F.lit(1.0))
-    )
-    fp = F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
+    fp, quality = fingerprint(F.col("text")), quality_score(F.col("text"))
     scored = d.select("doc_id", "source", "n_chars", fp.alias("fp"), quality.alias("quality"))
     kept = (
         scored.filter(F.col("quality") >= 0.5)
@@ -464,9 +445,7 @@ def _lm_xent(
     keys = ["doc_id", *passengers]
     tok = d.select(
         *keys,
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0))
-        ).alias("w"),
+        F.explode(words("text")).alias("w"),
     )
     dt = tok.groupBy(*keys, "w").agg(F.count(F.lit(1)).cast("long").alias("c_dw"))
     if share_dt:
@@ -670,7 +649,7 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     back (vocab sides broadcastable under AQE), 1-row totals broadcast,
     bounded per-doc ordered fold.
     """
-    # r16 probe: _spread_small_scan here measured 1.12x WORSE twice
+    # r16 probe: spread_small_scan here measured 1.12x WORSE twice
     # (interleaved, 7 reps: 1.95 -> 2.19 s) — unlike lang_id/privacy, the
     # scan-stage tokenize is not this query's wall (the join tail and the
     # per-doc ordered fold are, and they run post-shuffle parallel), so the
@@ -678,23 +657,15 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0)).alias(
-            "toks"
-        ),
+        words("text").alias("toks"),
     ).filter(F.size("toks") >= 2)
-    # r15: adjacent pairs via ONE codegen'd overlapping-regex pass over the
-    # space-rejoined token stream (tokens are [a-z0-9]+ so the join is
-    # unambiguous) instead of the interpreted transform/sequence/element_at
-    # struct lambda — same (w1, w2) multiset in the same order, the measured
-    # HOF-vs-regex hot-spot class. explode_outer keeps Catalyst from pushing
-    # a non-empty-array constraint filter that would re-evaluate the regex.
-    bgarr = F.regexp_extract_all(
-        F.array_join("toks", " "), F.lit(r"(?<=^|\s)(?=(\S+ \S+))"), 1
-    )
+    # Adjacent pairs of the space-rejoined token stream (tokens are
+    # [a-z0-9]+ so the join is unambiguous). explode_outer keeps Catalyst
+    # from pushing a non-empty-array constraint filter that would
+    # re-evaluate the regex.
+    bgarr = word_ngrams(F.array_join("toks", " "), 2)
     bg = t.select("doc_id", F.explode_outer(bgarr).alias("b")).select(
-        "doc_id",
-        F.substring_index("b", " ", 1).alias("w1"),
-        F.substring_index("b", " ", -1).alias("w2"),
+        "doc_id", *split_pair("b", "w1", "w2")
     )
     db = bg.groupBy("doc_id", "w1", "w2").agg(
         F.count(F.lit(1)).cast("long").alias("c_d")
@@ -703,9 +674,7 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     cu = cb.groupBy("w1").agg(F.sum("c12").cast("long").alias("c1"))
     tok = d.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0))
-        ).alias("w"),
+        F.explode(words("text")).alias("w"),
     )
     uni = tok.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("c"))
     tot = uni.agg(
@@ -818,7 +787,7 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.trim("text"), r"\s+")).alias("i0", "tok"),
+        F.posexplode(ws_tokens("text")).alias("i0", "tok"),
     )
     stop = F.col("tok").isin("the", "a")
     f = tok.select(
@@ -933,7 +902,7 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     tf = (
-        docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("tok"))
+        docs.select(F.explode(ws_tokens("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("f"))
     )
@@ -1039,7 +1008,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     mx = docs.agg((F.max("doc_id") + 1).cast("long").alias("nd"))
     tok = docs.select(
-        "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
+        "doc_id", F.explode(ws_tokens("text")).alias("tok")
     )
     fs = tok.groupBy("tok").agg(F.min("doc_id").cast("long").alias("first_doc"))
     dec = (
@@ -1159,7 +1128,7 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     tok = docs.select(
-        "source", F.explode(F.split(F.trim("text"), r"\s+")).alias("tok")
+        "source", F.explode(ws_tokens("text")).alias("tok")
     )
     tf = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).cast("long").alias("c"))
     n = tf.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
@@ -1259,7 +1228,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats_ks_test shape; top-20 is a TakeOrdered.
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0))
+    toks = words("text")
     t = d.select(toks.alias("toks")).filter(F.size("toks") >= 2)
     pairs = t.select(
         F.explode(
@@ -1583,20 +1552,11 @@ def text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
-        F.regexp_extract_all(
-            F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0)
-        ).alias("toks"),
+        words("text").alias("toks"),
     ).filter(F.size("toks") >= 2)
-    # r15: same codegen'd overlapping-regex bigram pass as text_bigram_lm
-    # (identical (w1, w2) multiset/order; tokens are [a-z0-9]+ so the
-    # space-join is unambiguous).
-    bgarr = F.regexp_extract_all(
-        F.array_join("toks", " "), F.lit(r"(?<=^|\s)(?=(\S+ \S+))"), 1
-    )
-    bg = t.select(F.explode_outer(bgarr).alias("b")).select(
-        F.substring_index("b", " ", 1).alias("w1"),
-        F.substring_index("b", " ", -1).alias("w2"),
-    )
+    # The text_bigram_lm bigram pass.
+    bgarr = word_ngrams(F.array_join("toks", " "), 2)
+    bg = t.select(F.explode_outer(bgarr).alias("b")).select(*split_pair("b", "w1", "w2"))
     cb = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("c12"))
     cb = cb.localCheckpoint()  # feeds cu, cont, tot and the term join
     cu = cb.groupBy("w1").agg(
@@ -1711,7 +1671,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def bucket_weight(i: F.Column) -> F.Column:
         ng = F.substr(text, i, F.lit(3))
-        h = F.conv(F.substring(F.sha2(ng, 256), 1, 15), 16, 10).cast("long")
+        h = gram_key(ng)
         return F.element_at(w_arr, (h % _QC_D + 1).cast("int"))
 
     wsum = F.aggregate(
@@ -1790,41 +1750,23 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the novel fraction is known to be small); then a |sources|-row
     rollup. No all-pairs anything.
     """
-    from wri_data_processing_spark.queries.llm_dedup import _spread_small_scan
-
     d = table(spark, sf_dir, "documents")
     n = 3
-    # Spread the under-parallel local scan before the sha-per-shingle CPU
-    # (the llm_dedup discipline): the single-file-split local scan
-    # serializes the hashing on BOTH distinct branches; A/B at sf0.1
-    # (warm, best-of-3, same process): 1.95 s unspread vs 1.57 s spread.
-    # A 100 TB scan has thousands of splits and skips the exchange.
-    d2 = _spread_small_scan(d).select(
+    # Spread before the sha-per-shingle CPU: A/B at sf0.1 (warm, best-of-3,
+    # same process) 1.95 s unspread vs 1.57 s spread.
+    d2 = spread_small_scan(d).select(
         "source",
         F.when(F.substring(F.md5("text"), 1, 1) <= "b", "train")
         .otherwise("holdout")
         .alias("split"),
-        F.split(F.trim(F.col("text")), r"\s+").alias("toks"),
+        ws_tokens("text").alias("toks"),
     ).filter(F.size("toks") >= n)
-    # r15: shingle strings via the codegen'd overlapping-regex pass
-    # (identical strings/order to the old interpreted concat_ws lambda —
-    # the _shingle_arrays construction).
-    sh = F.regexp_extract_all(
-        F.array_join("toks", " "),
-        F.lit(r"(?<=^|\s)(?=(" + " ".join([r"\S+"] * n) + r"))"),
-        1,
-    )
+    sh = word_ngrams(F.array_join("toks", " "), n)
     hs = d2.select(
         "source",
         "split",
         F.explode_outer(F.array_distinct(sh)).alias("shingle"),
-    ).select(
-        "source",
-        "split",
-        F.conv(F.substring(F.sha2("shingle", 256), 1, 15), 16, 10)
-        .cast("long")
-        .alias("h"),
-    )
+    ).select("source", "split", gram_key("shingle").alias("h"))
     # r16 (guide §2.4 "remove shuffles outright", §1.2 "don't compute things
     # twice"): hs used to feed TWO branches (train-distinct, holdout-
     # distinct) that each re-ran the shingle + sha pass, then met in a
@@ -1928,11 +1870,7 @@ def _lid_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     text = F.col("text")
     bkts = F.transform(
         F.sequence(F.lit(1), F.length(text) - 2),
-        lambda i: (
-            F.conv(F.substring(F.sha2(F.substr(text, i, F.lit(3)), 256), 1, 15), 16, 10)
-            .cast("long")
-            % _LID_D
-        ).cast("int"),
+        lambda i: (gram_key(F.substr(text, i, F.lit(3))) % _LID_D).cast("int"),
     )
     b = d.select("doc_id", "lang", "text", bkts.alias("bkts"))
 
@@ -1963,47 +1901,35 @@ def _lid_pred_col() -> F.Column:
 def _lid_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of _lid_score_sql: doc -> per-class scores + argmax.
 
-    r15: trigram extraction via the codegen'd overlapping-regex pass +
-    posexplode-free explode, with the sha-slice hash and all five weight
-    lookups evaluated in a WHOLE-STAGE-CODEGEN projection and summed by a
-    map-side-combined groupBy — replaces reading off _lid_frame,
-    whose transform()-built bucket array and five aggregate() folds run
-    INTERPRETED per element (the r15 HOF hot-spot class). Identical
-    integers: same trigram stream (every char position, (?s) so '.'
-    crosses newlines), same sha slice mod, same weight arrays; the added
-    exchange carries ONE narrow row per document (partial agg collapses
-    the per-trigram rows map-side — documents explode within their own
-    scan partition). `lang` rides as a GROUPING KEY, not first(lang): a
-    first() aggregate has a string buffer, which HashAggregate cannot
-    hold, so Spark falls back to SortAggregate and SORTS every exploded
-    trigram row per partition — keying by (doc_id, lang) keeps the pure
-    HashAggregate (lang is functionally dependent on doc_id, so the
-    groups are identical). Measured warm interleaved at sf0.1 (noop):
-    3.88 -> 3.04 s median for the explode shape (experiments/
-    r15_lid_ab.py; the 5-folds-in-one-struct variant measured WORSE and
-    is recorded there as rejected), re-measured independently 3.34 ->
-    2.21, then SortAggregate -> HashAggregate 2.51 -> 2.06 s median
-    (exceptAll-equal both ways at sf0.01).
+    Trigrams come from ``char_ngrams`` and explode; the sha-slice hash and
+    all five weight lookups run in a WHOLE-STAGE-CODEGEN projection summed
+    by a map-side-combined groupBy, instead of _lid_frame's transform()
+    bucket array and five aggregate() folds, which run INTERPRETED per
+    element. Identical integers: same trigram stream, same sha slice mod,
+    same weight arrays; the added exchange carries ONE narrow row per
+    document (partial agg collapses the per-trigram rows map-side —
+    documents explode within their own scan partition). `lang` rides as a
+    GROUPING KEY, not first(lang): a first() aggregate has a string buffer,
+    which HashAggregate cannot hold, so Spark falls back to SortAggregate
+    and SORTS every exploded trigram row per partition — keying by (doc_id,
+    lang) keeps the pure HashAggregate (lang is functionally dependent on
+    doc_id, so the groups are identical). Measured warm interleaved at
+    sf0.1 (noop): 3.88 -> 3.04 s median for the explode shape, re-measured
+    independently 3.34 -> 2.21, then SortAggregate -> HashAggregate 2.51 ->
+    2.06 s median (exceptAll-equal both ways at sf0.01); the
+    5-folds-in-one-struct variant measured WORSE (OPTIMIZATION_r15.md,
+    "text_lang_id_multi / eval_lang_id_report").
     _lid_frame keeps the old in-row shape for eval_krippendorff_alpha,
     which needs text + scores on one row.
     """
-    from wri_data_processing_spark.queries.llm_dedup import _spread_small_scan
-
-    # r16: spread the under-parallel local scan BEFORE the per-trigram sha
-    # work (the llm_dedup discipline): documents.parquet at bench SFs is ONE
-    # file split, so the whole explode + sha projection ran on one core —
-    # measured in the 10x scaling audit as a flat 8-vs-32-core ratio (0.97).
-    # At real scale the scan has thousands of splits and the helper skips
-    # the exchange entirely.
-    d = _spread_small_scan(
+    # r16: spread before the per-trigram sha work — unspread, the 10x
+    # scaling audit measured a flat 8-vs-32-core ratio (0.97).
+    d = spread_small_scan(
         table(spark, sf_dir, "documents").filter(F.length("text") >= 3)
     )
-    tri = F.regexp_extract_all(F.col("text"), F.lit(r"(?s)(?=(...))"), 1)
+    tri = char_ngrams(F.col("text"), 3)
     g = d.select("doc_id", "lang", F.explode(tri).alias("t"))
-    bkt = (
-        F.conv(F.substring(F.sha2(F.col("t"), 256), 1, 15), 16, 10).cast("long")
-        % _LID_D
-    ).cast("int")
+    bkt = (gram_key("t") % _LID_D).cast("int")
     ws = {c: F.array(*[F.lit(w) for w in _LID_W[c]]) for c in _LID_CLASSES}
     s = (
         g.select("doc_id", "lang", bkt.alias("x"))
@@ -2343,7 +2269,7 @@ def text_mattr(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").filter(F.length(F.trim("text")) > 0)
     b = d.select(
         "doc_id",
-        F.split(F.trim("text"), r"\s+").alias("tk"),
+        ws_tokens("text").alias("tk"),
     ).select(
         "doc_id",
         "tk",

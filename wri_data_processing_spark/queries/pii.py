@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import spread_small_scan
 from wri_data_processing_spark.registry import query
 
 # -- the mirrored PII fixture augmentation ---------------------------------
@@ -441,13 +442,9 @@ def privacy_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pii_prevalence_by_source: one regexp_replace chain and one second
     detector pass, both per-row scan work.
     """
-    from wri_data_processing_spark.queries.llm_dedup import _spread_small_scan
-
-    # r16: spread the single-split local scan before the ~15 regex passes
-    # per row (detect x2, redact chain) — they ran on ONE core (the 10x
-    # scaling audit's flat-ratio finding); a real-scale scan has many
-    # splits and the helper no-ops.
-    d = _spread_small_scan(table(spark, sf_dir, "documents"))
+    # r16: spread before the ~15 regex passes per row (detect x2, redact
+    # chain) — unspread they ran on ONE core (the 10x audit's flat ratio).
+    d = spread_small_scan(table(spark, sf_dir, "documents"))
     t = _pii_text_col()
 
     # r16 (guide §4.1): both detector passes are consumed ONLY as
