@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import gram_key
 from wri_data_processing_spark.queries.llm_similarity import _dvec, cosine
 from wri_data_processing_spark.queries.llm_text import (
     _MARKERS,
@@ -191,17 +192,7 @@ def _score_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     return e.select(
         (
-            F.conv(
-                F.substring(
-                    F.sha2(
-                        F.concat(F.lit("cal:"), F.col("event_id").cast("string")), 256
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            gram_key(F.concat(F.lit("cal:"), F.col("event_id").cast("string")))
             % F.lit(_Q30).cast("long")
         ).alias("u"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
@@ -735,17 +726,7 @@ def eval_auc_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = e.select(
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("sa"),
         (
-            F.conv(
-                F.substring(
-                    F.sha2(
-                        F.concat(F.lit("cal:"), F.col("event_id").cast("string")), 256
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            gram_key(F.concat(F.lit("cal:"), F.col("event_id").cast("string")))
             % F.lit(_Q30).cast("long")
         ).alias("sb"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.functions.text import gram_key
 from wri_data_processing_spark.registry import query
 
 
@@ -1855,22 +1856,9 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         "b",
         (
-            F.conv(
-                F.substring(
-                    F.sha2(
-                        F.concat(
-                            F.col("event_id").cast("string"),
-                            F.lit(":"),
-                            F.col("b").cast("string"),
-                        ),
-                        256,
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            gram_key(
+                F.concat(F.col("event_id").cast("string"), F.lit(":"), F.col("b").cast("string"))
+            )
             % F.lit(1073741824).cast("long")
         ).alias("u"),
     )
@@ -2642,25 +2630,14 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "y",
         F.explode(F.sequence(F.lit(0), F.lit(_PERM_B - 1))).alias("b"),
-        F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat(
-                        F.lit("p:"),
-                        F.col("event_id").cast("string"),
-                        F.lit(":"),
-                        F.col("b").cast("string"),
-                    ),
-                    256,
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("u"),
+        gram_key(
+            F.concat(
+                F.lit("p:"),
+                F.col("event_id").cast("string"),
+                F.lit(":"),
+                F.col("b").cast("string"),
+            )
+        ).alias("u"),
     ).withColumn("u", F.col("u") % F.lit(1073741824).cast("long"))
     j = r.join(F.broadcast(obs), "event_type").select(
         "event_type",
@@ -3072,15 +3049,7 @@ def stats_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     s = e.select(
         (
-            F.conv(
-                F.substring(
-                    F.sha2(F.concat(F.lit("cal:"), F.col("event_id").cast("string")), 256),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            gram_key(F.concat(F.lit("cal:"), F.col("event_id").cast("string")))
             % F.lit(1073741824).cast("long")
         ).alias("u"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
@@ -3150,15 +3119,7 @@ def stats_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     s = e.select(
         (
-            F.conv(
-                F.substring(
-                    F.sha2(F.concat(F.lit("cal:"), F.col("event_id").cast("string")), 256),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+            gram_key(F.concat(F.lit("cal:"), F.col("event_id").cast("string")))
             % F.lit(1073741824).cast("long")
         ).alias("u"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
@@ -3771,15 +3732,7 @@ def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     ra = F.when(F.col("n_chars") >= 400, 1).otherwise(0)
     u = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("kap:"), F.col("doc_id").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        gram_key(F.concat(F.lit("kap:"), F.col("doc_id").cast("string")))
         % F.lit(1073741824).cast("long")
     )
     rb = F.when(u * 5 < F.lit(1073741824), 1 - ra).otherwise(ra)
@@ -4119,15 +4072,7 @@ def stats_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events").select("user_id").distinct()
     u = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("srm:"), F.col("user_id").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        gram_key(F.concat(F.lit("srm:"), F.col("user_id").cast("string")))
         % F.lit(1073741824).cast("long")
     )
     b = e.select(F.when(u * 2 < F.lit(1073741824), 0).otherwise(1).alias("arm"))
@@ -5864,15 +5809,7 @@ def stats_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     noise = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("fleiss:"), F.col("doc_id").cast("string")), 256),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        gram_key(F.concat(F.lit("fleiss:"), F.col("doc_id").cast("string")))
         % 8
     )
     r = d.select(

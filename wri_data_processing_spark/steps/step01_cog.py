@@ -7,13 +7,16 @@ filesystem probes), conversion fans out across executors via mapInPandas —
 file-level parallelism the reference never had — and each row yields a
 status record so A1 status accounting is a plain groupBy.
 
-The converter is injectable: real deployments call gdal_translate /
-rio-cogeo; this container has neither, so tests inject a stub. Default COG
-creation options mirror prototypes/01a_make_cog_one.R:26-31 (DEFLATE,
-BLOCKSIZE=512, RESAMPLING=AVERAGE, NUM_THREADS).
+The converter is injectable. With no converter given, ``gdal_translate``
+runs when it is on PATH (options mirror prototypes/01a_make_cog_one.R:26-31:
+DEFLATE, BLOCKSIZE=512, RESAMPLING=AVERAGE, NUM_THREADS); otherwise the
+in-process pure-Python writer ``geo.cog_writer.cog_convert`` encodes each
+file inside the Python worker. tests/test_cog_writer.py runs that real
+converter end to end.
 
 Scale notes: repartition(n_files / files_per_task) before converting; each
-task is one long-running subprocess — executor-core-bound, no shuffle. The
+task converts its files one after another in its Python worker (or one
+gdal_translate subprocess per file) — executor-core-bound, no shuffle. The
 status aggregation is a 4-group count.
 """
 
