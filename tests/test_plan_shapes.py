@@ -100,8 +100,9 @@ def test_fuzzy_match_is_hash_join(spark, sf_dir):
 
 
 def test_basket_pairs_reuse_orderkey_exchange(spark, sf_dir):
-    """distinct(order, part) partitions by l_orderkey; the self-join must
-    not introduce a nested loop, and the whole plan stays JVM-side."""
+    """The per-order part sets (one l_orderkey shuffle) explode into
+    pairs in-row: no nested-loop join may appear, and the whole plan stays
+    JVM-side."""
     plan = _plan(spark, sf_dir, "basket_pair_counts")
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -135,6 +136,34 @@ def test_pagerank_no_python_and_hash_joins(spark, sf_dir):
     plan = _plan(spark, sf_dir, "graph_pagerank")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "name, rounds",
+    [("graph_label_propagation", 4), ("graph_personalized_pagerank", 5)],
+)
+def test_graph_loop_rounds_never_broadcast_edges(spark, sf_dir, monkeypatch, name, rounds):
+    """Each round of the label and rank loops joins the checkpointed
+    symmetric edge list to a node-sized table on node: a shuffled hash
+    join that builds the node side, never a join that builds (broadcasts)
+    the edges. The edges keep the size estimate of the explode that built
+    them, far below their real size, so unhinted these joins plan as
+    broadcasts and, from round 2 on at sf0.1, broadcast the edges. The
+    rounds live in the checkpointed frames, not in the returned one, so
+    every localCheckpoint input is planned here."""
+    plans = []
+    frame_cls = type(spark.range(1))
+    local_checkpoint = frame_cls.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+    registry.REGISTRY[name](spark, sf_dir)
+    for plan in plans[-rounds:]:  # each round ends in one checkpoint
+        assert re.search(r"ShuffledHashJoin .*Inner, BuildRight", plan), plan
+        assert "BuildLeft" not in plan, plan
 
 
 def _assert_no_theta_self_join(plan: str):

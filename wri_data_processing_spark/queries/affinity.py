@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
+from wri_data_processing_spark.queries.graph import both_directions, copurchase_pairs
 from wri_data_processing_spark.registry import query
 
 
@@ -84,26 +85,15 @@ def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-occurrence: part pairs appearing together in >= 2
     orders (frequent-itemset support counting, k=2).
 
-    Plan: distinct (order, part) first — one shuffle that also serves as the
-    self-join's hash partitioning on l_orderkey, so the join itself reuses
-    the exchange. Pair explosion is bounded per order (baskets are small:
+    Plan (``copurchase_pairs``): one shuffle on l_orderkey collects each
+    order's distinct parts, pairs are exploded in-row, and one pair-keyed
+    count follows. Pair explosion is bounded per order (baskets are small:
     TPC-H <= 7 items), which is exactly the property that keeps this safe at
     100 TB — cost is sum over orders of basket^2, linear in order count.
-    The HAVING prunes the long tail before the final shuffle's reduce side.
+    The support filter drops the long tail on the pair count's reduce side.
     """
-    items = (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_b"))
-    return (
-        a.join(b, "ok")
-        .filter(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
-        .filter(F.col("n_orders") >= 2)
+    return copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).select(
+        F.col("u").alias("part_a"), F.col("v").alias("part_b"), F.col("n").alias("n_orders")
     )
 
 
@@ -133,28 +123,16 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the co-purchase graph: for each part, how many
     distinct co-purchased partners; then how many parts share each degree.
 
-    Graph analytics as pure relational algebra: edges are the deduped pair
-    join (same bounded-basket blow-up as basket_pair_counts), degrees come
-    from exploding each undirected edge into both directions and counting.
+    Graph analytics as pure relational algebra: edges are the distinct
+    co-purchase pairs (same bounded-basket blow-up as basket_pair_counts),
+    degrees come from emitting each undirected edge in both directions and
+    counting.
     The distribution itself is a second tiny aggregate. Degree skew IS the
     thing this measures — at 100 TB a heavy-hitter node shows up here
     first, before it breaks a downstream join (the salting diagnostic in
     join_skew_salted feeds off exactly this histogram).
     """
-    items = (
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    )
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_b"))
-    edges = (
-        a.join(b, "ok")
-        .filter(F.col("part_a") < F.col("part_b"))
-        .select("part_a", "part_b")
-        .distinct()
-    )
-    directed = edges.select(F.col("part_a").alias("node")).unionAll(
-        edges.select(F.col("part_b").alias("node"))
-    )
+    directed = both_directions(copurchase_pairs(table(spark, sf_dir, "lineitem")), "node", "nb")
     degrees = directed.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("degree"))
     return degrees.groupBy("degree").agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
 
@@ -204,14 +182,8 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_orders = items.agg(F.count_distinct("l_orderkey").cast("long").alias("n"))
     item_n = items.groupBy("l_partkey").agg(F.count(F.lit(1)).cast("long").alias("n_item"))
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_b"))
-    pair_n = (
-        a.join(b, "ok")
-        .filter(F.col("part_a") < F.col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pair"))
-        .filter(F.col("n_pair") >= 2)
+    pair_n = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).select(
+        F.col("u").alias("part_a"), F.col("v").alias("part_b"), F.col("n").alias("n_pair")
     )
     na = item_n.select(F.col("l_partkey").alias("part_a"), F.col("n_item").alias("n_a"))
     nb = item_n.select(F.col("l_partkey").alias("part_b"), F.col("n_item").alias("n_b"))
@@ -273,9 +245,10 @@ def recsys_item_similar(spark: SparkSession, sf_dir: str) -> DataFrame:
     and NO rounding is needed; the per-item rank breaks cosine ties by
     neighbor key in both engines.
 
-    Plan: the co-pair generation is the order-key equi self-join with
-    map-side-combined pair counts; the two n_p join-backs are equi-joins
-    on the part key; the per-item top-3 is a WindowGroupLimit — Spark
+    Plan: the co-pairs are ``copurchase_pairs`` (per-order part sets
+    exploded in-row, map-side-combined pair counts) emitted in both
+    directions, so every part sees its neighbors; the two n_p join-backs
+    are equi-joins on the part key; the per-item top-3 is a WindowGroupLimit — Spark
     prunes to 3 rows per item map-side before the final shuffle, so the
     output stage moves |parts| * 3 rows no matter how dense the pair
     space is. At 100 TB the pair count, not the rank, is the budget —
@@ -287,15 +260,8 @@ def recsys_item_similar(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = items.groupBy(F.col("l_partkey").alias("p")).agg(
         F.count(F.lit(1)).cast("long").alias("np")
     )
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    co = (
-        a.join(b, "ok")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).cast("long").alias("cooc"))
-        .filter(F.col("cooc") >= 2)
-    )
+    pairs = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2)
+    co = both_directions(pairs, "u", "v").withColumnRenamed("n", "cooc")
     sim = (
         co.join(n.select(F.col("p").alias("u"), F.col("np").alias("n_u")), "u")
         .join(n.select(F.col("p").alias("v"), F.col("np").alias("n_v")), "v")

@@ -23,6 +23,60 @@ from pyspark.sql import functions as F
 from wri_data_processing_spark.catalog import table
 from wri_data_processing_spark.registry import query
 
+
+def order_baskets(lineitem: DataFrame) -> DataFrame:
+    """Each order's sorted distinct parts: ``(l_orderkey, ps)`` with ``ps =
+    array_sort(collect_set(l_partkey))``. collect_set is the per-order
+    distinct (map-side combined); array_sort makes the array deterministic
+    across partitionings."""
+    return lineitem.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_set("l_partkey")).alias("ps")
+    )
+
+
+def copurchase_pairs(lineitem: DataFrame, min_orders: int = 1) -> DataFrame:
+    """The undirected co-purchase graph every graph and basket op reads:
+    part pairs ``(u, v)``, ``u < v``, ordered together in at least
+    ``min_orders`` orders. ``min_orders=1`` is the distinct pair set;
+    larger values add the support count ``n`` (orders holding both parts).
+
+    Pairs are generated IN-ROW from the per-order sets: a double explode
+    of ``order_baskets`` keeps ``u < v``, replacing the distinct + (order,
+    part) self-join, which shuffled the item table twice before the pair
+    aggregate. Each order emits a pair once, so the count is exactly the
+    number of orders; the sorted explode keeps the pair stream locally
+    ordered for the map-side combine (measured faster than unsorted, r15).
+
+    A frame checkpointed from this plan keeps this plan's size estimate,
+    far below the self-join's (2.98e6 vs 6.0e12 B for the same 2.39M
+    edges at sf0.1), so a downstream join may plan as a broadcast where
+    the self-join planned a shuffle: check the per-round join strategy.
+    """
+    pairs = (
+        order_baskets(lineitem)
+        .select(F.explode("ps").alias("u"), "ps")
+        .select("u", F.explode("ps").alias("v"))
+        .filter(F.col("u") < F.col("v"))
+    )
+    if min_orders == 1:
+        return pairs.distinct()
+    return (
+        pairs.groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= min_orders)
+    )
+
+
+def both_directions(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """The symmetric edge list of undirected ``(u, v)`` pairs: rows
+    ``(a=u, b=v)`` and ``(a=v, b=u)`` for each pair, other columns carried
+    onto both."""
+    rest = [c for c in pairs.columns if c not in ("u", "v")]
+    return pairs.select(F.col("u").alias(a), F.col("v").alias(b), *rest).unionAll(
+        pairs.select(F.col("v").alias(a), F.col("u").alias(b), *rest)
+    )
+
+
 _Q30 = 1_073_741_824  # 2^30, fixed-point scale: rank 1.0 == 2^30
 _TELEPORT_Q = 161_061_273  # floor(0.15 * 2^30)
 _ITERS = 5
@@ -77,14 +131,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r15 optimization round, measured warm+interleaved at sf0.1 (noop sink):
 
-    - **Edge build via per-order sets, not a self-join** (guide §2.4): one
-      groupBy(l_orderkey).collect_set(l_partkey) (map-side combined), pairs
-      generated IN-ROW by a double explode with u < v — replaces the
-      distinct + self-join, which shuffled the 600k-row item table twice
-      before the pair distinct. Same undirected pair set (collect_set IS
-      the per-order distinct; array_sort only canonicalizes in-array order,
-      measured faster than unsorted — the sorted explode keeps the pair
-      stream locally ordered for the distinct's map-side combine).
+    - **Edge build via per-order sets, not a self-join**: see
+      ``copurchase_pairs``.
     - **Edges hash-partitioned on node BEFORE the checkpoint** (guide §2.4:
       two operations keyed the same way share one exchange): LogicalRDD
       preserves the partitioning, so each iteration's scatter join reuses
@@ -117,20 +165,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    order_items = (
-        table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
-    undirected = (
-        order_items.select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode("ps").alias("v"))
-        .filter(F.col("u") < F.col("v"))
-        .distinct()
-    )
     edges = (
-        undirected.select(F.col("u").alias("node"), F.col("v").alias("nb"))
-        .unionAll(undirected.select(F.col("v").alias("node"), F.col("u").alias("nb")))
+        both_directions(copurchase_pairs(table(spark, sf_dir, "lineitem")), "node", "nb")
         .repartition("node")
         .withColumn(
             "degree", F.count(F.lit(1)).over(Window.partitionBy("node")).cast("long")
@@ -179,36 +215,23 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Edges: part pairs co-ordered >= 2 times (the support threshold is the
     scale guard — it prunes the quadratic pair tail before any graph
     work). Triangles via the canonical oriented two-path join: edges are
-    stored once with pa < pb, so each triangle a<b<c is found exactly
+    stored once with u < v, so each triangle a<b<c is found exactly
     once as (a,b)+(b,c) closed by (a,c) — no /6 correction, no duplicate
     candidates. Two joins on the edge list; at 100 TB the standard
     refinement is degree-ordering the orientation so high-degree hubs
     generate few open wedges.
     """
-    items = (
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    )
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("pa", "pb")
-    )
     # The edge list feeds FOUR plan branches (two wedge sides, the closing
     # join, and the edge count); materialize it once — it is the post-
     # threshold survivor set (tiny by construction), and without this the
-    # distinct+self-join lineage re-executes per branch (AQE breaks
-    # ReusedExchange on self-joins — measured on the jaccard plan).
-    e = e.localCheckpoint()
-    e1 = e.select(F.col("pa").alias("x"), F.col("pb").alias("y"))
-    e2 = e.select(F.col("pa").alias("y"), F.col("pb").alias("z"))
+    # pair derivation re-executes per branch (AQE breaks ReusedExchange on
+    # self-joins — measured on the jaccard plan).
+    e = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).drop("n").localCheckpoint()
+    e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
+    e2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
     wedges = e1.join(e2, "y")
     closed = wedges.join(
-        e.select(F.col("pa").alias("x"), F.col("pb").alias("z")), ["x", "z"]
+        e.select(F.col("u").alias("x"), F.col("v").alias("z")), ["x", "z"]
     )
     n_edges = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
     n_tri = closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
@@ -306,22 +329,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from wri_data_processing_spark.queries.llm_dedup import propagate_min_labels
 
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.alias("a")
-    b = items.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
-    edges = und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
+    edges = both_directions(copurchase_pairs(table(spark, sf_dir, "lineitem")), "src", "dst")
     labels, _rounds = propagate_min_labels(edges)
     return (
         labels.groupBy(F.col("lbl").alias("component"))
@@ -375,7 +383,7 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts grow, max cn falls to 1 by sf0.1 and the op went empty — the
     r13 degeneracy sweep at bench SF caught it. A degree floor prunes
     the same vacuous tail at every scale.) NOT-an-edge is a left_anti
-    on the canonical pa<pb edge list — one check suffices since both
+    on the canonical u<v edge list — one check suffices since both
     sides store u<v.
     jaccard = cn / (du + dv - cn) with all three terms exact BIGINTs, so
     the score is ONE IEEE division — the top-10 ordering compares those
@@ -391,23 +399,8 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrees, and the anti-join from memory (AQE breaks ReusedExchange on
     self-joins — the triangle-count lesson).
     """
-    items = (
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    )
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("pa", "pb")
-        .localCheckpoint()
-    )
-    adj = e.select(F.col("pa").alias("node"), F.col("pb").alias("nb")).unionAll(
-        e.select(F.col("pb").alias("node"), F.col("pa").alias("nb"))
-    )
+    e = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).drop("n").localCheckpoint()
+    adj = both_directions(e, "node", "nb")
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("d"))
     a1 = adj.select(F.col("node").alias("u"), F.col("nb").alias("w"))
     a2 = adj.select(F.col("node").alias("v"), F.col("nb").alias("w"))
@@ -418,11 +411,7 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("cn"))
     )
     cand = (
-        cn.join(
-            e.select(F.col("pa").alias("u"), F.col("pb").alias("v")),
-            ["u", "v"],
-            "left_anti",
-        )
+        cn.join(e, ["u", "v"], "left_anti")
         .join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
         .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
         .filter(F.least("du", "dv") >= 2)
@@ -503,22 +492,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     round's frame would take a localCheckpoint every few rounds to cap
     lineage, as graph_pagerank documents.
     """
-    items = (
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    )
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    sup = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-    )
-    edges = sup.select(F.col("u").alias("node"), F.col("v").alias("nb")).unionAll(
-        sup.select(F.col("v").alias("node"), F.col("u").alias("nb"))
-    )
+    sup = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).drop("n")
+    edges = both_directions(sup, "node", "nb")
     out = None
     for r in range(1, _KCORE_ROUNDS + 1):
         keep = (
@@ -727,23 +702,8 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^R. At 100 TB this is exactly Pregel-on-DataFrames: frontier work
     shrinks as distances settle, and the iteration count bounds cost.
     """
-    items = (
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    )
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    sup = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint()
-    )
-    edges = sup.select(F.col("u").alias("node"), F.col("v").alias("nb")).unionAll(
-        sup.select(F.col("v").alias("node"), F.col("u").alias("nb"))
-    )
+    sup = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).drop("n").localCheckpoint()
+    edges = both_directions(sup, "node", "nb")
     src = sup.agg(F.min("u").alias("s")).collect()[0]["s"]  # 1 scalar, bounded
     labels = (
         edges.select("node")
@@ -830,7 +790,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard community-core / spam-ring signal.
 
     Triangles come from the same canonical oriented wedge join as
-    graph_triangle_count (pa < pb storage finds each triangle a<b<c
+    graph_triangle_count (u < v storage finds each triangle a<b<c
     exactly once), then each triangle credits ALL THREE corners via a
     3-way unionAll explode — no /3 correction needed because the
     canonical triple is already unique. Degree-1 nodes are excluded
@@ -848,24 +808,11 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     a global sort. At 100 TB degree-ordering the orientation bounds the
     wedge fan-out, as graph_triangle_count documents.
     """
-    items = (
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    )
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("pa", "pb")
-        .localCheckpoint()
-    )
-    e1 = e.select(F.col("pa").alias("x"), F.col("pb").alias("y"))
-    e2 = e.select(F.col("pa").alias("y"), F.col("pb").alias("z"))
+    e = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).drop("n").localCheckpoint()
+    e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
+    e2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
     tri = e1.join(e2, "y").join(
-        e.select(F.col("pa").alias("x"), F.col("pb").alias("z")), ["x", "z"]
+        e.select(F.col("u").alias("x"), F.col("v").alias("z")), ["x", "z"]
     )
     pertri = (
         tri.select(F.col("x").alias("node"))
@@ -875,8 +822,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("tri"))
     )
     deg = (
-        e.select(F.col("pa").alias("node"))
-        .unionAll(e.select(F.col("pb").alias("node")))
+        both_directions(e, "node", "nb")
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
     )
@@ -1081,23 +1027,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one scalar fold; the support threshold bounds the pair explosion
     before any graph work, as everywhere in this family.
     """
-    items = (
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    )
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    sup = (
-        a.join(b, "ok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint()
-    )
-    adj = sup.select(F.col("u").alias("node"), F.col("v").alias("nb")).unionAll(
-        sup.select(F.col("v").alias("node"), F.col("u").alias("nb"))
-    )
+    sup = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).drop("n").localCheckpoint()
+    adj = both_directions(sup, "node", "nb")
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("d"))
     ends = adj.join(
         F.broadcast(deg.select(F.col("node"), F.col("d").alias("x"))), "node"
@@ -1169,30 +1100,16 @@ def graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the localCheckpointed survivor edges; two scalar folds stitched
     by 1-row broadcasts (whitelisted).
     """
-    items = (
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    )
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("pa", "pb")
-        .localCheckpoint()
-    )
-    e1 = e.select(F.col("pa").alias("x"), F.col("pb").alias("y"))
-    e2 = e.select(F.col("pa").alias("y"), F.col("pb").alias("z"))
+    e = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).drop("n").localCheckpoint()
+    e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
+    e2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
     tri = (
         e1.join(e2, "y")
-        .join(e.select(F.col("pa").alias("x"), F.col("pb").alias("z")), ["x", "z"])
+        .join(e.select(F.col("u").alias("x"), F.col("v").alias("z")), ["x", "z"])
         .agg(F.count(F.lit(1)).cast("long").alias("t"))
     )
     deg = (
-        e.select(F.col("pa").alias("node"))
-        .unionAll(e.select(F.col("pb").alias("node")))
+        both_directions(e, "node", "nb")
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
     )
@@ -1276,30 +1193,17 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     refine further but any K is a valid LPA snapshot; K=4 converges on
     this fixture (probed: round 4 == round 3 labels).
 
-    Plan & scale: per round — one (neighbor-label) equi-join keyed on
-    node, one (src,lbl) count shuffle, one src argmax shuffle; labels
+    Plan & scale: per round — one (neighbor-label) shuffled hash join
+    keyed on node that builds the label side, never a broadcast of the
+    edges (hinted; tests/test_plan_shapes.py pins it), one (src,lbl)
+    count shuffle, one src argmax shuffle; labels
     localCheckpointed per round (graph_pagerank's unroll discipline).
     All shuffles are vertex/edge-keyed — no all-pairs stage; at 100 TB
     this is exactly GraphX/Pregel LPA expressed as DataFrame joins.
     """
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.alias("a")
-    b = items.alias("b")
-    und = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
-    edges = (
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint()  # consumed every round
-    )
+    edges = both_directions(
+        copurchase_pairs(table(spark, sf_dir, "lineitem")), "src", "dst"
+    ).localCheckpoint()  # consumed every round
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -1307,8 +1211,14 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     for _ in range(_LPA_ROUNDS):
+        # The checkpointed edges keep copurchase_pairs' size estimate (3e6 B
+        # for 2.39M rows at sf0.1), so unhinted this join broadcasts the
+        # EDGES from round 2 on. The hint pins a shuffle join that hashes
+        # the node-sized side. Measured at sf0.1 on 4 cores: unhinted 1.4x
+        # slower; this hint faster than a merge hint and than AQE's runtime
+        # broadcast of the labels.
         f = (
-            edges.join(labels, edges["dst"] == labels["node"])
+            edges.join(labels.hint("shuffle_hash"), edges["dst"] == labels["node"])
             .groupBy("src", "lbl")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         )
@@ -1399,23 +1309,15 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum; bit-identical at any partitioning (the graph_pagerank
     argument); the only double is the exact 2^-30 projection.
 
-    Plan: per round one scatter join + one gather aggregate keyed by
-    node, then the deg-frame left join keeps zero-mass nodes — all
-    vertex-keyed shuffles, localCheckpoint per round.
+    Plan: per round one scatter join (edges with ranks: a shuffled hash
+    join building the rank side, hinted as in graph_label_propagation;
+    then degree) + one gather aggregate keyed by node, then the deg-frame
+    left join keeps zero-mass nodes — all vertex-keyed shuffles,
+    localCheckpoint per round.
     """
-    items = (
-        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    )
-    a = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
-    b = items.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
-    undirected = (
-        a.join(b, "ok").filter(F.col("u") < F.col("v")).select("u", "v").distinct()
-    )
-    edges = (
-        undirected.select(F.col("u").alias("node"), F.col("v").alias("nb"))
-        .unionAll(undirected.select(F.col("v").alias("node"), F.col("u").alias("nb")))
-        .localCheckpoint()
-    )
+    edges = both_directions(
+        copurchase_pairs(table(spark, sf_dir, "lineitem")), "node", "nb"
+    ).localCheckpoint()
     deg = (
         edges.groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
@@ -1427,8 +1329,8 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.lit(0))
     ranks = deg.select("node", seed_q.cast("long").alias("rq"))
     for _ in range(_ITERS):
-        gather = (
-            edges.join(ranks, "node")
+        gather = (  # shuffle_hash hint: see graph_label_propagation
+            edges.join(ranks.hint("shuffle_hash"), "node")
             .join(deg, "node")
             .select(F.col("nb").alias("node"), F.expr("rq div degree").alias("contrib"))
             .groupBy("node")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import register_views, table
 from wri_data_processing_spark.operators.asof import asof_join, asof_join_forward
+from wri_data_processing_spark.queries.graph import order_baskets
 from wri_data_processing_spark.registry import query
 
 # --- filters / projections -------------------------------------------------
@@ -523,21 +524,15 @@ def nested_order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket_pair_counts' pair explosion and for array-typed feature
     columns in a training table.
     """
-    li = table(spark, sf_dir, "lineitem")
-    parts = F.array_sort(F.collect_set("l_partkey"))
-    return (
-        li.groupBy("l_orderkey")
-        .agg(parts.alias("parts"))
-        .select(
-            "l_orderkey",
-            # Serialized canonical form: array-typed result cells hash
-            # differently across pandas bridges, so the VALUE column is the
-            # joined string while size/index/membership stay native array ops.
-            F.concat_ws(",", F.col("parts").cast("array<string>")).alias("parts_str"),
-            F.size("parts").alias("n_parts"),
-            F.element_at("parts", 1).alias("first_part"),
-            F.array_contains("parts", F.lit(1)).alias("has_part_1"),
-        )
+    return order_baskets(table(spark, sf_dir, "lineitem")).select(
+        "l_orderkey",
+        # Serialized canonical form: array-typed result cells hash
+        # differently across pandas bridges, so the VALUE column is the
+        # joined string while size/index/membership stay native array ops.
+        F.concat_ws(",", F.col("ps").cast("array<string>")).alias("parts_str"),
+        F.size("ps").alias("n_parts"),
+        F.element_at("ps", 1).alias("first_part"),
+        F.array_contains("ps", F.lit(1)).alias("has_part_1"),
     )
 
 
