@@ -114,10 +114,6 @@ def albers5070_inverse(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.nda
     return lon, lat
 
 
-def _corners(xmin: float, xmax: float, ymin: float, ymax: float):
-    return [(xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax)]
-
-
 def extent_bbox_arrays(
     xmin: np.ndarray, xmax: np.ndarray, ymin: np.ndarray, ymax: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:

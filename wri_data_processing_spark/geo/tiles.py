@@ -28,19 +28,3 @@ def overview_level(cells: DataFrame, val_col: str = "val") -> DataFrame:
         )
         .agg(F.avg(val_col).alias(val_col), F.count(val_col).alias("n_children"))
     )
-
-
-def overview_pyramid(base: DataFrame, levels: int = 7, val_col: str = "val") -> DataFrame:
-    """Full pyramid: union of levels 1..levels with a ``level`` column.
-
-    Matches the reference's 7-overview COG layout (meta.json:99-142).
-    """
-    out = None
-    cur = base
-    for lvl in range(1, levels + 1):
-        cur = overview_level(cur, val_col).drop("n_children") if lvl > 1 else overview_level(
-            cur, val_col
-        ).drop("n_children")
-        tagged = cur.withColumn("level", F.lit(lvl))
-        out = tagged if out is None else out.unionByName(tagged)
-    return out

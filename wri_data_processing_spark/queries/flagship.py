@@ -63,6 +63,8 @@ def _dec(c: F.Column) -> F.Column:
 
 @query("q1_pricing_summary", oracle=_ORACLE)
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Plan: one scan, a partial and a final hash aggregate, no joins; all
+    the arithmetic runs inside whole-stage codegen."""
     l = table(spark, sf_dir, "lineitem")
     qty = _dec(F.col("l_quantity"))
     price = _dec(F.col("l_extendedprice"))

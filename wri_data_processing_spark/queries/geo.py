@@ -7,8 +7,8 @@ derivation on both sides):
 - validate_assumptions : layer metadata rows derived from part, pushed
   through the exact 00b:105-141 first-error cascade.
 - geo_overview_pyramid : a 64x64 cell grid derived from lineitem, halved one
-  level with AVERAGE resampling (the G3 building block; geo/tiles.py runs
-  the full 7-level pyramid and is unit-tested).
+  level with AVERAGE resampling (the G3 building block; the COG writer,
+  geo/cog_writer.py, builds the full overview pyramid).
 - geo_reproject_bbox   : rows-only (pandas-UDF edge; no SQL oracle).
 """
 

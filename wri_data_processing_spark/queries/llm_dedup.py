@@ -237,6 +237,8 @@ _PAIRS_CTES = _pairs_ctes(_MAX_DF) + rf"""
     oracle=f"WITH {_PAIRS_CTES} SELECT doc_a, doc_b, jaccard FROM jac",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Plan: a posting-list inverted index — ONE wide shuffle on the
+    shingle, a double explode and a pair count; no sort-merge self-join."""
     d = table(spark, sf_dir, "documents")
     return _jaccard_pairs(_shingles_hashed(d, 3))
 
@@ -845,6 +847,19 @@ def propagate_min_labels(edges: DataFrame, max_rounds: int = 50):
     return labels, rounds
 
 
+def doc_clusters(edges: DataFrame) -> DataFrame:
+    """``(doc_id, cluster_id, cluster_size)`` for every node of a symmetric
+    near-dup edge list: the propagate_min_labels components, each node
+    joined to its component's size (one broadcast row per cluster)."""
+    labels, _rounds = propagate_min_labels(edges)
+    sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("cluster_size"))
+    return labels.join(F.broadcast(sizes), "lbl").select(
+        F.col("node").alias("doc_id"),
+        F.col("lbl").alias("cluster_id"),
+        "cluster_size",
+    )
+
+
 @query(
     "dedup_clusters",
     oracle=f"""
@@ -876,13 +891,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure is quadratic per component, label propagation is linear).
     """
     edges = cluster_edges(spark, sf_dir)
-    labels, _rounds = propagate_min_labels(edges)
-    sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return labels.join(F.broadcast(sizes), "lbl").select(
-        F.col("node").alias("doc_id"),
-        F.col("lbl").alias("cluster_id"),
-        "cluster_size",
-    )
+    return doc_clusters(edges)
 
 
 @query(
@@ -968,13 +977,7 @@ def dedup_clusters_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside dedup_ngram_unique plus a third scan for the star join.
     """
     edges = cluster_edges_unique(spark, sf_dir)
-    labels, _rounds = propagate_min_labels(edges)
-    sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return labels.join(F.broadcast(sizes), "lbl").select(
-        F.col("node").alias("doc_id"),
-        F.col("lbl").alias("cluster_id"),
-        "cluster_size",
-    )
+    return doc_clusters(edges)
 
 
 def cluster_edges_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1079,11 +1082,7 @@ def dedup_embedding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor. O(N^2) with a broadcast side: valid only for corpora that fit a
     broadcast; the registered scale path is dedup_embedding's bucketed
     candidates + exact verify."""
-    from wri_data_processing_spark.queries.llm_similarity import (
-        _dvec,
-        cosine_from_norms,
-        vec_norm,
-    )
+    from wri_data_processing_spark.queries.llm_similarity import cosine_from_norms, pair_sides
 
     # r15: norms once per VECTOR (the sim_pairs_exact shape) instead of
     # inside the per-pair cosine — bit-identical (cosine_from_norms keeps
@@ -1092,16 +1091,7 @@ def dedup_embedding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the 3-fold inline blew janino's 64 KB method limit and dropped the
     # whole stage to interpreted fallback).
     e = table(spark, sf_dir, "embeddings")
-    a = e.select(
-        F.col("vec_id").alias("vec_a"),
-        _dvec("embedding").alias("ea"),
-        vec_norm(_dvec("embedding")).alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"),
-        _dvec("embedding").alias("eb"),
-        vec_norm(_dvec("embedding")).alias("nb"),
-    )
+    a, b = pair_sides(e)
     dups = (
         a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
         .filter(
@@ -1884,13 +1874,7 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    labels, _rounds = propagate_min_labels(edges)
-    sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return labels.join(F.broadcast(sizes), "lbl").select(
-        F.col("node").alias("doc_id"),
-        F.col("lbl").alias("cluster_id"),
-        "cluster_size",
-    )
+    return doc_clusters(edges)
 
 
 def _coverage_oracle() -> str:

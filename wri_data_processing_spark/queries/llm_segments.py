@@ -140,7 +140,8 @@ def dedup_segments_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reassembly is array_sort over (seg_idx, seg) structs then one
     array_join — a single per-doc aggregation, order restored without a
-    second window.
+    second window. Segments are hashed to 16-hex keys before the rank
+    window, so its exchange partitions on the sha2 key, never on text.
     """
     d = table(spark, sf_dir, "documents")
     kept = _ranked_segments(d).filter(F.col("rn") == 1)

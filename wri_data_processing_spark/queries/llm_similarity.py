@@ -95,6 +95,21 @@ def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return _dot(a, b) / (na * nb)
 
 
+def pair_sides(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two sides of an all-pairs cosine join over an embeddings frame,
+    (vec_a, ea, na) and (vec_b, eb, nb): each norm is computed once per
+    vector, for :func:`cosine_from_norms` to read per pair."""
+    a, b = (
+        e.select(
+            F.col("vec_id").alias(f"vec_{s}"),
+            _dvec("embedding").alias(f"e{s}"),
+            vec_norm(_dvec("embedding")).alias(f"n{s}"),
+        )
+        for s in "ab"
+    )
+    return a, b
+
+
 _IVF_NLIST = 8  # testdata default for the scale-safe pair/dedup plans
 
 
@@ -190,7 +205,9 @@ def ivf_assign_ctes(nlist: int = _IVF_NLIST) -> str:
     """,
 )
 def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-10 cosine neighbors of vec_id=0 (TakeOrderedAndProject plan)."""
+    """Exact top-10 cosine neighbors of vec_id=0. Plan: the 1-row query
+    vector broadcasts over the scan and a TakeOrderedAndProject cuts the
+    top-k — no global sort."""
     e = table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     joined = e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q))
@@ -268,6 +285,9 @@ def sim_pairs_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replaces the round-1 O(N^2) broadcast theta self-join that could not
     survive real scale; sim_pairs_exact keeps the all-pairs semantics as
     the small-N correctness anchor.
+
+    Plan: the bucket join keys on (cid, blk), fanning each bucket out into
+    blocks, and every vector's norm is computed before the join.
     """
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     pairs = bucketed_pair_candidates(e)
@@ -293,16 +313,7 @@ def sim_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant. O(N^2): valid only when one side is broadcastable; the
     registered scale path is sim_pairs_threshold's bucketed plan."""
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    a = e.select(
-        F.col("vec_id").alias("vec_a"),
-        _dvec("embedding").alias("ea"),
-        vec_norm(_dvec("embedding")).alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"),
-        _dvec("embedding").alias("eb"),
-        vec_norm(_dvec("embedding")).alias("nb"),
-    )
+    a, b = pair_sides(e)
     pairs = a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
     sim = cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
     return pairs.filter(sim >= _PAIR_TAU).select(
@@ -586,16 +597,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL — candidate set in, adjacency out.
     """
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    a = e.select(
-        F.col("vec_id").alias("vec_a"),
-        _dvec("embedding").alias("ea"),
-        vec_norm(_dvec("embedding")).alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"),
-        _dvec("embedding").alias("eb"),
-        vec_norm(_dvec("embedding")).alias("nb"),
-    )
+    a, b = pair_sides(e)
     pairs = a.join(F.broadcast(b), F.col("vec_a") != F.col("vec_b"))
     sim = F.round(cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")), 6)
     w = Window.partitionBy("vec_a").orderBy(F.col("cosine_sim").desc(), "vec_b")
@@ -1727,16 +1729,7 @@ def embed_knn_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket joins while the kth-distance cut stays identical.
     """
     e = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    a = e.select(
-        F.col("vec_id").alias("vec_a"),
-        _dvec("embedding").alias("ea"),
-        vec_norm(_dvec("embedding")).alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"),
-        _dvec("embedding").alias("eb"),
-        vec_norm(_dvec("embedding")).alias("nb"),
-    )
+    a, b = pair_sides(e)
     pairs = a.join(F.broadcast(b), F.col("vec_a") != F.col("vec_b"))
     sim = F.round(
         cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")), 6

@@ -209,6 +209,9 @@ def join_broadcast_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference semantics: ``meta$is_hosted[i] <- probe`` (02b:147-158) is a
     broadcast enrichment of a big table by a small lookup.
+
+    Plan: the dimension side becomes a BroadcastExchange; the fact side
+    never shuffles.
     """
     l = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part")

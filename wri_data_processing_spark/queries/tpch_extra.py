@@ -40,6 +40,9 @@ def _rev_dec() -> F.Column:
     """,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Plan: the filtered customer and orders sides broadcast onto the
+    lineitem scan, one shuffle feeds the final aggregate, and the top-N is
+    a TakeOrderedAndProject, not a global sort."""
     c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1995-03-15 00:00:00").cast("timestamp")
