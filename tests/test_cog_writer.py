@@ -161,3 +161,52 @@ def test_unknown_crs_omits_geokey_directory(tmp_path):
     hdr = read_geotiff_header(p)
     assert hdr["success"] and hdr["crs_epsg"] is None
     np.testing.assert_array_equal(read_geotiff_pixels(p), arr)
+
+
+def _tile_raw(kind: str) -> bytes:
+    rng = np.random.default_rng(7)
+    if kind == "random":
+        return rng.standard_normal((64, 64)).astype("<f4").tobytes()
+    if kind == "all_nan":
+        return np.full((64, 64), np.nan, dtype="<f4").tobytes()
+    if kind == "constant":
+        return np.full((64, 64), 2.5, dtype="<f4").tobytes()
+    return b""
+
+
+@pytest.mark.parametrize("kind", ["random", "all_nan", "constant", "empty"])
+def test_deflate_tiles_decode_with_stdlib_zlib(kind):
+    """TIFF compression 8 is a zlib stream: whichever encoder the writer
+    uses, the reader's zlib.decompress must give the raw tile back."""
+    import zlib
+
+    from wri_data_processing_spark.geo.cog_writer import _compress
+
+    raw = _tile_raw(kind)
+    assert zlib.decompress(_compress(raw, "deflate")) == raw
+
+
+def test_write_cog_falls_back_to_zlib_without_libdeflate(tmp_path, monkeypatch):
+    import zlib
+
+    from wri_data_processing_spark.geo import cog_writer
+
+    monkeypatch.setattr(cog_writer, "_libdeflate", lambda: None)
+    raw = _tile_raw("random")
+    assert cog_writer._compress(raw, "deflate") == zlib.compress(raw, 6)
+    arr = _checker(40, 50)
+    p = str(tmp_path / "zlib.tif")
+    write_cog(p, arr, xmin=0, ymax=0, res_x=1, res_y=1, epsg=5070, tile=16)
+    np.testing.assert_array_equal(read_geotiff_pixels(p), arr)
+
+
+def test_writer_uses_libdeflate_where_installed():
+    """Where the shared library resolves, the writer must load it, so a host
+    that has it cannot silently run the slower zlib path."""
+    import ctypes.util
+
+    from wri_data_processing_spark.geo.cog_writer import _libdeflate
+
+    if ctypes.util.find_library("deflate") is None:
+        pytest.skip("libdeflate is not installed")
+    assert _libdeflate() is not None

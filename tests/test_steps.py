@@ -240,3 +240,26 @@ def test_collection_summaries_trim_filters_but_emits_raw(spark):
     s = collection_summaries(meta)
     assert s["wri_domain"] == ["fire", "water"]
     assert s["wri_dimension"] == [" status ", "exposure", "status"]
+
+
+def test_collection_doc_is_one_aggregation(spark):
+    """The item ids and both summaries come from one global aggregation:
+    2 Spark jobs on a 16-row frame, where three distinct-collects took 10."""
+    from tests.test_warm_session import _jobs_launched
+    from wri_data_processing_spark.steps.step02_stac import build_collection_doc
+
+    meta = spark.createDataFrame(
+        [
+            (f"layer_{i:02d}.tif", ("fire", "water")[i % 2], ("status", " risk ", "")[i % 3])
+            for i in range(16)
+        ],
+        "cog_filename string, wri_domain string, wri_dimension string",
+    )
+    docs = []
+    jobs = _jobs_launched(spark, lambda: docs.append(build_collection_doc(meta, [0, 0, 1, 1])))
+    assert jobs == 2, jobs
+    doc = docs[0]
+    assert doc["summaries"]["wri_domain"] == ["fire", "water"]
+    assert doc["summaries"]["wri_dimension"] == [" risk ", "status"]
+    items = [link["href"] for link in doc["links"] if link["rel"] == "item"]
+    assert items == [f"items/layer_{i:02d}.json" for i in range(16)]

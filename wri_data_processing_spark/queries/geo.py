@@ -124,7 +124,8 @@ def geo_overview_pyramid_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     GDAL AVERAGE averages the 4 child CELL values unweighted; carrying exact
     (sum, count) up the pyramid instead gives the true mean of underlying
     cells AND is order-independent (bit-identical vs the oracle). The
-    unweighted GDAL-parity variant lives in geo/tiles.py::overview_level.
+    unweighted GDAL-parity variant is the COG writer's overview pyramid
+    (geo/cog_writer.py::_overview_levels).
     """
     l = table(spark, sf_dir, "lineitem")
     base = (
@@ -177,15 +178,10 @@ def geo_layer_cog_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout spec — 64x64 at 16-px tiles gives 16 + 4 + 1 = 21 tiles across
     base + the 32- and 16-px overviews — never from running the sink; the
     artifact's pixel/byte correctness is the tiff test suite's job."""
-    import os
-    import shutil
-
     from wri_data_processing_spark.geo.raster_pipeline import write_layer_cogs
+    from wri_data_processing_spark.queries.io_ops import _scratch_dir
 
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out_dir = os.path.join("/tmp/wri_engine_scratch", "geo_cog_pipe", tag)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
+    out_dir = _scratch_dir("geo_cog_pipe", sf_dir)
     l = table(spark, sf_dir, "lineitem")
     cells = l.groupBy(
         F.col("l_returnflag").alias("layer_id"),

@@ -14,6 +14,7 @@ S8 HEAD probe 02b:86-103; P6 contract check 02b:112-123.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 
@@ -38,7 +39,18 @@ from wri_data_processing_spark.steps.step01_cog import status_counts, step01_cog
 # Per-PID root: two concurrent harness processes (e.g. the test suite run
 # as parallel chunks) must not rmtree each other's staged layouts mid-read —
 # a shared root made maintenance_compaction flaky under concurrent pytest.
-_SCRATCH = f"/tmp/wri_engine_scratch_{os.getpid()}"
+# Callers may point _SCRATCH elsewhere; only this default root is removed at
+# exit, and only by the process that named it (forked children inherit the
+# exit hook).
+_PID = os.getpid()
+_DEFAULT_SCRATCH = f"/tmp/wri_engine_scratch_{_PID}"
+_SCRATCH = _DEFAULT_SCRATCH
+
+
+@atexit.register
+def _remove_default_scratch() -> None:
+    if os.getpid() == _PID:
+        shutil.rmtree(_DEFAULT_SCRATCH, ignore_errors=True)
 
 
 def _scratch_dir(name: str, sf_dir: str) -> str:

@@ -10,9 +10,10 @@ status record so A1 status accounting is a plain groupBy.
 The converter is injectable. With no converter given, ``gdal_translate``
 runs when it is on PATH (options mirror prototypes/01a_make_cog_one.R:26-31:
 DEFLATE, BLOCKSIZE=512, RESAMPLING=AVERAGE, NUM_THREADS); otherwise the
-in-process pure-Python writer ``geo.cog_writer.cog_convert`` encodes each
-file inside the Python worker. tests/test_cog_writer.py runs that real
-converter end to end.
+in-process writer ``geo.cog_writer.cog_convert`` encodes each file inside the
+Python worker: numpy for the layout and overviews, libdeflate (through
+ctypes; stdlib zlib where the library is missing) for the Deflate tiles.
+tests/test_cog_writer.py runs that real converter end to end.
 
 Scale notes: repartition(n_files / files_per_task) before converting; each
 task converts its files one after another in its Python worker (or one
@@ -83,7 +84,7 @@ def step01_cog(
         if shutil.which("gdal_translate"):
             converter = gdal_translate_converter()
         else:
-            # Executed GDAL-free path: pure-Python tiled+Deflate COG with
+            # Executed GDAL-free path: in-process tiled+Deflate COG with
             # AVERAGE overviews (geo/cog_writer.py), baseline source scope.
             from wri_data_processing_spark.geo.cog_writer import cog_convert
 

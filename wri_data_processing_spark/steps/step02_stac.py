@@ -7,8 +7,9 @@ reprojection (utils.R:228-262) -> nested item document per row (02b:227-264)
 catalog + collection finalize (02b:273-325; tiny, 2 documents).
 
 Scale notes: item assembly is a narrow map over the metadata table; the only
-driver-side work is the 2-document finalize plus the distinct-summaries
-aggregation (bounded by taxonomy cardinality, ~11 values). File-per-item
+driver-side work is the 2-document finalize plus one global aggregation
+that collects the item ids and the distinct summaries (bounded by the item
+count and the taxonomy cardinality, ~11 values). File-per-item
 writes run on executors.
 """
 
@@ -41,6 +42,11 @@ REQUIRED_COLS = [  # 02b:111-118
     "wri_dimension",
     "cog_filename",
 ]
+
+
+def _item_id() -> F.Column:
+    """The item id: cog_filename without its extension."""
+    return F.regexp_replace("cog_filename", r"\.[^./]*$", "")
 
 
 def check_duplicate_keys(meta: DataFrame) -> None:
@@ -79,7 +85,7 @@ def build_item_docs(
     b = F.col("bbox")
     sw, se = F.array(b[0], b[1]), F.array(b[2], b[1])
     ne, nw = F.array(b[2], b[3]), F.array(b[0], b[3])
-    item_id = F.regexp_replace("cog_filename", r"\.[^./]*$", "")
+    item_id = _item_id()
 
     # href: KNB URL when hosted, ../cogs/<name> otherwise (02b:216-224;
     # path_rel("cogs/<name>", start="stac") == "../cogs/<name>").
@@ -144,35 +150,33 @@ def sink_item_files(items: DataFrame, items_dir: str, overwrite: bool = False) -
     items.select("item_id", "item").foreachPartition(write_partition)
 
 
-def collection_summaries(meta: DataFrame) -> dict:
-    """A3 distinct-sorted summaries (02b:297-304)."""
-    domains = [
-        r[0]
-        for r in meta.select("wri_domain")
-        .filter(F.col("wri_domain").isNotNull())
-        .distinct()
-        .orderBy("wri_domain")
-        .collect()
+def _summary_aggs() -> list[F.Column]:
+    """The distinct-sorted domain and dimension summaries (02b:297-304) as
+    aggregate columns, so the collection doc needs one global aggregation.
+    collect_set drops nulls; array_sort orders the strings bytewise."""
+    dim = F.col("wri_dimension")
+    return [
+        F.array_sort(F.collect_set("wri_domain")).alias("wri_domain"),
+        # Select on trimmed non-blank but emit the ORIGINAL strings: the
+        # reference's nzchar(trimws(x)) guards selection only (02b:299-304).
+        F.array_sort(F.collect_set(F.when(F.length(F.trim(dim)) > 0, dim))).alias(
+            "wri_dimension"
+        ),
     ]
-    # Filter on trimmed non-blank but emit the ORIGINAL strings: the
-    # reference's nzchar(trimws(x)) guards selection only (02b:299-304).
-    dims = [
-        r[0]
-        for r in meta.select("wri_dimension")
-        .filter(
-            F.col("wri_dimension").isNotNull()
-            & (F.length(F.trim("wri_dimension")) > 0)
-        )
-        .distinct()
-        .orderBy("wri_dimension")
-        .collect()
-    ]
+
+
+def _summaries(row) -> dict:
     return {
         "data_type": ["aggregate", "final_score", "indicator"],  # hard-coded, 02b:298
-        "wri_domain": domains,
-        "wri_dimension": dims,
+        "wri_domain": list(row["wri_domain"]),
+        "wri_dimension": list(row["wri_dimension"]),
         "proj:code": ["EPSG:5070"],
     }
+
+
+def collection_summaries(meta: DataFrame) -> dict:
+    """A3 distinct-sorted summaries (02b:297-304)."""
+    return _summaries(meta.agg(*_summary_aggs()).first())
 
 
 def build_catalog_doc() -> dict:
@@ -205,16 +209,14 @@ def build_collection_doc(
 
     ``item_ids`` defaults to the metadata's item ids sorted bytewise —
     matching dir_ls's C-locale ordering of the items directory (02b:314-322).
+    The ids and the summaries come from one aggregation over ``meta``.
     """
+    aggs = _summary_aggs()
     if item_ids is None:
-        item_ids = [
-            r[0]
-            for r in meta.select(
-                F.regexp_replace("cog_filename", r"\.[^./]*$", "").alias("id")
-            )
-            .distinct()
-            .collect()
-        ]
+        aggs.append(F.collect_set(_item_id()).alias("item_ids"))
+    row = meta.agg(*aggs).first()
+    if item_ids is None:
+        item_ids = row["item_ids"]
     doc = {
         "stac_version": STAC_VERSION,
         "stac_extensions": [PROJ_EXT],
@@ -227,7 +229,7 @@ def build_collection_doc(
             "spatial": {"bbox": [collection_bbox]},
             "temporal": {"interval": [[item_datetime, item_datetime]]},
         },
-        "summaries": collection_summaries(meta),
+        "summaries": _summaries(row),
         "links": [
             {"rel": "self", "href": "collection.json", "type": "application/json"},
             {"rel": "root", "href": "../../catalog.json", "type": "application/json"},
