@@ -20,6 +20,7 @@ import csv
 import itertools
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -48,11 +49,9 @@ def make_layer(h: int = 400, w: int = 320) -> np.ndarray:
 
 def main() -> None:
     arr = make_layer()
-    out_dir = "/tmp/wri_engine_scratch/cog_settings"
-    os.makedirs(out_dir, exist_ok=True)
     log_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "cog_settings_log.csv")
     keys = list(GRID)
-    with open(log_path, "w", newline="") as fh:
+    with tempfile.TemporaryDirectory() as out_dir, open(log_path, "w", newline="") as fh:
         w = csv.writer(fh)
         w.writerow([*keys, "bytes", "sec", "n_overviews", "roundtrip_ok"])
         for combo in itertools.product(*GRID.values()):

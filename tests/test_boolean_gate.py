@@ -24,18 +24,13 @@ equality per op, so a live oracle boolean forces a live Spark boolean.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 import pytest
 
-from tests.oracle_harness import duck_con
 from wri_data_processing_spark import registry
 
 registry.load_all()
-
-BOOL_SF_DIR = os.environ.get("SPARK_GRAFT_DEGEN_SF_DIR", "/root/testdata/sf0.01")
 
 # (op, column) -> (expected constant value, reason). The r13 triage
 # (SCALE.md) wrote the reasons; this pins them in-repo with the sf0.01
@@ -180,17 +175,9 @@ def boolean_problems(df: pd.DataFrame, name: str) -> list[str]:
     return problems
 
 
-@pytest.fixture(scope="module")
-def bool_con():
-    con = duck_con(BOOL_SF_DIR)
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("name", sorted(registry.ORACLE))
-def test_boolean_decisions_live_or_triaged(name, bool_con):
-    df = bool_con.execute(registry.ORACLE[name]).df()
-    problems = boolean_problems(df, name)
+def test_boolean_decisions_live_or_triaged(name, oracle_answer):
+    problems = boolean_problems(oracle_answer, name)
     assert not problems, f"{name}: {problems}"
 
 
@@ -203,8 +190,8 @@ def test_allowlist_references_real_ops():
 class TestGateIsNotVacuous:
     """A synthetic never-flipping boolean op must FAIL the checker."""
 
-    def test_constant_true_unlisted_fails(self, bool_con):
-        df = bool_con.execute(
+    def test_constant_true_unlisted_fails(self, gate_con):
+        df = gate_con.execute(
             "SELECT l_orderkey, l_quantity > -1 AS positive "
             "FROM lineitem LIMIT 100"
         ).df()
@@ -214,7 +201,7 @@ class TestGateIsNotVacuous:
             "and not allowlisted — dead decision"
         ]
 
-    def test_wrong_polarity_fails(self, bool_con):
+    def test_wrong_polarity_fails(self):
         # An allowlisted column constant at the OPPOSITE value must fail:
         # the pin catches silent flips, not just silent deaths.
         df = pd.DataFrame({"drifted": [False]})

@@ -18,9 +18,10 @@ The gate checks the DuckDB side only, on purpose: the driver's gate is
 spark_hash == oracle_hash, and test_registry_oracle.py proves that equality
 locally for every op — so a live oracle forces a live Spark result, while a
 dead oracle is exactly the vacuous-match failure mode this gate exists to
-catch. DuckDB-only keeps the full 400+-fixture sweep at ~20 s. The seven
-rows-only ops (no oracle to sweep) get the same liveness contract on the
-Spark side at the bottom of this module.
+catch. DuckDB-only, the 434 oracles at sf0.01 take about 80 s on 4 cores,
+paid once per session: test_boolean_gate reads the same answers (conftest
+``oracle_answer``). The seven rows-only ops (no oracle to sweep) get the
+same liveness contract on the Spark side at the bottom of this module.
 
 First catch (found while building the gate): events_cusum_alarm's
 first_alarm_day was all-NULL at sf0.01 — the 2*mu threshold scales with
@@ -29,23 +30,20 @@ volume so no alarm ever fired at driver SF; fixed to scale-free 3*sqrt(mu).
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 import pytest
 
-from tests.oracle_harness import duck_con
 from wri_data_processing_spark import registry
 
 registry.load_all()
 
-# The driver's correctness SF — degeneracy at sf0.001 is tolerable (tiny
-# fixtures can legitimately starve an op); degeneracy at sf0.01 means the
-# driver's hash gate is comparing vacuum. A one-off sweep at sf0.1 (the
-# bench SF) is also worth re-running each round: it caught
+# The gate runs at the correctness SF, sf0.01 (conftest ``gate_sf_dir``)
+# — degeneracy at sf0.001 is tolerable (tiny fixtures can legitimately
+# starve an op); degeneracy at sf0.01 means the driver's hash gate is
+# comparing vacuum. A sweep at sf0.1 (the bench SF, experiments/
+# degen_sweep.py) is also worth re-running each round: it caught
 # graph_jaccard_linkpred's cn>=2 floor and q11's 0.1%-of-total fraction
 # going empty as data GREW — the inverse of the cusum failure mode.
-DEGEN_SF_DIR = os.environ.get("SPARK_GRAFT_DEGEN_SF_DIR", "/root/testdata/sf0.01")
 
 # Ops allowed to return ZERO rows at sf0.01. Every entry needs a one-line
 # reason reviewed against the fixture. Currently empty: the r12
@@ -72,17 +70,9 @@ def degeneracy_problems(df: pd.DataFrame, name: str) -> list[str]:
     return problems
 
 
-@pytest.fixture(scope="module")
-def degen_con():
-    con = duck_con(DEGEN_SF_DIR)
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("name", sorted(registry.ORACLE))
-def test_fixture_is_live(name, degen_con):
-    df = degen_con.execute(registry.ORACLE[name]).df()
-    problems = degeneracy_problems(df, name)
+def test_fixture_is_live(name, oracle_answer):
+    problems = degeneracy_problems(oracle_answer, name)
     assert not problems, f"{name}: {problems}"
 
 
@@ -98,10 +88,10 @@ def test_allowlists_reference_real_ops():
 class TestGateIsNotVacuous:
     """The checker must flag the exact failure shapes r12 shipped."""
 
-    def test_dead_window_q6_clone_fails(self, degen_con):
+    def test_dead_window_q6_clone_fails(self, gate_con):
         # q6's pre-r12 bug shape: a SUM over a date window predating the
         # synthetic epoch — one row, all-NULL aggregate.
-        df = degen_con.execute(
+        df = gate_con.execute(
             """
             SELECT SUM(l_extendedprice * l_discount) AS revenue
             FROM lineitem
@@ -113,15 +103,15 @@ class TestGateIsNotVacuous:
             "column 'revenue' is 100% NULL over 1 rows"
         ]
 
-    def test_empty_by_construction_fails(self, degen_con):
+    def test_empty_by_construction_fails(self, gate_con):
         # join_left_anti / set_except's pre-r12 bug shape: 0 rows.
-        df = degen_con.execute("SELECT r_name FROM region WHERE 1 = 0").df()
+        df = gate_con.execute("SELECT r_name FROM region WHERE 1 = 0").df()
         assert degeneracy_problems(df, "anti_dead_clone") == [
             "0 rows — vacuous fixture (0==0 hash-match)"
         ]
 
-    def test_live_fixture_passes(self, degen_con):
-        df = degen_con.execute("SELECT r_regionkey, r_name FROM region").df()
+    def test_live_fixture_passes(self, gate_con):
+        df = gate_con.execute("SELECT r_regionkey, r_name FROM region").df()
         assert degeneracy_problems(df, "live") == []
 
 
@@ -133,7 +123,7 @@ ROWS_ONLY = sorted(set(registry.REGISTRY) - set(registry.ORACLE))
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_fixture_is_live(name, spark):
-    df = registry.REGISTRY[name](spark, DEGEN_SF_DIR).toPandas()
+def test_rows_only_fixture_is_live(name, spark, gate_sf_dir):
+    df = registry.REGISTRY[name](spark, gate_sf_dir).toPandas()
     problems = degeneracy_problems(df, name)
     assert not problems, f"{name}: {problems}"

@@ -15,34 +15,45 @@ extract_features); only the *registered* query surface must flatten.
 
 from __future__ import annotations
 
-import os
-
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
 from wri_data_processing_spark import registry
 
 registry.load_all()
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
-
 # Ops allowed to return complex top-level columns (must be rows-only AND
 # documented why the driver canonicalizer tolerates them). Currently none.
 COMPLEX_WHITELIST: frozenset[str] = frozenset()
 
 
-@pytest.mark.parametrize("name", sorted(registry.REGISTRY))
-def test_output_schema_is_driver_safe(spark, name):
-    if name in COMPLEX_WHITELIST:
-        pytest.skip("explicitly whitelisted complex output")
-    df = registry.REGISTRY[name](spark, SF_DIR)
+def complex_column_problems(name: str, schema: StructType) -> list[str]:
+    """The driver-safety violation of one op's output schema, if any."""
     complex_cols = [
         f.name
-        for f in df.schema.fields
+        for f in schema.fields
         if isinstance(f.dataType, (ArrayType, MapType, StructType))
     ]
-    assert not complex_cols, (
+    if not complex_cols:
+        return []
+    return [
         f"{name} emits complex top-level columns {complex_cols}; flatten to "
         "scalars (element_at/to_json/concat_ws) — the driver hasher crashes "
         "on list cells"
-    )
+    ]
+
+
+@pytest.mark.parametrize("name", sorted(registry.REGISTRY))
+def test_output_schema_is_driver_safe(name, op_build):
+    if name in COMPLEX_WHITELIST:
+        pytest.skip("explicitly whitelisted complex output")
+    problems = complex_column_problems(name, op_build.schema)
+    assert not problems, problems[0]
+
+
+class TestSweepIsNotVacuous:
+    def test_top_level_array_column_fails(self, spark):
+        df = spark.range(3).select("id", F.array("id", "id").alias("pair"))
+        problems = complex_column_problems("synthetic_array", df.schema)
+        assert len(problems) == 1 and "['pair']" in problems[0]

@@ -5,7 +5,8 @@ slipped in as a cartesian product or an unbounded nested-loop join. Specific
 plan tests (test_plan_shapes.py) pin individual operators; this sweep pins
 the WHOLE registered surface: every query's physical plan is scanned, and a
 ``BroadcastNestedLoopJoin``/``CartesianProduct`` is only tolerated for ops
-on the whitelist below, each with the reason its nested loop is bounded.
+on the whitelist below, each with the reason its nested loop is bounded,
+and a listed op must still plan one, so an entry cannot outlive its join.
 
 A new operator that plans an unlisted nested loop fails here with the plan
 line in the message — the regression-to-cartesian class becomes a CI
@@ -14,15 +15,14 @@ failure instead of a production incident.
 
 from __future__ import annotations
 
-import os
-
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from wri_data_processing_spark import registry
+from wri_data_processing_spark.catalog import table
 
 registry.load_all()
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 
 # name -> why a nested-loop join is acceptable THERE. Two legitimate shapes:
 # (a) one side is provably tiny (1-row scalar, nlist centroids, 1 query
@@ -83,10 +83,6 @@ NLJ_WHITELIST: dict[str, str] = {
     "bucketed equi-join",
     "text_lm_score": "1-row (N, V) vocab-total broadcast over doc-level "
     "term rows — the stats_ks_test shape",
-    "quality_perplexity_buckets": "inherits text_lm_score's 1-row (N, V) "
-    "vocab-total broadcast (composes that op upstream)",
-    "web_corpus_pipeline": "inherits text_lm_score's 1-row (N, V) "
-    "vocab-total broadcast (survivor-trained LM stage)",
     "text_bigram_lm": "1-row (N, V) totals broadcast over doc-level "
     "bigram rows — the text_lm_score shape",
     "stats_quantiles_exact": "1-row N-total broadcast over the distinct-"
@@ -121,9 +117,6 @@ NLJ_WHITELIST: dict[str, str] = {
     "test_plan_shapes)",
     "dedup_embedding": "same IVF centroid broadcast as sim_pairs_threshold",
     "embed_kmeans_assign": "k-row centroid table broadcast",
-    "sample_coreset_kcenter": "<=5-row chosen-center broadcast per greedy round — the embed_kmeans_assign shape, K times",
-    "sim_mmr_rerank": "1-row query broadcast for the pool cut, then <=5-row chosen broadcasts over a 20-row checkpointed frame — the kcenter shape on a constant pool",
-    "retrieval_pipeline": "nlist-row centroid broadcast (assignment + probe) and 1-row query broadcast, then the sim_mmr_rerank shape over the probed 20-row pool",
     "retrieval_hybrid_rrf": "its two source rankings' own bounded "
     "broadcasts — text_bm25_rank's 1-row corpus-stats row and the 1-row "
     "query-vector broadcast of the sim_topk shape; the fusion itself is a "
@@ -137,8 +130,6 @@ NLJ_WHITELIST: dict[str, str] = {
     "|types|-row steady vector — the stats_ks_test shape",
     "graph_hits": "1-row score-total broadcast per renormalized half-step "
     "(three, each bounded) — the graph_markov_steady shape",
-    "stats_wilcoxon_signed_rank": "1-row integer epoch-midpoint broadcast "
-    "over the scan — the stats_proportion_ztest shape",
     "stats_mutual_info": "1-row grand-total n broadcast over the "
     "(types x quadrants) cells frame — the stats_chi2_independence shape",
     "stats_lift_gains": "bounded 10x10 decile-range self-join for the "
@@ -224,18 +215,9 @@ NLJ_WHITELIST: dict[str, str] = {
     "stats_hodges_lehmann pair-cost contract)",
     "text_kneser_ney": "1-row (n_types, n_bigrams) totals broadcast over "
     "the bigram-type frame — the stats_ks_test shape",
-    "bpe_train_rounds": "one 1-row learned-merge broadcast per unrolled "
-    "round (5, each bounded) — the embed_pca_power per-round shape",
-    "tokenizer_pipeline": "the bpe_train_rounds per-round 1-row merge "
-    "broadcasts (shared _bpe_loop)",
     "events_page_hinkley": "three triangular self-joins on the daily "
     "frame — calendar-squared, never data-sized (the "
     "stats_hodges_lehmann bound), plus a 1-row lambda broadcast",
-    "eval_auc_delong": "1-row eleven-sum moment fold consumes two "
-    "score-keyed equi-joins; no nested loop beyond Spark's 1-row "
-    "broadcast stitches",
-    "stats_odds_ratio": "single 1-row 2x2 fold; any nested loop is a "
-    "1-row broadcast stitch",
     "maintenance_compaction_plan": "triangular cumulative self-join on "
     "the per-MONTH partition frame — months-bounded, never data-sized",
     "stats_dunn_posthoc": "k(k-1)/2 = 10-row pair frame self-joined "
@@ -261,22 +243,34 @@ NLJ_WHITELIST: dict[str, str] = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(registry.REGISTRY))
-def test_no_unbounded_nested_loop_joins(spark, name):
-    df = registry.REGISTRY[name](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def nested_loop_problems(name: str, plan: str) -> list[str]:
+    """The join-shape violations of one op's physical plan: an unlisted
+    nested-loop/cartesian join, or a listed op that no longer plans one."""
     bad = [
         line.strip()[:160]
         for line in plan.splitlines()
         if "BroadcastNestedLoopJoin" in line or "CartesianProduct" in line
     ]
     if name in NLJ_WHITELIST:
-        return  # bounded by construction (reason documented above)
-    assert not bad, (
-        f"{name} plans a nested-loop/cartesian join: {bad}; rewrite candidate "
-        "generation as an equi-join (bucket/band/blocking key) or whitelist "
-        "with a boundedness argument"
-    )
+        if bad:
+            return []  # bounded by construction (reason documented above)
+        return [
+            f"{name} is whitelisted for a nested-loop join but plans none; "
+            "drop its NLJ_WHITELIST entry"
+        ]
+    if bad:
+        return [
+            f"{name} plans a nested-loop/cartesian join: {bad}; rewrite candidate "
+            "generation as an equi-join (bucket/band/blocking key) or whitelist "
+            "with a boundedness argument"
+        ]
+    return []
+
+
+@pytest.mark.parametrize("name", sorted(registry.REGISTRY))
+def test_no_unbounded_nested_loop_joins(name, op_build):
+    problems = nested_loop_problems(name, op_build.plan)
+    assert not problems, problems[0]
 
 
 # Queries where a Window legitimately runs over an Exchange SinglePartition:
@@ -298,10 +292,9 @@ WINDOW_SINGLE_PARTITION_WHITELIST: frozenset[str] = frozenset(
 )
 
 
-@pytest.mark.parametrize("name", sorted(registry.REGISTRY))
-def test_no_global_window_on_unreduced_data(spark, name):
-    df = registry.REGISTRY[name](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def global_window_problems(name: str, plan: str) -> list[str]:
+    """The global-window violations of one op's physical plan: an unlisted
+    Window over Exchange SinglePartition, or a listed op that plans none."""
     lines = plan.splitlines()
     window_over_sp = any(
         "Exchange SinglePartition" in l
@@ -309,9 +302,44 @@ def test_no_global_window_on_unreduced_data(spark, name):
         for i, l in enumerate(lines)
     )
     if name in WINDOW_SINGLE_PARTITION_WHITELIST:
-        return  # reduced-frame global window, audited above
-    assert not window_over_sp, (
-        f"{name} plans a Window over Exchange SinglePartition on unreduced "
-        "data — partition the window or pre-aggregate (see operators/"
-        "ranking.py for the distributed global-rank pattern)"
-    )
+        if window_over_sp:
+            return []  # reduced-frame global window, audited above
+        return [
+            f"{name} is whitelisted for a global window but plans none; drop "
+            "its WINDOW_SINGLE_PARTITION_WHITELIST entry"
+        ]
+    if window_over_sp:
+        return [
+            f"{name} plans a Window over Exchange SinglePartition on unreduced "
+            "data — partition the window or pre-aggregate (see operators/"
+            "ranking.py for the distributed global-rank pattern)"
+        ]
+    return []
+
+
+@pytest.mark.parametrize("name", sorted(registry.REGISTRY))
+def test_no_global_window_on_unreduced_data(name, op_build):
+    problems = global_window_problems(name, op_build.plan)
+    assert not problems, problems[0]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+class TestSweepIsNotVacuous:
+    def test_cross_join_of_two_scans_fails(self, spark, sf_dir):
+        df = table(spark, sf_dir, "region").crossJoin(table(spark, sf_dir, "nation"))
+        problems = nested_loop_problems("synthetic_cross", _plan(df))
+        assert len(problems) == 1 and "plans a nested-loop/cartesian join" in problems[0]
+
+    def test_global_window_over_a_scan_fails(self, spark, sf_dir):
+        w = Window.orderBy("l_extendedprice")
+        df = table(spark, sf_dir, "lineitem").withColumn("r", F.rank().over(w))
+        problems = global_window_problems("synthetic_window", _plan(df))
+        assert len(problems) == 1 and "Exchange SinglePartition" in problems[0]
+
+    def test_stale_whitelist_entries_fail(self, spark, sf_dir):
+        plan = _plan(table(spark, sf_dir, "region"))
+        assert "plans none" in nested_loop_problems("join_cross", plan)[0]
+        assert "plans none" in global_window_problems("events_cusum", plan)[0]

@@ -23,20 +23,15 @@ collapse, not on one boundary pair.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from wri_data_processing_spark import registry
 
 registry.load_all()
 
-# The verdict asks for the pin at sf0.01 (the driver's correctness SF):
-# sf0.001's 50-doc corpus has too few true near-dup pairs to make a
-# recall bound meaningful. Deliberately NOT the degeneracy sweep's env
-# var: re-running that sweep at sf0.1 must not silently move these pins
-# off the SF where their thresholds were measured (r13 review finding).
-PIN_SF_DIR = os.environ.get("SPARK_GRAFT_PIN_SF_DIR", "/root/testdata/sf0.01")
+# The verdict asks for the pin at sf0.01, the correctness SF (conftest
+# ``gate_sf_dir``): sf0.001's 50-doc corpus has too few true near-dup pairs
+# to make a recall bound meaningful.
 
 
 def _pairs(rows):
@@ -44,48 +39,48 @@ def _pairs(rows):
 
 
 @pytest.fixture(scope="module")
-def minhash_ml_rows(spark):
-    return registry.REGISTRY["dedup_minhash_ml"](spark, PIN_SF_DIR).collect()
+def minhash_ml_rows(spark, gate_sf_dir):
+    return registry.REGISTRY["dedup_minhash_ml"](spark, gate_sf_dir).collect()
 
 
 class TestMinhashMlPin:
-    def test_recall_vs_exact_jaccard(self, spark, minhash_ml_rows):
+    def test_recall_vs_exact_jaccard(self, spark, gate_sf_dir, minhash_ml_rows):
         truth = _pairs(
-            registry.REGISTRY["dedup_ngram_jaccard"](spark, PIN_SF_DIR).collect()
+            registry.REGISTRY["dedup_ngram_jaccard"](spark, gate_sf_dir).collect()
         )
         assert truth, "exact twin produced no near-dup pairs — dead fixture"
         got = _pairs(minhash_ml_rows)
         recall = len(truth & got) / len(truth)
         assert recall >= 0.9, f"spark.ml MinHashLSH recall collapsed: {recall:.2f}"
 
-    def test_overlap_vs_declared_permutation_lsh(self, spark, minhash_ml_rows):
+    def test_overlap_vs_declared_permutation_lsh(self, spark, gate_sf_dir, minhash_ml_rows):
         lsh = _pairs(
-            registry.REGISTRY["dedup_minhash_lsh"](spark, PIN_SF_DIR).collect()
+            registry.REGISTRY["dedup_minhash_lsh"](spark, gate_sf_dir).collect()
         )
         assert lsh, "dedup_minhash_lsh produced no candidates — dead fixture"
         got = _pairs(minhash_ml_rows)
         overlap = len(lsh & got) / len(lsh)
         assert overlap >= 0.9, f"ml/declared-permutation divergence: {overlap:.2f}"
 
-    def test_seeded_determinism(self, spark, minhash_ml_rows):
-        again = registry.REGISTRY["dedup_minhash_ml"](spark, PIN_SF_DIR).collect()
+    def test_seeded_determinism(self, spark, gate_sf_dir, minhash_ml_rows):
+        again = registry.REGISTRY["dedup_minhash_ml"](spark, gate_sf_dir).collect()
         assert sorted(map(tuple, again)) == sorted(map(tuple, minhash_ml_rows))
 
 
 class TestBrpMlPin:
-    def test_recall_at_10_vs_exact_topk(self, spark):
+    def test_recall_at_10_vs_exact_topk(self, spark, gate_sf_dir):
         exact = [
-            r["vec_id"] for r in registry.REGISTRY["sim_topk"](spark, PIN_SF_DIR).collect()
+            r["vec_id"] for r in registry.REGISTRY["sim_topk"](spark, gate_sf_dir).collect()
         ]
         approx = [
             r["vec_id"]
-            for r in registry.REGISTRY["sim_ann_brp_ml"](spark, PIN_SF_DIR).collect()
+            for r in registry.REGISTRY["sim_ann_brp_ml"](spark, gate_sf_dir).collect()
         ]
         assert len(exact) == 10 and len(approx) == 10
         recall = len(set(exact) & set(approx)) / 10
         assert recall >= 0.7, f"BRP-LSH recall@10 collapsed: {recall:.2f}"
 
-    def test_seeded_determinism(self, spark):
-        a = registry.REGISTRY["sim_ann_brp_ml"](spark, PIN_SF_DIR).collect()
-        b = registry.REGISTRY["sim_ann_brp_ml"](spark, PIN_SF_DIR).collect()
+    def test_seeded_determinism(self, spark, gate_sf_dir):
+        a = registry.REGISTRY["sim_ann_brp_ml"](spark, gate_sf_dir).collect()
+        b = registry.REGISTRY["sim_ann_brp_ml"](spark, gate_sf_dir).collect()
         assert [tuple(r) for r in a] == [tuple(r) for r in b]

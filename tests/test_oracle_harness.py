@@ -14,7 +14,7 @@ import decimal
 import pandas as pd
 import pytest
 
-from tests.oracle_harness import _norm_cell, _normalize, compare, duck_con
+from tests.oracle_harness import _norm_cell, _normalize, compare
 
 
 def test_int_vs_float_mismatch():
@@ -48,17 +48,13 @@ def test_normalize_frames_differ_on_dtype_only():
     assert _normalize(a) != _normalize(b)
 
 
-def test_compare_reports_int_float_drift(spark):
+def test_compare_reports_int_float_drift(spark, sf_con):
     """End-to-end: Spark BIGINT vs oracle DOUBLE must be a reported mismatch."""
-    import os
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
-    con = duck_con(sf_dir)
     df = spark.range(1).selectExpr("CAST(2187 AS BIGINT) AS total")
-    problems = compare(df, con, "SELECT 2187.0 AS total")
+    problems = compare(df, sf_con, "SELECT 2187.0 AS total")
     assert problems, "int-vs-float drift must fail the local harness"
     # and the exact-match case stays green
-    assert compare(df, con, "SELECT CAST(2187 AS BIGINT) AS total") == []
+    assert compare(df, sf_con, "SELECT CAST(2187 AS BIGINT) AS total") == []
 
 
 @pytest.mark.parametrize("good", [None, "s", b"b"])

@@ -13,7 +13,8 @@ scans every registered query's physical plan:
   ``FlatMapGroupsInPandas``/``ArrowAggregatePython``...) is tolerated only
   for the ops below, each of which crosses the boundary for a documented
   reason (native-library edge, effectful source, or a deliberately
-  registered pandas-interface demo).
+  registered pandas-interface demo), and each listed op must still plan
+  one, so an entry cannot outlive its boundary.
 
 A new query that quietly wraps a Python lambda in F.udf fails here with
 the offending plan node in the message.
@@ -21,16 +22,14 @@ the offending plan node in the message.
 
 from __future__ import annotations
 
-import os
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from wri_data_processing_spark import registry
 
 registry.load_all()
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 
 # name -> why this op legitimately crosses into Python (always Arrow form).
 PYTHON_WHITELIST: dict[str, str] = {
@@ -80,18 +79,44 @@ PYTHON_WHITELIST: dict[str, str] = {
 _PY_NODE = re.compile(r"\b(\w*(?:Python|Pandas)\w*)")
 
 
-@pytest.mark.parametrize("name", sorted(registry.REGISTRY))
-def test_python_only_at_declared_arrow_boundaries(spark, name):
-    df = registry.REGISTRY[name](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def python_boundary_problems(name: str, plan: str) -> list[str]:
+    """The Python-boundary violations of one op's physical plan."""
     nodes = sorted(set(_PY_NODE.findall(plan)))
-    assert "BatchEvalPython" not in nodes, (
-        f"{name} plans a row-at-a-time Python UDF (BatchEvalPython) — use a "
-        "pandas UDF / built-in functions"
-    )
+    if "BatchEvalPython" in nodes:
+        return [
+            f"{name} plans a row-at-a-time Python UDF (BatchEvalPython) — use a "
+            "pandas UDF / built-in functions"
+        ]
     if name in PYTHON_WHITELIST:
-        return
-    assert not nodes, (
-        f"{name} crosses into Python ({nodes}) but is not a declared "
-        "boundary; keep the expression JVM-side or whitelist with a reason"
-    )
+        if nodes:
+            return []
+        return [
+            f"{name} is a declared Python boundary but plans no Python node; "
+            "drop its PYTHON_WHITELIST entry"
+        ]
+    if nodes:
+        return [
+            f"{name} crosses into Python ({nodes}) but is not a declared "
+            "boundary; keep the expression JVM-side or whitelist with a reason"
+        ]
+    return []
+
+
+@pytest.mark.parametrize("name", sorted(registry.REGISTRY))
+def test_python_only_at_declared_arrow_boundaries(name, op_build):
+    problems = python_boundary_problems(name, op_build.plan)
+    assert not problems, problems[0]
+
+
+class TestSweepIsNotVacuous:
+    def test_row_at_a_time_udf_fails_even_if_declared(self, spark):
+        plus_one = F.udf(lambda x: x + 1, "long")
+        df = spark.range(3).select(plus_one("id").alias("y"))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for name in ("synthetic_udf", "pandas_grouped_map"):
+            problems = python_boundary_problems(name, plan)
+            assert len(problems) == 1 and "BatchEvalPython" in problems[0]
+
+    def test_stale_whitelist_entry_fails(self, spark):
+        plan = spark.range(3)._jdf.queryExecution().executedPlan().toString()
+        assert "plans no Python node" in python_boundary_problems("pandas_grouped_map", plan)[0]

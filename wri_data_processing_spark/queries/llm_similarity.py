@@ -2184,6 +2184,62 @@ def embed_label_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy(cos.desc(), "la", "lb")
 
 
+def _mine_hard_triplets(q: DataFrame) -> DataFrame:
+    """The hard-triplet miner over a (vec_id, label, qv) frame of integer
+    vectors: per anchor of the 1-in-25 vec_id sample, the farthest
+    same-label vector, the nearest different-label vector and the
+    `separated` flag. embed_triplet_mining runs it on the _qvec grid and
+    embed_separation_control on the boosted grid, so a miner regression
+    turns the control red too."""
+    anch = q.filter(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("aid"),
+        F.col("label").alias("alabel"),
+        F.col("qv").alias("aqv"),
+    )
+    d2 = _fold_zip("aqv", "qv", lambda x, y: (x - y) * (x - y), F.lit(0).cast("long"))
+    d = (
+        q.crossJoin(F.broadcast(anch))
+        .filter(F.col("vec_id") != F.col("aid"))
+        .select("aid", "alabel", "vec_id", "label", d2.alias("d2"))
+    )
+    wpos = Window.partitionBy("aid").orderBy(F.col("d2").desc(), "vec_id")
+    wneg = Window.partitionBy("aid").orderBy("d2", "vec_id")
+    pos = (
+        d.filter(F.col("label") == F.col("alabel"))
+        .withColumn("rn", F.row_number().over(wpos))
+        .filter(F.col("rn") == 1)
+        .select(
+            F.col("aid").alias("anchor_id"),
+            F.col("alabel").alias("anchor_label"),
+            F.col("vec_id").alias("pos_id"),
+            F.col("d2").alias("pos_d2"),
+        )
+    )
+    neg = (
+        d.filter(F.col("label") != F.col("alabel"))
+        .withColumn("rn", F.row_number().over(wneg))
+        .filter(F.col("rn") == 1)
+        .select(
+            F.col("aid").alias("anchor_id"),
+            F.col("vec_id").alias("neg_id"),
+            F.col("d2").alias("neg_d2"),
+        )
+    )
+    return (
+        pos.join(neg, "anchor_id")
+        .select(
+            "anchor_id",
+            "anchor_label",
+            "pos_id",
+            "pos_d2",
+            "neg_id",
+            "neg_d2",
+            (F.col("neg_d2") > F.col("pos_d2")).alias("separated"),
+        )
+        .orderBy("anchor_id")
+    )
+
+
 @query(
     "embed_triplet_mining",
     oracle="""
@@ -2239,53 +2295,8 @@ def embed_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass here IS the correctness anchor for that refinement.
     """
     e = table(spark, sf_dir, "embeddings")
-    q = e.select("vec_id", "label", _qvec("embedding").alias("qv"))
-    anch = q.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("aid"),
-        F.col("label").alias("alabel"),
-        F.col("qv").alias("aqv"),
-    )
-    d2 = _fold_zip("aqv", "qv", lambda x, y: (x - y) * (x - y), F.lit(0).cast("long"))
-    d = (
-        q.crossJoin(F.broadcast(anch))
-        .filter(F.col("vec_id") != F.col("aid"))
-        .select("aid", "alabel", "vec_id", "label", d2.alias("d2"))
-    )
-    wpos = Window.partitionBy("aid").orderBy(F.col("d2").desc(), "vec_id")
-    wneg = Window.partitionBy("aid").orderBy("d2", "vec_id")
-    pos = (
-        d.filter(F.col("label") == F.col("alabel"))
-        .withColumn("rn", F.row_number().over(wpos))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("aid").alias("anchor_id"),
-            F.col("alabel").alias("anchor_label"),
-            F.col("vec_id").alias("pos_id"),
-            F.col("d2").alias("pos_d2"),
-        )
-    )
-    neg = (
-        d.filter(F.col("label") != F.col("alabel"))
-        .withColumn("rn", F.row_number().over(wneg))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("aid").alias("anchor_id"),
-            F.col("vec_id").alias("neg_id"),
-            F.col("d2").alias("neg_d2"),
-        )
-    )
-    return (
-        pos.join(neg, "anchor_id")
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "pos_id",
-            "pos_d2",
-            "neg_id",
-            "neg_d2",
-            (F.col("neg_d2") > F.col("pos_d2")).alias("separated"),
-        )
-        .orderBy("anchor_id")
+    return _mine_hard_triplets(
+        e.select("vec_id", "label", _qvec("embedding").alias("qv"))
     )
 
 
@@ -2782,50 +2793,4 @@ def embed_separation_control(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit(0).cast("long")),
     )
     q = e.select("vec_id", "label", boosted.alias("qv"))
-    anch = q.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("aid"),
-        F.col("label").alias("alabel"),
-        F.col("qv").alias("aqv"),
-    )
-    d2 = _fold_zip("aqv", "qv", lambda x, y: (x - y) * (x - y), F.lit(0).cast("long"))
-    d = (
-        q.crossJoin(F.broadcast(anch))
-        .filter(F.col("vec_id") != F.col("aid"))
-        .select("aid", "alabel", "vec_id", "label", d2.alias("d2"))
-    )
-    wpos = Window.partitionBy("aid").orderBy(F.col("d2").desc(), "vec_id")
-    wneg = Window.partitionBy("aid").orderBy("d2", "vec_id")
-    pos = (
-        d.filter(F.col("label") == F.col("alabel"))
-        .withColumn("rn", F.row_number().over(wpos))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("aid").alias("anchor_id"),
-            F.col("alabel").alias("anchor_label"),
-            F.col("vec_id").alias("pos_id"),
-            F.col("d2").alias("pos_d2"),
-        )
-    )
-    neg = (
-        d.filter(F.col("label") != F.col("alabel"))
-        .withColumn("rn", F.row_number().over(wneg))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("aid").alias("anchor_id"),
-            F.col("vec_id").alias("neg_id"),
-            F.col("d2").alias("neg_d2"),
-        )
-    )
-    return (
-        pos.join(neg, "anchor_id")
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "pos_id",
-            "pos_d2",
-            "neg_id",
-            "neg_d2",
-            (F.col("neg_d2") > F.col("pos_d2")).alias("separated"),
-        )
-        .orderBy("anchor_id")
-    )
+    return _mine_hard_triplets(q)
