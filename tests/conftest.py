@@ -4,9 +4,10 @@ and the correctness SF the gates run at (sf0.01).
 The registry sweeps read one shared result per op instead of recomputing it
 in every test:
 
-- ``op_build``: the op's sf0.001 frame, its schema, and its physical plan
-  as it reads before anything executes the frame (test_registry_oracle,
-  test_join_shape_sweep, test_driver_safety, test_python_boundary_sweep);
+- ``op_build``: the op's sf0.001 frame, its schema, its physical plan as it
+  reads before anything executes the frame, and the plan of every frame the
+  build ``localCheckpoint``ed (test_registry_oracle, test_join_shape_sweep,
+  test_driver_safety, test_python_boundary_sweep);
 - ``oracle_answer``: the op's DuckDB oracle answer at sf0.01
   (test_degeneracy_gate, test_boolean_gate).
 
@@ -79,6 +80,13 @@ class OpBuild(NamedTuple):
     df: DataFrame
     schema: StructType
     plan: str  # executedPlan().toString() before df has executed
+    # The same for each frame the build localCheckpointed, in call order. A
+    # loop's rounds live only there: the returned plan reads them as RDD scans.
+    checkpoint_plans: tuple[str, ...]
+
+
+def _plan(df: DataFrame) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 class LatestOnly:
@@ -101,11 +109,24 @@ class LatestOnly:
 
 @pytest.fixture(scope="session")
 def op_builds(spark, sf_dir):
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame class
+    local_checkpoint = frame_cls.localCheckpoint
+
     def build(name: str) -> OpBuild:
-        df = registry.REGISTRY[name](spark, sf_dir)
+        checkpointed = []
+
+        def recording_checkpoint(self, *args, **kwargs):
+            checkpointed.append(_plan(self))
+            return local_checkpoint(self, *args, **kwargs)
+
+        frame_cls.localCheckpoint = recording_checkpoint
+        try:
+            df = registry.REGISTRY[name](spark, sf_dir)
+        finally:
+            frame_cls.localCheckpoint = local_checkpoint
         # Read the plan now: once test_oracle_match executes df, executedPlan()
         # returns the final post-AQE plan, not the plan the sweeps check.
-        return OpBuild(df, df.schema, df._jdf.queryExecution().executedPlan().toString())
+        return OpBuild(df, df.schema, _plan(df), tuple(checkpointed))
 
     builds = LatestOnly(build)
     yield builds

@@ -130,22 +130,18 @@ def test_step01_with_real_converter(spark, tmp_path):
 def test_geographic_crs_geokey_class(tmp_path):
     """ADVICE r4: EPSG:4326 must be labeled geographic (GTModelType=2,
     GeographicTypeGeoKey), not projected — and still round-trip."""
-    import struct as _s
-
     arr = _checker(20, 20)
     p = str(tmp_path / "geo4326.tif")
     write_cog(p, arr, xmin=-180, ymax=90, res_x=0.1, res_y=0.1, epsg=4326, tile=16)
     hdr = read_geotiff_header(p)
     assert hdr["crs_epsg"] == 4326
     # the raw key directory must use GTModelType=2 + GeographicTypeGeoKey
-    from wri_data_processing_spark.geo.cog_writer import _geokey_directory
+    from wri_data_processing_spark.sources.tiff_writer import geokey_directory
 
-    raw = _geokey_directory("<", 4326)
-    vals = _s.unpack("<" + "H" * (len(raw) // 2), raw)
+    vals = geokey_directory(4326)
     assert vals[4:8] == (1024, 0, 1, 2)      # GTModelTypeGeoKey = 2 (geographic)
     assert vals[8:12] == (2048, 0, 1, 4326)  # GeographicTypeGeoKey
-    proj = _geokey_directory("<", 5070)
-    pv = _s.unpack("<" + "H" * (len(proj) // 2), proj)
+    pv = geokey_directory(5070)
     assert pv[4:8] == (1024, 0, 1, 1)        # projected
     assert pv[8:12] == (3072, 0, 1, 5070)    # ProjectedCSTypeGeoKey
 

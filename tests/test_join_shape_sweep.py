@@ -3,10 +3,12 @@
 The single worst scale failure for a 100 TB engine is a quadratic join that
 slipped in as a cartesian product or an unbounded nested-loop join. Specific
 plan tests (test_plan_shapes.py) pin individual operators; this sweep pins
-the WHOLE registered surface: every query's physical plan is scanned, and a
-``BroadcastNestedLoopJoin``/``CartesianProduct`` is only tolerated for ops
-on the whitelist below, each with the reason its nested loop is bounded,
-and a listed op must still plan one, so an entry cannot outlive its join.
+the WHOLE registered surface: every query's physical plan is scanned, with
+the plan of every frame it localCheckpoints (a loop round's joins live only
+there). A ``BroadcastNestedLoopJoin``/``CartesianProduct`` is only tolerated
+for ops on the whitelist below, each with the reason its nested loop is
+bounded, and a listed op must still plan one, so an entry cannot outlive
+its join.
 
 A new operator that plans an unlisted nested loop fails here with the plan
 line in the message — the regression-to-cartesian class becomes a CI
@@ -240,14 +242,37 @@ NLJ_WHITELIST: dict[str, str] = {
     "embed_separation_control": "constant-fraction anchor-set broadcast "
     "over the scan — the embed_triplet_mining shape verbatim (same "
     "mining, boosted space)",
+    # -- nested loops planned only inside a localCheckpointed frame --
+    "quality_perplexity_buckets": "text_lm_score's 1-row (N, V) vocab-total "
+    "broadcast, inside the checkpointed (lang, xent) count frame",
+    "web_corpus_pipeline": "text_lm_score's 1-row (N, V) vocab-total "
+    "broadcast over the checkpointed doc-term counts — the "
+    "quality_perplexity_buckets shape",
+    "retrieval_pipeline": "inside the checkpointed top-20 pool: the "
+    "nlist-row centroid broadcast of ivf_assign and of the 3-of-8 probe "
+    "pick, and the 1-row query-vector broadcast over the probed "
+    "candidates (the sim_ann_ivf and sim_topk shapes)",
+    "sim_mmr_rerank": "1-row query-vector broadcast over the scan, inside "
+    "the checkpointed top-20 pool — the sim_topk shape",
+    "sample_coreset_kcenter": "the chosen set (<= 5 rows) broadcast over "
+    "the point table once per round, 4 rounds, each round's frame "
+    "checkpointed — the embed_kmeans_assign centroid-broadcast shape",
+    "eval_bradley_terry": "1-row (sum, count) normalizer broadcast onto the "
+    "|types|-row strength frame once per MM round (3 rounds, each "
+    "checkpointed) — the graph_markov_steady shape",
+    "stats_wilcoxon_signed_rank": "1-row epoch-midpoint broadcast over the "
+    "scan, inside the checkpointed per-user half-sum frame — the "
+    "stats_proportion_ztest shape",
 }
 
 
-def nested_loop_problems(name: str, plan: str) -> list[str]:
-    """The join-shape violations of one op's physical plan: an unlisted
+def nested_loop_problems(name: str, *plans: str) -> list[str]:
+    """The join-shape violations of one op's physical plans (the plan it
+    returns and those of the frames it checkpointed): an unlisted
     nested-loop/cartesian join, or a listed op that no longer plans one."""
     bad = [
         line.strip()[:160]
+        for plan in plans
         for line in plan.splitlines()
         if "BroadcastNestedLoopJoin" in line or "CartesianProduct" in line
     ]
@@ -269,7 +294,7 @@ def nested_loop_problems(name: str, plan: str) -> list[str]:
 
 @pytest.mark.parametrize("name", sorted(registry.REGISTRY))
 def test_no_unbounded_nested_loop_joins(name, op_build):
-    problems = nested_loop_problems(name, op_build.plan)
+    problems = nested_loop_problems(name, op_build.plan, *op_build.checkpoint_plans)
     assert not problems, problems[0]
 
 
@@ -331,6 +356,22 @@ class TestSweepIsNotVacuous:
     def test_cross_join_of_two_scans_fails(self, spark, sf_dir):
         df = table(spark, sf_dir, "region").crossJoin(table(spark, sf_dir, "nation"))
         problems = nested_loop_problems("synthetic_cross", _plan(df))
+        assert len(problems) == 1 and "plans a nested-loop/cartesian join" in problems[0]
+
+    def test_cross_join_only_in_a_checkpointed_frame_fails(self, op_builds, monkeypatch):
+        """A loop round's nested loop is planned in the frame the op
+        checkpoints; the returned plan reads that frame as an RDD scan."""
+
+        def op(spark, sf_dir):
+            cross = table(spark, sf_dir, "region").crossJoin(table(spark, sf_dir, "nation"))
+            return cross.localCheckpoint().groupBy("r_regionkey").count()
+
+        name = "synthetic_checkpointed_cross"
+        monkeypatch.setitem(registry.REGISTRY, name, op)
+        build = op_builds.get(name)
+        op_builds.clear()  # release the synthetic frame
+        assert not nested_loop_problems(name, build.plan)  # invisible in the returned plan
+        problems = nested_loop_problems(name, build.plan, *build.checkpoint_plans)
         assert len(problems) == 1 and "plans a nested-loop/cartesian join" in problems[0]
 
     def test_global_window_over_a_scan_fails(self, spark, sf_dir):

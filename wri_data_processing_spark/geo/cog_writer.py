@@ -22,9 +22,12 @@ Deflate encoder:
   52355x57865 grid, meta.json:99-142);
 - GeoTIFF georeferencing (pixel scale, tiepoint, EPSG geokey) on IFD0.
 
-Output verifies with sources/tiff_header.py (and with gdalinfo where GDAL
-exists). Scale shape: one file per task via step01_cog's mapInPandas fan-out
-— file-level parallelism, no shuffle.
+This module builds the tiles, the overviews and each IFD's tag list; the
+container layout (IFD entries, inline-or-offset values, classic vs BigTIFF
+widths, GeoKeys) is sources/tiff_writer.py's, shared with the GeoTIFF
+fixtures. Output verifies with sources/tiff_header.py (and with gdalinfo
+where GDAL exists). Scale shape: one file per task via step01_cog's
+mapInPandas fan-out — file-level parallelism, no shuffle.
 """
 
 from __future__ import annotations
@@ -32,32 +35,16 @@ from __future__ import annotations
 import ctypes
 import ctypes.util
 import functools
-import struct
 import threading
 import zlib
 
 import numpy as np
 
+from wri_data_processing_spark.sources import tiff_predictor
 from wri_data_processing_spark.sources.tiff_header import read_geotiff_header, read_geotiff_pixels
+from wri_data_processing_spark.sources.tiff_writer import geo_entries, tile_blocks, write_tiff
 
 DEFAULT_TILE = 512  # prototypes/01a_make_cog_one.R:28 BLOCKSIZE=512
-
-
-def _geokey_directory(en: str, epsg: int | None) -> bytes:
-    """GeoKey directory selecting the CRS key class from the EPSG range.
-
-    Geographic 2-D codes (4001-4999, e.g. 4326) get GTModelTypeGeoKey=2 +
-    GeographicTypeGeoKey (2048); everything else projected (=1) +
-    ProjectedCSTypeGeoKey (3072). An unknown EPSG returns b"" — the GeoKey
-    directory is OMITTED rather than writing key value 0, which is not a
-    valid EPSG code (the spec reserves 32767 for user-defined, not 0).
-    """
-    if not epsg:
-        return b""
-    geographic = 4001 <= epsg <= 4999
-    model = 2 if geographic else 1
-    crs_key = 2048 if geographic else 3072
-    return struct.pack(en + "H" * 12, 1, 1, 0, 2, 1024, 0, 1, model, crs_key, 0, 1, epsg)
 
 
 def _overview_levels(
@@ -174,29 +161,6 @@ def _compress(raw: bytes, compression: str) -> bytes:
     return _deflate(raw)
 
 
-def _tile_bytes(
-    arr: np.ndarray, tile: int, en: str, predictor: int = 1, compression: str = "deflate"
-) -> tuple[list[bytes], int, int]:
-    """Compressed row-major tiles (edge tiles zero-padded per spec),
-    optionally predictor-transformed (3 = floating-point horizontal
-    differencing, GDAL's PREDICTOR=YES for float bands). Compression is
-    Deflate (the prototype's explicit COMPRESS option, 01a:27) or LZW (the
-    GDAL COG default the production path actually produced, meta.json:32)."""
-    from wri_data_processing_spark.sources import tiff_predictor
-
-    h, w = arr.shape
-    down, across = (h + tile - 1) // tile, (w + tile - 1) // tile
-    padded = np.zeros((down * tile, across * tile), dtype=arr.dtype)
-    padded[:h, :w] = arr
-    out = []
-    for ty in range(down):
-        for tx in range(across):
-            block = padded[ty * tile : (ty + 1) * tile, tx * tile : (tx + 1) * tile]
-            raw = tiff_predictor.encode(block.astype(en + "f4"), predictor)
-            out.append(_compress(raw, compression))
-    return out, across, down
-
-
 def write_cog(
     path: str,
     array: np.ndarray,
@@ -225,151 +189,35 @@ def write_cog(
     at 4 GB, SURVEY §6)."""
     arr = np.asarray(array, dtype="f4")
     levels = [arr] + _overview_levels(arr, tile, resampling)
-
-    # Compress everything first so IFDs can carry exact offsets/counts.
-    level_tiles = [_tile_bytes(lv, tile, en, predictor, compression) for lv in levels]
-
-    # Container arithmetic: classic vs BigTIFF (header / IFD-entry / offset
-    # field widths are the ONLY differences; layout order is identical).
-    off_type = 16 if bigtiff else 4  # LONG8 vs LONG for tile offset/count arrays
-    off_fmt = "Q" if bigtiff else "I"
-    inline_cap = 8 if bigtiff else 4
-    header_sz = 16 if bigtiff else 8
-    ifd_head_sz = 8 if bigtiff else 2
-    entry_sz = 20 if bigtiff else 12
-    next_ptr_sz = 8 if bigtiff else 4
-    cnt_fmt = "HHQ" if bigtiff else "HHI"
-
-    scale = struct.pack(en + "ddd", res_x, res_y, 0.0)
-    tiepoint = struct.pack(en + "dddddd", 0, 0, 0, xmin, ymax, 0)
-    geokeys = _geokey_directory(en, epsg)
-
-    def ifd_entries(i: int, lv: np.ndarray, ntiles: int) -> list[tuple[int, int, int]]:
-        # (tag, type, count); values resolved in the layout pass
-        e = []
-        if i > 0:
-            e.append((254, 4, 1))  # NewSubfileType = reduced-resolution
-        e += [
-            (256, 4, 1),
-            (257, 4, 1),
-            (258, 3, 1),
-            (259, 3, 1),
-            (262, 3, 1),
-            (277, 3, 1),
-            (322, 3, 1),
-            (323, 3, 1),
-            (324, off_type, ntiles),
-            (325, off_type, ntiles),
-            (339, 3, 1),
+    ifds = []
+    for i, lv in enumerate(levels):
+        entries = [
+            (256, 4, (lv.shape[1],)),
+            (257, 4, (lv.shape[0],)),
+            (258, 3, (32,)),
+            (259, 3, (_COMPRESSION_TAG[compression],)),
+            (262, 3, (1,)),
+            (277, 3, (1,)),
+            (322, 3, (tile,)),
+            (323, 3, (tile,)),
+            (339, 3, (3,)),
         ]
+        if i > 0:
+            entries.append((254, 4, (1,)))  # NewSubfileType = reduced-resolution
         if predictor != 1:
-            e.append((317, 3, 1))
+            entries.append((317, 3, (predictor,)))
         if i == 0:
-            e += [(33550, 12, 3), (33922, 12, 6)]
-            if geokeys:
-                e.append((34735, 3, len(geokeys) // 2))
-        return sorted(e)
-
-    _TYPE_SIZE = {3: 2, 4: 4, 12: 8, 16: 8}
-
-    # Layout: header | IFDs | out-of-line arrays | tile data.
-    ifd_sizes = [
-        ifd_head_sz + entry_sz * len(ifd_entries(i, lv, len(t[0]))) + next_ptr_sz
-        for i, (lv, t) in enumerate(zip(levels, level_tiles))
-    ]
-    ifd_offs = []
-    pos = header_sz
-    for s in ifd_sizes:
-        ifd_offs.append(pos)
-        pos += s
-    # Out-of-line value region
-    item = _TYPE_SIZE[off_type]
-    aux: dict[tuple[int, int], int] = {}  # (level, tag) -> offset
-    for i, (lv, (tiles, across, down)) in enumerate(zip(levels, level_tiles)):
-        n = len(tiles)
-        if n > 1:
-            aux[(i, 324)] = pos
-            pos += item * n
-            aux[(i, 325)] = pos
-            pos += item * n
-        if i == 0:
-            aux[(0, 33550)] = pos
-            pos += len(scale)
-            aux[(0, 33922)] = pos
-            pos += len(tiepoint)
-            if geokeys:
-                aux[(0, 34735)] = pos
-                pos += len(geokeys)
-    # Tile data region
-    tile_offsets: list[list[int]] = []
-    for tiles, _, _ in level_tiles:
-        offs = []
-        for t in tiles:
-            offs.append(pos)
-            pos += len(t)
-        tile_offsets.append(offs)
-
-    def value_for(i: int, tag: int, tiles: list[bytes]) -> tuple:
-        lv = levels[i]
-        return {
-            254: (1,),
-            256: (lv.shape[1],),
-            257: (lv.shape[0],),
-            258: (32,),
-            259: (_COMPRESSION_TAG[compression],),
-            262: (1,),
-            277: (1,),
-            317: (predictor,),
-            322: (tile,),
-            323: (tile,),
-            324: tuple(tile_offsets[i]),
-            325: tuple(len(t) for t in tiles),
-            339: (3,),
-            33550: (),  # written from the aux region
-            33922: (),
-            34735: (),
-        }[tag]
-
-    fmt_of = {3: "H", 4: "I", 12: "d", 16: "Q"}
-    with open(path, "wb") as f:
-        bom = b"II" if en == "<" else b"MM"
-        if bigtiff:
-            f.write(bom + struct.pack(en + "HHH", 43, 8, 0) + struct.pack(en + "Q", ifd_offs[0]))
-        else:
-            f.write(bom + struct.pack(en + "HI", 42, ifd_offs[0]))
-        for i, (lv, (tiles, across, down)) in enumerate(zip(levels, level_tiles)):
-            entries = ifd_entries(i, lv, len(tiles))
-            f.write(struct.pack(en + ("Q" if bigtiff else "H"), len(entries)))
-            for tag, typ, cnt in entries:
-                f.write(struct.pack(en + cnt_fmt, tag, typ, cnt))
-                size = _TYPE_SIZE[typ] * cnt
-                if tag in (33550, 33922, 34735):
-                    f.write(struct.pack(en + off_fmt, aux[(i, tag)]))
-                elif size <= inline_cap:
-                    vals = value_for(i, tag, tiles)
-                    b = struct.pack(en + fmt_of[typ] * cnt, *vals)
-                    f.write(b + b"\x00" * (inline_cap - len(b)))
-                else:
-                    f.write(struct.pack(en + off_fmt, aux[(i, tag)]))
-            next_off = ifd_offs[i + 1] if i + 1 < len(ifd_offs) else 0
-            f.write(struct.pack(en + off_fmt, next_off))
-        # aux arrays, in the same order offsets were assigned
-        for i, (tiles, _, _) in enumerate(level_tiles):
-            n = len(tiles)
-            if n > 1:
-                f.write(struct.pack(en + off_fmt * n, *tile_offsets[i]))
-                f.write(struct.pack(en + off_fmt * n, *(len(t) for t in tiles)))
-            if i == 0:
-                f.write(scale + tiepoint + geokeys)
-        for tiles, _, _ in level_tiles:
-            for t in tiles:
-                f.write(t)
-        total = f.tell()
-
+            entries += geo_entries(xmin, ymax, res_x, res_y, epsg)
+        tiles = [
+            _compress(tiff_predictor.encode(block.astype(en + "f4"), predictor), compression)
+            for block in tile_blocks(lv, tile)
+        ]
+        ifds.append((entries, tiles, (324, 325, 16 if bigtiff else 4)))  # LONG8 vs LONG
+    size = write_tiff(path, ifds, en=en, bigtiff=bigtiff, data_first=False)
     return {
         "n_overviews": len(levels) - 1,
-        "n_tiles": sum(len(t[0]) for t in level_tiles),
-        "bytes": total,
+        "n_tiles": sum(len(tiles) for _, tiles, _ in ifds),
+        "bytes": size,
     }
 
 

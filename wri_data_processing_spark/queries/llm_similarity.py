@@ -989,15 +989,16 @@ def _pq_update(sub: DataFrame, asg: DataFrame) -> DataFrame:
     )
 
 
-def pq_subvectors(qt: DataFrame) -> DataFrame:
-    """Split the quantized-vector frame (vec_id, qv) into the per-subspace
-    frame (vec_id, m, sv) — the input both PQ index-build stages share."""
+def pq_subvectors(qt: DataFrame, vec: str = "qv") -> DataFrame:
+    """Split a quantized-vector frame (vec_id, ``vec``) into the per-subspace
+    frame (vec_id, m, sv) — the input both PQ index-build stages share (on
+    raw vectors for sim_ann_pq, on IVF residuals for ivfpq_index)."""
     return qt.select(
         "vec_id",
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-                lambda m: F.slice("qv", m * _PQ_DSUB + 1, _PQ_DSUB),
+                lambda m: F.slice(vec, m * _PQ_DSUB + 1, _PQ_DSUB),
             )
         ).alias("m", "sv"),
     ).select("vec_id", F.col("m").cast("long").alias("m"), "sv")
@@ -1054,29 +1055,9 @@ def ivfpq_index(qt: DataFrame) -> tuple:
             "vec_id", "cid", F.zip_with("qv", "cv", lambda a, b: a - b).alias("rv")
         )
     )
-    rsub = res.select(
-        "vec_id",
-        "cid",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-                lambda m: F.slice("rv", m * _PQ_DSUB + 1, _PQ_DSUB),
-            )
-        ).alias("m", "sv"),
-    ).select("vec_id", "cid", F.col("m").cast("long").alias("m"), "sv")
-    pcents = rsub.filter(F.col("vec_id") < _PQ_KSUB).select(
-        "m", F.col("vec_id").alias("c"), F.col("sv").alias("cv")
-    )
-    tsub = rsub.filter(F.col("vec_id") % _PQ_TRAIN_MOD == 0).select(
-        "vec_id", "m", "sv"
-    )
-    for _ in range(_PQ_ROUNDS):
-        pcents = _pq_update(tsub, _pq_assign(tsub, pcents))
-    pcents = pcents.localCheckpoint()
-    codes = _pq_assign(rsub.select("vec_id", "m", "sv"), pcents).select(
-        "vec_id", "m", F.col("c").alias("code")
-    )
-    return ccents, asg, pcents, codes
+    rsub = pq_subvectors(res, "rv")
+    pcents = pq_train_codebooks(rsub)
+    return ccents, asg, pcents, pq_encode(rsub, pcents)
 
 
 def _pq_train_sql(

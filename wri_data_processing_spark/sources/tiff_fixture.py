@@ -1,11 +1,13 @@
 """Spec-conformant synthetic GeoTIFF generator (classic TIFF + BigTIFF).
 
-Written byte-by-byte from the public TIFF 6.0 / BigTIFF / GeoTIFF specs so
-the engine can exercise REAL raster reads and COG conversions in
-environments without GDAL and without committed binary fixtures: tests and
-the driver-checked `scan_raster_header_real` / `sink_cog_real` queries
-generate inputs deterministically at run time, so their expected headers
-are plain arithmetic both engines can state up front.
+Built from the public TIFF 6.0 / BigTIFF / GeoTIFF specs so the engine can
+exercise REAL raster reads and COG conversions in environments without
+GDAL and without committed binary fixtures: tests, perfbench's raster
+corpus and the oracle-checked `scan_raster_header_real` / `sink_cog_real`
+queries generate inputs deterministically at run time, so their expected
+headers are plain arithmetic both engines can state up front. This module
+builds the pixel blocks and tag lists; the container layout is
+sources/tiff_writer.py's (data-first: header | blocks | values | IFD).
 
 The grids mirror the reference's fixed-grid constants
 (00b_extract_metadata_all.R:40-48): EPSG:5070, 90 m pixels, Float32,
@@ -14,8 +16,9 @@ top-left anchored at the reference extent origin.
 
 from __future__ import annotations
 
-import struct
 import zlib
+
+from wri_data_processing_spark.sources.tiff_writer import geo_entries, tile_blocks, write_tiff
 
 # Reference grid constants (00b_extract_metadata_all.R:40-48).
 XMIN, YMAX = -5216639.669534829, 6199081.688
@@ -23,95 +26,33 @@ RES = 90.0
 NCOLS, NROWS = 7, 5  # tiny default grid; extent math scales per spec
 
 
-def _entries_classic(en, width, height, geo_offsets):
-    scale_off, tie_off, keys_off, data_off = geo_offsets
-
-    def inline(fmt, *vals):
-        b = struct.pack(en + fmt, *vals)
-        return b + b"\x00" * (4 - len(b))
-
-    return [
-        (256, 3, 1, inline("H", width)),
-        (257, 3, 1, inline("H", height)),
-        (258, 3, 1, inline("H", 32)),
-        (259, 3, 1, inline("H", 1)),  # uncompressed
-        (262, 3, 1, inline("H", 1)),
-        (273, 4, 1, inline("I", data_off)),
-        (277, 3, 1, inline("H", 1)),
-        (278, 3, 1, inline("H", height)),
-        (279, 4, 1, inline("I", width * height * 4)),
-        (339, 3, 1, inline("H", 3)),  # IEEE float
-        (33550, 12, 3, struct.pack(en + "I", scale_off)),
-        (33922, 12, 6, struct.pack(en + "I", tie_off)),
-        (34735, 3, 12, struct.pack(en + "I", keys_off)),
+def _write_single_strip(path, en, width, height, epsg, bigtiff):
+    """An all-zero Float32 raster in one uncompressed strip. The BigTIFF
+    variant stores LONG8 offsets and leaves out Compression,
+    PhotometricInterpretation and RowsPerStrip, so the reader's defaults
+    (no compression, one strip) are exercised too."""
+    entries = [
+        (256, 3, (width,)),
+        (257, 3, (height,)),
+        (258, 3, (32,)),
+        (277, 3, (1,)),
+        (339, 3, (3,)),  # IEEE float
+        *geo_entries(XMIN, YMAX, RES, RES, epsg),
     ]
+    if not bigtiff:
+        entries += [(259, 3, (1,)), (262, 3, (1,)), (278, 3, (height,))]
+    ifd = (entries, [bytes(width * height * 4)], (273, 279, 16 if bigtiff else 4))
+    write_tiff(path, [ifd], en=en, bigtiff=bigtiff, data_first=True)
 
 
 def write_classic_geotiff(path, en="<", width=NCOLS, height=NROWS, epsg=5070):
     """Minimal spec-conformant single-strip Float32 GeoTIFF."""
-    pixels = b"\x00" * (width * height * 4)
-    scale = struct.pack(en + "ddd", RES, RES, 0.0)
-    tiepoint = struct.pack(en + "dddddd", 0, 0, 0, XMIN, YMAX, 0)
-    # GeoKeyDirectory: version 1.1.0, 2 keys: GTModelType=1 (projected),
-    # ProjectedCSTypeGeoKey=epsg.
-    keys = struct.pack(en + "H" * 12, 1, 1, 0, 2, 1024, 0, 1, 1, 3072, 0, 1, epsg)
-
-    data_off = 8
-    scale_off = data_off + len(pixels)
-    tie_off = scale_off + len(scale)
-    keys_off = tie_off + len(tiepoint)
-    ifd_off = keys_off + len(keys)
-
-    entries = _entries_classic(en, width, height, (scale_off, tie_off, keys_off, data_off))
-    ifd = struct.pack(en + "H", len(entries))
-    for tag, typ, cnt, val in entries:
-        ifd += struct.pack(en + "HHI", tag, typ, cnt) + val
-    ifd += struct.pack(en + "I", 0)  # no next IFD
-
-    bom = b"II" if en == "<" else b"MM"
-    with open(path, "wb") as f:
-        f.write(bom + struct.pack(en + "HI", 42, ifd_off))
-        f.write(pixels + scale + tiepoint + keys + ifd)
+    _write_single_strip(path, en, width, height, epsg, bigtiff=False)
 
 
 def write_bigtiff_geotiff(path, en="<", width=NCOLS, height=NROWS, epsg=5070):
     """Same raster as a BigTIFF (magic 43, 8-byte counts/offsets)."""
-    pixels = b"\x00" * (width * height * 4)
-    scale = struct.pack(en + "ddd", RES, RES, 0.0)
-    tiepoint = struct.pack(en + "dddddd", 0, 0, 0, XMIN, YMAX, 0)
-    keys = struct.pack(en + "H" * 12, 1, 1, 0, 2, 1024, 0, 1, 1, 3072, 0, 1, epsg)
-
-    data_off = 16
-    scale_off = data_off + len(pixels)
-    tie_off = scale_off + len(scale)
-    keys_off = tie_off + len(tiepoint)
-    ifd_off = keys_off + len(keys)
-
-    def inline(fmt, *vals):
-        b = struct.pack(en + fmt, *vals)
-        return b + b"\x00" * (8 - len(b))
-
-    entries = [
-        (256, 3, 1, inline("H", width)),
-        (257, 3, 1, inline("H", height)),
-        (258, 3, 1, inline("H", 32)),
-        (273, 16, 1, inline("Q", data_off)),
-        (277, 3, 1, inline("H", 1)),
-        (279, 16, 1, inline("Q", width * height * 4)),
-        (339, 3, 1, inline("H", 3)),
-        (33550, 12, 3, struct.pack(en + "Q", scale_off)),
-        (33922, 12, 6, struct.pack(en + "Q", tie_off)),
-        (34735, 3, 12, struct.pack(en + "Q", keys_off)),
-    ]
-    ifd = struct.pack(en + "Q", len(entries))
-    for tag, typ, cnt, val in entries:
-        ifd += struct.pack(en + "HHQ", tag, typ, cnt) + val
-    ifd += struct.pack(en + "Q", 0)
-
-    bom = b"II" if en == "<" else b"MM"
-    with open(path, "wb") as f:
-        f.write(bom + struct.pack(en + "HHH", 43, 8, 0) + struct.pack(en + "Q", ifd_off))
-        f.write(pixels + scale + tiepoint + keys + ifd)
+    _write_single_strip(path, en, width, height, epsg, bigtiff=True)
 
 
 _SAMPLE_FORMAT = {"u": 1, "i": 2, "f": 3}
@@ -150,17 +91,10 @@ def write_geotiff_grid(
     sample_format = _SAMPLE_FORMAT[arr.dtype.kind]
 
     # Compression blocks: padded tiles, or strips of rows_per_strip rows.
-    blocks = []
     if tiled:
-        down, across = (height + tile - 1) // tile, (width + tile - 1) // tile
-        padded = np.zeros((down * tile, across * tile), dtype=arr.dtype)
-        padded[:height, :width] = arr
-        for ty in range(down):
-            for tx in range(across):
-                blocks.append(padded[ty * tile : (ty + 1) * tile, tx * tile : (tx + 1) * tile])
+        blocks = tile_blocks(arr, tile)
     else:
-        for r0 in range(0, height, rows_per_strip):
-            blocks.append(arr[r0 : r0 + rows_per_strip])
+        blocks = [arr[r0 : r0 + rows_per_strip] for r0 in range(0, height, rows_per_strip)]
     if compression == "lzw":
         from wri_data_processing_spark.sources.tiff_lzw import lzw_encode
 
@@ -170,80 +104,22 @@ def write_geotiff_grid(
         payloads = [zlib.compress(tiff_predictor.encode(b, predictor), 6) for b in blocks]
         comp_tag = 8
 
-    scale = struct.pack(en + "ddd", RES, RES, 0.0)
-    tiepoint = struct.pack(en + "dddddd", 0, 0, 0, XMIN, YMAX, 0)
-    keys = struct.pack(en + "H" * 12, 1, 1, 0, 2, 1024, 0, 1, 1, 3072, 0, 1, epsg)
-
-    # Layout: header | block payloads | out-of-line arrays | IFD (the same
-    # data-first order the minimal writers above use).
-    pos = 16 if bigtiff else 8
-    offsets = []
-    for p in payloads:
-        offsets.append(pos)
-        pos += len(p)
-
-    inline_cap = 8 if bigtiff else 4
-    aux = b""
-
-    def arr_value(typ_fmt, vals):
-        """Return (inline-or-offset bytes, needs_offset) appending to aux."""
-        nonlocal aux, pos
-        b = struct.pack(en + typ_fmt * len(vals), *vals)
-        if len(b) <= inline_cap:
-            return b + b"\x00" * (inline_cap - len(b)), None
-        off = pos + len(aux)
-        aux += b
-        return None, off
-
-    entries = []  # (tag, type, count, inline_bytes_or_None, offset_or_None)
-
-    def add(tag, typ, typ_fmt, vals):
-        inline, off = arr_value(typ_fmt, vals)
-        entries.append((tag, typ, len(vals), inline, off))
-
-    add(256, 3, "H", (width,))
-    add(257, 3, "H", (height,))
-    add(258, 3, "H", (bits,))
-    add(259, 3, "H", (comp_tag,))
-    add(262, 3, "H", (1,))
-    add(277, 3, "H", (1,))
+    entries = [
+        (256, 3, (width,)),
+        (257, 3, (height,)),
+        (258, 3, (bits,)),
+        (259, 3, (comp_tag,)),
+        (262, 3, (1,)),
+        (277, 3, (1,)),
+        (339, 3, (sample_format,)),
+        *geo_entries(XMIN, YMAX, RES, RES, epsg),
+    ]
     if tiled:
-        add(322, 3, "H", (tile,))
-        add(323, 3, "H", (tile,))
-        add(324, 4, "I", tuple(offsets))
-        add(325, 4, "I", tuple(len(p) for p in payloads))
+        entries += [(322, 3, (tile,)), (323, 3, (tile,))]
+        block_tags = (324, 325, 4)
     else:
-        add(273, 4, "I", tuple(offsets))
-        add(278, 3, "H", (rows_per_strip,))
-        add(279, 4, "I", tuple(len(p) for p in payloads))
+        entries.append((278, 3, (rows_per_strip,)))
+        block_tags = (273, 279, 4)
     if predictor != 1:
-        add(317, 3, "H", (predictor,))
-    add(339, 3, "H", (sample_format,))
-    add(33550, 12, "d", (RES, RES, 0.0))
-    add(33922, 12, "d", (0, 0, 0, XMIN, YMAX, 0))
-    add(34735, 3, "H", (1, 1, 0, 2, 1024, 0, 1, 1, 3072, 0, 1, epsg))
-    entries.sort()
-
-    ifd_off = pos + len(aux)
-    if bigtiff:
-        ifd = struct.pack(en + "Q", len(entries))
-        for tag, typ, cnt, inline, off in entries:
-            ifd += struct.pack(en + "HHQ", tag, typ, cnt)
-            ifd += inline if inline is not None else struct.pack(en + "Q", off)
-        ifd += struct.pack(en + "Q", 0)
-        header = (b"II" if en == "<" else b"MM") + struct.pack(
-            en + "HHH", 43, 8, 0
-        ) + struct.pack(en + "Q", ifd_off)
-    else:
-        ifd = struct.pack(en + "H", len(entries))
-        for tag, typ, cnt, inline, off in entries:
-            ifd += struct.pack(en + "HHI", tag, typ, cnt)
-            ifd += inline if inline is not None else struct.pack(en + "I", off)
-        ifd += struct.pack(en + "I", 0)
-        header = (b"II" if en == "<" else b"MM") + struct.pack(en + "HI", 42, ifd_off)
-
-    with open(path, "wb") as f:
-        f.write(header)
-        for p in payloads:
-            f.write(p)
-        f.write(aux + ifd)
+        entries.append((317, 3, (predictor,)))
+    write_tiff(path, [(entries, payloads, block_tags)], en=en, bigtiff=bigtiff, data_first=True)

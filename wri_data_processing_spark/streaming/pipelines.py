@@ -222,17 +222,9 @@ def incremental_user_totals(
     q.awaitTermination(120)
 
 
-def click_purchase_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
-    """Stream-stream interval join: purchases attributed to a click by the
-    same user within the preceding 30 minutes.
-
-    Both sides carry watermarks, so the state store evicts click rows once
-    the purchase-side watermark passes click.ts + 30 min — bounded state,
-    the property that makes stream-stream joins runnable forever. The time
-    bound in the join condition is REQUIRED: without it Spark rejects the
-    plan (unbounded state). Batch twin: the same join expression over the
-    static events table (tests assert set equality).
-    """
+def _click_purchase_join(clicks: DataFrame, purchases: DataFrame, how: str) -> DataFrame:
+    """The watermarked 30-minute click -> purchase interval join of both
+    variants below."""
     c = clicks.withWatermark("ts", "1 hour").select(
         F.col("user_id").alias("c_user"),
         F.col("ts").alias("click_ts"),
@@ -249,9 +241,23 @@ def click_purchase_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES"))
     )
-    return c.join(p, cond).select(
+    return c.join(p, cond, how).select(
         F.col("c_user").alias("user_id"), "click_id", "purchase_id", "amount"
     )
+
+
+def click_purchase_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
+    """Stream-stream interval join: purchases attributed to a click by the
+    same user within the preceding 30 minutes.
+
+    Both sides carry watermarks, so the state store evicts click rows once
+    the purchase-side watermark passes click.ts + 30 min — bounded state,
+    the property that makes stream-stream joins runnable forever. The time
+    bound in the join condition is REQUIRED: without it Spark rejects the
+    plan (unbounded state). Batch twin: the same join expression over the
+    static events table (tests assert set equality).
+    """
+    return _click_purchase_join(clicks, purchases, "inner")
 
 
 def click_purchase_join_outer(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
@@ -269,25 +275,7 @@ def click_purchase_join_outer(clicks: DataFrame, purchases: DataFrame) -> DataFr
     stream converges to. State bound and join condition requirements are
     identical to the inner variant.
     """
-    c = clicks.withWatermark("ts", "1 hour").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    p = purchases.withWatermark("ts", "1 hour").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("amount"),
-    )
-    cond = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES"))
-    )
-    return c.join(p, cond, "leftOuter").select(
-        F.col("c_user").alias("user_id"), "click_id", "purchase_id", "amount"
-    )
+    return _click_purchase_join(clicks, purchases, "leftOuter")
 
 
 def windowed_topk(
