@@ -2,7 +2,9 @@
 
 Each case writes one file through a public writer and compares its sha256
 with a digest recorded before the container serializer was shared between
-geo/cog_writer.py and sources/tiff_fixture.py. A refactor of the writers
+geo/cog_writer.py and sources/tiff_fixture.py; the two minimal BigTIFF
+digests were recorded again when that fixture gained its required
+PhotometricInterpretation tag. A refactor of the writers
 that changes any byte of these files fails here, so this grid is the gate
 for "same output from less code". It covers classic and BigTIFF, both byte
 orders, strips and tiles, predictors 1/2/3, uncompressed and LZW payloads,
@@ -80,8 +82,8 @@ def _write(case: str, path: str) -> None:
 DIGESTS = {
     "minimal|classic|<": "c8e1d95fae6af1778c41ea4c048d3fbfa85472cef8b098d22fdd95783b457c08",
     "minimal|classic|>": "e1ac76d8ab8d10e9bd9bae062ab1ae02a1495b08f5d0714e94d03b78afb4f36c",
-    "minimal|bigtiff|<": "aa078c0b457ab17f1217c98cfd56e11e1ffffed1bbea365b42e255b46e4bee20",
-    "minimal|bigtiff|>": "34fd1c329a9d0bf1bf9bd8aace3e928c3ed67b26240a8d6d67e4d990419447d5",
+    "minimal|bigtiff|<": "e3c014cb7d038eb6180210d9cc2c7dd6962a3809f8daea4a084cba4269fdb23b",
+    "minimal|bigtiff|>": "1fcee276f43845a5d30e4cae6c04f468fdbd4ceaf22180d385e0930bd6b5c6e3",
     "grid|classic|<|strips|p1": "64c7ef901c86f68eb1d3978854d0a004f34744886fbb6a63b1b232b4a17221bc",
     "grid|classic|<|strips|p2": "8f3ad17db0dcea141d33bed3f1c971f23b1f805205ebfd8917655343cd69f729",
     "grid|classic|<|strips|p3": "ed2c40a8e1222e35d760d07eb61d30239660a15023789e5d09f0babb7a134fc3",

@@ -31,11 +31,7 @@ from pyspark.sql import functions as F
 from wri_data_processing_spark.catalog import table
 from wri_data_processing_spark.functions.text import gram_key
 from wri_data_processing_spark.queries.llm_similarity import _dvec, cosine
-from wri_data_processing_spark.queries.llm_text import (
-    _MARKERS,
-    _PRED_SQL,
-    _count_col,
-)
+from wri_data_processing_spark.queries.llm_text import _PRED_SQL, _marker_pred_col
 from wri_data_processing_spark.registry import query
 
 _Q30 = 1 << 30
@@ -48,30 +44,6 @@ _DCG_W = [(1 << 30) if r == 1 else
           math.floor((1 << 30) * math.log(2.0) / math.log(r + 1.0))
           for r in range(1, 11)]
 _IDCG = [sum(_DCG_W[:k]) for k in range(0, 11)]  # _IDCG[k] = ideal DCG of k hits
-
-
-def _lang_pred_col() -> F.Column:
-    """The text_lang_id prediction as a reusable Column (same marker
-    scores, same precedence chain — llm_text.py:121)."""
-    scores = {
-        lang: sum((_count_col(w) for w in ws), F.lit(0.0))
-        for lang, ws in _MARKERS.items()
-    }
-    return (
-        F.when(
-            (scores["en"] >= F.greatest(scores["es"], scores["fr"], scores["de"]))
-            & (scores["en"] > 0),
-            F.lit("en"),
-        )
-        .when(
-            (scores["es"] >= F.greatest(scores["fr"], scores["de"]))
-            & (scores["es"] > 0),
-            "es",
-        )
-        .when((scores["fr"] >= scores["de"]) & (scores["fr"] > 0), "fr")
-        .when(scores["de"] > 0, "de")
-        .otherwise("unknown")
-    )
 
 
 @query(
@@ -126,7 +98,7 @@ def eval_classifier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     conf = (
-        d.select(F.col("lang").alias("labeled"), _lang_pred_col().alias("pred"))
+        d.select(F.col("lang").alias("labeled"), _marker_pred_col().alias("pred"))
         .groupBy("labeled", "pred")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .localCheckpoint()
@@ -849,7 +821,7 @@ def eval_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     conf = (
-        d.select(F.col("lang").alias("labeled"), _lang_pred_col().alias("pred"))
+        d.select(F.col("lang").alias("labeled"), _marker_pred_col().alias("pred"))
         .groupBy("labeled", "pred")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .localCheckpoint()
@@ -1070,7 +1042,7 @@ def eval_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     conf = (
-        d.select(F.col("lang").alias("labeled"), _lang_pred_col().alias("pred"))
+        d.select(F.col("lang").alias("labeled"), _marker_pred_col().alias("pred"))
         .groupBy("labeled", "pred")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .localCheckpoint()

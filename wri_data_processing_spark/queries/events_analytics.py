@@ -16,12 +16,13 @@ element) is far below float32 input precision.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
 from wri_data_processing_spark.operators.ranking import with_global_ntiles
 from wri_data_processing_spark.registry import query
+from wri_data_processing_spark.streaming.pipelines import attribution_window_join
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
@@ -455,6 +456,20 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def click_purchase_join(
+    e: DataFrame, click_cols: list, purchase_cols: list, how: str
+) -> DataFrame:
+    """The batch click -> purchase attribution join over the events frame
+    ``e``: its clicks, projected to ``click_cols`` (which carry user_id and
+    click_ts), joined by attribution_window_join to its purchases,
+    projected to (p_user, purchase_ts, *``purchase_cols``)."""
+    c = e.filter(F.col("event_type") == "click").select(*click_cols)
+    p = e.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts"), *purchase_cols
+    )
+    return attribution_window_join(c, p, "user_id", how)
+
+
 @query(
     "events_attribution_join",
     oracle="""
@@ -482,29 +497,12 @@ def events_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state.
     """
     e = table(spark, sf_dir, "events")
-    c = e.filter(F.col("event_type") == "click").select(
-        F.col("user_id"),
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("amount"),
-    )
-    return (
-        c.join(
-            p,
-            (F.col("user_id") == F.col("p_user"))
-            & (F.col("purchase_ts") > F.col("click_ts"))
-            & (
-                F.col("purchase_ts")
-                <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")
-            ),
-        )
-        .select("user_id", "click_id", "purchase_id", "amount")
-    )
+    return click_purchase_join(
+        e,
+        ["user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")],
+        [F.col("event_id").alias("purchase_id"), F.col("value").alias("amount")],
+        "inner",
+    ).select("user_id", "click_id", "purchase_id", "amount")
 
 
 @query(
@@ -575,26 +573,16 @@ def events_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Latency is integer microseconds end to end (unix_micros difference,
     integer floor-div binning) — no float time math anywhere, so bin
-    edges are exact on both engines. Builds on the same bounded
-    user-blocked interval join as events_attribution_join; the histogram
-    is a 6-row aggregate on top.
+    edges are exact on both engines. Builds on click_purchase_join, the
+    bounded user-blocked interval join of events_attribution_join; the
+    histogram is a 6-row aggregate on top.
     """
     e = table(spark, sf_dir, "events")
-    c = e.filter(F.col("event_type") == "click").select(
-        F.col("user_id"),
-        F.col("ts").alias("click_ts"),
-        F.unix_micros("ts").alias("click_us"),
-    )
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-        F.unix_micros("ts").alias("purchase_us"),
-    )
-    pairs = c.join(
-        p,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
+    pairs = click_purchase_join(
+        e,
+        ["user_id", F.col("ts").alias("click_ts"), F.unix_micros("ts").alias("click_us")],
+        [F.unix_micros("ts").alias("purchase_us")],
+        "inner",
     ).select((F.col("purchase_us") - F.col("click_us")).alias("latency_us"))
     return (
         pairs.groupBy(F.expr("latency_us div 300000000").alias("bucket_5min"))
@@ -893,6 +881,26 @@ def events_seasonality_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def pearson(pairs: DataFrame, n: str, keys: list[str]) -> tuple[DataFrame, Column]:
+    """Pearson's r over the integer (x, y) pairs of ``pairs`` per ``keys``,
+    exactly: the frame of ``keys``, the pair count ``n`` and the five
+    power sums as BIGINTs, and r over it as one closed-form double tree
+    with the IEEE-exact sqrt."""
+    s = pairs.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("long").alias(n),
+        F.sum("x").cast("long").alias("sx"),
+        F.sum("y").cast("long").alias("sy"),
+        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
+        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
+        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+    )
+    num = (F.col(n) * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    den = F.sqrt(
+        (F.col(n) * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
+    ) * F.sqrt((F.col(n) * F.col("syy") - F.col("sy") * F.col("sy")).cast("double"))
+    return s, num / den
+
+
 @query(
     "events_autocorr_lag1",
     oracle="""
@@ -933,19 +941,8 @@ def events_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = daily.select(
         F.col("n").alias("y"), F.lag("n").over(w).alias("x")
     ).filter(F.col("x").isNotNull())
-    s = pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
-    num = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den = F.sqrt(
-        (F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    ) * F.sqrt((F.col("k") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double"))
-    return s.select(F.col("k").alias("n_pairs"), (num / den).alias("autocorr_lag1"))
+    s, r = pearson(pairs, "k", [])
+    return s.select(F.col("k").alias("n_pairs"), r.alias("autocorr_lag1"))
 
 
 @query(
@@ -1559,9 +1556,7 @@ def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@query(
-    "events_survival_km",
-    oracle="""
+_LIFE_TABLE_CTES = """
     WITH u AS (
       SELECT user_id,
              MIN(CAST(ts AS DATE)) AS fd,
@@ -1588,7 +1583,58 @@ def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
                ntot - CAST(COALESCE(list_aggregate(
                  list_transform(rs[1:i-1], x -> x.d + x.c), 'sum'), 0)
                  AS BIGINT)) AS atrisk
-      FROM one),
+      FROM one)"""
+
+
+def _life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one-row time-to-first-purchase life table of events_survival_km
+    and events_hazard_nelson_aalen: ``rs``, the (dur, d, c) event and
+    censor counts per duration in duration order, and ``atrisk``, the
+    users still at risk at each of them (ntot minus every earlier
+    duration's d + c). Its SQL twin is _LIFE_TABLE_CTES."""
+    e = table(spark, sf_dir, "events")
+    u = e.groupBy("user_id").agg(
+        F.min(F.to_date("ts")).alias("fd"),
+        F.max(F.to_date("ts")).alias("ld"),
+        F.min(
+            F.when(F.col("event_type") == "purchase", F.to_date("ts"))
+        ).alias("pd"),
+    )
+    f = u.select(
+        F.when(F.col("pd").isNotNull(), F.datediff("pd", "fd"))
+        .otherwise(F.datediff("ld", "fd"))
+        .alias("dur"),
+        F.when(F.col("pd").isNotNull(), 1).otherwise(0).alias("ev"),
+    )
+    g = f.groupBy("dur").agg(
+        F.sum("ev").cast("long").alias("d"),
+        F.sum(1 - F.col("ev")).cast("long").alias("c"),
+    )
+    one = g.agg(
+        F.sum(F.col("d") + F.col("c")).cast("long").alias("ntot"),
+        F.array_sort(F.collect_list(F.struct("dur", "d", "c"))).alias("rs"),
+    )
+    return one.select(
+        "ntot",
+        "rs",
+        F.transform(
+            "rs",
+            lambda r, i: F.col("ntot")
+            - F.coalesce(
+                F.aggregate(
+                    F.slice("rs", F.lit(1), i),
+                    F.lit(0).cast("long"),
+                    lambda a, x: a + x["d"] + x["c"],
+                ),
+                F.lit(0).cast("long"),
+            ),
+        ).alias("atrisk"),
+    )
+
+
+@query(
+    "events_survival_km",
+    oracle=f"""{_LIFE_TABLE_CTES},
     t AS (
       SELECT rs, atrisk,
              list_transform(rs, (r, i) ->
@@ -1637,46 +1683,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     row — never a global window — so the shape is unchanged at 100 TB
     where |users| grows but the calendar does not.
     """
-    e = table(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(
-        F.min(F.to_date("ts")).alias("fd"),
-        F.max(F.to_date("ts")).alias("ld"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.to_date("ts"))
-        ).alias("pd"),
-    )
-    f = u.select(
-        F.when(
-            F.col("pd").isNotNull(), F.datediff("pd", "fd")
-        )
-        .otherwise(F.datediff("ld", "fd"))
-        .alias("dur"),
-        F.when(F.col("pd").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
-    g = f.groupBy("dur").agg(
-        F.sum("ev").cast("long").alias("d"),
-        F.sum(1 - F.col("ev")).cast("long").alias("c"),
-    )
-    one = g.agg(
-        F.sum(F.col("d") + F.col("c")).cast("long").alias("ntot"),
-        F.array_sort(F.collect_list(F.struct("dur", "d", "c"))).alias("rs"),
-    )
-    enr = one.select(
-        "ntot",
-        "rs",
-        F.transform(
-            "rs",
-            lambda r, i: F.col("ntot")
-            - F.coalesce(
-                F.aggregate(
-                    F.slice("rs", F.lit(1), i),
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + x["d"] + x["c"],
-                ),
-                F.lit(0).cast("long"),
-            ),
-        ).alias("atrisk"),
-    )
+    enr = _life_table(spark, sf_dir)
     t = enr.select(
         "rs",
         "atrisk",
@@ -2647,22 +2654,9 @@ def events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = daily.select(F.col("d").alias("dj"), F.col("n").alias("y"))
     pairs = a.join(b, "dj")
-    s = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
-    num = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den = F.sqrt(
-        (F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    ) * F.sqrt(
-        (F.col("k") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    )
+    s, r = pearson(pairs, "k", ["lag"])
     return s.select(
-        "lag", F.col("k").alias("n_pairs"), F.round(num / den, 6).alias("acf")
+        "lag", F.col("k").alias("n_pairs"), F.round(r, 6).alias("acf")
     ).orderBy("lag")
 
 
@@ -3089,34 +3083,7 @@ def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_hazard_nelson_aalen",
-    oracle="""
-    WITH u AS (
-      SELECT user_id,
-             MIN(CAST(ts AS DATE)) AS fd,
-             MAX(CAST(ts AS DATE)) AS ld,
-             MIN(CASE WHEN event_type = 'purchase'
-                      THEN CAST(ts AS DATE) END) AS pd
-      FROM events GROUP BY 1),
-    f AS (
-      SELECT CASE WHEN pd IS NOT NULL THEN date_diff('day', fd, pd)
-                  ELSE date_diff('day', fd, ld) END AS dur,
-             CASE WHEN pd IS NOT NULL THEN 1 ELSE 0 END AS ev
-      FROM u),
-    g AS (
-      SELECT dur, CAST(SUM(ev) AS BIGINT) AS d,
-             CAST(SUM(1 - ev) AS BIGINT) AS c
-      FROM f GROUP BY 1),
-    one AS (
-      SELECT CAST(SUM(d + c) AS BIGINT) AS ntot,
-             list(struct_pack(dur := dur, d := d, c := c) ORDER BY dur) AS rs
-      FROM g),
-    enr AS (
-      SELECT ntot, rs,
-             list_transform(rs, (r, i) ->
-               ntot - CAST(COALESCE(list_aggregate(
-                 list_transform(rs[1:i-1], x -> x.d + x.c), 'sum'), 0)
-                 AS BIGINT)) AS atrisk
-      FROM one),
+    oracle=f"""{_LIFE_TABLE_CTES},
     t AS (
       SELECT rs, atrisk,
              list_transform(rs, (r, i) ->
@@ -3154,51 +3121,14 @@ def events_hazard_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch exists: n_i >= d_i + c_i >= 1 at every observed duration by
     construction.
 
-    Plan: identical shape to events_survival_km (one per-user
-    conditional min/max shuffle, one per-duration count shuffle bounded
-    by the calendar span, then a single-row ordered fold + posexplode);
+    Plan: events_survival_km's _life_table (one per-user conditional
+    min/max shuffle, one per-duration count shuffle bounded by the
+    calendar span), then a single-row ordered fold + posexplode;
     the O(k^2) slice sums run over k <= span-days elements inside one
     row, unchanged at 100 TB where |users| grows but the calendar
     doesn't.
     """
-    e = table(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(
-        F.min(F.to_date("ts")).alias("fd"),
-        F.max(F.to_date("ts")).alias("ld"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.to_date("ts"))
-        ).alias("pd"),
-    )
-    f = u.select(
-        F.when(F.col("pd").isNotNull(), F.datediff("pd", "fd"))
-        .otherwise(F.datediff("ld", "fd"))
-        .alias("dur"),
-        F.when(F.col("pd").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
-    g = f.groupBy("dur").agg(
-        F.sum("ev").cast("long").alias("d"),
-        F.sum(1 - F.col("ev")).cast("long").alias("c"),
-    )
-    one = g.agg(
-        F.sum(F.col("d") + F.col("c")).cast("long").alias("ntot"),
-        F.array_sort(F.collect_list(F.struct("dur", "d", "c"))).alias("rs"),
-    )
-    enr = one.select(
-        "ntot",
-        "rs",
-        F.transform(
-            "rs",
-            lambda r, i: F.col("ntot")
-            - F.coalesce(
-                F.aggregate(
-                    F.slice("rs", F.lit(1), i),
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + x["d"] + x["c"],
-                ),
-                F.lit(0).cast("long"),
-            ),
-        ).alias("atrisk"),
-    )
+    enr = _life_table(spark, sf_dir)
     t = enr.select(
         "rs",
         "atrisk",

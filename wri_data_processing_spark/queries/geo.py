@@ -421,10 +421,7 @@ def geo_focal_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "geo_slope",
-    oracle=f"""
-    WITH {_CELLS_CTE},
+_GRAD_CTES = """
     vals AS (SELECT layer_id, x, y, CAST(s AS DOUBLE) / n AS v FROM cells),
     offs AS (SELECT * FROM (VALUES
                (-1, 0, 0.5, 0.0), (1, 0, -0.5, 0.0),
@@ -445,33 +442,13 @@ def geo_focal_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scatter
       WHERE tx BETWEEN 0 AND 63 AND ty BETWEEN 0 AND 63
       GROUP BY 1, 2, 3
-    )
-    SELECT layer_id, x, y,
-           ROUND(dzdx, 6) AS dzdx, ROUND(dzdy, 6) AS dzdy,
-           ROUND(sqrt(dzdx * dzdx + dzdy * dzdy), 6) AS slope
-    FROM grad WHERE nx = 2 AND ny = 2 AND nc = 1
-    """,
-)
-def geo_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Central-difference gradient magnitude over the cell table — the
-    slope/hillshade precursor of terrain analysis: dz/dx = (east - west)/2,
-    dz/dy = (north - south)/2, slope = sqrt(dzdx^2 + dzdy^2), emitted only
-    where the CENTER cell exists and both neighbors are present on each
-    axis — nodata stays nodata, the raster convention (the independent
-    Python-reference test caught the original hole-emitting behavior; the
-    zero-weight center marker in the scatter enforces it without adding a
-    join, and a +-0.0 addend is an exact IEEE identity so the 2-addend
-    argument below survives).
+    )"""
 
-    Same scatter shape as geo_focal_mean, with SIGNED weights: each cell
-    contributes +-v/2 to the four targets it neighbors, and one aggregation
-    keyed by target sums per-axis. Engine-exactness hinges on each axis sum
-    having AT MOST TWO addends — IEEE addition is commutative, so a 2-term
-    sum is order-independent no matter which task adds first; the final
-    sqrt is a single deterministic expression ROUNDed like every float
-    output in the tree. The nx/ny = 2 filter is the interior-cell predicate
-    AND the reason the 2-addend argument holds.
-    """
+
+def _gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(layer_id, x, y, dzdx, dzdy, nx, ny, nc) of every cell with a center
+    and both neighbors on each axis: the central-difference gradient of
+    geo_slope and geo_hillshade, whose SQL twin is _GRAD_CTES."""
     c = _cells(spark, sf_dir)
     vals = c.select(
         "layer_id", "x", "y", (F.col("s").cast("double") / F.col("n")).alias("v")
@@ -516,7 +493,41 @@ def geo_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ny").alias("ny"),
         F.sum("nc").alias("nc"),
     )
-    return grad.filter((F.col("nx") == 2) & (F.col("ny") == 2) & (F.col("nc") == 1)).select(
+    return grad.filter((F.col("nx") == 2) & (F.col("ny") == 2) & (F.col("nc") == 1))
+
+
+@query(
+    "geo_slope",
+    oracle=f"""
+    WITH {_CELLS_CTE},{_GRAD_CTES}
+    SELECT layer_id, x, y,
+           ROUND(dzdx, 6) AS dzdx, ROUND(dzdy, 6) AS dzdy,
+           ROUND(sqrt(dzdx * dzdx + dzdy * dzdy), 6) AS slope
+    FROM grad WHERE nx = 2 AND ny = 2 AND nc = 1
+    """,
+)
+def geo_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Central-difference gradient magnitude over the cell table — the
+    slope/hillshade precursor of terrain analysis: dz/dx = (east - west)/2,
+    dz/dy = (north - south)/2, slope = sqrt(dzdx^2 + dzdy^2), emitted only
+    where the CENTER cell exists and both neighbors are present on each
+    axis — nodata stays nodata, the raster convention (the independent
+    Python-reference test caught the original hole-emitting behavior; the
+    zero-weight center marker in the scatter enforces it without adding a
+    join, and a +-0.0 addend is an exact IEEE identity so the 2-addend
+    argument below survives).
+
+    The gradient is _gradient's: geo_focal_mean's scatter with SIGNED
+    weights, each cell contributing +-v/2 to the four targets it neighbors,
+    and one aggregation keyed by target summing per axis. Engine-exactness
+    hinges on each axis sum having AT MOST TWO addends — IEEE addition is
+    commutative, so a 2-term sum is order-independent no matter which task
+    adds first; the final
+    sqrt is a single deterministic expression ROUNDed like every float
+    output in the tree. The nx/ny = 2 filter is the interior-cell predicate
+    AND the reason the 2-addend argument holds.
+    """
+    return _gradient(spark, sf_dir).select(
         "layer_id",
         "x",
         "y",
@@ -537,28 +548,7 @@ _HS_LX, _HS_LY, _HS_LZ = -0.5, 0.5, 0.7071067811865476
 @query(
     "geo_hillshade",
     oracle=f"""
-    WITH {_CELLS_CTE},
-    vals AS (SELECT layer_id, x, y, CAST(s AS DOUBLE) / n AS v FROM cells),
-    offs AS (SELECT * FROM (VALUES
-               (-1, 0, 0.5, 0.0), (1, 0, -0.5, 0.0),
-               (0, -1, 0.0, 0.5), (0, 1, 0.0, -0.5),
-               (0, 0, 0.0, 0.0)) o(dx, dy, wx, wy)),
-    scatter AS (
-      SELECT layer_id, x + dx AS tx, y + dy AS ty,
-             wx * v AS cx, wy * v AS cy,
-             CASE WHEN dx <> 0 THEN 1 ELSE 0 END AS nx,
-             CASE WHEN dy <> 0 THEN 1 ELSE 0 END AS ny,
-             CASE WHEN dx = 0 AND dy = 0 THEN 1 ELSE 0 END AS nc
-      FROM vals, offs
-    ),
-    grad AS (
-      SELECT layer_id, tx AS x, ty AS y,
-             SUM(cx) AS dzdx, SUM(cy) AS dzdy,
-             SUM(nx) AS nx, SUM(ny) AS ny, SUM(nc) AS nc
-      FROM scatter
-      WHERE tx BETWEEN 0 AND 63 AND ty BETWEEN 0 AND 63
-      GROUP BY 1, 2, 3
-    )
+    WITH {_CELLS_CTE},{_GRAD_CTES}
     SELECT layer_id, x, y,
            ROUND(255.0 * greatest(0.0,
              ((-(dzdx) * ({_HS_LX!r})) - dzdy * ({_HS_LY!r}) + {_HS_LZ!r})
@@ -577,64 +567,20 @@ def geo_hillshade(spark: SparkSession, sf_dir: str) -> DataFrame:
     libm round differently in the last ulp — a latent hash-flake behind any
     ROUND. Multiply/add/divide/sqrt are all IEEE correctly-rounded in both
     engines, so this expression is bit-identical by construction. Gradient
-    exactness is geo_slope's 2-addend argument; the scatter/aggregation
-    plan is shared.
+    exactness is geo_slope's 2-addend argument; the scatter and aggregation
+    are _gradient's, shared with geo_slope.
 
     Oracle independence: the only VALUES block is the constant stencil
     offset grid (structure, not results); the oracle recomputes the
     gradients and hillshade itself from the base tables.
     """
-    c = _cells(spark, sf_dir)
-    vals = c.select(
-        "layer_id", "x", "y", (F.col("s").cast("double") / F.col("n")).alias("v")
-    )
-    offs = F.array(
-        *[
-            F.struct(
-                F.lit(dx).alias("dx"),
-                F.lit(dy).alias("dy"),
-                F.lit(wx).alias("wx"),
-                F.lit(wy).alias("wy"),
-            )
-            for dx, dy, wx, wy in [
-                (-1, 0, 0.5, 0.0),
-                (1, 0, -0.5, 0.0),
-                (0, -1, 0.0, 0.5),
-                (0, 1, 0.0, -0.5),
-                (0, 0, 0.0, 0.0),
-            ]
-        ]
-    )
-    scatter = (
-        vals.select("layer_id", "x", "y", "v", F.explode(offs).alias("o"))
-        .select(
-            "layer_id",
-            (F.col("x") + F.col("o.dx")).alias("tx"),
-            (F.col("y") + F.col("o.dy")).alias("ty"),
-            (F.col("o.wx") * F.col("v")).alias("cx"),
-            (F.col("o.wy") * F.col("v")).alias("cy"),
-            (F.col("o.dx") != 0).cast("int").alias("nx"),
-            (F.col("o.dy") != 0).cast("int").alias("ny"),
-            ((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).cast("int").alias("nc"),
-        )
-        .filter(F.col("tx").between(0, 63) & F.col("ty").between(0, 63))
-    )
-    grad = scatter.groupBy(
-        "layer_id", F.col("tx").alias("x"), F.col("ty").alias("y")
-    ).agg(
-        F.sum("cx").alias("dzdx"),
-        F.sum("cy").alias("dzdy"),
-        F.sum("nx").alias("nx"),
-        F.sum("ny").alias("ny"),
-        F.sum("nc").alias("nc"),
-    )
     dot = (
         (-F.col("dzdx")) * F.lit(_HS_LX)
         - F.col("dzdy") * F.lit(_HS_LY)
         + F.lit(_HS_LZ)
     )
     norm = F.sqrt(F.col("dzdx") * F.col("dzdx") + F.col("dzdy") * F.col("dzdy") + F.lit(1.0))
-    return grad.filter((F.col("nx") == 2) & (F.col("ny") == 2) & (F.col("nc") == 1)).select(
+    return _gradient(spark, sf_dir).select(
         "layer_id",
         "x",
         "y",

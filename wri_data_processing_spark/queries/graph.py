@@ -1027,6 +1027,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one scalar fold; the support threshold bounds the pair explosion
     before any graph work, as everywhere in this family.
     """
+    from wri_data_processing_spark.queries.events_analytics import pearson
+
     sup = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).drop("n").localCheckpoint()
     adj = both_directions(sup, "node", "nb")
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("d"))
@@ -1036,23 +1038,9 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(deg.select(F.col("node").alias("nb"), F.col("d").alias("y"))),
         "nb",
     )
-    s = ends.agg(
-        F.count(F.lit(1)).cast("long").alias("m"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
-    num = (F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den = F.sqrt(
-        (F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    ) * F.sqrt(
-        (F.col("m") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    )
+    s, r = pearson(ends, "m", [])
     return s.select(
-        F.col("m").alias("n_directed_edges"),
-        F.round(num / den, 6).alias("assortativity"),
+        F.col("m").alias("n_directed_edges"), F.round(r, 6).alias("assortativity")
     )
 
 

@@ -1910,16 +1910,7 @@ def _coverage_oracle() -> str:
     """
 
 
-def _register_coverage_oracle() -> None:
-    from wri_data_processing_spark.registry import ORACLE
-
-    if "dedup_coverage_estimate" not in ORACLE and all(
-        k in ORACLE for k in ("dedup_minhash_lsh", "dedup_simhash")
-    ):
-        ORACLE["dedup_coverage_estimate"] = _coverage_oracle()
-
-
-@query("dedup_coverage_estimate", oracle=None)
+@query("dedup_coverage_estimate", oracle=_coverage_oracle)
 def dedup_coverage_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capture-recapture estimate of the TRUE near-duplicate pair count —
     the answer to the question no single detector can ask of itself:
@@ -1935,7 +1926,7 @@ def dedup_coverage_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Composition contract (stats_fdr_bh): the engine CALLS the registered
     ops' machinery; the oracle embeds their exact oracle SQL as nested
-    CTEs, wired lazily after both register (module tail).
+    CTEs, built by registry.load_all after both register.
 
     Determinism: both pair sets are already driver-proven deterministic;
     counts are exact; the estimator is ONE division, ROUND-6. Plan: the

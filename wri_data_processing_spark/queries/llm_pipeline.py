@@ -3614,39 +3614,12 @@ def _bpe_loop(
             .collect()
         )
         if not head:
-            # degenerate empty pair table: replicate the frame-based path
-            # exactly (empty merge row, crossJoin empties the syms frame)
-            best = (
-                pc.orderBy(F.col("n_pairs").desc(), "left_tok", "right_tok")
-                .limit(1)
-                .select(
-                    F.lit(r).cast("long").alias("round"),
-                    "left_tok",
-                    "right_tok",
-                    F.concat(F.col("left_tok"), F.col("right_tok")).alias("merged"),
-                    "n_pairs",
-                )
-                .localCheckpoint()
-            )
-            merges.append(best)
+            # degenerate empty pair table: no merge row, and syms emptied,
+            # as the sequential loop's rewrite (a crossJoin with the empty
+            # merge frame) empties it
+            merges.append(spark.createDataFrame([], schema))
             if r < rounds or rewrite_last:
-                lt, rt = F.col("left_tok"), F.col("right_tok")
-                fold = F.aggregate(
-                    F.slice(F.col("syms"), F.lit(2), F.size("syms") - 1),
-                    F.slice(F.col("syms"), F.lit(1), F.lit(1)),
-                    lambda acc, x: F.when(
-                        (F.element_at(acc, -1) == lt) & (x == rt),
-                        F.concat(
-                            F.slice(acc, F.lit(1), F.size(acc) - 1),
-                            F.array(F.concat(lt, rt)),
-                        ),
-                    ).otherwise(F.concat(acc, F.array(x))),
-                )
-                syms = (
-                    syms.crossJoin(F.broadcast(best.select("left_tok", "right_tok")))
-                    .select("word", "cnt", fold.alias("syms"))
-                    .localCheckpoint()
-                )
+                syms = syms.limit(0)
             r += 1
             continue
         picked = [head[0]]

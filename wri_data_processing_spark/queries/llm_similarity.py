@@ -567,6 +567,21 @@ def sim_ann_brp_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _neighbor_ranks(e: DataFrame) -> DataFrame:
+    """(vec_a, vec_b, cosine_sim, rn) over every ordered pair of distinct
+    vectors of ``e``: brute-force pairs with the broadcast small side, each
+    vec_a's neighbors ranked by ROUNDED cosine (6 dp) with vec_b tie-break,
+    so both engines pick identical neighbors even where raw doubles differ
+    in the last ulp."""
+    a, b = pair_sides(e)
+    pairs = a.join(F.broadcast(b), F.col("vec_a") != F.col("vec_b"))
+    sim = F.round(cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")), 6)
+    w = Window.partitionBy("vec_a").orderBy(F.col("cosine_sim").desc(), "vec_b")
+    return pairs.select("vec_a", "vec_b", sim.alias("cosine_sim")).withColumn(
+        "rn", F.row_number().over(w)
+    )
+
+
 @query(
     "sim_knn_graph",
     oracle="""
@@ -597,21 +612,14 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL — candidate set in, adjacency out.
     """
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    a, b = pair_sides(e)
-    pairs = a.join(F.broadcast(b), F.col("vec_a") != F.col("vec_b"))
-    sim = F.round(cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")), 6)
-    w = Window.partitionBy("vec_a").orderBy(F.col("cosine_sim").desc(), "vec_b")
     return (
-        pairs.select("vec_a", "vec_b", sim.alias("cosine_sim"))
-        .withColumn("rn", F.row_number().over(w))
+        _neighbor_ranks(e)
         .filter(F.col("rn") <= 3)
         .select("vec_a", "vec_b", "cosine_sim")
     )
 
 
-@query(
-    "embed_kmeans_assign",
-    oracle="""
+_LABEL_DIST_CTES = """
     WITH q AS (
       SELECT vec_id, label,
              list_transform(embedding,
@@ -632,7 +640,43 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(SUM((qv[u.i] - cv[u.i]) * (qv[u.i] - cv[u.i])) AS BIGINT)
                AS d2
       FROM q, cvec, unnest(generate_series(1, len(qv))) u(i)
-      GROUP BY 1, 2, 3),
+      GROUP BY 1, 2, 3)"""
+
+
+def _label_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, label, clabel, d2): every vector's exact int64 squared
+    distance to every label centroid (floor'd integer mean of the 2^20
+    fixed-point components) — the machinery embed_kmeans_assign and
+    embed_silhouette share, whose SQL twin is _LABEL_DIST_CTES."""
+    e = table(spark, sf_dir, "embeddings")
+    qcol = F.transform(
+        "embedding", lambda x: F.floor(x.cast("double") * F.lit(1048576.0)).cast("long")
+    )
+    q = e.select("vec_id", "label", qcol.alias("qv"))
+    comp = (
+        q.select("label", F.posexplode("qv").alias("i", "qc"))
+        .groupBy("label", "i")
+        .agg(F.sum("qc").alias("s"), F.count(F.lit(1)).alias("n"))
+    )
+    cq = F.floor(F.col("s").cast("double") / F.col("n").cast("double")).cast("long")
+    cvec = (
+        comp.select(F.col("label").alias("clabel"), "i", cq.alias("cq"))
+        .groupBy("clabel")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("i", "cq"))), lambda s: s["cq"]
+            ).alias("cv")
+        )
+    )
+    d2 = _fold_zip("qv", "cv", lambda a, b: (a - b) * (a - b), F.lit(0).cast("long"))
+    return q.crossJoin(F.broadcast(cvec)).select(
+        "vec_id", "label", "clabel", d2.alias("d2")
+    )
+
+
+@query(
+    "embed_kmeans_assign",
+    oracle=f"""{_LABEL_DIST_CTES},
     r AS (
       SELECT vec_id, label, clabel, d2,
              ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, clabel) AS rn
@@ -661,30 +705,7 @@ def embed_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested loop (k rows) -> partial argmin. At 100 TB this is exactly the
     IVF coarse-assignment pass of sim_ann_ivf.
     """
-    e = table(spark, sf_dir, "embeddings")
-    qcol = F.transform(
-        "embedding", lambda x: F.floor(x.cast("double") * F.lit(1048576.0)).cast("long")
-    )
-    q = e.select("vec_id", "label", qcol.alias("qv"))
-    comp = (
-        q.select("label", F.posexplode("qv").alias("i", "qc"))
-        .groupBy("label", "i")
-        .agg(F.sum("qc").alias("s"), F.count(F.lit(1)).alias("n"))
-    )
-    cq = F.floor(F.col("s").cast("double") / F.col("n").cast("double")).cast("long")
-    cvec = (
-        comp.select(F.col("label").alias("clabel"), "i", cq.alias("cq"))
-        .groupBy("clabel")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cq"))), lambda s: s["cq"]
-            ).alias("cv")
-        )
-    )
-    d2 = _fold_zip("qv", "cv", lambda a, b: (a - b) * (a - b), F.lit(0).cast("long"))
-    dist = q.crossJoin(F.broadcast(cvec)).select(
-        "vec_id", "label", "clabel", d2.alias("d2")
-    )
+    dist = _label_centroid_dist(spark, sf_dir)
     best = (
         dist.groupBy("vec_id", "label")
         .agg(F.min(F.struct("d2", "clabel")).alias("m"))
@@ -836,23 +857,24 @@ def _km_assign(qt: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def _km_recompute(qt: DataFrame, assigned: DataFrame) -> DataFrame:
-    """Lloyd centroid update in exact integer arithmetic: per (cid, dim),
-    floor(SUM(component)/COUNT) over the cluster's quantized vectors,
-    reassembled into a dim-ordered array. floor of a double division of
+def _lloyd_update(
+    vecs: DataFrame, asg: DataFrame, on: list[str], keys: list[str], vec: str
+) -> DataFrame:
+    """Lloyd centroid update in exact integer arithmetic: per (``keys``,
+    dim), floor(SUM(component)/COUNT) over the member vectors ``vec`` of
+    ``vecs`` (joined to the assignment ``asg`` on ``on``), reassembled into
+    a dim-ordered array ``cv`` per ``keys``. floor of a double division of
     int64 sums — both engines compute it bit-identically (sums stay far
-    below 2^53). Empty clusters simply vanish (their cid stops existing),
+    below 2^53). Empty clusters simply vanish (their key stops existing),
     which is also what the oracle's GROUP BY yields."""
-    comp = assigned.join(qt, "vec_id").select(
-        "cid", F.posexplode("qv").alias("i", "x")
-    )
-    agg = comp.groupBy("cid", "i").agg(
+    comp = asg.join(vecs, on).select(*keys, F.posexplode(vec).alias("i", "x"))
+    agg = comp.groupBy(*keys, "i").agg(
         F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
     )
     cq = F.floor(F.col("s").cast("double") / F.col("n").cast("double")).cast("long")
     return (
-        agg.select("cid", "i", cq.alias("cq"))
-        .groupBy("cid")
+        agg.select(*keys, "i", cq.alias("cq"))
+        .groupBy(*keys)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("i", "cq"))), lambda s: s["cq"]
@@ -933,7 +955,7 @@ def embed_kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
     )
     asg = _km_assign(qt, cents)
-    cents = _km_recompute(qt, asg).localCheckpoint()
+    cents = _lloyd_update(qt, asg, ["vec_id"], ["cid"], "qv").localCheckpoint()
     asg = _km_assign(qt, cents)
     return asg.groupBy("cid").agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -962,29 +984,6 @@ def _pq_assign(sub: DataFrame, cents: DataFrame) -> DataFrame:
         .agg(F.min(F.struct("d2", "c")).alias("best"))
         .select(
             "vec_id", "m", F.col("best.c").alias("c"), F.col("best.d2").alias("d2")
-        )
-    )
-
-
-def _pq_update(sub: DataFrame, asg: DataFrame) -> DataFrame:
-    """Lloyd codebook update per subspace, exact: per (m, c, i) the new
-    component is floor(SUM/COUNT) over member sub-vectors (int64 sums, one
-    bit-identical double division), reassembled dim-ordered. Empty
-    sub-clusters vanish, same as the oracle's GROUP BY."""
-    comp = asg.join(sub, ["vec_id", "m"]).select(
-        "m", "c", F.posexplode("sv").alias("i", "x")
-    )
-    agg = comp.groupBy("m", "c", "i").agg(
-        F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    cq = F.floor(F.col("s").cast("double") / F.col("n").cast("double")).cast("long")
-    return (
-        agg.select("m", "c", "i", cq.alias("cq"))
-        .groupBy("m", "c")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cq"))), lambda s: s["cq"]
-            ).alias("cv")
         )
     )
 
@@ -1019,7 +1018,7 @@ def pq_train_codebooks(sub: DataFrame) -> DataFrame:
     )
     tsub = sub.filter(F.col("vec_id") % _PQ_TRAIN_MOD == 0)
     for _ in range(_PQ_ROUNDS):
-        cents = _pq_update(tsub, _pq_assign(tsub, cents))
+        cents = _lloyd_update(tsub, _pq_assign(tsub, cents), ["vec_id", "m"], ["m", "c"], "sv")
     return cents.localCheckpoint()
 
 
@@ -1703,22 +1702,15 @@ def embed_knn_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sim_knn_graph contract, so neighbor choice can never diverge on
     a last-ulp double. The final cut orders by the same rounded score.
 
-    Plan: the sim_knn_graph topology verbatim — brute-force pairs with
-    the broadcast small side and a per-node WindowGroupLimit (rn <= 3
-    pruned map-side), then a 10-row TakeOrdered. The labeled O(N^2)
+    Plan: sim_knn_graph's _neighbor_ranks — brute-force pairs with the
+    broadcast small side and a per-node WindowGroupLimit (rn <= 3 pruned
+    map-side), then a 10-row TakeOrdered. The labeled O(N^2)
     anchor; at 100 TB the candidate generator swaps to the sim_ann_*
     bucket joins while the kth-distance cut stays identical.
     """
     e = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    a, b = pair_sides(e)
-    pairs = a.join(F.broadcast(b), F.col("vec_a") != F.col("vec_b"))
-    sim = F.round(
-        cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")), 6
-    )
-    w = Window.partitionBy("vec_a").orderBy(F.col("cosine_sim").desc(), "vec_b")
     k3 = (
-        pairs.select("vec_a", "vec_b", sim.alias("cosine_sim"))
-        .withColumn("rn", F.row_number().over(w))
+        _neighbor_ranks(e)
         .filter(F.col("rn") == 3)
         .select(F.col("vec_a").alias("vec_id"), F.col("cosine_sim").alias("knn3_sim"))
     )
@@ -2283,28 +2275,7 @@ def embed_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embed_silhouette",
-    oracle="""
-    WITH q AS (
-      SELECT vec_id, label,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
-      FROM embeddings),
-    comp AS (
-      SELECT label, i, CAST(SUM(qv[i]) AS BIGINT) AS s,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM q, unnest(generate_series(1, len(qv))) u(i)
-      GROUP BY 1, 2),
-    cvec AS (
-      SELECT label AS clabel,
-             list(CAST(FLOOR(CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) AS BIGINT)
-                  ORDER BY i) AS cv
-      FROM comp GROUP BY 1),
-    dist AS (
-      SELECT vec_id, label, clabel,
-             CAST(SUM((qv[u.i] - cv[u.i]) * (qv[u.i] - cv[u.i])) AS BIGINT)
-               AS d2
-      FROM q, cvec, unnest(generate_series(1, len(qv))) u(i)
-      GROUP BY 1, 2, 3),
+    oracle=f"""{_LABEL_DIST_CTES},
     ab AS (
       SELECT vec_id, label,
              MIN(CASE WHEN clabel = label THEN d2 END) AS a2,
@@ -2351,30 +2322,7 @@ def embed_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-row zip_with distance per (vector, centroid); per-vector 2-way
     argmin fold; per-label mean. No all-pairs stage anywhere.
     """
-    e = table(spark, sf_dir, "embeddings")
-    qcol = F.transform(
-        "embedding", lambda x: F.floor(x.cast("double") * F.lit(1048576.0)).cast("long")
-    )
-    q = e.select("vec_id", "label", qcol.alias("qv"))
-    comp = (
-        q.select("label", F.posexplode("qv").alias("i", "qc"))
-        .groupBy("label", "i")
-        .agg(F.sum("qc").alias("s"), F.count(F.lit(1)).alias("n"))
-    )
-    cq = F.floor(F.col("s").cast("double") / F.col("n").cast("double")).cast("long")
-    cvec = (
-        comp.select(F.col("label").alias("clabel"), "i", cq.alias("cq"))
-        .groupBy("clabel")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cq"))), lambda s: s["cq"]
-            ).alias("cv")
-        )
-    )
-    d2 = _fold_zip("qv", "cv", lambda a, b: (a - b) * (a - b), F.lit(0).cast("long"))
-    dist = q.crossJoin(F.broadcast(cvec)).select(
-        "vec_id", "label", "clabel", d2.alias("d2")
-    )
+    dist = _label_centroid_dist(spark, sf_dir)
     ab = dist.groupBy("vec_id", "label").agg(
         F.min(F.when(F.col("clabel") == F.col("label"), F.col("d2"))).alias("a2"),
         F.min(F.when(F.col("clabel") != F.col("label"), F.col("d2"))).alias("b2"),

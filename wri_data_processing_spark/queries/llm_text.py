@@ -138,9 +138,9 @@ _PRED_SQL = f"""
 
 def _marker_pred_col() -> F.Column:
     """Spark twin of _PRED_SQL — the marker-word prediction as one column
-    expression over `text`. Shared by text_lang_id and
-    eval_krippendorff_alpha so the rule chain cannot silently diverge
-    between the op and its reuse as a rater."""
+    expression over `text`. Shared by text_lang_id, eval_krippendorff_alpha,
+    the eval_metrics classifier reports and stats_fleiss_kappa so the rule
+    chain cannot silently diverge between the op and its reuses."""
     scores = {
         lang: sum((_count_col(w) for w in ws), F.lit(0.0))
         for lang, ws in _MARKERS.items()

@@ -437,6 +437,92 @@ _DHASH_VALUES = ", ".join(
 )
 
 
+def _hashed_fixtures(spark: SparkSession, col: str, hash_rows) -> DataFrame:
+    """(media_id, filename, ``col``) for every _dhash_fixtures image: the
+    fixture is encoded with the pure-Python BMP writer, and inside
+    mapInPandas each payload is decoded and hashed by ``hash_rows``
+    (decoded pixel rows -> signed int64)."""
+    import pandas as pd
+
+    from wri_data_processing_spark.sources.bmp_codec import decode_bmp, write_bmp
+
+    rows = [
+        (mid, name, bytearray(write_bmp(w, h, pxf)))
+        for mid, name, w, h, pxf in _dhash_fixtures()
+    ]
+    media = spark.createDataFrame(rows, "media_id long, filename string, payload binary")
+
+    def run(batches):
+        for pdf in batches:
+            out = {"media_id": [], "filename": [], col: []}
+            for mid, name, payload in zip(pdf["media_id"], pdf["filename"],
+                                          pdf["payload"]):
+                _w, _h, px = decode_bmp(bytes(payload))
+                out["media_id"].append(int(mid))
+                out["filename"].append(name)
+                out[col].append(hash_rows(px))
+            yield pd.DataFrame(out)
+
+    return media.mapInPandas(run, f"media_id long, filename string, {col} long")
+
+
+def _banded_hamming_pairs(
+    h: DataFrame, col: str, width: int, n_bands: int, threshold: int
+) -> DataFrame:
+    """(media_a, media_b, hamming) of every media pair whose 64-bit hashes
+    ``col`` share one of ``n_bands`` ``width``-bit bands exactly (the
+    banded equi-join) and differ in at most ``threshold`` bits."""
+    bands = h.select(
+        "media_id",
+        col,
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(j).alias("j"),
+                    F.shiftrightunsigned(F.col(col), width * j)
+                    .bitwiseAND(F.lit((1 << width) - 1).cast("long")).alias("band"),
+                )
+                for j in range(n_bands)
+            ])
+        ).alias("bv"),
+    ).select("media_id", col, F.col("bv.j").alias("j"), F.col("bv.band").alias("band"))
+    a = bands.select(F.col("media_id").alias("media_a"), F.col(col).alias("ha"), "j", "band")
+    b = bands.select(F.col("media_id").alias("media_b"), F.col(col).alias("hb"), "j", "band")
+    cand = (
+        a.join(b, ["j", "band"])
+        .filter(F.col("media_a") < F.col("media_b"))
+        .select("media_a", "media_b", "ha", "hb")
+        .distinct()
+    )
+    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    return cand.filter(hamming <= threshold).select(
+        "media_a", "media_b", hamming.cast("int").alias("hamming")
+    )
+
+
+def _banded_hamming_oracle(
+    values: str, col: str, width: int, n_bands: int, threshold: int
+) -> str:
+    """The DuckDB twin of _banded_hamming_pairs over a VALUES hash table."""
+    return f"""
+    WITH hashes AS (
+      SELECT media_id, {col}
+      FROM (VALUES {values}) AS t(media_id, filename, {col})),
+    bands AS (
+      SELECT media_id, {col}, j,
+             CAST(({col} >> ({width} * j)) & {(1 << width) - 1} AS BIGINT) AS band
+      FROM hashes, unnest(generate_series(0, {n_bands - 1})) AS u(j)),
+    cand AS (
+      SELECT DISTINCT a.media_id AS media_a, b.media_id AS media_b,
+             a.{col} AS ha, b.{col} AS hb
+      FROM bands a JOIN bands b ON a.j = b.j AND a.band = b.band
+      WHERE a.media_id < b.media_id)
+    SELECT media_a, media_b,
+           CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
+    FROM cand WHERE bit_count(xor(ha, hb)) <= {threshold}
+    """
+
+
 @query(
     "multimodal_dhash",
     oracle=f"""
@@ -457,49 +543,14 @@ def multimodal_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary; only (id, 8-byte hash) ever leaves it — the fingerprint
     table is ~16 B/image regardless of media size.
     """
-    import pandas as pd
-
-    from wri_data_processing_spark.sources.bmp_codec import decode_bmp, write_bmp
-
-    rows = [
-        (mid, name, bytearray(write_bmp(w, h, pxf)))
-        for mid, name, w, h, pxf in _dhash_fixtures()
-    ]
-    media = spark.createDataFrame(rows, "media_id long, filename string, payload binary")
-
-    def run(batches):
-        for pdf in batches:
-            out = {"media_id": [], "filename": [], "dhash": []}
-            for mid, name, payload in zip(pdf["media_id"], pdf["filename"],
-                                          pdf["payload"]):
-                _w, _h, px = decode_bmp(bytes(payload))
-                out["media_id"].append(int(mid))
-                out["filename"].append(name)
-                out["dhash"].append(_dhash64(px))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, "media_id long, filename string, dhash long")
+    return _hashed_fixtures(spark, "dhash", _dhash64)
 
 
 @query(
     "multimodal_dhash_dedup",
-    oracle=f"""
-    WITH hashes AS (
-      SELECT media_id, dhash
-      FROM (VALUES {_DHASH_VALUES}) AS t(media_id, filename, dhash)),
-    bands AS (
-      SELECT media_id, dhash, j,
-             CAST((dhash >> (16 * j)) & 65535 AS BIGINT) AS band
-      FROM hashes, unnest(generate_series(0, {_DHASH_BANDS - 1})) AS u(j)),
-    cand AS (
-      SELECT DISTINCT a.media_id AS media_a, b.media_id AS media_b,
-             a.dhash AS ha, b.dhash AS hb
-      FROM bands a JOIN bands b ON a.j = b.j AND a.band = b.band
-      WHERE a.media_id < b.media_id)
-    SELECT media_a, media_b,
-           CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
-    FROM cand WHERE bit_count(xor(ha, hb)) <= {_DHASH_THRESHOLD}
-    """,
+    oracle=_banded_hamming_oracle(
+        _DHASH_VALUES, "dhash", 16, _DHASH_BANDS, _DHASH_THRESHOLD
+    ),
 )
 def multimodal_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-duplicate pairs over the decoded-image fingerprints
@@ -526,34 +577,8 @@ def multimodal_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     written numpy reference (tests/test_media_codec_properties.py::
     test_dhash_independent_reference).
     """
-    h = multimodal_dhash(spark, sf_dir)
-    bands = h.select(
-        "media_id",
-        "dhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    F.shiftrightunsigned(F.col("dhash"), 16 * j)
-                    .bitwiseAND(F.lit(65535).cast("long")).alias("band"),
-                )
-                for j in range(_DHASH_BANDS)
-            ])
-        ).alias("bv"),
-    ).select("media_id", "dhash", F.col("bv.j").alias("j"), F.col("bv.band").alias("band"))
-    a = bands.select(F.col("media_id").alias("media_a"), F.col("dhash").alias("ha"),
-                     "j", "band")
-    b = bands.select(F.col("media_id").alias("media_b"), F.col("dhash").alias("hb"),
-                     "j", "band")
-    cand = (
-        a.join(b, ["j", "band"])
-        .filter(F.col("media_a") < F.col("media_b"))
-        .select("media_a", "media_b", "ha", "hb")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return cand.filter(hamming <= _DHASH_THRESHOLD).select(
-        "media_a", "media_b", hamming.cast("int").alias("hamming")
+    return _banded_hamming_pairs(
+        multimodal_dhash(spark, sf_dir), "dhash", 16, _DHASH_BANDS, _DHASH_THRESHOLD
     )
 
 
@@ -1200,58 +1225,21 @@ def multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads decode inside the scan's mapInPandas, only the 8-byte hash
     leaves the boundary.
     """
-    import pandas as pd
-
-    from wri_data_processing_spark.sources.bmp_codec import decode_bmp, write_bmp
-
-    rows = [
-        (mid, name, bytearray(write_bmp(w, h, pxf)))
-        for mid, name, w, h, pxf in _dhash_fixtures()
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, filename string, payload binary"
-    )
-
-    def run(batches):
-        for pdf in batches:
-            out = {"media_id": [], "filename": [], "phash": []}
-            for mid, name, payload in zip(
-                pdf["media_id"], pdf["filename"], pdf["payload"]
-            ):
-                w, h, px = decode_bmp(bytes(payload))
-                out["media_id"].append(int(mid))
-                out["filename"].append(name)
-                out["phash"].append(_phash_rows(px))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, "media_id long, filename string, phash long")
+    return _hashed_fixtures(spark, "phash", _phash_rows)
 
 
 @query(
     "multimodal_phash_dedup",
-    oracle=f"""
-    WITH hashes AS (
-      SELECT media_id, phash
-      FROM (VALUES {_PHASH_VALUES}) AS t(media_id, filename, phash)),
-    bands AS (
-      SELECT media_id, phash, j,
-             CAST((phash >> (4 * j)) & 15 AS BIGINT) AS band
-      FROM hashes, unnest(generate_series(0, {_PHASH_BANDS - 1})) AS u(j)),
-    cand AS (
-      SELECT DISTINCT a.media_id AS media_a, b.media_id AS media_b,
-             a.phash AS ha, b.phash AS hb
-      FROM bands a JOIN bands b ON a.j = b.j AND a.band = b.band
-      WHERE a.media_id < b.media_id)
-    SELECT media_a, media_b,
-           CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
-    FROM cand WHERE bit_count(xor(ha, hb)) <= {_PHASH_THRESHOLD}
-    """,
+    oracle=_banded_hamming_oracle(
+        _PHASH_VALUES, "phash", 4, _PHASH_BANDS, _PHASH_THRESHOLD
+    ),
 )
 def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency-domain near-duplicate pairs over the pHash fingerprints
-    — the multimodal_dhash_dedup topology with a threshold matched to
-    the transform: 16 x 4-bit bands guarantee every pair with fewer than
-    16 differing bits shares a clean band, and the verified cut at
+    — _banded_hamming_pairs, as in multimodal_dhash_dedup, with a
+    threshold matched to the transform: 16 x 4-bit bands guarantee every
+    pair with fewer than 16 differing bits shares a clean band, and the
+    verified cut at
     Hamming <= {_PHASH_THRESHOLD} sits inside the probed margin
     (siblings 6-12, unrelated >= 16 on this fixture set — so band recall
     is provably 1.0 for every true pair). Banding false positives
@@ -1268,39 +1256,8 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-DCT reference (tests/test_media_codec_properties.py::
     test_phash_independent_reference).
     """
-    h = multimodal_phash(spark, sf_dir)
-    bands = h.select(
-        "media_id",
-        "phash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    F.shiftrightunsigned(F.col("phash"), 4 * j)
-                    .bitwiseAND(F.lit(15).cast("long"))
-                    .alias("band"),
-                )
-                for j in range(_PHASH_BANDS)
-            ])
-        ).alias("bv"),
-    ).select(
-        "media_id", "phash", F.col("bv.j").alias("j"), F.col("bv.band").alias("band")
-    )
-    a = bands.select(
-        F.col("media_id").alias("media_a"), F.col("phash").alias("ha"), "j", "band"
-    )
-    b = bands.select(
-        F.col("media_id").alias("media_b"), F.col("phash").alias("hb"), "j", "band"
-    )
-    cand = (
-        a.join(b, ["j", "band"])
-        .filter(F.col("media_a") < F.col("media_b"))
-        .select("media_a", "media_b", "ha", "hb")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return cand.filter(hamming <= _PHASH_THRESHOLD).select(
-        "media_a", "media_b", hamming.cast("int").alias("hamming")
+    return _banded_hamming_pairs(
+        multimodal_phash(spark, sf_dir), "phash", 4, _PHASH_BANDS, _PHASH_THRESHOLD
     )
 
 

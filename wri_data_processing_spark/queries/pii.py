@@ -512,6 +512,40 @@ _K_THRESHOLDS = (2, 5, 10, 25)
 _L_THRESHOLDS = (2, 5, 8, 12)
 
 
+def _threshold_sweep(
+    ec: DataFrame, size: str, t: str, thresholds: tuple, min_name: str, gate: str
+) -> DataFrame:
+    """The release report of an equivalence-class table ``ec`` (n rows per
+    class, and the class measure ``size``) at each threshold ``t`` in
+    ``thresholds``: classes, the smallest measure (``min_name``), classes
+    and rows below t, the at-risk row rate, and the boolean ``gate`` that
+    every class reaches t.
+
+    The sweep is a literal-array explode (no join at all — the expansion
+    happens inside the class frame's own stage; a crossJoin against a
+    small threshold frame would plan a nested loop and trip the repo-wide
+    join-shape sweep for no benefit)."""
+    sweep = F.explode(F.array(*[F.lit(v) for v in thresholds])).alias(t)
+    below = F.when(F.col(size) < F.col(t), F.col("n")).otherwise(F.lit(0))
+    return (
+        ec.select(*dict.fromkeys(["n", size]), sweep)  # n and size, once each
+        .groupBy(t)
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_classes"),
+            F.min(size).cast("long").alias(min_name),
+            F.sum(F.when(F.col(size) < F.col(t), 1).otherwise(0))
+            .cast("long")
+            .alias(f"classes_below_{t}"),
+            F.sum(below).cast("long").alias(f"rows_below_{t}"),
+            F.round(
+                F.sum(below).cast("double") / F.sum("n").cast("double"), 6
+            ).alias("pct_rows_at_risk"),
+            (F.min(size) >= F.col(t)).alias(gate),
+        )
+        .orderBy(t)
+    )
+
+
 @query(
     "privacy_k_anonymity",
     oracle=f"""
@@ -564,28 +598,8 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey", "c_mktsegment", "band")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # Threshold sweep via a literal-array explode (no join at all — the
-    # 4x expansion happens inside the class frame's own stage; a
-    # crossJoin against a 4-row frame would plan a nested loop and trip
-    # the repo-wide join-shape sweep for no benefit).
-    ks = F.explode(F.array(*[F.lit(k) for k in _K_THRESHOLDS])).alias("k")
-    below = F.when(F.col("n") < F.col("k"), F.col("n")).otherwise(F.lit(0))
-    return (
-        ec.select("n", ks)
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_classes"),
-            F.min("n").cast("long").alias("min_class_size"),
-            F.sum(F.when(F.col("n") < F.col("k"), 1).otherwise(0))
-            .cast("long")
-            .alias("classes_below_k"),
-            F.sum(below).cast("long").alias("rows_below_k"),
-            F.round(
-                F.sum(below).cast("double") / F.sum("n").cast("double"), 6
-            ).alias("pct_rows_at_risk"),
-            (F.min("n") >= F.col("k")).alias("k_anonymous"),
-        )
-        .orderBy("k")
+    return _threshold_sweep(
+        ec, "n", "k", _K_THRESHOLDS, "min_class_size", "k_anonymous"
     )
 
 
@@ -619,8 +633,8 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE sensitive value (the homogeneity attack). Quasi-identifiers are
     (market segment, balance band of 500); the sensitive attribute is
     nationality; a class is l-diverse iff it contains >= l distinct
-    sensitive values. Sweeps l in ``_L_THRESHOLDS`` (=(2, 5, 8, 12)) with the same
-    classes/rows-below/gate report shape as privacy_k_anonymity.
+    sensitive values. Sweeps l in ``_L_THRESHOLDS`` (=(2, 5, 8, 12)) with
+    privacy_k_anonymity's _threshold_sweep report.
 
     Exactness: per-class COUNT(DISTINCT sensitive) is exact (one extra
     dedup shuffle keyed by QI+sensitive); threshold sums are exact
@@ -644,23 +658,4 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("c_nationkey").alias("d"),
         )
     )
-    # literal-array explode, not a crossJoin — see privacy_k_anonymity
-    ls = F.explode(F.array(*[F.lit(lv) for lv in _L_THRESHOLDS])).alias("l")
-    below = F.when(F.col("d") < F.col("l"), F.col("n")).otherwise(F.lit(0))
-    return (
-        ec.select("n", "d", ls)
-        .groupBy("l")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_classes"),
-            F.min("d").cast("long").alias("min_diversity"),
-            F.sum(F.when(F.col("d") < F.col("l"), 1).otherwise(0))
-            .cast("long")
-            .alias("classes_below_l"),
-            F.sum(below).cast("long").alias("rows_below_l"),
-            F.round(
-                F.sum(below).cast("double") / F.sum("n").cast("double"), 6
-            ).alias("pct_rows_at_risk"),
-            (F.min("d") >= F.col("l")).alias("l_diverse"),
-        )
-        .orderBy("l")
-    )
+    return _threshold_sweep(ec, "d", "l", _L_THRESHOLDS, "min_diversity", "l_diverse")

@@ -804,6 +804,26 @@ def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _chi2_cells(o: DataFrame, row: str, col: str) -> DataFrame:
+    """(row, col, n, term, ex) per observed cell of the contingency table
+    ``o`` (row, col, obs: exact BIGINT counts): the expected count
+    row_tot*col_tot/n (integer product, one double division) and the
+    Pearson term (obs - ex)^2/ex — the cells stats_chi2_independence and
+    stats_cramers_v fold. Both marginals and the 1-row grand total are
+    broadcast."""
+    rt = o.groupBy(row).agg(F.sum("obs").cast("long").alias("row_tot"))
+    ct = o.groupBy(col).agg(F.sum("obs").cast("long").alias("col_tot"))
+    m = o.agg(F.sum("obs").alias("n"))
+    expected = (F.col("row_tot") * F.col("col_tot")).cast("double") / F.col("n").cast("double")
+    dev = F.col("obs").cast("double") - expected
+    return (
+        o.join(F.broadcast(rt), row)
+        .join(F.broadcast(ct), col)
+        .crossJoin(F.broadcast(m))
+        .select(row, col, "n", (dev * dev / expected).alias("term"), expected.alias("ex"))
+    )
+
+
 @query(
     "stats_chi2_independence",
     oracle="""
@@ -861,23 +881,7 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = e.groupBy(
         "event_type", (F.col("user_id") % 4).cast("long").alias("cohort")
     ).agg(F.count(F.lit(1)).cast("long").alias("obs"))
-    rt = o.groupBy("event_type").agg(F.sum("obs").cast("long").alias("row_tot"))
-    ct = o.groupBy("cohort").agg(F.sum("obs").cast("long").alias("col_tot"))
-    m = o.agg(F.sum("obs").alias("n"))
-    expected = (F.col("row_tot") * F.col("col_tot")).cast("double") / F.col(
-        "n"
-    ).cast("double")
-    dev = F.col("obs").cast("double") - expected
-    cells = (
-        o.join(F.broadcast(rt), "event_type")
-        .join(F.broadcast(ct), "cohort")
-        .crossJoin(F.broadcast(m))
-        .select(
-            "event_type", "cohort", "n",
-            (dev * dev / expected).alias("term"),
-            expected.alias("ex"),
-        )
-    )
+    cells = _chi2_cells(o, "event_type", "cohort")
     # unobserved cells contribute their expected mass: chi2 += n - SUM(ex)
     # (the stats_cramers_v r11 audit fix; all 20 cells are observed on the
     # current fixtures so the value is unchanged here, but the latent
@@ -2457,10 +2461,11 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     question that matters at scale — HOW associated are language and
     source, not whether n is big.
 
-    Exactness is stats_chi2_independence verbatim: exact BIGINT cell
-    counts, each cell term one mirrored IEEE sequence (integer
-    row_tot*col_tot until the single division by n), the term sum folded
-    in ASCENDING SORTED order on both engines before any rounding, and V
+    Exactness is stats_chi2_independence's (the cells are _chi2_cells):
+    exact BIGINT cell counts, each cell term one mirrored IEEE sequence
+    (integer row_tot*col_tot until the single division by n), the term
+    sum folded in ASCENDING SORTED order on both engines before any
+    rounding, and V
     derived from the UNROUNDED chi2 with one exact division and one
     sqrt (the IEEE-exact transcendental) — ROUND-6 only on the two
     emitted doubles.
@@ -2472,23 +2477,7 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     o = d.groupBy("lang", "source").agg(F.count(F.lit(1)).cast("long").alias("obs"))
-    rt = o.groupBy("lang").agg(F.sum("obs").cast("long").alias("row_tot"))
-    ct = o.groupBy("source").agg(F.sum("obs").cast("long").alias("col_tot"))
-    m = o.agg(F.sum("obs").alias("n"))
-    expected = (F.col("row_tot") * F.col("col_tot")).cast("double") / F.col("n").cast(
-        "double"
-    )
-    dev = F.col("obs").cast("double") - expected
-    cells = (
-        o.join(F.broadcast(rt), "lang")
-        .join(F.broadcast(ct), "source")
-        .crossJoin(F.broadcast(m))
-        .select(
-            "lang", "source", "n",
-            (dev * dev / expected).alias("term"),
-            expected.alias("ex"),
-        )
-    )
+    cells = _chi2_cells(o, "lang", "source")
     # UNOBSERVED (lang, source) cells still contribute (0-e)^2/e = e to
     # chi2; since SUM(all expected) = n, the missing mass is n - SUM(ex
     # over observed cells) — added WITHOUT enumerating missing cells
@@ -3843,9 +3832,7 @@ def stats_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stats_skewness_kurtosis",
-    oracle="""
+_MOMENT_CTES = """
     WITH s AS (
       SELECT event_type,
              CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS ci
@@ -3870,7 +3857,53 @@ def stats_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
              nd * nd * d3 - 3.0 * nd * d1 * d2 + 2.0 * d1 * d1 * d1 AS m3,
              nd * nd * nd * d4 - 4.0 * nd * nd * d1 * d3
                + 6.0 * nd * d1 * d1 * d2 - 3.0 * d1 * d1 * d1 * d1 AS m4
-      FROM d)
+      FROM d)"""
+
+
+def _shape_moments(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, F.Column, F.Column]:
+    """The per-type power-sum frame (event_type, n, s1..s4) of the non-null
+    event values in exact centi-units, with the ROUND-6 sample skewness
+    m3/m2^1.5 and excess kurtosis m4/m2^2 - 3 as columns over it — the
+    moment tree stats_skewness_kurtosis and stats_jarque_bera share, whose
+    SQL twin is _MOMENT_CTES."""
+    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    ci = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    g = e.select("event_type", ci.alias("ci")).groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("ci").cast("long").alias("s1"),
+        F.sum(F.col("ci") * F.col("ci")).cast("long").alias("s2"),
+        F.sum(F.col("ci").cast("decimal(38,0)") * F.col("ci") * F.col("ci")).alias(
+            "s3"
+        ),
+        F.sum(
+            F.col("ci").cast("decimal(38,0)") * F.col("ci") * F.col("ci") * F.col("ci")
+        ).alias("s4"),
+    )
+    nd = F.col("n").cast("double")
+    d1 = F.col("s1").cast("double")
+    d2 = F.col("s2").cast("double")
+    d3 = F.col("s3").cast("double")
+    d4 = F.col("s4").cast("double")
+    m2 = nd * d2 - d1 * d1
+    m3 = nd * nd * d3 - F.lit(3.0) * nd * d1 * d2 + F.lit(2.0) * d1 * d1 * d1
+    m4 = (
+        nd * nd * nd * d4
+        - F.lit(4.0) * nd * nd * d1 * d3
+        + F.lit(6.0) * nd * d1 * d1 * d2
+        - F.lit(3.0) * d1 * d1 * d1 * d1
+    )
+    return (
+        g,
+        F.round(m3 / (m2 * F.sqrt(m2)), 6),
+        F.round(m4 / (m2 * m2) - F.lit(3.0), 6),
+    )
+
+
+@query(
+    "stats_skewness_kurtosis",
+    oracle=f"""{_MOMENT_CTES}
     SELECT event_type, n,
            ROUND(m3 / (m2 * sqrt(m2)), 6) AS skewness,
            ROUND(m4 / (m2 * m2) - 3.0, 6) AS kurtosis_excess
@@ -3905,38 +3938,9 @@ def stats_skewness_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one map-side-combined per-type aggregate; 5 output rows; the
     moment algebra runs on the 5-row frame.
     """
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    ci = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    s = e.select("event_type", ci.alias("ci"))
-    g = s.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("ci").cast("long").alias("s1"),
-        F.sum(F.col("ci") * F.col("ci")).cast("long").alias("s2"),
-        F.sum(F.col("ci").cast("decimal(38,0)") * F.col("ci") * F.col("ci")).alias(
-            "s3"
-        ),
-        F.sum(
-            F.col("ci").cast("decimal(38,0)") * F.col("ci") * F.col("ci") * F.col("ci")
-        ).alias("s4"),
-    )
-    nd = F.col("n").cast("double")
-    d1 = F.col("s1").cast("double")
-    d2 = F.col("s2").cast("double")
-    d3 = F.col("s3").cast("double")
-    d4 = F.col("s4").cast("double")
-    m2 = nd * d2 - d1 * d1
-    m3 = nd * nd * d3 - F.lit(3.0) * nd * d1 * d2 + F.lit(2.0) * d1 * d1 * d1
-    m4 = (
-        nd * nd * nd * d4
-        - F.lit(4.0) * nd * nd * d1 * d3
-        + F.lit(6.0) * nd * d1 * d1 * d2
-        - F.lit(3.0) * d1 * d1 * d1 * d1
-    )
+    g, skew, kurt = _shape_moments(spark, sf_dir)
     return g.select(
-        "event_type",
-        "n",
-        F.round(m3 / (m2 * F.sqrt(m2)), 6).alias("skewness"),
-        F.round(m4 / (m2 * m2) - F.lit(3.0), 6).alias("kurtosis_excess"),
+        "event_type", "n", skew.alias("skewness"), kurt.alias("kurtosis_excess")
     ).orderBy("event_type")
 
 
@@ -4116,7 +4120,7 @@ def _eval_pipeline_oracle() -> str:
     """
 
 
-@query("model_eval_pipeline", oracle=None)
+@query("model_eval_pipeline", oracle=_eval_pipeline_oracle)
 def model_eval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIFTH composed flagship: the model-evaluation report — the one-row
     scorecard an eval pipeline publishes per scoring run, composed from
@@ -4130,9 +4134,9 @@ def model_eval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle SQL as nested CTEs, so the pipeline is verified as the
     composition of already-verified parts.
 
-    (Registered with the composed oracle via oracle_sql wiring below —
-    the @query decorator takes the string from _eval_pipeline_oracle()
-    AFTER all four component oracles are registered; see the module tail.)
+    (The oracle is the callable _eval_pipeline_oracle, which
+    registry.load_all calls once all four component oracles are
+    registered.)
 
     Known answers on the sha-uniform stand-in score: AUC ~= 0.5,
     calibration gap ~= the base-rate band, lift ~= 1.0, SRM green —
@@ -4171,25 +4175,6 @@ def model_eval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lift_top_decile",
         )
     )
-
-
-# Late oracle wiring: the composed oracle needs the component oracles,
-# which are registered by decorator order above; stats_lift_gains lives in
-# llm_pipeline which may not be imported yet when THIS module loads, so the
-# composition resolves lazily on first registry.load_all() completion.
-def _wire_eval_pipeline_oracle() -> None:
-    from wri_data_processing_spark.registry import ORACLE
-
-    if "model_eval_pipeline" not in ORACLE and all(
-        k in ORACLE
-        for k in (
-            "stats_ab_srm_check",
-            "stats_auc",
-            "stats_calibration_bins",
-            "stats_lift_gains",
-        )
-    ):
-        ORACLE["model_eval_pipeline"] = _eval_pipeline_oracle()
 
 
 @query(
@@ -4314,22 +4299,7 @@ def _drift_report_oracle() -> str:
     """
 
 
-def _wire_drift_report_oracle() -> None:
-    from wri_data_processing_spark.registry import ORACLE
-
-    if "drift_report_pipeline" not in ORACLE and all(
-        k in ORACLE
-        for k in (
-            "stats_ks_test",
-            "stats_psi",
-            "stats_jensen_shannon",
-            "stats_chi2_independence",
-        )
-    ):
-        ORACLE["drift_report_pipeline"] = _drift_report_oracle()
-
-
-@query("drift_report_pipeline", oracle=None)
+@query("drift_report_pipeline", oracle=_drift_report_oracle)
 def drift_report_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The drift scorecard — the monitoring twin of model_eval_pipeline's
     eval scorecard: one row a scheduler publishes per check interval,
@@ -4344,7 +4314,7 @@ def drift_report_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composition contract (stats_fdr_bh / model_eval_pipeline): the
     engine cross-joins the registered components' one-row outputs; the
     oracle embeds each component's exact oracle SQL as nested CTEs,
-    wired lazily after all modules register.
+    built by registry.load_all after all modules register.
 
     Plan: four independent subplans (the KS two-phase ECDF is the only
     data-ordered one) stitched by three 1-row broadcasts (whitelisted).
@@ -4487,14 +4457,7 @@ def _effect_sizes_oracle() -> str:
     """
 
 
-def _wire_effect_sizes_oracle() -> None:
-    from wri_data_processing_spark.registry import ORACLE
-
-    if "stats_effect_sizes" not in ORACLE and "stats_mann_whitney" in ORACLE:
-        ORACLE["stats_effect_sizes"] = _effect_sizes_oracle()
-
-
-@query("stats_effect_sizes", oracle=None)
+@query("stats_effect_sizes", oracle=_effect_sizes_oracle)
 def stats_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The effect-size panel for the view-vs-click value comparison —
     what every significance test in this module deliberately omits: HOW
@@ -4779,32 +4742,7 @@ def stats_ccc_lin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stats_jarque_bera",
-    oracle="""
-    WITH s AS (
-      SELECT event_type,
-             CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS ci
-      FROM events WHERE value IS NOT NULL),
-    g AS (
-      SELECT event_type,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(ci) AS BIGINT) AS s1,
-             CAST(SUM(ci * ci) AS BIGINT) AS s2,
-             SUM(CAST(ci AS HUGEINT) * ci * ci) AS s3,
-             SUM(CAST(ci AS HUGEINT) * ci * ci * ci) AS s4
-      FROM s GROUP BY 1),
-    d AS (
-      SELECT event_type, n,
-             CAST(n AS DOUBLE) AS nd, CAST(s1 AS DOUBLE) AS d1,
-             CAST(s2 AS DOUBLE) AS d2, CAST(s3 AS DOUBLE) AS d3,
-             CAST(s4 AS DOUBLE) AS d4
-      FROM g),
-    m AS (
-      SELECT event_type, n, nd,
-             nd * d2 - d1 * d1 AS m2,
-             nd * nd * d3 - 3.0 * nd * d1 * d2 + 2.0 * d1 * d1 * d1 AS m3,
-             nd * nd * nd * d4 - 4.0 * nd * nd * d1 * d3
-               + 6.0 * nd * d1 * d1 * d2 - 3.0 * d1 * d1 * d1 * d1 AS m4
-      FROM d),
+    oracle=f"""{_MOMENT_CTES},
     sk AS (
       SELECT event_type, n, nd,
              ROUND(m3 / (m2 * sqrt(m2)), 6) AS s,
@@ -4825,7 +4763,7 @@ def stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     is emphatically not, and the op says so with a test statistic
     instead of a shape eyeball.
 
-    Exactness: the stats_skewness_kurtosis discipline verbatim — exact
+    Exactness: stats_skewness_kurtosis's _shape_moments — exact
     centi-unit power sums (s3/s4 in DECIMAL(38,0)/HUGEINT), central
     moments from ONE mirrored double tree, m2^1.5 as m2*sqrt(m2), and
     the chi2(2) 95% critical value PINNED as the literal 5.991465
@@ -4842,39 +4780,8 @@ def stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one map-side-combined per-type aggregate, 5 output rows.
     """
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    ci = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
-    g = e.select("event_type", ci.alias("ci")).groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("ci").cast("long").alias("s1"),
-        F.sum(F.col("ci") * F.col("ci")).cast("long").alias("s2"),
-        F.sum(F.col("ci").cast("decimal(38,0)") * F.col("ci") * F.col("ci")).alias(
-            "s3"
-        ),
-        F.sum(
-            F.col("ci").cast("decimal(38,0)") * F.col("ci") * F.col("ci") * F.col("ci")
-        ).alias("s4"),
-    )
+    g, s, k = _shape_moments(spark, sf_dir)
     nd = F.col("n").cast("double")
-    d1 = F.col("s1").cast("double")
-    d2 = F.col("s2").cast("double")
-    d3 = F.col("s3").cast("double")
-    d4 = F.col("s4").cast("double")
-    m2 = nd * d2 - d1 * d1
-    m3 = nd * nd * d3 - F.lit(3.0) * nd * d1 * d2 + F.lit(2.0) * d1 * d1 * d1
-    m4 = (
-        nd * nd * nd * d4
-        - F.lit(4.0) * nd * nd * d1 * d3
-        + F.lit(6.0) * nd * d1 * d1 * d2
-        - F.lit(3.0) * d1 * d1 * d1 * d1
-    )
-    # S and K are ROUND-6 snapped BEFORE composing JB: the HUGEINT/decimal38
-    # -> double cast of s3/s4 can differ in the last ULP between engines
-    # (sums exceed 2^53), and JB ~ n*K^2 amplifies that ULP past ROUND-6
-    # (observed 1e-5 at sf0.01). Rounded inputs make the JB tree a pure
-    # function of bit-identical doubles.
-    s = F.round(m3 / (m2 * F.sqrt(m2)), 6)
-    k = F.round(m4 / (m2 * m2) - F.lit(3.0), 6)
     jb = nd * (s * s / F.lit(6.0) + k * k / F.lit(24.0))
     return g.select(
         "event_type",
@@ -5805,7 +5712,7 @@ def stats_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc), two bounded folds (1 row and |categories| rows), scalar
     algebra on a 1-row frame.
     """
-    from wri_data_processing_spark.queries.eval_metrics import _lang_pred_col
+    from wri_data_processing_spark.queries.llm_text import _marker_pred_col
 
     d = table(spark, sf_dir, "documents")
     noise = (
@@ -5815,7 +5722,7 @@ def stats_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = d.select(
         "doc_id",
         F.col("lang").alias("r1"),
-        _lang_pred_col().alias("r2"),
+        _marker_pred_col().alias("r2"),
         F.when(noise == 0, F.lit("en")).otherwise(F.col("lang")).alias("r3"),
     )
     nij = (

@@ -233,25 +233,20 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming, the same condition is what bounds the join STATE — clicks
     evict once the purchase watermark passes click_ts + 30 min.
     """
+    from wri_data_processing_spark.queries.events_analytics import click_purchase_join
+
     e = table(spark, sf_dir, "events")
-    c = e.filter(F.col("event_type") == "click").select(
+    click_cols = [
         F.col("event_id").alias("click_id"),
         "user_id",
         F.col("ts").alias("click_ts"),
         F.unix_micros("ts").alias("click_us"),
-    )
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
+    ]
+    purchase_cols = [
         F.col("event_id").alias("purchase_id"),
         F.unix_micros("ts").alias("purchase_us"),
-    )
-    cond = (
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES"))
-    )
-    return c.join(p, cond, "left").select(
+    ]
+    return click_purchase_join(e, click_cols, purchase_cols, "left").select(
         "click_id",
         "user_id",
         "purchase_id",

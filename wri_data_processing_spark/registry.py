@@ -22,16 +22,25 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 REGISTRY: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
+# Composed oracles (ops whose oracle embeds other ops' oracles, possibly
+# from modules not imported yet), built by load_all after every import.
+_COMPOSED: dict[str, Callable[[], str]] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register an engine op. ``oracle=None`` => rows-only check (non-SQL op)."""
+def query(
+    name: str, oracle: str | Callable[[], str] | None = None
+) -> Callable[[QueryFn], QueryFn]:
+    """Register an engine op. ``oracle=None`` => rows-only check (non-SQL op);
+    a zero-argument callable is a composed oracle, which load_all calls
+    once every module has registered."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
         REGISTRY[name] = fn
-        if oracle is not None:
+        if callable(oracle):
+            _COMPOSED[name] = oracle
+        elif oracle is not None:
             ORACLE[name] = oracle
         return fn
 
@@ -168,26 +177,6 @@ def load_all() -> None:
         windows,
     )
 
-    # Composed-oracle late wiring: model_eval_pipeline's oracle embeds the
-    # oracles of four component ops that live in two different modules, so
-    # it can only be stitched once every module has registered.
-    from wri_data_processing_spark.queries.llm_dedup import (
-        _register_coverage_oracle,
-    )
-    from wri_data_processing_spark.queries.stats_numeric import (
-        _wire_eval_pipeline_oracle,
-    )
-
-    from wri_data_processing_spark.queries.stats_numeric import (
-        _wire_drift_report_oracle,
-    )
-
-    from wri_data_processing_spark.queries.stats_numeric import (
-        _wire_effect_sizes_oracle,
-    )
-
-    _wire_eval_pipeline_oracle()
-    _wire_drift_report_oracle()
-    _wire_effect_sizes_oracle()
-    _register_coverage_oracle()
+    for name, build in _COMPOSED.items():
+        ORACLE[name] = build()
     _apply_driver_sample_order()

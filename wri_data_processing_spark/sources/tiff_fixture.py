@@ -28,19 +28,21 @@ NCOLS, NROWS = 7, 5  # tiny default grid; extent math scales per spec
 
 def _write_single_strip(path, en, width, height, epsg, bigtiff):
     """An all-zero Float32 raster in one uncompressed strip. The BigTIFF
-    variant stores LONG8 offsets and leaves out Compression,
-    PhotometricInterpretation and RowsPerStrip, so the reader's defaults
-    (no compression, one strip) are exercised too."""
+    variant stores LONG8 offsets and leaves out Compression and
+    RowsPerStrip, so the reader's defaults (no compression, one strip) are
+    exercised too; PhotometricInterpretation, which TIFF 6.0 requires and
+    gives no default, is written by both."""
     entries = [
         (256, 3, (width,)),
         (257, 3, (height,)),
         (258, 3, (32,)),
+        (262, 3, (1,)),  # BlackIsZero
         (277, 3, (1,)),
         (339, 3, (3,)),  # IEEE float
         *geo_entries(XMIN, YMAX, RES, RES, epsg),
     ]
     if not bigtiff:
-        entries += [(259, 3, (1,)), (262, 3, (1,)), (278, 3, (height,))]
+        entries += [(259, 3, (1,)), (278, 3, (height,))]
     ifd = (entries, [bytes(width * height * 4)], (273, 279, 16 if bigtiff else 4))
     write_tiff(path, [ifd], en=en, bigtiff=bigtiff, data_first=True)
 

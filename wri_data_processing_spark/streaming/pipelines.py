@@ -222,6 +222,22 @@ def incremental_user_totals(
     q.awaitTermination(120)
 
 
+def attribution_window_join(
+    clicks: DataFrame, purchases: DataFrame, click_user: str, how: str
+) -> DataFrame:
+    """Clicks (``click_user``, click_ts, ...) joined to the purchases
+    (p_user, purchase_ts, ...) the same user makes within the 30 minutes
+    after the click: the interval condition of every click -> purchase
+    join, streamed or batch. Streamed, its time bound is what lets the
+    state store evict clicks."""
+    cond = (
+        (F.col(click_user) == F.col("p_user"))
+        & (F.col("purchase_ts") > F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES"))
+    )
+    return clicks.join(purchases, cond, how)
+
+
 def _click_purchase_join(clicks: DataFrame, purchases: DataFrame, how: str) -> DataFrame:
     """The watermarked 30-minute click -> purchase interval join of both
     variants below."""
@@ -236,12 +252,7 @@ def _click_purchase_join(clicks: DataFrame, purchases: DataFrame, how: str) -> D
         F.col("event_id").alias("purchase_id"),
         F.col("value").alias("amount"),
     )
-    cond = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES"))
-    )
-    return c.join(p, cond, how).select(
+    return attribution_window_join(c, p, "c_user", how).select(
         F.col("c_user").alias("user_id"), "click_id", "purchase_id", "amount"
     )
 
