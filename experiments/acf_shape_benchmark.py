@@ -56,13 +56,12 @@ def window_form(spark, sf_dir):
 
 
 def main() -> None:
-    spark = get_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark(app_name="acf-shape-benchmark")
     join_fn = registry.REGISTRY["events_acf"]
 
     def med(fn):
         fn().count()
-        ts = sorted(time.perf_counter() - t0
-                    for t0 in [time.perf_counter()] * 0) or []
+        ts = []
         for _ in range(3):
             t0 = time.perf_counter()
             fn().count()

@@ -13,6 +13,8 @@ import site
 
 from pyspark.sql import SparkSession
 
+from wri_data_processing_spark import jvm_archive
+
 CODEGEN_CACHE_ENTRIES = 2000
 
 
@@ -90,6 +92,13 @@ def get_spark(
         builder = builder.config(
             "spark.python.daemon.module", "wri_data_processing_spark.worker_daemon"
         )
+    # The driver JVM starts from a class-data-sharing archive of Spark's
+    # classes, recorded by the first launch without one (jvm_archive).
+    launch = jvm_archive.prepare()
+    if launch:
+        builder = builder.config("spark.driver.defaultJavaOptions", launch.options)
     spark = builder.getOrCreate()
+    if launch:
+        launch.started(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark
