@@ -9,13 +9,17 @@ once that process's JVM has exited, an exit hook builds the archive with
 The recording process exits about 20 s later; its own start takes as long
 as one without the feature.
 
-The archive lives in ``$XDG_CACHE_HOME/wri_data_processing_spark/``
-(default ``~/.cache/...``), keyed by the java binary, the conf directory
-and every Spark jar's name, size and mtime. Delete the directory to clear it. Nothing is
-added to the launch when a JVM is already running, when the Spark conf
-directory holds a real file (JDK 17 neither archives nor maps a class path
-with a non-empty directory in it), when the cache directory cannot be
-written, after a dump failed, or after the JVM rejected the archive.
+The archive lives next to the code that uses it, in the package's
+``__jvmcache__/`` (as ``__pycache__`` does), so it lasts as long as the
+checkout or install does, and every later process of that checkout maps
+what its first one recorded. It is keyed by the java binary, the conf
+directory and every Spark jar's name, size and mtime; a successful dump
+removes the archives and failure marks of other keys. Delete the directory
+to clear it. Nothing is added to the launch when a JVM is already running,
+when the Spark conf directory holds a real file (JDK 17 neither archives
+nor maps a class path with a non-empty directory in it), when the package
+directory cannot be written, after a key's dump failed twice, or after the
+JVM rejected its archive.
 """
 
 from __future__ import annotations
@@ -33,11 +37,9 @@ import subprocess
 # stderr and keeps stdout.
 QUIET = ["-Xlog:disable", "-Xlog:all=warning:stderr", "-XX:+DisplayVMOutputToStderr"]
 DUMP_TIMEOUT_S = 300
-
-
-def cache_dir() -> str:
-    root = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
-    return os.path.join(root, "wri_data_processing_spark")
+# A timeout or a full disk may pass; the next recorder tries once more.
+MAX_DUMPS = 2
+CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "__jvmcache__")
 
 
 def _java() -> str | None:
@@ -122,9 +124,27 @@ def _remove(*paths: str) -> None:
             pass
 
 
-def _mark_failed(base: str, reason: str) -> None:
+def _failures(base: str) -> int:
+    """Failed dumps of this key so far (the first line of ``<key>.failed``)."""
+    try:
+        with open(base + ".failed") as f:
+            return int(f.readline())
+    except (OSError, ValueError):
+        return 0
+
+
+def _mark_failed(base: str, reason: str, count: int | None = None) -> None:
+    count = _failures(base) + 1 if count is None else count
     with open(base + ".failed", "w") as f:
-        f.write(reason)
+        f.write(f"{count}\n{reason}")
+
+
+def _drop_other_keys(base: str) -> None:
+    """After a good dump: archives of an older Spark or JDK, and every
+    failure mark, are of no more use."""
+    stale = glob.glob(os.path.join(glob.escape(os.path.dirname(base)), "*.jsa"))
+    stale += glob.glob(os.path.join(glob.escape(os.path.dirname(base)), "*.failed"))
+    _remove(*[p for p in stale if p != base + ".jsa"])
 
 
 class Launch:
@@ -152,23 +172,25 @@ class Launch:
         jvm = spark.sparkContext._jvm
         args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
         class_path = jvm.System.getProperty("java.class.path")
+        # JDK 17 maps an archive only under a class path that starts with the
+        # one it was dumped with. A caller's driver class path
+        # (--driver-class-path, SPARK_CLASSPATH) goes before the conf
+        # directory: such a launch neither judges the archive nor records one.
+        plain = os.path.normpath(class_path.split(os.pathsep)[0]) == os.path.normpath(self.conf)
         if not self.recording:
             # A custom archive that fails to map turns off all sharing, the
             # JDK's own archive too. The archive is the suspect only when our
-            # flag reached the JVM and the class path still starts with the
-            # conf directory it was dumped with (a caller's driver class path
-            # goes first and fails the JDK's prefix check).
-            if (f"-XX:SharedArchiveFile={self.archive}" in args
-                    and os.path.normpath(class_path.split(os.pathsep)[0]) == os.path.normpath(self.conf)
+            # flag reached the JVM under a plain class path.
+            if (f"-XX:SharedArchiveFile={self.archive}" in args and plain
                     and "sharing" not in jvm.System.getProperty("java.vm.info")):
                 try:
                     _remove(self.archive)
-                    _mark_failed(self.base, "archive not mapped")
+                    _mark_failed(self.base, "archive not mapped", MAX_DUMPS)
                 except OSError:
                     pass  # the session is up either way
             return
         home = jvm.System.getProperty("java.home")
-        if os.path.realpath(os.path.join(home, "bin", "java")) != self.java:
+        if not plain or os.path.realpath(os.path.join(home, "bin", "java")) != self.java:
             return
         self.proc = spark.sparkContext._gateway.proc
         self.dump = [
@@ -189,7 +211,7 @@ def prepare() -> Launch | None:
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return None
     java = _java()
-    cache = cache_dir()
+    cache = CACHE_DIR
     try:
         os.makedirs(cache, mode=0o700, exist_ok=True)
         if java is None or not os.access(cache, os.W_OK | os.X_OK):
@@ -201,8 +223,8 @@ def prepare() -> Launch | None:
         base = os.path.join(cache, _key(java, spark_home, conf))
         if os.path.isfile(base + ".jsa"):
             launch = Launch(java, conf, base, recording=False)
-        elif os.path.exists(base + ".failed") or not _take_lock(base):
-            return None  # a dump failed, or another process (or this one) records
+        elif _failures(base) >= MAX_DUMPS or not _take_lock(base):
+            return None  # dumps failed, or another process (or this one) records
         else:
             launch = Launch(java, conf, base, recording=True)
             atexit.register(_build_archive, os.getpid(), launch)
@@ -253,6 +275,7 @@ def _build_archive(pid: int, launch: Launch) -> None:
             return
         if done.returncode == 0 and os.path.isfile(launch.tmp):
             os.replace(launch.tmp, launch.archive)
+            _drop_other_keys(launch.base)
         else:
             _mark_failed(launch.base, done.stderr.decode(errors="replace")[-4000:])
     except OSError:
