@@ -192,20 +192,13 @@ EXTRA_RUNS = 2
 # privacy_pipeline's scan-fused regex pipeline (13.5x under-measured),
 # text_lang_id_multi's per-trigram sha folds (37x), eval_cer's quadratic DP
 # (4.7x), the window family, q1's aggregate expressions (4x). The noop sink
-# computes EVERY column of every row and discards it. Set
-# SPARK_GRAFT_BENCH_ACTION=count to reproduce the legacy r1-r14 measurement
-# (kept for cross-round comparison; both numbers recorded in
-# OPTIMIZATION_r15.md).
-_BENCH_ACTION = os.environ.get("SPARK_GRAFT_BENCH_ACTION", "noop")
+# computes EVERY column of every row and discards it. The r1-r14 count()
+# figures stay recorded in OPTIMIZATION_r15.md for cross-round comparison.
 
 
 def _time_once(fn, spark, sf_dir) -> float:
     t0 = time.perf_counter()
-    df = fn(spark, sf_dir)
-    if _BENCH_ACTION == "count":
-        df.count()
-    else:
-        df.write.format("noop").mode("overwrite").save()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
 
 
@@ -504,7 +497,7 @@ def main() -> None:
         "metric": "headline_queries_total",
         "value": raw_total,
         "unit": "sec",
-        "timed_action": _BENCH_ACTION,
+        "timed_action": "noop",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "env_cpu_probe_sec": probe_pre["cpu_sec"],

@@ -233,10 +233,8 @@ def test_snapshot_expire_never_deletes_live_files(spark):
     import os
     import shutil
 
-    from wri_data_processing_spark.queries.warehouse_ops import (
-        _build_snapshots,
-        _read_snapshot,
-    )
+    from wri_data_processing_spark.queries.warehouse_ops import _build_snapshots
+    from wri_data_processing_spark.sources import snapshots
 
     row = _q(spark, "snapshot_expire").first()
 
@@ -244,18 +242,32 @@ def test_snapshot_expire_never_deletes_live_files(spark):
         spark, SF_DIR, "snapshot_expire_safety", with_update=True
     )
 
-    def manifest(version: int) -> set[str]:
-        with open(os.path.join(root, f"v{version}.manifest")) as fh:
-            return {line.strip() for line in fh if line.strip()}
-
-    live = manifest(3) | manifest(4)
-    deletable = (manifest(1) | manifest(2)) - live
+    m = {v: set(snapshots.manifest(root, f"v{v}")) for v in (1, 2, 3, 4)}
+    live = m[3] | m[4]
+    deletable = (m[1] | m[2]) - live
     assert deletable and not (deletable & live)
     reclaimed = spark.read.parquet(*sorted(deletable)).count()
     for f in deletable:  # actually delete, then prove live reads survive
         os.remove(f)
     shutil.rmtree(os.path.join(root, "base"), ignore_errors=True)
-    n3 = _read_snapshot(spark, root, 3).count()
-    n4 = _read_snapshot(spark, root, 4).count()
+    n3 = snapshots.read(spark, root, "v3").count()
+    n4 = snapshots.read(spark, root, "v4").count()
     assert n4 == row.n_rows_current and n3 > 0
     assert reclaimed == row.n_rows_reclaimed
+
+
+def test_orphan_files_rejects_a_manifest_naming_a_missing_file(spark, monkeypatch):
+    """A manifest entry with no file on disk is a corrupt table, not an
+    orphan count: snapshot_orphan_files must raise, also under python -O."""
+    import pytest
+
+    from wri_data_processing_spark.sources import snapshots
+
+    real = snapshots.manifest
+
+    def with_missing(root: str, name: str) -> list[str]:
+        return real(root, name) + [f"{root}/gone/part-00000.parquet"]
+
+    monkeypatch.setattr(snapshots, "manifest", with_missing)
+    with pytest.raises(RuntimeError, match="missing file"):
+        _q(spark, "snapshot_orphan_files")

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
 from wri_data_processing_spark.registry import query
+from wri_data_processing_spark.sources import snapshots
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
@@ -171,10 +172,10 @@ def _build_snapshots(
     spark: SparkSession, sf_dir: str, tag: str, with_update: bool = False
 ) -> tuple[str, int]:
     """Write the demo snapshots (base / append / delete-rewrite, plus an
-    UPDATE rewrite as v4 when with_update) and their manifests into a
-    scratch dir; returns (table root, key boundary b). Shared by
-    snapshot_time_travel and the snapshot_diff family so all read the SAME
-    manifest machinery."""
+    UPDATE rewrite as v4 when with_update) as snapshots v1..v4 of a
+    sources/snapshots.py table in a scratch dir; returns (table root, key
+    boundary b). Shared by every snapshot_* op so all read the SAME
+    snapshots."""
     import os
 
     from wri_data_processing_spark.queries.io_ops import _scratch_dir
@@ -184,13 +185,7 @@ def _build_snapshots(
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
 
     def write_batch(name: str, df: DataFrame) -> list[str]:
-        path = os.path.join(root, name)
-        df.write.parquet(path)
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
+        return snapshots.write_batch(df, os.path.join(root, name))
 
     base = write_batch("base", o.filter(F.col("o_orderkey") < b))
     appended = write_batch(
@@ -219,17 +214,8 @@ def _build_snapshots(
         )
         manifests[4] = rewritten + append_rw
     for v, files in manifests.items():
-        with open(os.path.join(root, f"v{v}.manifest"), "w") as fh:
-            fh.write("\n".join(files) + "\n")
+        snapshots.write_manifest(root, f"v{v}", files)
     return root, b
-
-
-def _read_snapshot(spark: SparkSession, root: str, version: int) -> DataFrame:
-    import os
-
-    with open(os.path.join(root, f"v{version}.manifest")) as fh:
-        files = [line.strip() for line in fh if line.strip()]
-    return spark.read.parquet(*files)
 
 
 def _tt_version_agg(df: DataFrame, version: int) -> DataFrame:
@@ -262,11 +248,12 @@ def _tt_version_agg(df: DataFrame, version: int) -> DataFrame:
 def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest-based snapshot isolation and time travel — the lakehouse
     table mechanism (Iceberg/Delta) expressed directly, with no format
-    library: every snapshot is an immutable MANIFEST (a text file listing
-    the parquet files it comprises), appends add a manifest that references
-    old files plus new ones, and deletes REPLACE a referenced file with its
-    filtered rewrite. Reading "the table as of v" = read exactly v's file
-    list. Three snapshots are built and read back through their manifests
+    library: every snapshot is an immutable manifest of parquet files
+    (sources/snapshots.py owns the format), appends add a manifest that
+    references old files plus new ones, and deletes REPLACE a referenced
+    file with its filtered rewrite. Reading "the table as of v" = read
+    exactly v's file list. Three snapshots are built and read back through
+    their manifests
     (b = COUNT(*)//10, the count-relative window boundary — live at every
     SF, unlike the pre-r15 absolute key constants):
 
@@ -290,7 +277,7 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     root, _b = _build_snapshots(spark, sf_dir, "time_travel")
     versions = [
-        _tt_version_agg(_read_snapshot(spark, root, v), v) for v in (1, 2, 3)
+        _tt_version_agg(snapshots.read(spark, root, f"v{v}"), v) for v in (1, 2, 3)
     ]
     out = versions[0]
     for nxt in versions[1:]:
@@ -325,15 +312,8 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the appended batch both versions share; the anti-joins then shuffle
     only the non-shared files' keys.
     """
-    import os
-
     root, _b = _build_snapshots(spark, sf_dir, "snapshot_diff")
-
-    def manifest(version: int) -> set[str]:
-        with open(os.path.join(root, f"v{version}.manifest")) as fh:
-            return {line.strip() for line in fh if line.strip()}
-
-    m_old, m_new = manifest(2), manifest(3)
+    m_old, m_new = (set(snapshots.manifest(root, v)) for v in ("v2", "v3"))
     only_old = sorted(m_old - m_new)
     only_new = sorted(m_new - m_old)
     old_rows = spark.read.parquet(*only_old).select("o_orderkey")
@@ -379,15 +359,8 @@ def snapshot_diff_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact in IEEE doubles, so the oracle reproduces the post-image
     bit-identically.
     """
-    import os
-
     root, _b = _build_snapshots(spark, sf_dir, "snapshot_diff_upd", with_update=True)
-
-    def manifest(version: int) -> set[str]:
-        with open(os.path.join(root, f"v{version}.manifest")) as fh:
-            return {line.strip() for line in fh if line.strip()}
-
-    m_old, m_new = manifest(3), manifest(4)
+    m_old, m_new = (set(snapshots.manifest(root, v)) for v in ("v3", "v4"))
     key = ["o_orderkey", "o_totalprice"]
     old_rows = spark.read.parquet(*sorted(m_old - m_new)).select(*key)
     new_rows = spark.read.parquet(*sorted(m_new - m_old)).select(*key)
@@ -424,15 +397,10 @@ def snapshot_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers checkpoint the last manifest they saw and scan only new
     files each trigger.
     """
-    import os
-
     root, _b = _build_snapshots(spark, sf_dir, "snapshot_incr")
-
-    def manifest(version: int) -> set[str]:
-        with open(os.path.join(root, f"v{version}.manifest")) as fh:
-            return {line.strip() for line in fh if line.strip()}
-
-    new_files = sorted(manifest(2) - manifest(1))
+    new_files = sorted(
+        set(snapshots.manifest(root, "v2")) - set(snapshots.manifest(root, "v1"))
+    )
     inc = spark.read.parquet(*new_files)
     return inc.agg(
         F.count(F.lit(1)).cast("long").alias("n_new_rows"),
@@ -480,19 +448,14 @@ def snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     are unaffected (tested: reading v3/v4 after the simulated delete
     still succeeds).
     """
-    import os
-
     root, _b = _build_snapshots(spark, sf_dir, "snapshot_expire", with_update=True)
-
-    def manifest(version: int) -> set[str]:
-        with open(os.path.join(root, f"v{version}.manifest")) as fh:
-            return {line.strip() for line in fh if line.strip()}
-
-    retained = {3, 4}
-    expired = {1, 2}
-    live_files = set().union(*(manifest(v) for v in retained))
-    deletable = sorted(set().union(*(manifest(v) for v in expired)) - live_files)
-    cur = _read_snapshot(spark, root, 4).agg(
+    retained = ("v3", "v4")
+    expired = ("v1", "v2")
+    live_files = set().union(*(snapshots.manifest(root, v) for v in retained))
+    deletable = sorted(
+        set().union(*(snapshots.manifest(root, v) for v in expired)) - live_files
+    )
+    cur = snapshots.read(spark, root, "v4").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_current")
     )
     rec = spark.read.parquet(*deletable).agg(
@@ -529,38 +492,32 @@ def snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snapshot_publish_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-audit-publish (Iceberg's WAP pattern): a writer STAGES a new
     snapshot as an unpublished manifest, an AUDIT runs data-quality gates
-    against the staged files, and only a passing audit flips the _CURRENT
-    pointer — readers can never observe unaudited data, because publish is
-    a one-pointer metadata swap, not a data operation.
+    against the staged files, and only a passing audit publishes it —
+    readers can never observe unaudited data, because publish is
+    sources/snapshots.py's atomic pointer swap, not a data operation.
 
     The fixture stages two candidates against a published v1 base:
       v2: the append batch — audit passes (rows grew, zero duplicate /
           NULL keys) and v2 PUBLISHES;
       v3: a bad rewrite that re-adds the base files on top of v2 —
           duplicate-key audit fails, v3 stays staged, and the reader
-          still resolves _CURRENT -> v2 (proven by re-reading through
-          the pointer after both attempts: reader_version/reader_n_rows).
+          still resolves the pointer to v2 (proven by re-reading through
+          it after both attempts: reader_version/reader_n_rows).
 
     100 TB notes: the audit is the only data-touching step and is an
     ordinary Spark aggregate over the staged manifest's parquet scan
     (count + keyed duplicate count, map-side combined); staging and
-    publishing move manifest text and one pointer file — metadata
-    whose cost scales with file count, never data. This is how a
+    publishing are snapshot-store metadata writes whose cost scales
+    with file count, never data. This is how a
     production pipeline gates a 100 TB daily append behind expectation
     checks without a second copy of the data.
     """
-    import os
-
     root, _b = _build_snapshots(spark, sf_dir, "publish_audit")
-    current = os.path.join(root, "_CURRENT")
-    with open(current, "w") as fh:
-        fh.write("1")
+    snapshots.publish(root, "v1")
 
     def audit_and_maybe_publish(version: int) -> dict:
-        df = _read_snapshot(spark, root, version)
-        with open(current) as fh:
-            live = int(fh.read().strip())
-        live_n = _read_snapshot(spark, root, live).count()
+        df = snapshots.read(spark, root, f"v{version}")
+        live_n = snapshots.read(spark, root, snapshots.current(root)).count()
         row = df.agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             (
@@ -576,8 +533,7 @@ def snapshot_publish_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             and row["n_rows"] >= live_n
         )
         if ok:
-            with open(current, "w") as fh:
-                fh.write(str(version))
+            snapshots.publish(root, f"v{version}")
         return {
             "staged_version": version,
             "n_rows": row["n_rows"],
@@ -588,18 +544,15 @@ def snapshot_publish_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
 
     # Stage v3 = v2's files + the base files AGAIN (duplicate keys).
-    with open(os.path.join(root, "v2.manifest")) as fh:
-        v2_files = [line.strip() for line in fh if line.strip()]
-    with open(os.path.join(root, "v1.manifest")) as fh:
-        v1_files = [line.strip() for line in fh if line.strip()]
-    with open(os.path.join(root, "v3.manifest"), "w") as fh:
-        fh.write("\n".join(v2_files + v1_files) + "\n")
+    snapshots.write_manifest(
+        root, "v3", snapshots.manifest(root, "v2") + snapshots.manifest(root, "v1")
+    )
 
     results = [audit_and_maybe_publish(2), audit_and_maybe_publish(3)]
 
-    with open(current) as fh:
-        reader_version = int(fh.read().strip())
-    reader_n = _read_snapshot(spark, root, reader_version).count()
+    reader = snapshots.current(root)
+    reader_version = int(reader[1:])
+    reader_n = snapshots.read(spark, root, reader).count()
     rows = [
         (
             r["staged_version"], r["n_rows"], r["n_dup_keys"], r["n_null_keys"],
@@ -631,9 +584,10 @@ def snapshot_publish_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot ROLLBACK — Iceberg's rollback_to_snapshot / Delta's
-    RESTORE: reverting a table is re-pointing _CURRENT at an older
-    manifest, a pure metadata operation, because copy-on-write snapshots
-    never mutate the files an old manifest references. The fixture
+    RESTORE: reverting a table is publishing an older snapshot
+    (sources/snapshots.py), a pure metadata operation, because
+    copy-on-write snapshots never mutate the files an old manifest
+    references. The fixture
     publishes v3 (the delete-rewrite), rolls back to v2, and proves
     (a) the reader now sees exactly v2's content — including the rows
     v3's delete had removed, resurrected with zero data movement — and
@@ -645,20 +599,15 @@ def snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     (time travel/CDF/incremental) -> gate (publish-audit) -> revert
     (rollback) -> reclaim (expire).
     """
-    import os
-
     root, _b = _build_snapshots(spark, sf_dir, "rollback")
-    current = os.path.join(root, "_CURRENT")
-    with open(current, "w") as fh:
-        fh.write("3")
-    n_before = _read_snapshot(spark, root, 3).count()
+    snapshots.publish(root, "v3")
+    n_before = snapshots.read(spark, root, "v3").count()
 
-    with open(current, "w") as fh:  # the rollback: one pointer write
-        fh.write("2")
-    with open(current) as fh:
-        v_after = int(fh.read().strip())
-    n_after = _read_snapshot(spark, root, v_after).count()
-    intact = _read_snapshot(spark, root, 3).count() == n_before
+    snapshots.publish(root, "v2")  # the rollback: one pointer write
+    after = snapshots.current(root)
+    v_after = int(after[1:])
+    n_after = snapshots.read(spark, root, after).count()
+    intact = snapshots.read(spark, root, "v3").count() == n_before
 
     return spark.createDataFrame(
         [(3, n_before, v_after, n_after, intact)],
@@ -685,7 +634,7 @@ def snapshot_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orphan-file detection — Iceberg's remove_orphan_files: find data
     files sitting under the table root that NO manifest references. The
     classic source is a failed commit: a writer lands its batch
-    directory, dies before the manifest pointer swap, and the files
+    directory, dies before it writes a manifest, and the files
     remain on disk forever — invisible to every reader (the WAP property
     snapshot_publish_audit proves) but billed by the object store until
     a GC like this one removes them.
@@ -715,20 +664,17 @@ def snapshot_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderkey") >= 2 * b) & (F.col("o_orderkey") < 3 * b)
     ).write.parquet(failed_path)
 
-    def manifest(version: int) -> set[str]:
-        with open(os.path.join(root, f"v{version}.manifest")) as fh:
-            return {line.strip() for line in fh if line.strip()}
-
-    referenced = set().union(*(manifest(v) for v in (1, 2, 3)))
+    referenced = set().union(*(snapshots.manifest(root, f"v{v}") for v in (1, 2, 3)))
     on_disk = set()
     for dirpath, _dirs, files in os.walk(root):
         for f in files:
             if f.endswith(".parquet"):
                 on_disk.add(os.path.join(dirpath, f))
     orphans = sorted(on_disk - referenced)
-    assert not (referenced - on_disk), "manifest references a missing file"
+    if referenced - on_disk:
+        raise RuntimeError("manifest references a missing file")
     n_batches = len({os.path.dirname(p) for p in orphans})
-    cur = _read_snapshot(spark, root, 3).agg(
+    cur = snapshots.read(spark, root, "v3").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_current")
     )
     orph = spark.read.parquet(*orphans).agg(
@@ -780,14 +726,14 @@ def snapshot_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: erasure is ONE anti-filter scan-and-rewrite of live files (at
     scale: only files whose min/max custkey ranges overlap the request
     list — manifest pruning makes forgetting cheap); the audit is two
-    count scans. Metadata (manifest pointer swap + expiry) costs file
-    count, never data size.
+    count scans. Metadata (sources/snapshots.py publish + expire) costs
+    file count, never data size.
     """
     import os
 
     root, _b = _build_snapshots(spark, sf_dir, "forget_user")
     o = table(spark, sf_dir, "orders")
-    v3 = _read_snapshot(spark, root, 3)
+    v3 = snapshots.read(spark, root, "v3")
     live = v3.join(
         o.select("o_orderkey", "o_custkey"), "o_orderkey"
     ).select("o_orderkey", "o_custkey", "o_totalprice")
@@ -800,28 +746,18 @@ def snapshot_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(forget.cast("long")).cast("long").alias("n_rows_purged"),
     )
     # (1) copy-on-write rewrite without the forgotten users -> v4.
-    clean_path = os.path.join(root, "v4_clean")
-    live.filter(~forget).select("o_orderkey", "o_totalprice").write.parquet(
-        clean_path
+    clean = live.filter(~forget).select("o_orderkey", "o_totalprice")
+    snapshots.write_manifest(
+        root, "v4", snapshots.write_batch(clean, os.path.join(root, "v4_clean"))
     )
-    files = sorted(
-        os.path.join(clean_path, f)
-        for f in os.listdir(clean_path)
-        if f.endswith(".parquet")
-    )
-    with open(os.path.join(root, "v4.manifest"), "w") as fh:
-        fh.write("\n".join(files) + "\n")
+    snapshots.publish(root, "v4")
     # (2) expire all prior snapshots: erasure and time travel are mutually
     # exclusive for the erased subjects.
-    expired = 0
-    for v in (1, 2, 3):
-        os.rename(
-            os.path.join(root, f"v{v}.manifest"),
-            os.path.join(root, f"v{v}.manifest.expired"),
-        )
-        expired += 1
+    expired = ("v1", "v2", "v3")
+    for v in expired:
+        snapshots.expire(root, v)
     # (3) residual audit: re-read the PUBLISHED snapshot.
-    v4 = _read_snapshot(spark, root, 4).join(
+    v4 = snapshots.read(spark, root, snapshots.current(root)).join(
         o.select("o_orderkey", "o_custkey"), "o_orderkey"
     )
     after = v4.agg(
@@ -834,7 +770,7 @@ def snapshot_forget_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_rows_purged",
         "n_rows_after",
         "n_residual_after",
-        F.lit(expired).alias("n_snapshots_expired"),
+        F.lit(len(expired)).alias("n_snapshots_expired"),
     )
 
 
@@ -865,10 +801,10 @@ def snapshot_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolation in both directions by reading all three refs: dev sees
     the fork plus its own append but NOT main's later delete; main
     never sees the branch's append; the fork point stays readable
-    forever. A branch is just ANOTHER NAMED POINTER into the same
-    immutable file pool — creating it writes one manifest file, zero
-    data copies (the snapshot_rollback pointer discipline, extended
-    from rollback to divergence).
+    forever. A branch is just ANOTHER NAMED MANIFEST over the same
+    immutable file pool — creating it writes one manifest
+    (sources/snapshots.py), zero data copies (the snapshot_rollback
+    pointer discipline, extended from rollback to divergence).
 
     Exactness: the three refs reduce to closed-form key predicates on
     orders (the snapshot_time_travel contract), so the oracle needs no
@@ -886,19 +822,13 @@ def snapshot_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fork dev at v2 (pointer copy), then append TO THE BRANCH only — a
     # third-of-a-window batch ([2b, 2b + b//3)) so dev and main stay
     # visibly different sizes
-    dev_path = os.path.join(root, "dev_append")
-    o.filter(
-        (F.col("o_orderkey") >= 2 * b) & (F.col("o_orderkey") < 2 * b + b // 3)
-    ).write.parquet(dev_path)
-    dev_files = sorted(
-        os.path.join(dev_path, f)
-        for f in os.listdir(dev_path)
-        if f.endswith(".parquet")
+    dev_files = snapshots.write_batch(
+        o.filter(
+            (F.col("o_orderkey") >= 2 * b) & (F.col("o_orderkey") < 2 * b + b // 3)
+        ),
+        os.path.join(root, "dev_append"),
     )
-    with open(os.path.join(root, "v2.manifest")) as fh:
-        fork_files = [line.strip() for line in fh if line.strip()]
-    with open(os.path.join(root, "dev.branch"), "w") as fh:
-        fh.write("\n".join(fork_files + dev_files) + "\n")
+    snapshots.write_manifest(root, "dev", snapshots.manifest(root, "v2") + dev_files)
 
     def agg(ref: str, df: DataFrame) -> DataFrame:
         return df.agg(
@@ -909,11 +839,9 @@ def snapshot_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_price"),
         )
 
-    with open(os.path.join(root, "dev.branch")) as fh:
-        dev_manifest = [line.strip() for line in fh if line.strip()]
-    dev = spark.read.parquet(*dev_manifest)
-    fork = _read_snapshot(spark, root, 2)
-    main = _read_snapshot(spark, root, 3)
+    dev = snapshots.read(spark, root, "dev")
+    fork = snapshots.read(spark, root, "v2")
+    main = snapshots.read(spark, root, "v3")
     return (
         agg("dev@head", dev)
         .unionAll(agg("fork@v2", fork))
@@ -995,29 +923,19 @@ def snapshot_merge_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root, b = _build_snapshots(spark, sf_dir, "mergebr")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    dev_path = os.path.join(root, "dev_append")
-    o.filter(
-        (F.col("o_orderkey") >= 2 * b) & (F.col("o_orderkey") < 2 * b + b // 3)
-    ).write.parquet(dev_path)
-    dev_added = sorted(
-        os.path.join(dev_path, f)
-        for f in os.listdir(dev_path)
-        if f.endswith(".parquet")
+    dev_added = snapshots.write_batch(
+        o.filter(
+            (F.col("o_orderkey") >= 2 * b) & (F.col("o_orderkey") < 2 * b + b // 3)
+        ),
+        os.path.join(root, "dev_append"),
     )
-
-    def manifest(version: int) -> list[str]:
-        with open(os.path.join(root, f"v{version}.manifest")) as fh:
-            return [line.strip() for line in fh if line.strip()]
-
-    fork = set(manifest(2))
-    main_head = set(manifest(3))
+    fork = set(snapshots.manifest(root, "v2"))
+    main_head = set(snapshots.manifest(root, "v3"))
     dev_head = fork | set(dev_added)
     conflicts = _merge_conflicts(fork, main_head, dev_head)
-    merged_files = sorted(main_head | (dev_head - fork))
-    with open(os.path.join(root, "v4.manifest"), "w") as fh:
-        fh.write("\n".join(merged_files) + "\n")
+    snapshots.write_manifest(root, "v4", sorted(main_head | (dev_head - fork)))
 
-    merged = spark.read.parquet(*manifest(4))
+    merged = snapshots.read(spark, root, "v4")
     n_main = spark.read.parquet(*sorted(main_head)).count()
     n_dev_added = spark.read.parquet(*dev_added).count()
     agg = merged.agg(

@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from wri_data_processing_spark.sources import snapshots
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -135,34 +137,26 @@ def run_available_now(
 
 
 def _read_current_snapshot(spark: SparkSession, target_root: str):
-    """Read the snapshot the _CURRENT pointer names, or None before batch 0."""
-    import os
-
-    marker = os.path.join(target_root, "_CURRENT")
-    if not os.path.exists(marker):
-        return None
-    with open(marker) as f:
-        name = f.read().strip()
-    return spark.read.parquet(os.path.join(target_root, name))
+    """Read the published snapshot, or None before batch 0."""
+    name = snapshots.current(target_root)
+    return None if name is None else snapshots.read(spark, target_root, name)
 
 
 def _commit_snapshot(df: DataFrame, target_root: str, batch_id: int) -> None:
-    """Write a full snapshot, then atomically flip the _CURRENT pointer.
+    """Write a full snapshot, then publish it (sources/snapshots.py).
 
-    Re-running an uncommitted batch overwrites the same snap dir (idempotent);
-    the pointer flip is os.replace (atomic on POSIX), so readers never see a
-    partial snapshot. This is the poor-man's table format — on a real
-    deployment this is exactly what Delta/Iceberg's commit log does, with the
-    same snapshot-isolation semantics.
+    Re-running an uncommitted batch overwrites the same snap dir and
+    manifest (idempotent); publish is an atomic pointer swap, so readers
+    never see a partial snapshot. This is the poor-man's table format — on
+    a real deployment this is exactly what Delta/Iceberg's commit log does,
+    with the same snapshot-isolation semantics.
     """
     import os
 
     name = f"snap_{batch_id:010d}"
-    df.write.mode("overwrite").parquet(os.path.join(target_root, name))
-    tmp = os.path.join(target_root, "_CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(name)
-    os.replace(tmp, os.path.join(target_root, "_CURRENT"))
+    files = snapshots.write_batch(df, os.path.join(target_root, name))
+    snapshots.write_manifest(target_root, name, files)
+    snapshots.publish(target_root, name)
 
 
 def incremental_user_totals(
