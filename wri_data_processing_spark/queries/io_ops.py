@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 
 from wri_data_processing_spark.catalog import TABLES, table
 from wri_data_processing_spark.registry import query
+from wri_data_processing_spark.sources import snapshots
 from wri_data_processing_spark.sources.listing import scan_file_listing, strip_scheme
 from wri_data_processing_spark.sources.raster import scan_raster_header
 from wri_data_processing_spark.sources.tables import scan_csv, sink_append_table, sink_overwrite_table
@@ -703,16 +704,12 @@ def maintenance_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _scratch_dir("compaction_src", sf_dir)
     dst = _scratch_dir("compaction_dst", sf_dir)
     e = table(spark, sf_dir, "events")
-    e.repartition(64).write.mode("overwrite").parquet(src)
-
-    files = [f for f in os.listdir(src) if f.endswith(".parquet")]
-    total_bytes = sum(os.path.getsize(os.path.join(src, f)) for f in files)
+    files = snapshots.write_batch(e.repartition(64), src)
+    total_bytes = sum(os.path.getsize(f) for f in files)
     target = max(1, -(-total_bytes // (32 * 1024 * 1024)))  # ceil-div
 
     small = spark.read.parquet(src)
-    small.repartition(target).write.mode("overwrite").parquet(dst)
-
-    out_files = [f for f in os.listdir(dst) if f.endswith(".parquet")]
+    out_files = snapshots.write_batch(small.repartition(target), dst)
     n_before, n_after = len(files), len(out_files)
     rows_src = spark.read.parquet(src).count()
     rows_dst = spark.read.parquet(dst).count()

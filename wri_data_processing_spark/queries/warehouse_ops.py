@@ -253,9 +253,8 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     references old files plus new ones, and deletes REPLACE a referenced
     file with its filtered rewrite. Reading "the table as of v" = read
     exactly v's file list. Three snapshots are built and read back through
-    their manifests
-    (b = COUNT(*)//10, the count-relative window boundary — live at every
-    SF, unlike the pre-r15 absolute key constants):
+    their manifests (b = COUNT(*)//10, the count-relative window boundary —
+    live at every SF, unlike the pre-r15 absolute key constants):
 
       v1: base batch (orderkey < b)
       v2: v1 files + an appended batch (b <= orderkey < 2b) — append
