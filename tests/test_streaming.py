@@ -144,6 +144,26 @@ def test_snapshot_commit_replay_idempotent(spark, sf_dir, tmp_path):
     assert first == again
 
 
+def test_user_totals_replayed_batch_counts_once(spark, tmp_path):
+    """A micro-batch replayed after its snapshot was published (the driver
+    died before the checkpoint recorded it) leaves the totals of one
+    application: the merge starts from the snapshot below its batch id."""
+    from wri_data_processing_spark.streaming.pipelines import (
+        _read_current_snapshot,
+        merge_user_totals,
+    )
+
+    target = str(tmp_path / "totals")
+    os.makedirs(target, exist_ok=True)
+    batch = spark.createDataFrame([(1, 2.0), (2, 3.0)], "user_id long, value double")
+    for batch_id in (0, 1, 1):  # batch 1 runs twice
+        merge_user_totals(batch, batch_id, target)
+    totals = sorted(
+        (r["user_id"], int(r["total_dec"])) for r in _read_current_snapshot(spark, target).collect()
+    )
+    assert totals == [(1, 4), (2, 6)]
+
+
 def test_stream_stream_join_matches_batch(spark, sf_dir, event_source, tmp_path):
     """Watermarked stream-stream interval join == the batch interval join."""
     from wri_data_processing_spark.streaming.pipelines import (

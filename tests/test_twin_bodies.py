@@ -27,10 +27,15 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(REPO_ROOT, "wri_data_processing_spark")
 MIN_TOKENS = 120
 SHINGLE = 5
-THRESHOLD = 0.6
+THRESHOLD = 0.5
 
 # (qualified name, qualified name) -> why the pair keeps two bodies.
-ALLOWED: dict[tuple[str, str], str] = {}
+ALLOWED: dict[tuple[str, str], str] = {
+    ("queries.tpch_extra.q10_returned_customers", "queries.tpch_extra.q3_shipping_priority"): (
+        "two TPC-H queries that share only the customer-orders-lineitem join and the "
+        "revenue sum; each keeps its spec shape so it reads against the TPC-H text"
+    ),
+}
 
 _SKIP = {
     tokenize.COMMENT,
@@ -105,15 +110,20 @@ def test_no_unlisted_twin_bodies():
 
 def test_scan_sees_a_renamed_copy(tmp_path):
     """A copy under another function name, without the docstring, with
-    other string literals and a comment is still a 1.00 twin; an unrelated
-    body is not."""
-    body = "\n".join(
+    other string literals and a comment is still a 1.00 twin; a partial
+    copy that keeps 9 of the 12 lines scores 0.52, a twin at THRESHOLD;
+    an unrelated body is not."""
+    lines = [
         f"    x{i} = F.col('a{i}').cast('long') * y.alias('b') + g(x, {i})" for i in range(12)
-    )
+    ]
+    body = "\n".join(lines)
+    other = [f"    z{i} = h(y, {i}) - F.lit({i}).alias('c')" for i in range(3)]
+    partial = "\n".join(lines[:9] + other)
     (tmp_path / "m.py").write_text(
         f"def one(x, y):\n    '''doc'''\n{body}\n    return x\n\n"
         f"def two(x, y):\n{body.replace(chr(39) + 'a', chr(39) + 'z')}\n    return x  # note\n\n"
-        "def three(x):\n" + "".join(f"    return [{i}] * x + h(x)\n" for i in range(30))
+        "def three(x):\n" + "".join(f"    return [{i}] * x + h(x)\n" for i in range(30)) + "\n"
+        f"def four(x, y):\n{partial}\n    return x\n"
     )
     found = twin_pairs(function_bodies(str(tmp_path)))
-    assert found == {("m.one", "m.two"): 1.0}
+    assert found == {("m.one", "m.two"): 1.0, ("m.four", "m.one"): 0.52, ("m.four", "m.two"): 0.52}

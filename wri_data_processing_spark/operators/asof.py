@@ -26,6 +26,24 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _tagged_union(
+    left: DataFrame, right: DataFrame, left_ts: str, right_ts: str, carried: list[str]
+) -> DataFrame:
+    """Step 1 of both as-of joins: left rows (``_is_right`` = 0, NULL
+    ``carried`` values) and right rows (``_is_right`` = 1, NULL left-only
+    columns) in one frame, the join timestamp as ``_ats``."""
+    l_tagged = left.withColumn("_ats", F.col(left_ts)).withColumn("_is_right", F.lit(0))
+    for c in carried:
+        if c not in l_tagged.columns:
+            l_tagged = l_tagged.withColumn(c, F.lit(None))
+    # Right rows contribute only key + ts + carried values.
+    r_tagged = right.withColumn("_ats", F.col(right_ts)).withColumn("_is_right", F.lit(1))
+    for c in left.columns:
+        if c not in r_tagged.columns:
+            r_tagged = r_tagged.withColumn(c, F.lit(None))
+    return l_tagged.unionByName(r_tagged.select(*l_tagged.columns))
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -42,19 +60,7 @@ def asof_join(
     """
     carried = [c for c in dict.fromkeys([*value_cols, right_ts])]
     left_cols = [c for c in left.columns]
-
-    l_tagged = left.withColumn("_ats", F.col(left_ts)).withColumn("_is_right", F.lit(0))
-    for c in carried:
-        if c not in l_tagged.columns:
-            l_tagged = l_tagged.withColumn(c, F.lit(None))
-    # Right rows contribute only key + ts + carried values.
-    r_tagged = right.withColumn("_ats", F.col(right_ts)).withColumn("_is_right", F.lit(1))
-    for c in left_cols:
-        if c not in r_tagged.columns:
-            r_tagged = r_tagged.withColumn(c, F.lit(None))
-    r_tagged = r_tagged.select(*l_tagged.columns)
-
-    unioned = l_tagged.unionByName(r_tagged)
+    unioned = _tagged_union(left, right, left_ts, right_ts, carried)
     # Right rows sort before left rows at the same timestamp => "<=" semantics.
     w = (
         Window.partitionBy(on)
@@ -80,26 +86,14 @@ def asof_join_forward(
     value_cols: list[str],
 ) -> DataFrame:
     """Forward as-of join: EARLIEST right row per key with right_ts >=
-    left_ts (the "next event after" lookup) — mirror of asof_join with the
-    window reversed: left rows sort BEFORE right rows at equal timestamps
+    left_ts (the "next event after" lookup) — asof_join's _tagged_union with
+    the window reversed: left rows sort BEFORE right rows at equal timestamps
     (so an exact-timestamp right row matches, ">=" semantics) and
     ``first(ignorenulls)`` scans CURRENT ROW..UNBOUNDED FOLLOWING.
     Same single-shuffle, no-blowup cost envelope as the backward join.
     """
     carried = [c for c in dict.fromkeys([*value_cols, right_ts])]
-    left_cols = [c for c in left.columns]
-
-    l_tagged = left.withColumn("_ats", F.col(left_ts)).withColumn("_is_right", F.lit(0))
-    for c in carried:
-        if c not in l_tagged.columns:
-            l_tagged = l_tagged.withColumn(c, F.lit(None))
-    r_tagged = right.withColumn("_ats", F.col(right_ts)).withColumn("_is_right", F.lit(1))
-    for c in left_cols:
-        if c not in r_tagged.columns:
-            r_tagged = r_tagged.withColumn(c, F.lit(None))
-    r_tagged = r_tagged.select(*l_tagged.columns)
-
-    unioned = l_tagged.unionByName(r_tagged)
+    unioned = _tagged_union(left, right, left_ts, right_ts, carried)
     w = (
         Window.partitionBy(on)
         .orderBy(F.col("_ats"), F.col("_is_right"))

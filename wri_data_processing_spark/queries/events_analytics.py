@@ -1632,6 +1632,33 @@ def _life_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _life_rows(
+    spark: SparkSession, sf_dir: str, terms: dict[str, Column], *out: Column
+) -> DataFrame:
+    """(dur, n_risk, n_event, n_censor, *out) per duration of _life_table,
+    in duration order: each ``terms`` array (name -> a per-duration array
+    over rs and atrisk) rides next to the exploded row at its position p,
+    for ``out`` to read (_prefix_sum)."""
+    t = _life_table(spark, sf_dir).select("rs", "atrisk", *[c.alias(n) for n, c in terms.items()])
+    ex = t.select(F.posexplode("rs").alias("p", "r"), "atrisk", *terms)
+    return ex.select(
+        F.col("r.dur").alias("dur"),
+        F.element_at("atrisk", F.col("p") + 1).alias("n_risk"),
+        F.col("r.d").alias("n_event"),
+        F.col("r.c").alias("n_censor"),
+        *out,
+    ).orderBy("dur")
+
+
+def _prefix_sum(col: str) -> Column:
+    """ROUND-6 of the ordered fold of the life-table array ``col`` up to
+    its exploded position p (the list discipline of both engines)."""
+    return F.round(
+        F.aggregate(F.slice(col, F.lit(1), F.col("p") + 1), F.lit(0.0), lambda a, x: a + x),
+        6,
+    )
+
+
 @query(
     "events_survival_km",
     oracle=f"""{_LIFE_TABLE_CTES},
@@ -1683,43 +1710,20 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     row — never a global window — so the shape is unchanged at 100 TB
     where |users| grows but the calendar does not.
     """
-    enr = _life_table(spark, sf_dir)
-    t = enr.select(
+    terms = F.transform(
         "rs",
-        "atrisk",
-        F.transform(
-            "rs",
-            lambda r, i: F.when(
-                (r["d"] > 0) & (F.element_at("atrisk", i + 1) > r["d"]),
-                F.log(
-                    (F.element_at("atrisk", i + 1) - r["d"]).cast("double")
-                    / F.element_at("atrisk", i + 1).cast("double")
-                ),
-            ).when(r["d"] > 0, F.lit(None).cast("double")).otherwise(F.lit(0.0)),
-        ).alias("terms"),
+        lambda r, i: F.when(
+            (r["d"] > 0) & (F.element_at("atrisk", i + 1) > r["d"]),
+            F.log(
+                (F.element_at("atrisk", i + 1) - r["d"]).cast("double")
+                / F.element_at("atrisk", i + 1).cast("double")
+            ),
+        ).when(r["d"] > 0, F.lit(None).cast("double")).otherwise(F.lit(0.0)),
     )
-    ex = t.select(F.posexplode("rs").alias("p", "r"), "atrisk", "terms")
-    return ex.select(
-        F.col("r.dur").alias("dur"),
-        F.element_at("atrisk", F.col("p") + 1).alias("n_risk"),
-        F.col("r.d").alias("n_event"),
-        F.col("r.c").alias("n_censor"),
-        F.when(
-            F.element_at("terms", F.col("p") + 1).isNull(),
-            F.lit(None).cast("double"),
-        )
-        .otherwise(
-            F.round(
-                F.aggregate(
-                    F.slice("terms", F.lit(1), F.col("p") + 1),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                ),
-                6,
-            )
-        )
-        .alias("ln_surv"),
-    ).orderBy("dur")
+    ln_surv = F.when(
+        F.element_at("terms", F.col("p") + 1).isNull(), F.lit(None).cast("double")
+    ).otherwise(_prefix_sum("terms"))
+    return _life_rows(spark, sf_dir, {"terms": terms}, ln_surv.alias("ln_surv"))
 
 
 @query(
@@ -3128,42 +3132,24 @@ def events_hazard_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, unchanged at 100 TB where |users| grows but the calendar
     doesn't.
     """
-    enr = _life_table(spark, sf_dir)
-    t = enr.select(
-        "rs",
-        "atrisk",
-        F.transform(
-            "rs",
-            lambda r, i: r["d"].cast("double")
-            / F.element_at("atrisk", i + 1).cast("double"),
-        ).alias("hterms"),
-        F.transform(
-            "rs",
-            lambda r, i: r["d"].cast("double")
-            / (
-                F.element_at("atrisk", i + 1).cast("double")
-                * F.element_at("atrisk", i + 1).cast("double")
-            ),
-        ).alias("vterms"),
+    hterms = F.transform(
+        "rs", lambda r, i: r["d"].cast("double") / F.element_at("atrisk", i + 1).cast("double")
     )
-    ex = t.select(F.posexplode("rs").alias("p", "r"), "atrisk", "hterms", "vterms")
-
-    def prefix(col: str) -> F.Column:
-        return F.round(
-            F.aggregate(
-                F.slice(col, F.lit(1), F.col("p") + 1), F.lit(0.0), lambda a, x: a + x
-            ),
-            6,
-        )
-
-    return ex.select(
-        F.col("r.dur").alias("dur"),
-        F.element_at("atrisk", F.col("p") + 1).alias("n_risk"),
-        F.col("r.d").alias("n_event"),
-        F.col("r.c").alias("n_censor"),
-        prefix("hterms").alias("cum_hazard"),
-        prefix("vterms").alias("hazard_var"),
-    ).orderBy("dur")
+    vterms = F.transform(
+        "rs",
+        lambda r, i: r["d"].cast("double")
+        / (
+            F.element_at("atrisk", i + 1).cast("double")
+            * F.element_at("atrisk", i + 1).cast("double")
+        ),
+    )
+    return _life_rows(
+        spark,
+        sf_dir,
+        {"hterms": hterms, "vterms": vterms},
+        _prefix_sum("hterms").alias("cum_hazard"),
+        _prefix_sum("vterms").alias("hazard_var"),
+    )
 
 
 @query(

@@ -149,13 +149,6 @@ def _jaccard_pairs(sh: DataFrame, max_df: int = _MAX_DF) -> DataFrame:
     list) and holds for any document under 2^20 distinct shingles — a
     >4 MB single document; cap inputs above that upstream.
     """
-    pk = F.col("doc_id") * _PACK + F.col("n")
-    g = (
-        sh.select(pk.alias("pk"), "shingle")
-        .groupBy("shingle")
-        .agg(F.collect_list("pk").alias("ds"))
-        .filter((F.size("ds") >= 2) & (F.size("ds") <= max_df))
-    )
     # Length prefilter (r15, guide §2.3 "shuffle fewer bytes"): a pair's
     # maximum achievable Jaccard is min(n_a,n_b)/max(n_a,n_b) (n_common <=
     # min, and c/(n_a+n_b-c) is increasing in c), so a pair with
@@ -167,25 +160,46 @@ def _jaccard_pairs(sh: DataFrame, max_df: int = _MAX_DF) -> DataFrame:
     # surviving pairs keep their full n_common count. The integer gap to
     # 3/5 is >= 1/(5*2^20), orders of magnitude above double rounding, so
     # this can never drop a pair the float >= 0.6 filter would keep.
-    pa, pb = F.col("a") % _PACK, F.col("b") % _PACK
+    n_a, n_b = F.col("a") % _PACK, F.col("b") % _PACK
+    jac = F.col("n_common") / (n_a + n_b - F.col("n_common"))
+    return _posting_pairs(
+        sh,
+        max_df,
+        F.least(n_a, n_b) * _JT_DEN >= F.greatest(n_a, n_b) * _JT_NUM,
+        jac >= _JACCARD_THRESHOLD,
+        F.round(jac, 4).alias("jaccard"),
+    )
+
+
+def _posting_pairs(
+    sh: DataFrame, max_df: int, bound: Column, keep: Column, *ratios: Column
+) -> DataFrame:
+    """(doc_a, doc_b, *ratios): the document pairs of a (doc_id, n,
+    shingle) frame that share a shingle of document frequency 2..max_df,
+    with their shared-shingle count n_common. ``bound`` drops candidate
+    pairs inside the explode, ``keep`` drops counted pairs; both and
+    ``ratios`` read the packed keys a < b (size = key % _PACK) and
+    n_common. The posting-list plan is _jaccard_pairs'."""
+    pk = F.col("doc_id") * _PACK + F.col("n")
+    g = (
+        sh.select(pk.alias("pk"), "shingle")
+        .groupBy("shingle")
+        .agg(F.collect_list("pk").alias("ds"))
+        .filter((F.size("ds") >= 2) & (F.size("ds") <= max_df))
+    )
     pairs = (
         g.select(F.explode("ds").alias("a"), "ds")
         .select("a", F.explode("ds").alias("b"))
-        .filter(
-            (F.col("a") < F.col("b"))
-            & (F.least(pa, pb) * _JT_DEN >= F.greatest(pa, pb) * _JT_NUM)
-        )
+        .filter((F.col("a") < F.col("b")) & bound)
     )
-    n_a, n_b = F.col("a") % _PACK, F.col("b") % _PACK
-    jac = F.col("n_common") / (n_a + n_b - F.col("n_common"))
     return (
         pairs.groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("n_common"))
-        .filter(jac >= _JACCARD_THRESHOLD)
+        .filter(keep)
         .select(
             F.floor(F.col("a") / _PACK).cast("long").alias("doc_a"),
             F.floor(F.col("b") / _PACK).cast("long").alias("doc_b"),
-            F.round(jac, 4).alias("jaccard"),
+            *ratios,
         )
     )
 
@@ -1045,13 +1059,19 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     final anti-join broadcasts: duplicates are a small fraction of the
     corpus.
     """
-    from wri_data_processing_spark.queries.llm_similarity import (
-        bucketed_pair_candidates,
-        cosine_from_norms,
-    )
+    from wri_data_processing_spark.queries.llm_similarity import bucketed_pair_candidates
 
     e = table(spark, sf_dir, "embeddings")
-    pairs = bucketed_pair_candidates(e.select("vec_id", "embedding"))
+    return _drop_near_dups(e, bucketed_pair_candidates(e.select("vec_id", "embedding")))
+
+
+def _drop_near_dups(e: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(vec_id, label) of ``e`` without every vector that is the higher id
+    vec_b of a candidate pair (vec_a, vec_b, ea, eb, na, nb) at cosine >=
+    0.45: keep-first semantics. The anti-join broadcasts: duplicates are a
+    small fraction of the corpus."""
+    from wri_data_processing_spark.queries.llm_similarity import cosine_from_norms
+
     dups = (
         pairs.filter(
             cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")) >= 0.45
@@ -1082,7 +1102,7 @@ def dedup_embedding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor. O(N^2) with a broadcast side: valid only for corpora that fit a
     broadcast; the registered scale path is dedup_embedding's bucketed
     candidates + exact verify."""
-    from wri_data_processing_spark.queries.llm_similarity import cosine_from_norms, pair_sides
+    from wri_data_processing_spark.queries.llm_similarity import pair_sides
 
     # r15: norms once per VECTOR (the sim_pairs_exact shape) instead of
     # inside the per-pair cosine — bit-identical (cosine_from_norms keeps
@@ -1092,18 +1112,7 @@ def dedup_embedding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole stage to interpreted fallback).
     e = table(spark, sf_dir, "embeddings")
     a, b = pair_sides(e)
-    dups = (
-        a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
-        .filter(
-            cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
-            >= 0.45
-        )
-        .select(F.col("vec_b").alias("dup_id"))
-        .distinct()
-    )
-    return e.join(F.broadcast(dups), e.vec_id == F.col("dup_id"), "left_anti").select(
-        "vec_id", "label"
-    )
+    return _drop_near_dups(e, a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b")))
 
 
 _SEMDEDUP_TAU = 0.35  # this table's random-ish vectors top out ~0.51; real
@@ -1350,32 +1359,16 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     row for free. Ratios are exact-int divisions, bit-stable.
     """
     d = table(spark, sf_dir, "documents")
-    sh = _shingles_hashed(d, 3)
-    pk = F.col("doc_id") * _PACK + F.col("n")
-    g = (
-        sh.select(pk.alias("pk"), "shingle")
-        .groupBy("shingle")
-        .agg(F.collect_list("pk").alias("ds"))
-        .filter((F.size("ds") >= 2) & (F.size("ds") <= _MAX_DF))
-    )
-    pairs = (
-        g.select(F.explode("ds").alias("a"), "ds")
-        .select("a", F.explode("ds").alias("b"))
-        .filter(F.col("a") < F.col("b"))
-    )
-    n_a, n_b = F.col("a") % _PACK, F.col("b") % _PACK
-    cab = F.col("n_common") / n_a
-    cba = F.col("n_common") / n_b
-    return (
-        pairs.groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .filter(F.greatest(cab, cba) >= _CONTAINMENT_THRESHOLD)
-        .select(
-            F.floor(F.col("a") / _PACK).cast("long").alias("doc_a"),
-            F.floor(F.col("b") / _PACK).cast("long").alias("doc_b"),
-            F.round(cab, 4).alias("cont_a_in_b"),
-            F.round(cba, 4).alias("cont_b_in_a"),
-        )
+    cab = F.col("n_common") / (F.col("a") % _PACK)
+    cba = F.col("n_common") / (F.col("b") % _PACK)
+    # No size bound: a short document can sit wholly inside a long one.
+    return _posting_pairs(
+        _shingles_hashed(d, 3),
+        _MAX_DF,
+        F.lit(True),
+        F.greatest(cab, cba) >= _CONTAINMENT_THRESHOLD,
+        F.round(cab, 4).alias("cont_a_in_b"),
+        F.round(cba, 4).alias("cont_b_in_a"),
     )
 
 

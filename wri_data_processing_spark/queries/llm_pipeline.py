@@ -531,49 +531,58 @@ def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameterized variant broadcasts a |Q|-row term table instead
     (the sim_topk_batch shape).
     """
-    d = table(spark, sf_dir, "documents")
-    toks = ws_tokens("text")
-    def _eq(term):
-        # NB: a 2-arg lambda (x, t=term) would make F.filter pass the
-        # ELEMENT INDEX as the second argument — close over the term.
-        return lambda x: x == F.lit(term)
-
-    tf_cols = [
-        F.size(F.filter(toks, _eq(t))).cast("long").alias(f"tf{i}")
-        for i, t in enumerate(_BM25_TERMS, 1)
-    ]
-    dd = d.select("doc_id", F.size(toks).cast("long").alias("dl"), *tf_cols)
-    s = dd.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("int")).cast("long").alias(f"df{i}")
-            for i in range(1, 4)
-        ],
-    )
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
-    norm = F.lit(0.25) + (F.lit(0.75) * F.col("dl").cast("double")) / avgdl
-
-    def term_score(i: int):
-        tfd = F.col(f"tf{i}").cast("double")
-        dfd = F.col(f"df{i}").cast("double")
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs").cast("double") - dfd + F.lit(0.5))
-            / (dfd + F.lit(0.5))
-        )
-        return idf * (tfd * F.lit(2.2)) / (tfd + F.lit(1.2) * norm)
-
-    score = term_score(1) + term_score(2) + term_score(3)
+    dd = _bm25_docs(spark, sf_dir, {str(i): t for i, t in enumerate(_BM25_TERMS, 1)})
+    score = _bm25_term("1") + _bm25_term("2") + _bm25_term("3")
     return (
-        dd.crossJoin(F.broadcast(s))
-        .filter(F.col("tf1") + F.col("tf2") + F.col("tf3") > 0)
+        dd.filter(F.col("tf1") + F.col("tf2") + F.col("tf3") > 0)
         .select(
             "doc_id", "dl", "tf1", "tf2", "tf3", F.round(score, 6).alias("score")
         )
         .orderBy(F.col("score").desc(), "doc_id")
         .limit(20)
     )
+
+
+def _bm25_docs(spark: SparkSession, sf_dir: str, terms: dict[str, str]) -> DataFrame:
+    """(doc_id, dl, tf<k>..., n_docs, sum_dl, df<k>...): per document its
+    whitespace-token length and the count of each query term ``terms[k]``
+    (array-filter sizes inside the scan stage: no explode, no token
+    shuffle), next to the 1-row corpus stats — N, Σdl and each term's
+    document frequency — broadcast back (a bounded NLJ)."""
+    d = table(spark, sf_dir, "documents")
+    toks = ws_tokens("text")
+
+    def _eq(term):
+        # NB: a 2-arg lambda (x, t=term) would make F.filter pass the
+        # ELEMENT INDEX as the second argument — close over the term.
+        return lambda x: x == F.lit(term)
+
+    tf_cols = [
+        F.size(F.filter(toks, _eq(t))).cast("long").alias(f"tf{k}") for k, t in terms.items()
+    ]
+    dd = d.select("doc_id", F.size(toks).cast("long").alias("dl"), *tf_cols)
+    s = dd.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("dl").cast("long").alias("sum_dl"),
+        *[F.sum((F.col(f"tf{k}") > 0).cast("int")).cast("long").alias(f"df{k}") for k in terms],
+    )
+    return dd.crossJoin(F.broadcast(s))
+
+
+def _bm25_term(k: str) -> Column:
+    """Okapi BM25 (k1=1.2, b=0.75) of query term k over a _bm25_docs row:
+    idf = ln(1 + (N - df + 0.5)/(df + 0.5)) times the saturated,
+    length-normalized tf."""
+    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
+    norm = F.lit(0.25) + (F.lit(0.75) * F.col("dl").cast("double")) / avgdl
+    tfd = F.col(f"tf{k}").cast("double")
+    dfd = F.col(f"df{k}").cast("double")
+    idf = F.log(
+        F.lit(1.0)
+        + (F.col("n_docs").cast("double") - dfd + F.lit(0.5))
+        / (dfd + F.lit(0.5))
+    )
+    return idf * (tfd * F.lit(2.2)) / (tfd + F.lit(1.2) * norm)
 
 
 # The parameterized serving batch (VERDICT r14 item 4): query terms arrive
@@ -663,8 +672,8 @@ def text_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the plan as literals; a serving tier re-planning per query would
     be absurd, so here the query set is DATA and the plan is query-count
     generic (the sim_topk_batch shape, lexical edition). Arithmetic is
-    text_bm25_rank's verbatim: Okapi BM25, k1=1.2, b=0.75,
-    idf = ln(1 + (N - df + 0.5)/(df + 0.5)).
+    text_bm25_rank's, through the same _bm25_docs/_bm25_term: Okapi BM25,
+    k1=1.2, b=0.75, idf = ln(1 + (N - df + 0.5)/(df + 0.5)).
 
     Cross-engine exactness: per-query scores are FIXED-ORDER chains of
     per-term scores in the query's pinned term order on both engines
@@ -685,49 +694,16 @@ def text_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     widening the scan — the registered shape keeps the scan-local
     variant because distinct terms here are bounded (8).
     """
-    d = table(spark, sf_dir, "documents")
-    toks = ws_tokens("text")
-
-    def _eq(term):
-        # Close over the term: a 2-arg lambda would receive the element
-        # index as the second argument (the text_bm25_rank note).
-        return lambda x: x == F.lit(term)
-
-    tf_cols = [
-        F.size(F.filter(toks, _eq(t))).cast("long").alias(f"tf_{i}")
-        for i, t in enumerate(_BM25_BATCH_TERMS)
-    ]
-    dd = d.select("doc_id", F.size(toks).cast("long").alias("dl"), *tf_cols)
-    s = dd.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-        *[
-            F.sum((F.col(f"tf_{i}") > 0).cast("int")).cast("long").alias(f"df_{i}")
-            for i in range(len(_BM25_BATCH_TERMS))
-        ],
-    )
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
-    norm = F.lit(0.25) + (F.lit(0.75) * F.col("dl").cast("double")) / avgdl
-
-    def term_score(i: int):
-        tfd = F.col(f"tf_{i}").cast("double")
-        dfd = F.col(f"df_{i}").cast("double")
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs").cast("double") - dfd + F.lit(0.5))
-            / (dfd + F.lit(0.5))
-        )
-        return idf * (tfd * F.lit(2.2)) / (tfd + F.lit(1.2) * norm)
-
+    dd = _bm25_docs(spark, sf_dir, {f"_{i}": t for i, t in enumerate(_BM25_BATCH_TERMS)})
     tidx = {t: i for i, t in enumerate(_BM25_BATCH_TERMS)}
     entries = []
     for qid, terms in _BM25_BATCH_QUERIES:
         ids = [tidx[t] for t in terms]
-        score = term_score(ids[0])
+        score = _bm25_term(f"_{ids[0]}")
         nterms = (F.col(f"tf_{ids[0]}") > 0).cast("int")
         anymatch = F.col(f"tf_{ids[0]}")
         for i in ids[1:]:
-            score = score + term_score(i)
+            score = score + _bm25_term(f"_{i}")
             nterms = nterms + (F.col(f"tf_{i}") > 0).cast("int")
             anymatch = anymatch + F.col(f"tf_{i}")
         entries.append(
@@ -739,8 +715,7 @@ def text_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     long = (
-        dd.crossJoin(F.broadcast(s))
-        .select("doc_id", F.explode(F.array(*entries)).alias("e"))
+        dd.select("doc_id", F.explode(F.array(*entries)).alias("e"))
         .filter(F.col("e.keep"))
         .select(
             F.col("e.query_id").alias("query_id"),
@@ -2529,15 +2504,10 @@ def sample_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the corpus for the target side), vocab join back, 1-row totals
     broadcast (bounded NLJ), per-doc bounded fold.
     """
-    d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id",
-        "lang",
-        F.explode(words("text")).alias("w"),
-    )
-    dt = tok.groupBy("doc_id", "lang", "w").agg(
-        F.count(F.lit(1)).cast("long").alias("c_dw")
-    )
+    from wri_data_processing_spark.queries.llm_text import _doc_terms, _doc_word_counts
+
+    keys = ["doc_id", "lang"]
+    dt = _doc_word_counts(table(spark, sf_dir, "documents"), keys)
     vocab = dt.groupBy("w").agg(
         F.sum("c_dw").cast("long").alias("c_r"),
         F.sum(F.when(F.col("lang") == "en", F.col("c_dw")).otherwise(0))
@@ -2557,26 +2527,9 @@ def sample_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_r").cast("double") + F.lit(1.0))
         / (F.col("n_r").cast("double") + F.col("v").cast("double"))
     )
-    terms = (
-        dt.join(vocab, "w")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "doc_id",
-            "lang",
-            "w",
-            "c_dw",
-            (F.col("c_dw").cast("double") * (ln_t - ln_r)).alias("term"),
-        )
-    )
-    g = terms.groupBy("doc_id", "lang").agg(
-        F.sum("c_dw").cast("long").alias("n_tokens"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("w", "term"))), lambda s: s["term"]
-        ).alias("terms"),
-    )
+    g = _doc_terms(dt, vocab, tot, keys, F.col("c_dw").cast("double") * (ln_t - ln_r))
     return g.select(
-        "doc_id",
-        "lang",
+        *keys,
         "n_tokens",
         F.round(F.aggregate("terms", F.lit(0.0), lambda a, x: a + x), 6).alias(
             "log_weight"

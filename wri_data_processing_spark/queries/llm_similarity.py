@@ -156,13 +156,24 @@ def ivf_assign(e: DataFrame, nlist: int = _IVF_NLIST) -> DataFrame:
     cents = q.filter(F.col("vec_id") < nlist).select(
         F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
     )
-    d2 = _fold_zip("qv", "cv", lambda a, b: (a - b) * (a - b), F.lit(0).cast("long"))
+    return _argmin_d2(q.crossJoin(F.broadcast(cents)), ["vec_id"], "qv", "cid", "m").select(
+        "vec_id", F.col("m.cid").alias("cid")
+    )
+
+
+def _argmin_d2(
+    pairs: DataFrame, keys: list[str], vec: str, cid: str, best: str, dim: int = _EMB_DIM
+) -> DataFrame:
+    """(*keys, ``best``): per ``keys``, the struct (d2, ``cid``) of the
+    nearest centroid over a (vector, centroid) pair frame carrying the
+    quantized vector ``vec`` and the centroid vector cv — int64 L2 over
+    ``dim`` components, ties to the lower centroid id via min(struct). The
+    argmin is partial map-side, one shuffle on ``keys``."""
+    d2 = _fold_zip(vec, "cv", lambda a, b: (a - b) * (a - b), F.lit(0).cast("long"), dim=dim)
     return (
-        q.crossJoin(F.broadcast(cents))
-        .select("vec_id", "cid", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("m"))
-        .select("vec_id", F.col("m.cid").alias("cid"))
+        pairs.select(*keys, cid, d2.alias("d2"))
+        .groupBy(*keys)
+        .agg(F.min(F.struct("d2", cid)).alias(best))
     )
 
 
@@ -649,25 +660,8 @@ def _label_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point components) — the machinery embed_kmeans_assign and
     embed_silhouette share, whose SQL twin is _LABEL_DIST_CTES."""
     e = table(spark, sf_dir, "embeddings")
-    qcol = F.transform(
-        "embedding", lambda x: F.floor(x.cast("double") * F.lit(1048576.0)).cast("long")
-    )
-    q = e.select("vec_id", "label", qcol.alias("qv"))
-    comp = (
-        q.select("label", F.posexplode("qv").alias("i", "qc"))
-        .groupBy("label", "i")
-        .agg(F.sum("qc").alias("s"), F.count(F.lit(1)).alias("n"))
-    )
-    cq = F.floor(F.col("s").cast("double") / F.col("n").cast("double")).cast("long")
-    cvec = (
-        comp.select(F.col("label").alias("clabel"), "i", cq.alias("cq"))
-        .groupBy("clabel")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "cq"))), lambda s: s["cq"]
-            ).alias("cv")
-        )
-    )
+    q = e.select("vec_id", "label", _qvec("embedding").alias("qv"))
+    cvec = _lloyd_update(q, ["label"], "qv").select(F.col("label").alias("clabel"), "cv")
     d2 = _fold_zip("qv", "cv", lambda a, b: (a - b) * (a - b), F.lit(0).cast("long"))
     return q.crossJoin(F.broadcast(cvec)).select(
         "vec_id", "label", "clabel", d2.alias("d2")
@@ -847,27 +841,20 @@ def _km_assign(qt: DataFrame, cents: DataFrame) -> DataFrame:
     """One Lloyd assignment step: (vec_id, cid, d2) — argmin int64 L2 over
     quantized components against a broadcast centroid table, ties to the
     lower cid. Same arithmetic as ivf_assign, but keeps the distance."""
-    d2 = _fold_zip("qv", "cv", lambda a, b: (a - b) * (a - b), F.lit(0).cast("long"))
-    return (
-        qt.crossJoin(F.broadcast(cents))
-        .select("vec_id", "cid", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("m"))
-        .select("vec_id", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2"))
+    return _argmin_d2(qt.crossJoin(F.broadcast(cents)), ["vec_id"], "qv", "cid", "m").select(
+        "vec_id", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2")
     )
 
 
-def _lloyd_update(
-    vecs: DataFrame, asg: DataFrame, on: list[str], keys: list[str], vec: str
-) -> DataFrame:
+def _lloyd_update(members: DataFrame, keys: list[str], vec: str) -> DataFrame:
     """Lloyd centroid update in exact integer arithmetic: per (``keys``,
-    dim), floor(SUM(component)/COUNT) over the member vectors ``vec`` of
-    ``vecs`` (joined to the assignment ``asg`` on ``on``), reassembled into
-    a dim-ordered array ``cv`` per ``keys``. floor of a double division of
-    int64 sums — both engines compute it bit-identically (sums stay far
-    below 2^53). Empty clusters simply vanish (their key stops existing),
-    which is also what the oracle's GROUP BY yields."""
-    comp = asg.join(vecs, on).select(*keys, F.posexplode(vec).alias("i", "x"))
+    dim), floor(SUM(component)/COUNT) over the quantized vectors ``vec`` of
+    the ``members`` rows, reassembled into a dim-ordered array ``cv`` per
+    ``keys``. floor of a double division of int64 sums — both engines
+    compute it bit-identically (sums stay far below 2^53). Empty clusters
+    simply vanish (their key stops existing), which is also what the
+    oracle's GROUP BY yields."""
+    comp = members.select(*keys, F.posexplode(vec).alias("i", "x"))
     agg = comp.groupBy(*keys, "i").agg(
         F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
     )
@@ -955,7 +942,7 @@ def embed_kmeans_iterate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
     )
     asg = _km_assign(qt, cents)
-    cents = _lloyd_update(qt, asg, ["vec_id"], ["cid"], "qv").localCheckpoint()
+    cents = _lloyd_update(asg.join(qt, ["vec_id"]), ["cid"], "qv").localCheckpoint()
     asg = _km_assign(qt, cents)
     return asg.groupBy("cid").agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -976,15 +963,11 @@ def _pq_assign(sub: DataFrame, cents: DataFrame) -> DataFrame:
     """Per-(vector, subspace) argmin over a broadcast codebook: (vec_id, m,
     c, d2) with integer L2 and ties to the lower centroid id — the
     _km_assign arithmetic applied independently inside each subspace."""
-    d2 = _fold_zip("sv", "cv", lambda a, b: (a - b) * (a - b), F.lit(0).cast("long"), dim=_PQ_DSUB)
-    return (
-        sub.join(F.broadcast(cents), "m")
-        .select("vec_id", "m", "c", d2.alias("d2"))
-        .groupBy("vec_id", "m")
-        .agg(F.min(F.struct("d2", "c")).alias("best"))
-        .select(
-            "vec_id", "m", F.col("best.c").alias("c"), F.col("best.d2").alias("d2")
-        )
+    best = _argmin_d2(
+        sub.join(F.broadcast(cents), "m"), ["vec_id", "m"], "sv", "c", "best", dim=_PQ_DSUB
+    )
+    return best.select(
+        "vec_id", "m", F.col("best.c").alias("c"), F.col("best.d2").alias("d2")
     )
 
 
@@ -1018,7 +1001,8 @@ def pq_train_codebooks(sub: DataFrame) -> DataFrame:
     )
     tsub = sub.filter(F.col("vec_id") % _PQ_TRAIN_MOD == 0)
     for _ in range(_PQ_ROUNDS):
-        cents = _lloyd_update(tsub, _pq_assign(tsub, cents), ["vec_id", "m"], ["m", "c"], "sv")
+        asg = _pq_assign(tsub, cents)
+        cents = _lloyd_update(asg.join(tsub, ["vec_id", "m"]), ["m", "c"], "sv")
     return cents.localCheckpoint()
 
 
@@ -1039,13 +1023,8 @@ def ivfpq_index(qt: DataFrame) -> tuple:
     ccents = qt.filter(F.col("vec_id") < _IVF_NLIST).select(
         F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
     )
-    cd2 = _fold_zip("qv", "cv", lambda a, b: (a - b) * (a - b), F.lit(0).cast("long"))
-    asg = (
-        qt.crossJoin(F.broadcast(ccents))
-        .select("vec_id", "cid", cd2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("b"))
-        .select("vec_id", F.col("b.cid").alias("cid"))
+    asg = _argmin_d2(qt.crossJoin(F.broadcast(ccents)), ["vec_id"], "qv", "cid", "b").select(
+        "vec_id", F.col("b.cid").alias("cid")
     )
     res = (
         asg.join(qt, "vec_id")
@@ -1212,7 +1191,15 @@ def pq_query(
         .groupBy("vec_id")
         .agg(F.sum("qd2").cast("long").alias("adc_d2"))
     )
-    cand = adc.orderBy("adc_d2", "vec_id").limit(_PQ_CAND)
+    return _adc_rerank(adc, e, qid, _PQ_CAND)
+
+
+def _adc_rerank(adc: DataFrame, e: DataFrame, qid: int, n_cand: int) -> DataFrame:
+    """The top 10 (vec_id, label, adc_d2, cosine_sim) of the ``n_cand``
+    lowest-ADC candidates (vec_id, adc_d2), re-ranked by exact cosine to the
+    query vector ``qid`` of ``e`` (a TakeOrdered pool, then a bounded
+    re-rank against the broadcast query row)."""
+    cand = adc.orderBy("adc_d2", "vec_id").limit(n_cand)
     q = e.filter(F.col("vec_id") == qid).select(_dvec("embedding").alias("qv2"))
     return (
         cand.join(e, "vec_id")
@@ -1381,20 +1368,7 @@ def ivfpq_query(
         .groupBy("vec_id")
         .agg(F.sum("qd2").cast("long").alias("adc_d2"))
     )
-    cand = adc.orderBy("adc_d2", "vec_id").limit(_IVFPQ_CAND)
-    qv2 = e.filter(F.col("vec_id") == qid).select(_dvec("embedding").alias("qv2"))
-    return (
-        cand.join(e, "vec_id")
-        .crossJoin(F.broadcast(qv2))
-        .select(
-            "vec_id",
-            "label",
-            "adc_d2",
-            F.round(cosine(_dvec("embedding"), F.col("qv2")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), "vec_id")
-        .limit(10)
-    )
+    return _adc_rerank(adc, e, qid, _IVFPQ_CAND)
 
 
 _BATCH_NQ = 20  # query-set size for the batch top-k demo

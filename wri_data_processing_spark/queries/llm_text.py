@@ -12,7 +12,7 @@ explicit ``[ \\t\\n\\f\\r]`` class two ops here spell out) live in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
@@ -443,11 +443,7 @@ def _lm_xent(
     callers over a bare scan pay the materialization without saving a
     derivation."""
     keys = ["doc_id", *passengers]
-    tok = d.select(
-        *keys,
-        F.explode(words("text")).alias("w"),
-    )
-    dt = tok.groupBy(*keys, "w").agg(F.count(F.lit(1)).cast("long").alias("c_dw"))
+    dt = _doc_word_counts(d, keys)
     if share_dt:
         dt = dt.localCheckpoint()
     vocab = dt.groupBy("w").agg(F.sum("c_dw").cast("long").alias("c"))
@@ -459,24 +455,42 @@ def _lm_xent(
         (F.col("c").cast("double") + F.lit(1.0))
         / (F.col("n_total").cast("double") + F.col("v_size").cast("double"))
     )
-    terms = (
-        dt.join(vocab, "w")
-        .crossJoin(F.broadcast(tot))
-        .select(*keys, "w", "c_dw", (F.col("c_dw").cast("double") * lnp).alias("term"))
-    )
-    g = terms.groupBy(*keys).agg(
-        F.sum("c_dw").cast("long").alias("n_tokens"),
-        F.count(F.lit(1)).cast("long").alias("n_types"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("w", "term"))), lambda s: s["term"]
-        ).alias("terms"),
-    )
+    g = _doc_terms(dt, vocab, tot, keys, F.col("c_dw").cast("double") * lnp)
     fold = F.aggregate("terms", F.lit(0.0), lambda a, x: a + x)
     return g.select(
         *keys,
         "n_tokens",
         "n_types",
         F.round(-fold / F.col("n_tokens").cast("double"), 6).alias("xent"),
+    )
+
+
+def _doc_word_counts(d: DataFrame, keys: list[str]) -> DataFrame:
+    """(*keys, w, c_dw): each document's unigram counts over lowercased
+    [a-z0-9]+ runs of ``text`` — the input of every unigram-LM score."""
+    tok = d.select(*keys, F.explode(words("text")).alias("w"))
+    return tok.groupBy(*keys, "w").agg(F.count(F.lit(1)).cast("long").alias("c_dw"))
+
+
+def _doc_terms(
+    dt: DataFrame, vocab: DataFrame, tot: DataFrame, keys: list[str], term: Column
+) -> DataFrame:
+    """(*keys, n_tokens, n_types, terms): the per-(doc, word) ``term`` of a
+    unigram-LM score over the word counts ``dt`` joined to their
+    vocabulary row and the 1-row corpus totals ``tot`` (broadcast, a
+    bounded NLJ), collected per document in word order — the ordered fold
+    both engines sum identically (the stats_psi contract)."""
+    terms = (
+        dt.join(vocab, "w")
+        .crossJoin(F.broadcast(tot))
+        .select(*keys, "w", "c_dw", term.alias("term"))
+    )
+    return terms.groupBy(*keys).agg(
+        F.sum("c_dw").cast("long").alias("n_tokens"),
+        F.count(F.lit(1)).cast("long").alias("n_types"),
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("w", "term"))), lambda s: s["term"]
+        ).alias("terms"),
     )
 
 

@@ -21,7 +21,7 @@ re-aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
@@ -652,6 +652,22 @@ def _grouped_two_phase_cumsum(
     return out.drop("__b", *[f"off_{c}" for c in sum_cols])
 
 
+def _event_value_ranks(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(s, ranked): the non-null events as (g = event_type, v = value), and
+    their per-group distinct-value cumulative frame (g, v, c, cum_c, n)
+    with the group size n. A value-exact cut at integer rank r is
+    MIN(v) WHERE cum_c >= r (no interpolation); the cumsum is
+    _grouped_two_phase_cumsum, the |groups|-row size frame broadcasts."""
+    e = table(spark, sf_dir, "events")
+    s = e.filter(F.col("value").isNotNull()).select(
+        F.col("event_type").alias("g"), F.col("value").alias("v")
+    )
+    gd = s.groupBy("g", "v").agg(F.count(F.lit(1)).cast("long").alias("c"))
+    cum = _grouped_two_phase_cumsum(gd, "g", "v", ["c"])
+    w_ = gd.groupBy("g").agg(F.sum("c").cast("long").alias("n"))
+    return s, cum.join(F.broadcast(w_), "g")
+
+
 @query(
     "stats_grouped_quantiles",
     oracle=f"""
@@ -695,14 +711,7 @@ def stats_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     value set through one task; here parallelism is groups x nb and nb
     scales with the data.
     """
-    e = table(spark, sf_dir, "events")
-    s = e.filter(F.col("value").isNotNull()).select(
-        F.col("event_type").alias("g"), F.col("value").alias("v")
-    )
-    gd = s.groupBy("g", "v").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    cum = _grouped_two_phase_cumsum(gd, "g", "v", ["c"])
-    w_ = gd.groupBy("g").agg(F.sum("c").cast("long").alias("n"))
-    joined = cum.join(F.broadcast(w_), "g")
+    _, joined = _event_value_ranks(spark, sf_dir)
     pcts = [25, 50, 75, 90, 99]
     rank = {
         p: F.expr(f"(n * {p} + 99) div 100").cast("long") for p in pcts
@@ -1465,6 +1474,37 @@ def stats_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rank_sum_x2(s: DataFrame, flag: str, n1: str, n2: str, r2: str) -> DataFrame:
+    """The 1-row rank-sum aggregate of a (v, ``flag``) frame, ``flag`` in
+    {0, 1}: ``n1`` rows flagged 1, ``n2`` rows flagged 0, ``r2`` twice the
+    flagged rows' midrank sum (2*cb + cnt + 1 per distinct value, always
+    integral), and ``tie3`` = Σ(cnt³ - cnt), pruned where unread. The
+    ~2N^2-magnitude sums accumulate in decimal(38,0) like stats_spearman:
+    a long sum would wrap SILENTLY near N~2e9 under non-ANSI arithmetic
+    while DuckDB's HUGEINT->BIGINT cast errors."""
+    g = s.groupBy("v").agg(
+        F.count(F.lit(1)).cast("long").alias("cnt"),
+        F.sum(flag).cast("long").alias("a"),
+    )
+    cum = _two_phase_cumsum(g, "v", ["cnt"])
+    return cum.agg(
+        F.sum("a").cast("long").alias(n1),
+        F.sum(F.col("cnt") - F.col("a")).cast("long").alias(n2),
+        F.sum(
+            F.col("a").cast("decimal(38,0)")
+            * (2 * (F.col("cum_cnt") - F.col("cnt")) + F.col("cnt") + 1)
+        )
+        .cast("long")
+        .alias(r2),
+        F.sum(
+            F.col("cnt").cast("decimal(38,0)") * F.col("cnt") * F.col("cnt")
+            - F.col("cnt")
+        )
+        .cast("long")
+        .alias("tie3"),
+    )
+
+
 @query(
     "stats_mann_whitney",
     oracle="""
@@ -1522,10 +1562,8 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-rounded IEEE ops, bit-identical across engines on the mirrored
     expression tree (pow/exp are the unsafe transcendentals, not used).
 
-    Overflow discipline: r2a and tie3 are ~2N^2-magnitude, so they
-    ACCUMULATE in decimal(38,0) (mirroring DuckDB's HUGEINT sum) — a long
-    sum would wrap silently near N~2e9 while DuckDB errors, diverging the
-    engines exactly where the answer breaks. The BIGINT *outputs* are the
+    Overflow discipline: _rank_sum_x2 accumulates r2a and tie3 in
+    decimal(38,0) (DuckDB's HUGEINT sum). The BIGINT *outputs* are the
     remaining bound: u1_x2 <= 2*n1*n2 fits int64 iff N <~ 4.3e9
     (balanced); past that Spark's decimal->long cast yields NULL (loud,
     non-ANSI) and DuckDB's HUGEINT->BIGINT cast errors — neither engine
@@ -1543,33 +1581,7 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("v"),
         F.when(F.col("event_type") == "view", 1).otherwise(0).alias("ia"),
     )
-    g = s.groupBy("v").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum("ia").cast("long").alias("a"),
-    )
-    cum = _two_phase_cumsum(g, "v", ["cnt"])
-    t = cum.agg(
-        F.sum("a").cast("long").alias("n1"),
-        F.sum(F.col("cnt") - F.col("a")).cast("long").alias("n2"),
-        # Accumulate the ~2N^2-magnitude sums in decimal(38,0) like
-        # stats_spearman (DuckDB's SUM(BIGINT) is HUGEINT): a long sum
-        # would wrap SILENTLY near N~2e9 under Spark's non-ANSI
-        # arithmetic while DuckDB's HUGEINT->BIGINT cast errors — the
-        # engines would diverge exactly where the answer goes wrong.
-        # The final cast back to long is the OUTPUT bound, stated below.
-        F.sum(
-            F.col("a").cast("decimal(38,0)")
-            * (2 * (F.col("cum_cnt") - F.col("cnt")) + F.col("cnt") + 1)
-        )
-        .cast("long")
-        .alias("r2a"),
-        F.sum(
-            F.col("cnt").cast("decimal(38,0)") * F.col("cnt") * F.col("cnt")
-            - F.col("cnt")
-        )
-        .cast("long")
-        .alias("tie3"),
-    )
+    t = _rank_sum_x2(s, "ia", "n1", "n2", "r2a")
     n1d = F.col("n1").cast("double")
     n2d = F.col("n2").cast("double")
     nd = (F.col("n1") + F.col("n2")).cast("double")
@@ -1942,40 +1954,39 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classical-inference set (t, chi², KS, Mann-Whitney, Spearman,
     ANOVA).
 
-    Exactness: per-group (n, Σy, Σy²) are EXACT (decimal sums of ≤2-dp
-    values); the one order-sensitive reduction — Σ_g s_g²/n_g, a sum of k
-    DOUBLES — is an ORDERED fold over event_type (array_sort + aggregate
-    on the Spark side mirroring DuckDB's SUM(... ORDER BY), the stats_psi
-    contract), so the float summation order is pinned. Everything after
-    is a fixed double tree closed by ROUND-6.
+    Exactness: _one_way_f, shared with stats_levene_bf — exact decimal
+    group sums of ≤2-dp values, one ORDERED k-term double fold (the
+    stats_psi contract), ROUND-6.
 
     Scale: one map-side-combined aggregate to |types| rows, one ordered
     k-term fold — nothing else.
     """
     e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    y = F.col("value").cast("decimal(18,6)")
-    g = e.groupBy("event_type").agg(
+    return _one_way_f(e, F.col("value").cast("decimal(18,6)"), "s", "f_stat")
+
+
+def _one_way_f(z: DataFrame, y: Column, s: str, stat: str) -> DataFrame:
+    """One-way ANOVA of ``y`` (a decimal(18,6) column) across event_type:
+    (k, n_tot, ss_between, ss_within, ``stat``), the F statistic named
+    ``stat``. Per group (n, Σy named ``s``, Σy²) are exact decimal sums; the
+    one order-sensitive reduction, Σ_g s_g²/n_g over k DOUBLES, is an
+    ORDERED fold over event_type (array_sort + aggregate, mirroring DuckDB's
+    SUM(... ORDER BY)); everything after is a fixed double tree closed by
+    ROUND-6."""
+    g = z.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(y).cast("decimal(38,6)").alias("s"),
+        F.sum(y).cast("decimal(38,6)").alias(s),
         F.sum(y * y).cast("decimal(38,12)").alias("ss"),
-    )
-    sq_term = (
-        F.col("x.s").cast("double")
-        * F.col("x.s").cast("double")
-        / F.col("x.n").cast("double")
     )
     t = g.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
         F.sum("n").cast("long").alias("n_tot"),
-        F.sum("s").cast("decimal(38,6)").alias("s_tot"),
+        F.sum(s).cast("decimal(38,6)").alias("s_tot"),
         F.sum("ss").cast("decimal(38,12)").alias("ss_tot"),
         F.aggregate(
             F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("event_type", "n", "s"))
-                ),
-                lambda x: x["s"].cast("double") * x["s"].cast("double")
-                / x["n"].cast("double"),
+                F.array_sort(F.collect_list(F.struct("event_type", "n", s))),
+                lambda x: x[s].cast("double") * x[s].cast("double") / x["n"].cast("double"),
             ),
             F.lit(0.0),
             lambda a, v: a + v,
@@ -1994,7 +2005,7 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
             (ssb / (F.col("k") - 1).cast("double"))
             / (ssw / (F.col("n_tot") - F.col("k")).cast("double")),
             6,
-        ).alias("f_stat"),
+        ).alias(stat),
     )
 
 
@@ -2846,24 +2857,17 @@ def stats_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned-window cumsum in the oracle and the scalable
     _grouped_two_phase_cumsum in the engine — integer cumsums, so both
     orderings agree exactly); deviations are exact decimal subtractions;
-    the ANOVA tail is stats_anova_oneway verbatim — exact decimal
-    (n, Σz, Σz²) per group, ONE ordered k-term double fold, ROUND-6.
+    the ANOVA tail is _one_way_f, shared with stats_anova_oneway — exact
+    decimal (n, Σz, Σz²) per group, ONE ordered k-term double fold, ROUND-6.
 
     Plan: the distinct-value frame + grouped cumsum (no global window,
     parallelism = groups x buckets), a |types|-row median broadcast back
     onto the scan, then one map-side-combined aggregate to |types| rows
     and the k-term fold.
     """
-    e = table(spark, sf_dir, "events")
-    s = e.filter(F.col("value").isNotNull()).select(
-        F.col("event_type").alias("g"), F.col("value").alias("v")
-    )
-    gd = s.groupBy("g", "v").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    cum = _grouped_two_phase_cumsum(gd, "g", "v", ["c"])
-    w_ = gd.groupBy("g").agg(F.sum("c").cast("long").alias("n"))
+    s, ranked = _event_value_ranks(spark, sf_dir)
     med = (
-        cum.join(F.broadcast(w_), "g")
-        .groupBy("g")
+        ranked.groupBy("g")
         .agg(
             F.min(
                 F.when(
@@ -2881,42 +2885,7 @@ def stats_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(18,6)")
         .alias("y"),
     )
-    gr = z.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("y").cast("decimal(38,6)").alias("sm"),
-        F.sum(F.col("y") * F.col("y")).cast("decimal(38,12)").alias("ss"),
-    )
-    t = gr.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("n").cast("long").alias("n_tot"),
-        F.sum("sm").cast("decimal(38,6)").alias("s_tot"),
-        F.sum("ss").cast("decimal(38,12)").alias("ss_tot"),
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("event_type", "n", "sm"))),
-                lambda x: x["sm"].cast("double")
-                * x["sm"].cast("double")
-                / x["n"].cast("double"),
-            ),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        ).alias("sq_over_n"),
-    )
-    ssb = F.col("sq_over_n") - F.col("s_tot").cast("double") * F.col("s_tot").cast(
-        "double"
-    ) / F.col("n_tot").cast("double")
-    ssw = F.col("ss_tot").cast("double") - F.col("sq_over_n")
-    return t.select(
-        "k",
-        "n_tot",
-        F.round(ssb, 6).alias("ss_between"),
-        F.round(ssw, 6).alias("ss_within"),
-        F.round(
-            (ssb / (F.col("k") - 1).cast("double"))
-            / (ssw / (F.col("n_tot") - F.col("k")).cast("double")),
-            6,
-        ).alias("w_stat"),
-    )
+    return _one_way_f(z, F.col("y"), "sm", "w_stat")
 
 
 @query(
@@ -2955,10 +2924,11 @@ def stats_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the distributed AUC every offline eval needs without
     sampling or sklearn.
 
-    Exactness: the stats_mann_whitney machinery verbatim — DOUBLED
-    tie-averaged ranks (2r = 2·cum_before + cnt + 1, always integral)
-    off the distinct-value cumulative frame, rank-sums accumulated in
-    decimal(38,0)/HUGEINT (silent int64 wrap is the 100 TB failure), and
+    Exactness: the rank-sum aggregate is _rank_sum_x2, shared with
+    stats_mann_whitney — DOUBLED tie-averaged ranks (2r = 2·cum_before +
+    cnt + 1, always integral) off the distinct-value cumulative frame,
+    rank-sums accumulated in decimal(38,0)/HUGEINT (silent int64 wrap is
+    the 100 TB failure), and
     AUC = (2R_pos - n_pos(n_pos+1)) / (2·n_pos·n_neg) — integers into
     ONE exact division, emitted unrounded. The engine's cumsum is the
     two-phase distributed prefix (no single-partition window); the
@@ -2972,21 +2942,7 @@ def stats_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("v"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
     )
-    g = s.groupBy("v").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum("pos").cast("long").alias("p"),
-    )
-    cum = _two_phase_cumsum(g, "v", ["cnt"])
-    t = cum.agg(
-        F.sum("p").cast("long").alias("n_pos"),
-        F.sum(F.col("cnt") - F.col("p")).cast("long").alias("n_neg"),
-        F.sum(
-            F.col("p").cast("decimal(38,0)")
-            * (2 * (F.col("cum_cnt") - F.col("cnt")) + F.col("cnt") + 1)
-        )
-        .cast("long")
-        .alias("r2pos"),
-    )
+    t = _rank_sum_x2(s, "pos", "n_pos", "n_neg", "r2pos")
     return t.select(
         "n_pos",
         "n_neg",

@@ -42,6 +42,11 @@ def manifest(root: str, name: str) -> list[str]:
         return [line.strip() for line in fh if line.strip()]
 
 
+def names(root: str) -> list[str]:
+    """Every snapshot with a live manifest, sorted by name."""
+    return sorted(f[: -len(".manifest")] for f in os.listdir(root) if f.endswith(".manifest"))
+
+
 def read(spark: SparkSession, root: str, name: str) -> DataFrame:
     return spark.read.parquet(*manifest(root, name))
 

@@ -159,6 +159,46 @@ def _commit_snapshot(df: DataFrame, target_root: str, batch_id: int) -> None:
     snapshots.publish(target_root, name)
 
 
+def merge_user_totals(batch_df: DataFrame, batch_id: int, target_root: str) -> None:
+    """One micro-batch of incremental_user_totals: aggregate the batch to
+    per-user delta rows, full-outer merge them into the newest snapshot
+    committed BEFORE ``batch_id`` and commit the result as this batch's
+    snapshot.
+
+    The base is not the published snapshot: when a driver dies after
+    publishing batch k but before the checkpoint records it, Spark replays
+    batch k, and the published snapshot then already holds k's delta.
+    Merging onto the snapshot below k rewrites the same state instead of
+    counting the batch twice."""
+    delta = batch_df.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.col("value").cast("decimal(18,6)")).alias("total_dec"),
+    )
+    name = f"snap_{batch_id:010d}"
+    prior = [n for n in snapshots.names(target_root) if n.startswith("snap_") and n < name]
+    if not prior:
+        merged = delta
+    else:
+        cur = snapshots.read(batch_df.sparkSession, target_root, prior[-1])
+        zero = F.lit(0).cast("decimal(18,6)")
+        merged = (
+            cur.alias("t")
+            .join(delta.alias("d"), F.col("t.user_id") == F.col("d.user_id"), "full_outer")
+            .select(
+                F.coalesce("t.user_id", "d.user_id").alias("user_id"),
+                (
+                    F.coalesce("t.n_events", F.lit(0))
+                    + F.coalesce("d.n_events", F.lit(0))
+                ).alias("n_events"),
+                (
+                    F.coalesce(F.col("t.total_dec"), zero)
+                    + F.coalesce(F.col("d.total_dec"), zero)
+                ).cast("decimal(18,6)").alias("total_dec"),
+            )
+        )
+    _commit_snapshot(merged, target_root, batch_id)
+
+
 def incremental_user_totals(
     spark: SparkSession, source_dir: str, target_root: str, checkpoint: str
 ) -> None:
@@ -166,49 +206,22 @@ def incremental_user_totals(
     foreachBatch — the streaming twin of queries/warehouse_ops.merge_upsert.
 
     Each micro-batch aggregates its new events to |users| delta rows, then
-    full-outer merges them into the current snapshot and commits the result
-    atomically. Exactly-once: the checkpoint makes batch delivery
-    at-least-once with stable batch ids, and the snapshot commit is
-    idempotent per batch id, so replays converge to the same state. The
-    final state is bit-equal to a from-scratch batch aggregation because the
-    accumulators are exact decimals (order-insensitive addition).
+    full-outer merges them into the snapshot committed before it and
+    commits the result atomically (merge_user_totals). Exactly-once: the
+    checkpoint makes batch delivery at-least-once with stable batch ids,
+    and a batch's snapshot depends only on its id and its events, so a
+    replayed batch rewrites the same state. The final state is bit-equal
+    to a from-scratch batch aggregation because the accumulators are exact
+    decimals (order-insensitive addition).
 
     At 100 TB the snapshot rewrite becomes the bottleneck; the scale path is
     partitioning the snapshot by a user-hash bucket and rewriting only
     buckets the delta touches (or a real table format's MERGE, which is this
     exact plan behind a commit log).
     """
-    stream = read_event_stream(spark, source_dir)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        delta = batch_df.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("total_dec"),
-        )
-        cur = _read_current_snapshot(batch_df.sparkSession, target_root)
-        if cur is None:
-            merged = delta
-        else:
-            zero = F.lit(0).cast("decimal(18,6)")
-            merged = (
-                cur.alias("t")
-                .join(delta.alias("d"), F.col("t.user_id") == F.col("d.user_id"), "full_outer")
-                .select(
-                    F.coalesce("t.user_id", "d.user_id").alias("user_id"),
-                    (
-                        F.coalesce("t.n_events", F.lit(0))
-                        + F.coalesce("d.n_events", F.lit(0))
-                    ).alias("n_events"),
-                    (
-                        F.coalesce(F.col("t.total_dec"), zero)
-                        + F.coalesce(F.col("d.total_dec"), zero)
-                    ).cast("decimal(18,6)").alias("total_dec"),
-                )
-            )
-        _commit_snapshot(merged, target_root, batch_id)
-
     q = (
-        stream.writeStream.foreachBatch(merge)
+        read_event_stream(spark, source_dir)
+        .writeStream.foreachBatch(lambda df, batch_id: merge_user_totals(df, batch_id, target_root))
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
