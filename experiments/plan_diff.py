@@ -20,10 +20,14 @@ sf0.001 (SPARK_GRAFT_SF_DIR overrides). Per op the record holds:
   the returned plan reads them back as RDD scans, so a round that starts
   broadcasting its edge list leaves the returned plan unchanged;
 - the Exchange, Window, Sort, Python-node and pushed-filter-scan counts of
-  each of those plans.
+  each of those plans;
+- the sha256 of the op's DuckDB oracle SQL, so a changed oracle text
+  reports as `oracle text`.
 
-It prints `N/M identical`, one line per op that differs, then a unified
-diff of each differing record. Before an op is reported it is recorded
+It prints one line saying whether the two trees register the same op
+names in the same order and hash `json.dumps(list(ORACLE.items()))` to the
+same sha256, then `N/M identical`, one line per op that differs, then a
+unified diff of each differing record. Before an op is reported it is recorded
 again on its own, in a fresh process on each tree. exprIds then start from
 the same counter on both sides, which clears the plans whose node order
 follows them (RewriteDistinctAggregates orders Expand groups by expression
@@ -36,6 +40,7 @@ as one summary row per op.
 from __future__ import annotations
 
 import difflib
+import hashlib
 import json
 import os
 import re
@@ -88,15 +93,42 @@ def shape(plan: str) -> dict:
     }
 
 
-def op_record(plan: str, checkpointed: list[str], error: str | None = None, tree: str = "") -> dict:
+def _sha256(text: str) -> str:
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
+def op_record(
+    plan: str, checkpointed: list[str], error: str | None = None, tree: str = "", oracle: str | None = None
+) -> dict:
     """What the diff compares for one op: the returned frame's normalized
-    plan and shape, and the shape of every frame it checkpointed."""
+    plan and shape, the shape of every frame it checkpointed, and the
+    sha256 of its oracle SQL (None for an op without one)."""
     return {
         "error": error,
+        "oracle": None if oracle is None else _sha256(oracle),
         "plan": normalize(plan, tree),
         **shape(plan),
         "checkpoints": [shape(cp) for cp in checkpointed],
     }
+
+
+def surface(names: list[str], oracle: dict[str, str]) -> dict:
+    """A tree's registered op names in order and the sha256 of its oracles."""
+    return {"registry": names, "oracle": _sha256(json.dumps(list(oracle.items())))}
+
+
+def surface_line(base: dict, head: dict) -> str:
+    """One line: do both trees register the same ops in the same order, and
+    do their oracles hash the same?"""
+    if base["registry"] == head["registry"]:
+        names = f"identical ({len(head['registry'])} ops)"
+    else:
+        names = f"differ ({len(base['registry'])} -> {len(head['registry'])} ops)"
+    if base["oracle"] == head["oracle"]:
+        oracle = f"identical ({head['oracle']})"
+    else:
+        oracle = f"differ ({base['oracle']} -> {head['oracle']})"
+    return f"REGISTRY names and order: {names}; ORACLE sha256: {oracle}"
 
 
 def _counts(counts: dict) -> str:
@@ -108,6 +140,7 @@ def render(rec: dict | None) -> list[str]:
     if rec is None:
         return []
     lines = [f"error: {rec['error']}"] if rec["error"] else []
+    lines.append(f"oracle: {rec['oracle']}")
     lines.append(f"counts: {_counts(rec['counts'])}")
     lines += [f"join: {j}" for j in rec["joins"]]
     for i, cp in enumerate(rec["checkpoints"], 1):
@@ -145,6 +178,8 @@ def differences(base: dict | None, head: dict | None) -> str:
     out += [f"checkpoint {','.join(map(str, idx))}: {change}" for change, idx in frames.items()]
     if base["plan"] != head["plan"]:
         out.append("plan text")
+    if base["oracle"] != head["oracle"]:
+        out.append("oracle text")
     return "; ".join(out)
 
 
@@ -175,13 +210,14 @@ def _record_main(tree: str, out: str, names: list[str]) -> None:
             plan, error = explain(registry.REGISTRY[name](spark, SF_DIR)), None
         except Exception as exc:  # recorded, so a tree where an op fails still diffs
             plan, error = "", f"{type(exc).__name__}: {exc}".splitlines()[0]
-        records[name] = op_record(plan, checkpointed, error, tree)
+        records[name] = op_record(plan, checkpointed, error, tree, registry.ORACLE.get(name))
     with open(out, "w") as f:
-        json.dump(records, f)
+        json.dump({"surface": surface(list(registry.REGISTRY), registry.ORACLE), "ops": records}, f)
 
 
-def _record(tree: str, tmp: str, label: str, names: list[str]) -> dict[str, dict]:
-    """Record `names` (all ops when empty) of `tree` in a fresh process."""
+def _record(tree: str, tmp: str, label: str, names: list[str]) -> dict:
+    """Record `names` (all ops when empty) of `tree` in a fresh process:
+    {"surface": surface(...), "ops": {name: op_record(...)}}."""
     out, log = os.path.join(tmp, f"{label}.json"), os.path.join(tmp, f"{label}.log")
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(filter(None, [tree, os.environ.get("PYTHONPATH")])))
     with open(log, "w") as f:
@@ -204,7 +240,7 @@ def _is_rev(arg: str) -> bool:
     return _git("rev-parse", "--verify", "--quiet", f"{arg}^{{commit}}", check=False).returncode == 0
 
 
-def _record_both(trees: list[str], tmp: str, label: str, names: list[str]) -> list[dict[str, dict]]:
+def _record_both(trees: list[str], tmp: str, label: str, names: list[str]) -> list[dict]:
     return [_record(tree, tmp, side + label, names) for tree, side in zip(trees, ("base", "head"))]
 
 
@@ -216,12 +252,13 @@ def diff(revs: list[str], names: list[str], tmp: str) -> None:
             _git("worktree", "add", "--detach", "--quiet", trees[-1], rev)
         if len(trees) == 1:
             trees.append(REPO_ROOT)
-        base, head = _record_both(trees, tmp, "", names)
+        base_run, head_run = _record_both(trees, tmp, "", names)
+        base, head = base_run["ops"], head_run["ops"]
         ops = sorted(set(base) | set(head))
         differing, cleared = {}, []
         for name in (n for n in ops if base.get(n) != head.get(n)):
             if name in base and name in head:
-                b, h = (rec[name] for rec in _record_both(trees, tmp, f"_{name}", [name]))
+                b, h = (run["ops"][name] for run in _record_both(trees, tmp, f"_{name}", [name]))
             else:
                 b, h = base.get(name), head.get(name)
             if b != h:
@@ -232,6 +269,7 @@ def diff(revs: list[str], names: list[str], tmp: str) -> None:
         for tree in trees:
             if tree != REPO_ROOT:
                 _git("worktree", "remove", "--force", tree, check=False)
+    print(surface_line(base_run["surface"], head_run["surface"]))
     print(f"{len(ops) - len(differing)}/{len(ops)} identical")
     if cleared:
         print(f"(identical only when recorded alone: {', '.join(cleared)})")
@@ -288,7 +326,7 @@ def main(argv: list[str]) -> None:
         if revs:
             diff(revs, argv, tmp)
         else:
-            write_plans(_record(REPO_ROOT, tmp, "worktree", []))
+            write_plans(_record(REPO_ROOT, tmp, "worktree", [])["ops"])
 
 
 if __name__ == "__main__":

@@ -1,11 +1,12 @@
 """The plan-diff normalizer on canned formatted plans, no Spark session:
 what changes from run to run must compare equal, and a changed join
-strategy or an extra shuffle must not — also inside the plan of a frame
-the op checkpointed, where a loop's per-round joins live."""
+strategy, an extra shuffle or a changed oracle text must not — also inside
+the plan of a frame the op checkpointed, where a loop's per-round joins
+live."""
 
 from __future__ import annotations
 
-from experiments.plan_diff import differences, op_record, render
+from experiments.plan_diff import differences, op_record, render, surface, surface_line
 
 _FINAL = """== Physical Plan ==
 AdaptiveSparkPlan (6)
@@ -117,3 +118,21 @@ def test_counts_read_the_tree_not_the_node_details():
         "joins": [_SHJ],
         "counts": {"Exchange": 3, "Window": 0, "Sort": 0, "Python": 0, "PushedScans": 0},
     }
+
+
+def test_oracle_text_and_surface_differ():
+    sql = "SELECT node, COUNT(*) AS n FROM edges GROUP BY node"
+    base = op_record(_final(), [], oracle=sql)
+    assert base == op_record(_final(), [], oracle=sql)
+    assert op_record(_final(), [])["oracle"] is None
+    head = op_record(_final(), [], oracle=sql.replace("COUNT(*)", "COUNT(nb)"))
+    assert differences(base, head) == "oracle text"
+    assert f"oracle: {head['oracle']}" in render(head)
+    a = surface(["op_a", "op_b"], {"op_a": sql})
+    assert surface_line(a, surface(["op_a", "op_b"], {"op_a": sql})) == (
+        f"REGISTRY names and order: identical (2 ops); ORACLE sha256: identical ({a['oracle']})"
+    )
+    b = surface(["op_b", "op_a"], {"op_a": sql + " "})
+    assert surface_line(a, b) == (
+        f"REGISTRY names and order: differ (2 -> 2 ops); ORACLE sha256: differ ({a['oracle']} -> {b['oracle']})"
+    )

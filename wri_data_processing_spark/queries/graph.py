@@ -82,11 +82,9 @@ _TELEPORT_Q = 161_061_273  # floor(0.15 * 2^30)
 _ITERS = 5
 
 
-def _pagerank_iter_sql() -> str:
-    """Unrolled 5-iteration PageRank CTE chain (DuckDB has no aggregate in
-    recursive CTEs, so the fixed iteration count is written out)."""
-    parts = [
-        """
+# The undirected co-purchase graph both PageRank oracles iterate over:
+# `edges` holds each edge in both directions and `deg` each node's degree.
+_PAGERANK_GRAPH_CTES = """
     items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
     undirected AS (
       SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -99,7 +97,15 @@ def _pagerank_iter_sql() -> str:
       SELECT v AS node, u AS nb FROM undirected
     ),
     deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
-            FROM edges GROUP BY node),
+            FROM edges GROUP BY node),"""
+
+
+def _pagerank_iter_sql() -> str:
+    """Unrolled 5-iteration PageRank CTE chain (DuckDB has no aggregate in
+    recursive CTEs, so the fixed iteration count is written out)."""
+    parts = [
+        _PAGERANK_GRAPH_CTES
+        + """
     r0 AS (SELECT node, CAST(1073741824 AS BIGINT) AS rq FROM deg)"""
     ]
     for k in range(1, _ITERS + 1):
@@ -221,21 +227,27 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     refinement is degree-ordering the orientation so high-degree hubs
     generate few open wedges.
     """
-    # The edge list feeds FOUR plan branches (two wedge sides, the closing
-    # join, and the edge count); materialize it once — it is the post-
-    # threshold survivor set (tiny by construction), and without this the
-    # pair derivation re-executes per branch (AQE breaks ReusedExchange on
-    # self-joins — measured on the jaccard plan).
+    e, closed = _support2_triangles(spark, sf_dir)
+    n_edges = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
+    n_tri = closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
+    return n_edges.crossJoin(n_tri)
+
+
+def _support2_triangles(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(e, tri): the support-2 co-purchase edges (u < v), localCheckpointed,
+    and every triangle once as its corners (x, z, y), x < y < z: the wedges
+    x-y-z of two oriented edges closed by the edge x-z.
+
+    The edge list feeds every branch (two wedge sides, the closing join and
+    the caller's own use); materialize it once — it is the post-threshold
+    survivor set (tiny by construction), and without this the pair
+    derivation re-executes per branch (AQE breaks ReusedExchange on
+    self-joins — measured on the jaccard plan)."""
     e = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).drop("n").localCheckpoint()
     e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
     e2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
     wedges = e1.join(e2, "y")
-    closed = wedges.join(
-        e.select(F.col("u").alias("x"), F.col("v").alias("z")), ["x", "z"]
-    )
-    n_edges = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    n_tri = closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    return n_edges.crossJoin(n_tri)
+    return e, wedges.join(e.select(F.col("u").alias("x"), F.col("v").alias("z")), ["x", "z"])
 
 
 @query(
@@ -808,12 +820,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     a global sort. At 100 TB degree-ordering the orientation bounds the
     wedge fan-out, as graph_triangle_count documents.
     """
-    e = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).drop("n").localCheckpoint()
-    e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
-    e2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
-    tri = e1.join(e2, "y").join(
-        e.select(F.col("u").alias("x"), F.col("v").alias("z")), ["x", "z"]
-    )
+    e, tri = _support2_triangles(spark, sf_dir)
     pertri = (
         tri.select(F.col("x").alias("node"))
         .unionAll(tri.select(F.col("y").alias("node")))
@@ -1088,14 +1095,8 @@ def graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the localCheckpointed survivor edges; two scalar folds stitched
     by 1-row broadcasts (whitelisted).
     """
-    e = copurchase_pairs(table(spark, sf_dir, "lineitem"), 2).drop("n").localCheckpoint()
-    e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
-    e2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
-    tri = (
-        e1.join(e2, "y")
-        .join(e.select(F.col("u").alias("x"), F.col("v").alias("z")), ["x", "z"])
-        .agg(F.count(F.lit(1)).cast("long").alias("t"))
-    )
+    e, closed = _support2_triangles(spark, sf_dir)
+    tri = closed.agg(F.count(F.lit(1)).cast("long").alias("t"))
     deg = (
         both_directions(e, "node", "nb")
         .groupBy("node")
@@ -1232,20 +1233,8 @@ def _ppr_iter_sql(iters: int) -> str:
     shape with the teleport mass restricted to the SEED set (l_partkey
     % 100 == 0) instead of every node."""
     parts = [
-        """
-    items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    undirected AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    edges AS (
-      SELECT u AS node, v AS nb FROM undirected
-      UNION ALL
-      SELECT v AS node, u AS nb FROM undirected
-    ),
-    deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
-            FROM edges GROUP BY node),
+        _PAGERANK_GRAPH_CTES
+        + """
     p0 AS (SELECT node,
                   CAST(CASE WHEN node % 100 = 0 THEN 1073741824 ELSE 0 END
                        AS BIGINT) AS rq

@@ -1503,18 +1503,24 @@ def substring_window_coverage(d: DataFrame, k: int) -> DataFrame:
     where the hash pass dominates CPU and executors have local disk, that
     one-line checkpoint is the lever to flip; kept un-flipped here so the
     local bench keeps measuring the honest two-pass cost."""
-    d = d.filter(F.length("text") >= k)
-    # r16 (guide §4.1, the r15 lang-id lesson): the per-window hash used to
-    # be a transform(sequence(...)) lambda, which Spark evaluates
-    # INTERPRETED per element — every window paid non-codegen expression
-    # dispatch around its sha2. Exploding the POSITIONS first and hashing
-    # in the downstream projection keeps the whole pass inside one
-    # WholeStageCodegen span (Generate -> Project); the text column never
-    # leaves the stage (only (doc_id, wh) reaches the exchange), and the
-    # window stream — same positions, same sha2, same substring — is
-    # byte-identical.
-    wins = (
-        spread_small_scan(d)
+    return _dup_coverage(_window_hashes(d, k), "wh", "n_windows", "n_dup_windows")
+
+
+def _window_hashes(d: DataFrame, k: int, *passengers: Column) -> DataFrame:
+    """(doc_id, *passengers, wh): the 16-hex-char sha256 prefix ``wh`` of
+    every k-char window of each document's ``text`` at stride 1, with the
+    window's 1-based start ``i`` in scope for ``passengers``.
+
+    r16 (guide §4.1, the r15 lang-id lesson): the per-window hash used to
+    be a transform(sequence(...)) lambda, which Spark evaluates INTERPRETED
+    per element — every window paid non-codegen expression dispatch around
+    its sha2. Exploding the POSITIONS first and hashing in the downstream
+    projection keeps the whole pass inside one WholeStageCodegen span
+    (Generate -> Project); the text column never leaves the stage, and the
+    window stream — same positions, same sha2, same substring — is
+    byte-identical."""
+    return (
+        spread_small_scan(d.filter(F.length("text") >= k))
         .select(
             "doc_id",
             "text",
@@ -1522,30 +1528,41 @@ def substring_window_coverage(d: DataFrame, k: int) -> DataFrame:
         )
         .select(
             "doc_id",
+            *passengers,
             F.substring(
                 F.sha2(F.col("text").substr(F.col("i"), F.lit(k)), 256), 1, 16
             ).alias("wh"),
         )
     )
-    # r16 (guide §2.3 "aggregate before you shuffle"): the dup predicate only
-    # asks ">= 2 distinct docs", which is exactly min(doc_id) != max(doc_id)
-    # — two plain long buffers in ONE HashAggregate phase instead of
-    # count_distinct's two-level (wh, doc_id)-keyed distinct aggregation, so
-    # the exchange carries one (wh, min, max) partial per map task instead
-    # of every distinct (wh, doc_id) pair.
-    dup = (
-        wins.groupBy("wh")
+
+
+def _cross_doc_keys(rows: DataFrame, key: str, *extra: Column) -> DataFrame:
+    """(key, *extra): the values of ``key`` in (doc_id, key) ``rows`` that
+    occur in >= 2 distinct documents.
+
+    r16 (guide §2.3 "aggregate before you shuffle"): ">= 2 distinct docs"
+    is exactly min(doc_id) != max(doc_id) — two plain long buffers in ONE
+    HashAggregate phase instead of count_distinct's two-level
+    (key, doc_id)-keyed distinct aggregation, so the exchange carries one
+    (key, min, max) partial per map task instead of every distinct
+    (key, doc_id) pair."""
+    return (
+        rows.groupBy(key)
         .agg(F.min("doc_id").alias("d0"), F.max("doc_id").alias("d1"))
         .filter(F.col("d0") != F.col("d1"))
-        .select("wh", F.lit(1).alias("isdup"))
+        .select(key, *extra)
     )
+
+
+def _dup_coverage(rows: DataFrame, key: str, total: str, dups: str) -> DataFrame:
+    """Per doc_id of (doc_id, key) ``rows``: the row count as ``total`` and
+    the count of rows whose key occurs in >= 2 distinct documents as
+    ``dups``."""
+    dup = _cross_doc_keys(rows, key, F.lit(1).alias("isdup"))
     return (
-        wins.join(dup, "wh", "left")
+        rows.join(dup, key, "left")
         .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_windows"),
-            F.count("isdup").alias("n_dup_windows"),
-        )
+        .agg(F.count(F.lit(1)).alias(total), F.count("isdup").alias(dups))
     )
 
 
@@ -1632,27 +1649,13 @@ def winnow_fingerprint_coverage(d: DataFrame, k: int, w: int) -> DataFrame:
             ).alias("fp"),
         )
     )
-    # min != max is the same ">= 2 distinct docs" predicate as a one-phase
-    # aggregate — see substring_window_coverage (r16, guide §2.3).
-    dup = (
-        fps.groupBy("fp")
-        .agg(F.min("doc_id").alias("d0"), F.max("doc_id").alias("d1"))
-        .filter(F.col("d0") != F.col("d1"))
-        .select("fp", F.lit(1).alias("isdup"))
-    )
-    return (
-        fps.join(dup, "fp", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_fingerprints"),
-            F.count("isdup").alias("n_dup_fingerprints"),
-        )
-    )
+    return _dup_coverage(fps, "fp", "n_fingerprints", "n_dup_fingerprints")
 
 
-@query(
-    "dedup_substring_spans",
-    oracle=f"""
+# The oracle of substring_dup_spans up to its islands: every duplicated
+# window position (hash shared by >= 2 distinct docs) with the number of
+# the merged span it falls in (gaps-and-islands, a gap being > k chars).
+_SPAN_ISLANDS_CTES = f"""
     WITH pos AS (
       SELECT doc_id, text, unnest(generate_series(1, length(text) - {_SUBSTR_K - 1})) AS i
       FROM documents WHERE length(text) >= {_SUBSTR_K}
@@ -1677,7 +1680,12 @@ def winnow_fingerprint_coverage(d: DataFrame, k: int, w: int) -> DataFrame:
              SUM(brk) OVER (PARTITION BY doc_id ORDER BY i
                             ROWS UNBOUNDED PRECEDING) AS island
       FROM marked
-    )
+    )"""
+
+
+@query(
+    "dedup_substring_spans",
+    oracle=f"""{_SPAN_ISLANDS_CTES}
     SELECT doc_id, CAST(island AS BIGINT) AS island,
            MIN(i) AS span_start,
            MAX(i) + {_SUBSTR_K - 1} AS span_end,
@@ -1711,34 +1719,8 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def substring_dup_spans(d: DataFrame, k: int) -> DataFrame:
     """Merged duplicated-span intervals per doc: (doc_id, island,
     span_start, span_end, span_len), 1-based inclusive character offsets."""
-    d = d.filter(F.length("text") >= k)
-    # r16: positions exploded first, hash in the codegen projection — the
-    # same §4.1 rewrite as substring_window_coverage (the transform lambda
-    # ran interpreted per window); identical (doc_id, i, wh) stream.
-    wins = (
-        spread_small_scan(d)
-        .select(
-            "doc_id",
-            "text",
-            F.explode(F.sequence(F.lit(1), F.length("text") - (k - 1))).alias("i"),
-        )
-        .select(
-            "doc_id",
-            F.col("i").cast("long").alias("i"),
-            F.substring(
-                F.sha2(F.col("text").substr(F.col("i"), F.lit(k)), 256), 1, 16
-            ).alias("wh"),
-        )
-    )
-    # min != max is the same ">= 2 distinct docs" predicate as a one-phase
-    # aggregate — see substring_window_coverage (r16, guide §2.3).
-    dup = (
-        wins.groupBy("wh")
-        .agg(F.min("doc_id").alias("d0"), F.max("doc_id").alias("d1"))
-        .filter(F.col("d0") != F.col("d1"))
-        .select("wh")
-    )
-    hits = wins.join(dup, "wh").select("doc_id", "i")
+    wins = _window_hashes(d, k, F.col("i").cast("long").alias("i"))
+    hits = wins.join(_cross_doc_keys(wins, "wh"), "wh").select("doc_id", "i")
     w = Window.partitionBy("doc_id").orderBy("i")
     marked = hits.select(
         "doc_id",
@@ -1762,32 +1744,7 @@ def substring_dup_spans(d: DataFrame, k: int) -> DataFrame:
 
 @query(
     "pipeline_mask_spans",
-    oracle=f"""
-    WITH pos AS (
-      SELECT doc_id, text, unnest(generate_series(1, length(text) - {_SUBSTR_K - 1})) AS i
-      FROM documents WHERE length(text) >= {_SUBSTR_K}
-    ),
-    wins AS (
-      SELECT doc_id, CAST(i AS BIGINT) AS i,
-             substr(sha256(substr(text, CAST(i AS BIGINT), {_SUBSTR_K})), 1, 16) AS wh
-      FROM pos
-    ),
-    dup AS (SELECT wh FROM wins GROUP BY wh HAVING COUNT(DISTINCT doc_id) >= 2),
-    hits AS (SELECT w.doc_id, w.i FROM wins w JOIN dup USING (wh)),
-    marked AS (
-      SELECT doc_id, i,
-             CASE WHEN i - LAG(i) OVER (PARTITION BY doc_id ORDER BY i)
-                       > {_SUBSTR_K} THEN 1
-                  WHEN LAG(i) OVER (PARTITION BY doc_id ORDER BY i) IS NULL THEN 1
-                  ELSE 0 END AS brk
-      FROM hits
-    ),
-    islands AS (
-      SELECT doc_id, i,
-             SUM(brk) OVER (PARTITION BY doc_id ORDER BY i
-                            ROWS UNBOUNDED PRECEDING) AS island
-      FROM marked
-    ),
+    oracle=f"""{_SPAN_ISLANDS_CTES},
     spans AS (
       SELECT doc_id, MAX(i) + {_SUBSTR_K} - MIN(i) AS span_len
       FROM islands GROUP BY doc_id, island

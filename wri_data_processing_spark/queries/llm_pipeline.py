@@ -2504,7 +2504,11 @@ def sample_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the corpus for the target side), vocab join back, 1-row totals
     broadcast (bounded NLJ), per-doc bounded fold.
     """
-    from wri_data_processing_spark.queries.llm_text import _doc_terms, _doc_word_counts
+    from wri_data_processing_spark.queries.llm_text import (
+        _doc_terms,
+        _doc_word_counts,
+        _ln_add_one,
+    )
 
     keys = ["doc_id", "lang"]
     dt = _doc_word_counts(table(spark, sf_dir, "documents"), keys)
@@ -2519,14 +2523,7 @@ def sample_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_t").cast("long").alias("n_t"),
         F.count(F.lit(1)).cast("long").alias("v"),
     )
-    ln_t = F.log(
-        (F.col("c_t").cast("double") + F.lit(1.0))
-        / (F.col("n_t").cast("double") + F.col("v").cast("double"))
-    )
-    ln_r = F.log(
-        (F.col("c_r").cast("double") + F.lit(1.0))
-        / (F.col("n_r").cast("double") + F.col("v").cast("double"))
-    )
+    ln_t, ln_r = _ln_add_one("c_t", "n_t", "v"), _ln_add_one("c_r", "n_r", "v")
     g = _doc_terms(dt, vocab, tot, keys, F.col("c_dw").cast("double") * (ln_t - ln_r))
     return g.select(
         *keys,

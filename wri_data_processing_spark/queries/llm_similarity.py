@@ -2187,14 +2187,11 @@ def _mine_hard_triplets(q: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "embed_triplet_mining",
-    oracle="""
-    WITH q AS (
-      SELECT vec_id, label,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
-      FROM embeddings),
+# The hard-triplet oracle after its quantized `q` CTE: 1-in-25 anchors,
+# exact int64 squared distances, the farthest positive and the nearest
+# negative per anchor. embed_triplet_mining and embed_separation_control
+# differ only in the grid `q` puts the embeddings on.
+_TRIPLET_TAIL = """
     anch AS (SELECT vec_id AS aid, label AS alabel, qv AS aqv
              FROM q WHERE vec_id % 25 = 0),
     d AS (
@@ -2219,7 +2216,17 @@ def _mine_hard_triplets(q: DataFrame) -> DataFrame:
            n.neg_d2 > p.pos_d2 AS separated
     FROM pos p JOIN neg n ON p.aid = n.aid AND p.rn = 1 AND n.rn = 1
     ORDER BY anchor_id
-    """,
+    """
+
+
+@query(
+    "embed_triplet_mining",
+    oracle=f"""
+    WITH q AS (
+      SELECT vec_id, label,
+             list_transform(embedding,
+               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+      FROM embeddings),{_TRIPLET_TAIL}""",
 )
 def embed_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-triplet mining for contrastive training (the FaceNet recipe):
@@ -2630,32 +2637,7 @@ _SEP_BOOST = 1 << 30  # Q20-grid label-dimension boost for the separation contro
                          + CASE WHEN i - 1 = label % len(embedding)
                                 THEN CAST({_SEP_BOOST} AS BIGINT)
                                 ELSE 0 END) AS qv
-      FROM embeddings),
-    anch AS (SELECT vec_id AS aid, label AS alabel, qv AS aqv
-             FROM q WHERE vec_id % 25 = 0),
-    d AS (
-      SELECT anch.aid, anch.alabel, q.vec_id, q.label,
-             CAST(SUM((anch.aqv[u.i] - q.qv[u.i])
-                      * (anch.aqv[u.i] - q.qv[u.i])) AS BIGINT) AS d2
-      FROM anch, q, unnest(generate_series(1, len(anch.aqv))) u(i)
-      WHERE q.vec_id <> anch.aid
-      GROUP BY 1, 2, 3, 4),
-    pos AS (
-      SELECT aid, alabel, vec_id AS pos_id, d2 AS pos_d2,
-             ROW_NUMBER() OVER (PARTITION BY aid
-                                ORDER BY d2 DESC, vec_id) AS rn
-      FROM d WHERE label = alabel),
-    neg AS (
-      SELECT aid, vec_id AS neg_id, d2 AS neg_d2,
-             ROW_NUMBER() OVER (PARTITION BY aid
-                                ORDER BY d2, vec_id) AS rn
-      FROM d WHERE label <> alabel)
-    SELECT p.aid AS anchor_id, p.alabel AS anchor_label,
-           p.pos_id, p.pos_d2, n.neg_id, n.neg_d2,
-           n.neg_d2 > p.pos_d2 AS separated
-    FROM pos p JOIN neg n ON p.aid = n.aid AND p.rn = 1 AND n.rn = 1
-    ORDER BY anchor_id
-    """,
+      FROM embeddings),{_TRIPLET_TAIL}""",
 )
 def embed_separation_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Separation positive control for the hard-triplet miner — the

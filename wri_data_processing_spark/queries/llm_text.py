@@ -365,12 +365,13 @@ def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "text_lm_score",
-    oracle="""
-    WITH tok AS (
+def _lm_terms_cte(src: str) -> str:
+    """The oracle CTEs up to the per-(doc, word) ``terms`` of the unigram-LM
+    cross-entropy over a (doc_id, text) relation ``src``: tokens, word
+    counts, vocabulary, corpus totals and each add-one-smoothed term."""
+    return f"""tok AS (
       SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
-      FROM documents),
+      FROM {src}),
     dt AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS c_dw FROM tok GROUP BY 1, 2),
     vocab AS (SELECT w, CAST(SUM(c_dw) AS BIGINT) AS c FROM dt GROUP BY 1),
     tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total,
@@ -380,7 +381,13 @@ def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(dt.c_dw AS DOUBLE)
                * ln((CAST(v.c AS DOUBLE) + 1.0)
                     / (CAST(t.n_total AS DOUBLE) + CAST(t.v_size AS DOUBLE))) AS term
-      FROM dt JOIN vocab v ON dt.w = v.w, tot t),
+      FROM dt JOIN vocab v ON dt.w = v.w, tot t),"""
+
+
+@query(
+    "text_lm_score",
+    oracle=f"""
+    WITH {_lm_terms_cte("documents")}
     g AS (
       SELECT doc_id, CAST(SUM(c_dw) AS BIGINT) AS n_tokens,
              CAST(COUNT(*) AS BIGINT) AS n_types,
@@ -451,10 +458,7 @@ def _lm_xent(
         F.sum("c").cast("long").alias("n_total"),
         F.count(F.lit(1)).cast("long").alias("v_size"),
     )
-    lnp = F.log(
-        (F.col("c").cast("double") + F.lit(1.0))
-        / (F.col("n_total").cast("double") + F.col("v_size").cast("double"))
-    )
+    lnp = _ln_add_one("c", "n_total", "v_size")
     g = _doc_terms(dt, vocab, tot, keys, F.col("c_dw").cast("double") * lnp)
     fold = F.aggregate("terms", F.lit(0.0), lambda a, x: a + x)
     return g.select(
@@ -470,6 +474,16 @@ def _doc_word_counts(d: DataFrame, keys: list[str]) -> DataFrame:
     [a-z0-9]+ runs of ``text`` — the input of every unigram-LM score."""
     tok = d.select(*keys, F.explode(words("text")).alias("w"))
     return tok.groupBy(*keys, "w").agg(F.count(F.lit(1)).cast("long").alias("c_dw"))
+
+
+def _ln_add_one(c: str, n: str, v: str) -> Column:
+    """ln p(w) of the add-one-smoothed unigram LM: ln((c + 1) / (n + v))
+    for a word count ``c``, corpus token count ``n`` and vocabulary size
+    ``v``."""
+    return F.log(
+        (F.col(c).cast("double") + F.lit(1.0))
+        / (F.col(n).cast("double") + F.col(v).cast("double"))
+    )
 
 
 def _doc_terms(
@@ -500,19 +514,7 @@ def _lm_cte(src: str = "documents") -> str:
     web_corpus_pipeline so composed oracles train the LM on exactly the
     corpus their engine twin trains on."""
     return f"""
-    tok AS (
-      SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
-      FROM {src}),
-    dt AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS c_dw FROM tok GROUP BY 1, 2),
-    vocab AS (SELECT w, CAST(SUM(c_dw) AS BIGINT) AS c FROM dt GROUP BY 1),
-    tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total,
-                   CAST(COUNT(*) AS BIGINT) AS v_size FROM vocab),
-    terms AS (
-      SELECT dt.doc_id, dt.w, dt.c_dw,
-             CAST(dt.c_dw AS DOUBLE)
-               * ln((CAST(v.c AS DOUBLE) + 1.0)
-                    / (CAST(t.n_total AS DOUBLE) + CAST(t.v_size AS DOUBLE))) AS term
-      FROM dt JOIN vocab v ON dt.w = v.w, tot t),
+    {_lm_terms_cte(src)}
     lm AS (
       SELECT doc_id, n_tokens,
              ROUND(-list_aggregate(terms, 'sum') / CAST(n_tokens AS DOUBLE), 6)

@@ -301,10 +301,28 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ASOF_RIGHT_SQL = """
+# The oracle's twin of _asof_sides: purchases `p1` (one row per user and
+# timestamp) and clicks `c`.
+_ASOF_SIDES_SQL = """p1 AS (
       SELECT user_id, ts AS pts, MAX(event_id) AS purchase_id
       FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-"""
+),
+    c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')"""
+
+
+def _asof_match_sql(prefix: str, join: str) -> str:
+    """The oracle of a one-direction as-of op: each click with the purchase
+    id and time that ``join`` (an ASOF LEFT JOIN of `c` to `p1 p`) matches,
+    named ``<prefix>_purchase_id`` and ``<prefix>_purchase_ts``."""
+    return f"""
+    WITH {_ASOF_SIDES_SQL}
+    SELECT c.event_id,
+           strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS event_ts,
+           p.purchase_id AS {prefix}_purchase_id,
+           strftime(p.pts, '%Y-%m-%d %H:%M:%S') AS {prefix}_purchase_ts
+    FROM c
+    {join}
+    """
 
 
 def _asof_sides(spark: SparkSession, sf_dir: str):
@@ -330,17 +348,9 @@ def _asof_sides(spark: SparkSession, sf_dir: str):
 
 @query(
     "join_asof",
-    oracle=f"""
-    WITH p1 AS ({_ASOF_RIGHT_SQL}),
-    c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-    SELECT c.event_id,
-           strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS event_ts,
-           p.purchase_id AS last_purchase_id,
-           strftime(p.pts, '%Y-%m-%d %H:%M:%S') AS last_purchase_ts
-    FROM c
-    ASOF LEFT JOIN p1 p
-      ON c.user_id = p.user_id AND c.ts >= p.pts
-    """,
+    oracle=_asof_match_sql(
+        "last", "ASOF LEFT JOIN p1 p\n      ON c.user_id = p.user_id AND c.ts >= p.pts"
+    ),
 )
 def join_asof_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for each click, the user's most recent purchase
@@ -626,16 +636,9 @@ def materialized_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_asof_forward",
-    oracle=f"""
-    WITH p1 AS ({_ASOF_RIGHT_SQL}),
-    c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-    SELECT c.event_id,
-           strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS event_ts,
-           p.purchase_id AS next_purchase_id,
-           strftime(p.pts, '%Y-%m-%d %H:%M:%S') AS next_purchase_ts
-    FROM c
-    ASOF LEFT JOIN p1 p ON c.user_id = p.user_id AND c.ts <= p.pts
-    """,
+    oracle=_asof_match_sql(
+        "next", "ASOF LEFT JOIN p1 p ON c.user_id = p.user_id AND c.ts <= p.pts"
+    ),
 )
 def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward as-of join: each click matched to the user's NEXT purchase
@@ -773,8 +776,7 @@ def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "join_asof_nearest",
     oracle=f"""
-    WITH p1 AS ({_ASOF_RIGHT_SQL}),
-    c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+    WITH {_ASOF_SIDES_SQL},
     b AS (
       SELECT c.event_id, c.ts, p.purchase_id AS bk, p.pts AS bts
       FROM c
@@ -931,8 +933,7 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "join_asof_tolerance",
     oracle=f"""
-    WITH p1 AS ({_ASOF_RIGHT_SQL}),
-    c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+    WITH {_ASOF_SIDES_SQL},
     m AS (
       SELECT c.event_id,
              strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS event_ts,

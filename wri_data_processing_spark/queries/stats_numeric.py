@@ -21,6 +21,8 @@ re-aggregation.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -989,40 +991,56 @@ def stats_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("bin"),
         (F.col("event_type") == "view").cast("int").alias("is_ref"),
     )
-    b = s.groupBy("bin").agg(
+
+    def _term(r, p, q):
+        return F.when(
+            (r["ca"] > 0) & (r["cb"] > 0), (p - q) * F.log(p / q)
+        ).otherwise(F.lit(0.0))
+
+    return _cohort_divergence(
+        s,
+        "bin",
+        _term,
+        "psi",
+        n_bins_used=F.sum(F.when((F.col("ca") > 0) & (F.col("cb") > 0), 1).otherwise(0)),
+        n_bins_skipped=F.sum(F.when((F.col("ca") == 0) | (F.col("cb") == 0), 1).otherwise(0)),
+    )
+
+
+def _cohort_divergence(
+    s: DataFrame, key: str, term: Callable[[Column, Column, Column], Column], out: str, **stats: Column
+) -> DataFrame:
+    """(n_ref, n_cur, *stats, out) over (key, is_ref) rows ``s``: per
+    ``key`` value the reference (is_ref = 1) and current counts ca and cb,
+    the cohort totals, each of ``stats`` (aggregates over those per-key
+    rows, cast to long) and, as ``out``, the ROUND-6 ordered fold (keys
+    sorted, the stats_psi contract) of ``term(row, p, q)``, where p and q
+    are the key's shares of the reference and current cohorts."""
+    b = s.groupBy(key).agg(
         F.sum("is_ref").cast("long").alias("ca"),
         F.sum(1 - F.col("is_ref")).cast("long").alias("cb"),
     )
+    rows = f"{key}rows"
     t = b.agg(
         F.sum("ca").cast("long").alias("n_ref"),
         F.sum("cb").cast("long").alias("n_cur"),
-        F.sum(F.when((F.col("ca") > 0) & (F.col("cb") > 0), 1).otherwise(0))
-        .cast("long")
-        .alias("n_bins_used"),
-        F.sum(F.when((F.col("ca") == 0) | (F.col("cb") == 0), 1).otherwise(0))
-        .cast("long")
-        .alias("n_bins_skipped"),
-        F.array_sort(F.collect_list(F.struct("bin", "ca", "cb"))).alias("binrows"),
+        *(agg.cast("long").alias(name) for name, agg in stats.items()),
+        F.array_sort(F.collect_list(F.struct(key, "ca", "cb"))).alias(rows),
     )
     na = F.col("n_ref").cast("double")
     nb = F.col("n_cur").cast("double")
 
     def _term(r):
-        p = r["ca"].cast("double") / na
-        q = r["cb"].cast("double") / nb
-        return F.when(
-            (r["ca"] > 0) & (r["cb"] > 0), (p - q) * F.log(p / q)
-        ).otherwise(F.lit(0.0))
+        return term(r, r["ca"].cast("double") / na, r["cb"].cast("double") / nb)
 
     return t.select(
         "n_ref",
         "n_cur",
-        "n_bins_used",
-        "n_bins_skipped",
+        *stats,
         F.round(
-            F.aggregate(F.transform("binrows", _term), F.lit(0.0), lambda a, x: a + x),
+            F.aggregate(F.transform(rows, _term), F.lit(0.0), lambda a, x: a + x),
             6,
-        ).alias("psi"),
+        ).alias(out),
     )
 
 
@@ -2287,22 +2305,8 @@ def stats_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("cat"),
         (F.col("user_id") % 2 == 0).cast("int").alias("is_ref"),
     )
-    b = s.groupBy("cat").agg(
-        F.sum("is_ref").cast("long").alias("ca"),
-        F.sum(1 - F.col("is_ref")).cast("long").alias("cb"),
-    )
-    t = b.agg(
-        F.sum("ca").cast("long").alias("n_ref"),
-        F.sum("cb").cast("long").alias("n_cur"),
-        F.count(F.lit(1)).cast("long").alias("k_cats"),
-        F.array_sort(F.collect_list(F.struct("cat", "ca", "cb"))).alias("catrows"),
-    )
-    na = F.col("n_ref").cast("double")
-    nb = F.col("n_cur").cast("double")
 
-    def _term(r):
-        p = r["ca"].cast("double") / na
-        q = r["cb"].cast("double") / nb
+    def _term(r, p, q):
         t1 = F.when(r["ca"] > 0, p * F.log(F.lit(2.0) * p / (p + q))).otherwise(
             F.lit(0.0)
         )
@@ -2311,15 +2315,7 @@ def stats_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return (t1 + t2) * F.lit(0.5)
 
-    return t.select(
-        "n_ref",
-        "n_cur",
-        "k_cats",
-        F.round(
-            F.aggregate(F.transform("catrows", _term), F.lit(0.0), lambda a, x: a + x),
-            6,
-        ).alias("jsd"),
-    )
+    return _cohort_divergence(s, "cat", _term, "jsd", k_cats=F.count(F.lit(1)))
 
 
 @query(

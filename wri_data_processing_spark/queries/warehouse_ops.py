@@ -159,6 +159,13 @@ def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 # them — base [0,b), append [b,2b), orphan/uncommitted [2b,3b), the dev
 # branch's partial append [2b, 2b + b//3).
 _KB_SQL = "(SELECT COUNT(*)//10 FROM orders)"
+# The live row count after the delete-rewrite (the base batch without every
+# 7th key, plus the append batch): the expiry and orphan-file oracles'
+# select item n_rows_current.
+_N_ROWS_CURRENT_SQL = f"""(SELECT CAST(COUNT(*) AS BIGINT) FROM orders
+            WHERE (o_orderkey < {_KB_SQL} AND o_orderkey % 7 != 0)
+               OR (o_orderkey >= {_KB_SQL} AND o_orderkey < 2*{_KB_SQL}))
+             AS n_rows_current"""
 
 
 def _key_boundary(spark: SparkSession, sf_dir: str) -> int:
@@ -415,10 +422,7 @@ def snapshot_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     "snapshot_expire",
     oracle=f"""
     SELECT 4 AS current_version, 2 AS n_snapshots_expired,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
-            WHERE (o_orderkey < {_KB_SQL} AND o_orderkey % 7 != 0)
-               OR (o_orderkey >= {_KB_SQL} AND o_orderkey < 2*{_KB_SQL}))
-             AS n_rows_current,
+           {_N_ROWS_CURRENT_SQL},
            (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
             WHERE o_orderkey < {_KB_SQL}) AS n_rows_reclaimed
     """,
@@ -619,10 +623,7 @@ def snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     "snapshot_orphan_files",
     oracle=f"""
     SELECT 3 AS n_snapshots,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
-            WHERE (o_orderkey < {_KB_SQL} AND o_orderkey % 7 != 0)
-               OR (o_orderkey >= {_KB_SQL} AND o_orderkey < 2*{_KB_SQL}))
-             AS n_rows_current,
+           {_N_ROWS_CURRENT_SQL},
            (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
             WHERE o_orderkey >= 2*{_KB_SQL} AND o_orderkey < 3*{_KB_SQL})
              AS n_rows_orphan,
