@@ -21,8 +21,10 @@ sf0.001 (SPARK_GRAFT_SF_DIR overrides). Per op the record holds:
   broadcasting its edge list leaves the returned plan unchanged;
 - the Exchange, Window, Sort, Python-node and pushed-filter-scan counts of
   each of those plans;
-- the sha256 of the op's DuckDB oracle SQL, so a changed oracle text
-  reports as `oracle text`.
+- the op's DuckDB oracle SQL and its sha256. A changed oracle text
+  reports as `oracle text (same answer)` or `oracle text (answer differs)`:
+  both texts are run on DuckDB over the same tables as the plans and
+  compared as the oracle harness compares an op with its oracle.
 
 It prints one line saying whether the two trees register the same op
 names in the same order and hash `json.dumps(list(ORACLE.items()))` to the
@@ -101,11 +103,12 @@ def op_record(
     plan: str, checkpointed: list[str], error: str | None = None, tree: str = "", oracle: str | None = None
 ) -> dict:
     """What the diff compares for one op: the returned frame's normalized
-    plan and shape, the shape of every frame it checkpointed, and the
-    sha256 of its oracle SQL (None for an op without one)."""
+    plan and shape, the shape of every frame it checkpointed, and its
+    oracle SQL with that text's sha256 (both None for an op without one)."""
     return {
         "error": error,
         "oracle": None if oracle is None else _sha256(oracle),
+        "oracle_sql": oracle,
         "plan": normalize(plan, tree),
         **shape(plan),
         "checkpoints": [shape(cp) for cp in checkpointed],
@@ -161,6 +164,38 @@ def _shape_change(base: dict, head: dict) -> str:
     return ", ".join(parts)
 
 
+def _same_answer(base_sql: str, head_sql: str) -> bool:
+    """Whether two oracle texts give the same answer on DuckDB over SF_DIR's
+    tables, compared as the oracle harness compares an op with its oracle:
+    the column names in order and the sorted, type-tagged rows. A text that
+    fails answers with its error."""
+    import duckdb
+
+    if REPO_ROOT not in sys.path:
+        sys.path.insert(0, REPO_ROOT)
+    from tests.oracle_harness import _normalize, duck_con
+
+    def answer(sql: str):
+        try:
+            df = con.execute(sql).df()
+        except duckdb.Error as exc:
+            return f"{type(exc).__name__}: {exc}"
+        return list(df.columns), _normalize(df)
+
+    con = duck_con(SF_DIR)
+    try:
+        return answer(base_sql) == answer(head_sql)
+    finally:
+        con.close()
+
+
+def _oracle_change(base: dict, head: dict) -> str:
+    if base["oracle_sql"] is None or head["oracle_sql"] is None:
+        return "oracle text"
+    same = _same_answer(base["oracle_sql"], head["oracle_sql"])
+    return f"oracle text ({'same answer' if same else 'answer differs'})"
+
+
 def differences(base: dict | None, head: dict | None) -> str:
     """One line naming what differs between two records of an op."""
     if base is None or head is None:
@@ -179,7 +214,7 @@ def differences(base: dict | None, head: dict | None) -> str:
     if base["plan"] != head["plan"]:
         out.append("plan text")
     if base["oracle"] != head["oracle"]:
-        out.append("oracle text")
+        out.append(_oracle_change(base, head))
     return "; ".join(out)
 
 

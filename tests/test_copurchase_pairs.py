@@ -1,6 +1,8 @@
 """Differential tests: the co-purchase builders in
-``wri_data_processing_spark.queries.graph`` against a pure-Python reference
-(per-order part sets, ``itertools.combinations`` over each sorted set).
+``wri_data_processing_spark.queries.graph`` — the Spark ones and their
+DuckDB SQL spellings, which the oracles are rendered from — against one
+pure-Python reference (per-order part sets, ``itertools.combinations`` over
+each sorted set).
 
 Each hypothesis example is one batch of small independent "worlds" (random
 ``(orderkey, partkey)`` lines over few orders and parts, so lines repeat and
@@ -15,10 +17,14 @@ from __future__ import annotations
 from collections import Counter, defaultdict
 from itertools import combinations
 
+import duckdb
+import pandas as pd
 from hypothesis import HealthCheck, Phase, example, given, settings
 from hypothesis import strategies as st
 
 from wri_data_processing_spark.queries.graph import (
+    _both_directions_sql,
+    _copurchase_sql,
     both_directions,
     copurchase_pairs,
     order_baskets,
@@ -106,9 +112,45 @@ def test_both_directions_emits_each_pair_twice(spark, batch):
     assert Counter(map(tuple, weighted.collect())) == want
 
 
+def _duck_pairs(lines, min_orders: int, select: str = "SELECT * FROM pairs"):
+    """(columns, rows) of ``select`` after ``_copurchase_sql(min_orders)``
+    over a DuckDB ``lineitem`` holding ``lines``."""
+    con = duckdb.connect()
+    con.register("lineitem", pd.DataFrame(lines, columns=["l_orderkey", "l_partkey"], dtype="int64"))
+    cur = con.execute(f"WITH {_copurchase_sql(min_orders)}\n{select}")
+    return [d[0] for d in cur.description], cur.fetchall()
+
+
+@_SETTINGS
+@given(batch=_batches)
+@example(batch=[])
+def test_copurchase_sql_matches_combinations(batch):
+    lines = _lines(batch)
+    support = _ref_support(lines)
+
+    cols, rows = _duck_pairs(lines, 1)
+    assert cols == ["u", "v"] and sorted(rows) == sorted(support)
+    for min_orders in (2, 3):
+        cols, rows = _duck_pairs(lines, min_orders)
+        assert cols == ["u", "v", "n"]
+        assert sorted(rows) == sorted((u, v, n) for (u, v), n in support.items() if n >= min_orders)
+
+    cols, rows = _duck_pairs(lines, 1, _both_directions_sql("pairs", "src", "dst"))
+    assert cols == ["src", "dst"]
+    assert Counter(rows) == Counter(e for u, v in support for e in ((u, v), (v, u)))
+    cols, rows = _duck_pairs(lines, 2, _both_directions_sql("pairs", "node", "nb"))
+    assert cols == ["node", "nb", "n"]
+    want = Counter(
+        e for (u, v), n in support.items() if n >= 2 for e in ((u, v, n), (v, u, n))
+    )
+    assert Counter(rows) == want
+
+
 def test_builders_on_empty_lineitem(spark):
     li = spark.createDataFrame([], _SCHEMA)
     assert order_baskets(li).count() == 0
     for min_orders in (1, 2, 3):
         assert copurchase_pairs(li, min_orders).count() == 0
+        assert _duck_pairs([], min_orders)[1] == []
     assert both_directions(copurchase_pairs(li, 2), "node", "nb").count() == 0
+    assert _duck_pairs([], 2, _both_directions_sql("pairs", "node", "nb")) == (["node", "nb", "n"], [])

@@ -2,7 +2,8 @@
 what changes from run to run must compare equal, and a changed join
 strategy, an extra shuffle or a changed oracle text must not — also inside
 the plan of a frame the op checkpointed, where a loop's per-round joins
-live."""
+live. A changed oracle text is also run on DuckDB at sf0.001, to say
+whether its answer changed."""
 
 from __future__ import annotations
 
@@ -121,13 +122,19 @@ def test_counts_read_the_tree_not_the_node_details():
 
 
 def test_oracle_text_and_surface_differ():
-    sql = "SELECT node, COUNT(*) AS n FROM edges GROUP BY node"
+    """A changed oracle text is run on DuckDB on both sides: a rewrite that
+    keeps the answer reads `same answer`, one that changes a value's type
+    reads `answer differs`."""
+    sql = "SELECT l_orderkey, COUNT(*) AS n FROM lineitem GROUP BY l_orderkey"
     base = op_record(_final(), [], oracle=sql)
     assert base == op_record(_final(), [], oracle=sql)
     assert op_record(_final(), [])["oracle"] is None
-    head = op_record(_final(), [], oracle=sql.replace("COUNT(*)", "COUNT(nb)"))
-    assert differences(base, head) == "oracle text"
+    assert differences(base, op_record(_final(), [])) == "oracle text"
+    head = op_record(_final(), [], oracle=sql.replace("COUNT(*)", "COUNT(l_partkey)"))
+    assert differences(base, head) == "oracle text (same answer)"
     assert f"oracle: {head['oracle']}" in render(head)
+    head = op_record(_final(), [], oracle=sql.replace("COUNT(*)", "CAST(COUNT(*) AS DOUBLE)"))
+    assert differences(base, head) == "oracle text (answer differs)"
     a = surface(["op_a", "op_b"], {"op_a": sql})
     assert surface_line(a, surface(["op_a", "op_b"], {"op_a": sql})) == (
         f"REGISTRY names and order: identical (2 ops); ORACLE sha256: identical ({a['oracle']})"

@@ -8,10 +8,14 @@ sweeps also read.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
 
-from tests.oracle_harness import compare
+from tests.oracle_harness import compare, duck_con
 from wri_data_processing_spark import registry
+from wri_data_processing_spark.catalog import TABLES
 
 registry.load_all()
 
@@ -41,3 +45,21 @@ def test_shared_plan_is_the_plan_before_execution(name, op_build):
     executed = op_build.df._jdf.queryExecution().executedPlan().toString()
     assert "AdaptiveSparkPlan isFinalPlan=true" in executed
     assert "AdaptiveSparkPlan isFinalPlan=false" in op_build.plan
+
+
+def test_markov_steady_without_transitions(spark, sf_dir, tmp_path):
+    """With no events, no user has a transition: the op and its oracle both
+    return no rows (the op once divided its Q30 start by zero event types)."""
+    for t in TABLES:
+        src = os.path.join(sf_dir, f"{t}.parquet")
+        if t == "events":
+            pq.write_table(pq.read_table(src).slice(0, 0), tmp_path / f"{t}.parquet")
+        else:
+            os.symlink(src, tmp_path / f"{t}.parquet")
+    con = duck_con(str(tmp_path))
+    try:
+        df = registry.REGISTRY["graph_markov_steady"](spark, str(tmp_path))
+        assert df.count() == 0
+        assert not compare(df, con, registry.ORACLE["graph_markov_steady"])
+    finally:
+        con.close()

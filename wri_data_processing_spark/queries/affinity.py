@@ -15,7 +15,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wri_data_processing_spark.catalog import table
-from wri_data_processing_spark.queries.graph import both_directions, copurchase_pairs
+from wri_data_processing_spark.queries.graph import (
+    _both_directions_sql,
+    _copurchase_sql,
+    both_directions,
+    copurchase_pairs,
+)
 from wri_data_processing_spark.registry import query
 
 
@@ -66,19 +71,9 @@ def fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "basket_pair_counts",
-    oracle="""
-    WITH items AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    )
-    SELECT a.l_partkey AS part_a,
-           b.l_partkey AS part_b,
-           COUNT(*) AS n_orders
-    FROM items a
-    JOIN items b
-      ON a.l_orderkey = b.l_orderkey
-     AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2
-    HAVING COUNT(*) >= 2
+    oracle=f"""
+    WITH {_copurchase_sql(2)}
+    SELECT u AS part_a, v AS part_b, n AS n_orders FROM pairs
     """,
 )
 def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,22 +94,11 @@ def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_degree_distribution",
-    oracle="""
-    WITH items AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    edges AS (
-      SELECT DISTINCT a.l_partkey AS part_a, b.l_partkey AS part_b
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    oracle=f"""
+    WITH {_copurchase_sql()},
     degrees AS (
-      SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
-        SELECT part_a AS node, part_b FROM edges
-        UNION ALL
-        SELECT part_b AS node, part_a FROM edges
-      ) GROUP BY node
-    )
+      SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
+      FROM ({_both_directions_sql("pairs", "node", "nb")}) GROUP BY node)
     SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
     FROM degrees GROUP BY degree
     """,
@@ -139,29 +123,19 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "basket_association_rules",
-    oracle="""
-    WITH items AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
+    oracle=f"""
+    WITH {_copurchase_sql(2)},
     n_orders AS (SELECT CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n FROM items),
     item_n AS (
       SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS n_item
       FROM items GROUP BY l_partkey
-    ),
-    pair_n AS (
-      SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-             CAST(COUNT(*) AS BIGINT) AS n_pair
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2
-      HAVING COUNT(*) >= 2
     )
-    SELECT p.part_a, p.part_b, p.n_pair,
-           p.n_pair * 1.0 / na.n_item AS confidence_a_to_b,
-           p.n_pair * 1.0 * o.n / (na.n_item * nb.n_item) AS lift
-    FROM pair_n p
-    JOIN item_n na ON p.part_a = na.l_partkey
-    JOIN item_n nb ON p.part_b = nb.l_partkey
+    SELECT p.u AS part_a, p.v AS part_b, p.n AS n_pair,
+           p.n * 1.0 / na.n_item AS confidence_a_to_b,
+           p.n * 1.0 * o.n / (na.n_item * nb.n_item) AS lift
+    FROM pairs p
+    JOIN item_n na ON p.u = na.l_partkey
+    JOIN item_n nb ON p.v = nb.l_partkey
     CROSS JOIN n_orders o
     """,
 )
@@ -203,21 +177,16 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "recsys_item_similar",
-    oracle="""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    n AS (SELECT l_partkey AS p, CAST(COUNT(*) AS BIGINT) AS np
-          FROM items GROUP BY 1),
-    co AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v, CAST(COUNT(*) AS BIGINT) AS cooc
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      GROUP BY 1, 2
-      HAVING COUNT(*) >= 2),
+    oracle=f"""
+    WITH {_copurchase_sql(2)},
+    part_n AS (SELECT l_partkey AS p, CAST(COUNT(*) AS BIGINT) AS np
+               FROM items GROUP BY 1),
+    co AS (SELECT u, v, n AS cooc FROM ({_both_directions_sql("pairs", "u", "v")})),
     sim AS (
       SELECT co.u, co.v, co.cooc, nu.np AS n_u, nv.np AS n_v,
              CAST(co.cooc AS DOUBLE)
                / sqrt(CAST(nu.np * nv.np AS DOUBLE)) AS cosine
-      FROM co JOIN n nu ON co.u = nu.p JOIN n nv ON co.v = nv.p),
+      FROM co JOIN part_n nu ON co.u = nu.p JOIN part_n nv ON co.v = nv.p),
     rk AS (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY u
                  ORDER BY cosine DESC, v) AS rn

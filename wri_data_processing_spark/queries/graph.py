@@ -77,6 +77,35 @@ def both_directions(pairs: DataFrame, a: str, b: str) -> DataFrame:
     )
 
 
+def _copurchase_sql(min_orders: int = 1) -> str:
+    """``copurchase_pairs`` in DuckDB SQL, as the first two CTEs of an
+    oracle's WITH list: ``items``, the distinct (order, part) rows, and
+    ``pairs``, the part pairs ``(u, v)``, ``u < v``, ordered together —
+    distinct for ``min_orders=1``, else with the support count ``n`` and
+    kept where ``n >= min_orders``."""
+    if min_orders == 1:
+        cols, having = "DISTINCT a.l_partkey AS u, b.l_partkey AS v", ""
+    else:
+        cols = "a.l_partkey AS u, b.l_partkey AS v, CAST(COUNT(*) AS BIGINT) AS n"
+        having = f"\n      GROUP BY 1, 2 HAVING COUNT(*) >= {min_orders}"
+    return f"""
+    items AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    pairs AS MATERIALIZED (
+      SELECT {cols}
+      FROM items a JOIN items b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey{having})"""
+
+
+def _both_directions_sql(src: str, a: str, b: str) -> str:
+    """``both_directions`` in DuckDB SQL: a query over the ``(u, v)`` rows
+    of ``src`` giving ``(a=u, b=v)`` and ``(a=v, b=u)`` for each, other
+    columns carried onto both."""
+    return (
+        f"SELECT u AS {a}, v AS {b}, * EXCLUDE (u, v) FROM {src}\n"
+        f"      UNION ALL SELECT v AS {a}, u AS {b}, * EXCLUDE (u, v) FROM {src}"
+    )
+
+
 _Q30 = 1_073_741_824  # 2^30, fixed-point scale: rank 1.0 == 2^30
 _TELEPORT_Q = 161_061_273  # floor(0.15 * 2^30)
 _ITERS = 5
@@ -84,18 +113,8 @@ _ITERS = 5
 
 # The undirected co-purchase graph both PageRank oracles iterate over:
 # `edges` holds each edge in both directions and `deg` each node's degree.
-_PAGERANK_GRAPH_CTES = """
-    items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    undirected AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    edges AS (
-      SELECT u AS node, v AS nb FROM undirected
-      UNION ALL
-      SELECT v AS node, u AS nb FROM undirected
-    ),
+_PAGERANK_GRAPH_CTES = f"""{_copurchase_sql()},
+    edges AS ({_both_directions_sql("pairs", "node", "nb")}),
     deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
             FROM edges GROUP BY node),"""
 
@@ -199,20 +218,23 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _triangles_sql() -> str:
+    """``_support2_triangles``' triangles in DuckDB SQL: a query over the
+    support-2 ``pairs`` CTE of ``_copurchase_sql(2)`` giving every triangle
+    once as its corners (x, y, z), x < y < z."""
+    return (
+        "SELECT e1.u AS x, e1.v AS y, e2.v AS z\n"
+        "      FROM pairs e1 JOIN pairs e2 ON e1.v = e2.u\n"
+        "                    JOIN pairs e3 ON e1.u = e3.u AND e2.v = e3.v"
+    )
+
+
 @query(
     "graph_triangle_count",
-    oracle="""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS (
-      SELECT a.l_partkey AS pa, b.l_partkey AS pb
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING COUNT(*) >= 2)
-    SELECT CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges,
-           CAST((SELECT COUNT(*)
-                 FROM e e1 JOIN e e2 ON e1.pb = e2.pa
-                           JOIN e e3 ON e1.pa = e3.pa AND e2.pb = e3.pb)
-                AS BIGINT) AS n_triangles
+    oracle=f"""
+    WITH {_copurchase_sql(2)}
+    SELECT CAST((SELECT COUNT(*) FROM pairs) AS BIGINT) AS n_edges,
+           CAST((SELECT COUNT(*) FROM ({_triangles_sql()})) AS BIGINT) AS n_triangles
     """,
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,73 +272,40 @@ def _support2_triangles(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
     return e, wedges.join(e.select(F.col("u").alias("x"), F.col("v").alias("z")), ["x", "z"])
 
 
-@query(
-    "graph_connected_components",
-    oracle="""
-    WITH items AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    undirected AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    edges AS MATERIALIZED (
-      SELECT u AS node, v AS nb FROM undirected
-      UNION ALL
-      SELECT v AS node, u AS nb FROM undirected),
+_CC_ROUNDS = 6  # pointer-jumping rounds: component diameter up to 2^6
+
+
+def _cc_oracle() -> str:
+    """Unrolled pointer-jumping min-label rounds: a node's next label is the
+    least of its label, its label's label and its neighbors' labels.
+    MATERIALIZED per round: each round reads the previous labels three
+    times, so the unhinted chain inlines 3^6 copies."""
+    parts = [
+        f"""{_copurchase_sql()},
+    edges AS MATERIALIZED ({_both_directions_sql("pairs", "node", "nb")}),
     l0 AS MATERIALIZED (SELECT node AS n, node AS m
-      FROM (SELECT DISTINCT node FROM edges)),
-    l1 AS MATERIALIZED (
-      SELECT l.n,
-             LEAST(l.m, pj.m, nbmin.m) AS m
-      FROM l0 l
-      JOIN l0 pj ON l.m = pj.n
-      JOIN (SELECT e.node AS n, MIN(l2.m) AS m
-            FROM edges e JOIN l0 l2 ON e.nb = l2.n GROUP BY 1) nbmin
-        ON l.n = nbmin.n),
-    l2 AS MATERIALIZED (
-      SELECT l.n,
-             LEAST(l.m, pj.m, nbmin.m) AS m
-      FROM l1 l
-      JOIN l1 pj ON l.m = pj.n
-      JOIN (SELECT e.node AS n, MIN(l2.m) AS m
-            FROM edges e JOIN l1 l2 ON e.nb = l2.n GROUP BY 1) nbmin
-        ON l.n = nbmin.n),
-    l3 AS MATERIALIZED (
-      SELECT l.n,
-             LEAST(l.m, pj.m, nbmin.m) AS m
-      FROM l2 l
-      JOIN l2 pj ON l.m = pj.n
-      JOIN (SELECT e.node AS n, MIN(l2.m) AS m
-            FROM edges e JOIN l2 l2 ON e.nb = l2.n GROUP BY 1) nbmin
-        ON l.n = nbmin.n),
-    l4 AS MATERIALIZED (
-      SELECT l.n,
-             LEAST(l.m, pj.m, nbmin.m) AS m
-      FROM l3 l
-      JOIN l3 pj ON l.m = pj.n
-      JOIN (SELECT e.node AS n, MIN(l2.m) AS m
-            FROM edges e JOIN l3 l2 ON e.nb = l2.n GROUP BY 1) nbmin
-        ON l.n = nbmin.n),
-    l5 AS MATERIALIZED (
-      SELECT l.n,
-             LEAST(l.m, pj.m, nbmin.m) AS m
-      FROM l4 l
-      JOIN l4 pj ON l.m = pj.n
-      JOIN (SELECT e.node AS n, MIN(l2.m) AS m
-            FROM edges e JOIN l4 l2 ON e.nb = l2.n GROUP BY 1) nbmin
-        ON l.n = nbmin.n),
-    l6 AS MATERIALIZED (
-      SELECT l.n,
-             LEAST(l.m, pj.m, nbmin.m) AS m
-      FROM l5 l
-      JOIN l5 pj ON l.m = pj.n
-      JOIN (SELECT e.node AS n, MIN(l2.m) AS m
-            FROM edges e JOIN l5 l2 ON e.nb = l2.n GROUP BY 1) nbmin
-        ON l.n = nbmin.n)
+      FROM (SELECT DISTINCT node FROM edges))"""
+    ]
+    for k in range(1, _CC_ROUNDS + 1):
+        parts.append(
+            f"""
+    l{k} AS MATERIALIZED (
+      SELECT l.n, LEAST(l.m, pj.m, nbmin.m) AS m
+      FROM l{k - 1} l
+      JOIN l{k - 1} pj ON l.m = pj.n
+      JOIN (SELECT e.node AS n, MIN(nl.m) AS m
+            FROM edges e JOIN l{k - 1} nl ON e.nb = nl.n GROUP BY 1) nbmin
+        ON l.n = nbmin.n)"""
+        )
+    return (
+        ",".join(parts)
+        + f"""
     SELECT m AS component, CAST(COUNT(*) AS BIGINT) AS n_nodes
-    FROM l6 GROUP BY 1 ORDER BY 1
-    """,
-)
+    FROM l{_CC_ROUNDS} GROUP BY 1 ORDER BY 1"""
+    )
+
+
+@query("graph_connected_components", oracle=f"WITH {_cc_oracle()}")
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the co-purchase graph — the general-graph
     registration of the pointer-jumping min-label machinery dedup_clusters
@@ -352,16 +341,9 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_jaccard_linkpred",
-    oracle="""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS MATERIALIZED (
-      SELECT a.l_partkey AS pa, b.l_partkey AS pb
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    adj AS MATERIALIZED (
-      SELECT pa AS node, pb AS nb FROM e
-      UNION ALL SELECT pb, pa FROM e),
+    oracle=f"""
+    WITH {_copurchase_sql(2)},
+    adj AS MATERIALIZED ({_both_directions_sql("pairs", "node", "nb")}),
     deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY 1),
     cn AS (
       SELECT a1.node AS u, a2.node AS v, CAST(COUNT(*) AS BIGINT) AS cn
@@ -371,7 +353,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT cn.u, cn.v, cn.cn, du.d AS du, dv.d AS dv
       FROM cn JOIN deg du ON cn.u = du.node JOIN deg dv ON cn.v = dv.node
       WHERE least(du.d, dv.d) >= 2
-        AND NOT EXISTS (SELECT 1 FROM e WHERE e.pa = cn.u AND e.pb = cn.v))
+        AND NOT EXISTS (SELECT 1 FROM pairs e WHERE e.u = cn.u AND e.v = cn.v))
     SELECT u, v, cn, du, dv,
            ROUND(CAST(cn AS DOUBLE) / CAST(du + dv - cn AS DOUBLE), 6)
              AS jaccard
@@ -448,17 +430,8 @@ def _kcore_oracle() -> str:
     both endpoint joins), so without the hint DuckDB inlines the chain
     3^6 times — the graph_connected_components lesson verbatim."""
     parts = [
-        """
-    items AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    und AS MATERIALIZED (
-      SELECT a.l_partkey AS u, b.l_partkey AS v, COUNT(*) AS w
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2),
-    sup AS MATERIALIZED (SELECT u, v FROM und WHERE w >= 2),
-    e0 AS MATERIALIZED (
-      SELECT u AS node, v AS nb FROM sup
-      UNION ALL SELECT v AS node, u AS nb FROM sup)"""
+        f"""{_copurchase_sql(2)},
+    e0 AS MATERIALIZED ({_both_directions_sql("pairs", "node", "nb")})"""
     ]
     for r in range(1, _KCORE_ROUNDS + 1):
         parts.append(
@@ -615,9 +588,9 @@ def graph_markov_steady(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rt = m.groupBy("i").agg(F.sum("c").cast("long").alias("r"))
     cells = m.join(F.broadcast(rt), "i").localCheckpoint()
-    k_types = rt.count()
+    k_types = rt.count()  # 0 when no user has two events: v is then empty
     v = rt.select(
-        F.col("i").alias("t"), F.lit(_MKV_Q // k_types).cast("long").alias("q")
+        F.col("i").alias("t"), F.lit(_MKV_Q // max(k_types, 1)).cast("long").alias("q")
     )
     for _ in range(_MKV_ITERS):
         v = (
@@ -647,17 +620,9 @@ def _bfs_oracle() -> str:
     references the previous label frame twice (self distance + neighbor
     min), so the unhinted chain inlines 2^6 copies."""
     parts = [
-        f"""
-    items AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    sup AS MATERIALIZED (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    e0 AS MATERIALIZED (
-      SELECT u AS node, v AS nb FROM sup
-      UNION ALL SELECT v AS node, u AS nb FROM sup),
-    src AS (SELECT MIN(u) AS s FROM sup),
+        f"""{_copurchase_sql(2)},
+    e0 AS MATERIALIZED ({_both_directions_sql("pairs", "node", "nb")}),
+    src AS (SELECT MIN(u) AS s FROM pairs),
     b0 AS MATERIALIZED (
       SELECT node,
              CASE WHEN node = (SELECT s FROM src)
@@ -761,18 +726,9 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_clustering_coefficient",
-    oracle="""
-    WITH items AS MATERIALIZED (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS MATERIALIZED (
-      SELECT a.l_partkey AS pa, b.l_partkey AS pb
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    tri AS MATERIALIZED (
-      SELECT e1.pa AS x, e1.pb AS y, e2.pb AS z
-      FROM e e1 JOIN e e2 ON e1.pb = e2.pa
-                JOIN e e3 ON e1.pa = e3.pa AND e2.pb = e3.pb),
+    oracle=f"""
+    WITH {_copurchase_sql(2)},
+    tri AS MATERIALIZED ({_triangles_sql()}),
     pertri AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS tri
       FROM (SELECT x AS node FROM tri
@@ -781,7 +737,7 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY 1),
     deg AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS d
-      FROM (SELECT pa AS node FROM e UNION ALL SELECT pb FROM e)
+      FROM ({_both_directions_sql("pairs", "node", "nb")})
       GROUP BY 1)
     SELECT deg.node, deg.d, COALESCE(pertri.tri, 0) AS tri,
            ROUND(CAST(2 * COALESCE(pertri.tri, 0) AS DOUBLE)
@@ -853,32 +809,39 @@ _HITS_Q = 1_073_741_824  # Q30 fixed point, matching graph_pagerank
 
 def _hits_oracle() -> str:
     """Mutually-renormalized authority/hub half-steps a1 -> h1 -> a2 over
-    the bipartite customer->part purchase graph, in HUGEINT Q30."""
-    return f"""
+    the bipartite customer->part purchase graph, in HUGEINT Q30. Each
+    half-step sums the other side's scores into ``raw`` (a1 counts edges),
+    then renormalizes it as the engine's ``_normalize`` does."""
+    parts = [
+        f"""
     edges AS MATERIALIZED (
       SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
       FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey),
     a1r AS MATERIALIZED (
       SELECT p, CAST(COUNT(*) AS BIGINT) * {_HITS_Q} AS raw
-      FROM edges GROUP BY 1),
-    a1 AS MATERIALIZED (
-      SELECT p, CAST(CAST(raw AS HUGEINT) * {_HITS_Q}
-                     // (SELECT SUM(raw) FROM a1r) AS BIGINT) AS q
-      FROM a1r),
-    h1r AS MATERIALIZED (
-      SELECT e.c, CAST(SUM(a1.q) AS BIGINT) AS raw
-      FROM edges e JOIN a1 ON e.p = a1.p GROUP BY 1),
-    h1 AS MATERIALIZED (
-      SELECT c, CAST(CAST(raw AS HUGEINT) * {_HITS_Q}
-                     // (SELECT SUM(raw) FROM h1r) AS BIGINT) AS q
-      FROM h1r),
-    a2r AS MATERIALIZED (
-      SELECT e.p, CAST(SUM(h1.q) AS BIGINT) AS raw
-      FROM edges e JOIN h1 ON e.c = h1.c GROUP BY 1),
-    a2 AS MATERIALIZED (
-      SELECT p, CAST(CAST(raw AS HUGEINT) * {_HITS_Q}
-                     // (SELECT SUM(raw) FROM a2r) AS BIGINT) AS q
-      FROM a2r),
+      FROM edges GROUP BY 1)"""
+    ]
+    prev = None
+    for step in ("a1", "h1", "a2"):
+        key, other = ("p", "c") if step[0] == "a" else ("c", "p")
+        if prev is not None:
+            parts.append(
+                f"""
+    {step}r AS MATERIALIZED (
+      SELECT e.{key}, CAST(SUM({prev}.q) AS BIGINT) AS raw
+      FROM edges e JOIN {prev} ON e.{other} = {prev}.{other} GROUP BY 1)"""
+            )
+        parts.append(
+            f"""
+    {step} AS MATERIALIZED (
+      SELECT {key}, CAST(CAST(raw AS HUGEINT) * {_HITS_Q}
+                     // (SELECT SUM(raw) FROM {step}r) AS BIGINT) AS q
+      FROM {step}r)"""
+        )
+        prev = step
+    return (
+        ",".join(parts)
+        + f""",
     tops AS (
       (SELECT 'authority' AS side, CAST(p AS BIGINT) AS id, q AS score_q
        FROM a2 ORDER BY q DESC, p LIMIT 15)
@@ -889,6 +852,7 @@ def _hits_oracle() -> str:
            CAST(score_q AS DOUBLE) / {_HITS_Q} AS score
     FROM tops ORDER BY side, score_q DESC, id
     """
+    )
 
 
 @query("graph_hits", oracle=f"WITH {_hits_oracle()}")
@@ -983,17 +947,9 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_degree_assortativity",
-    oracle="""
-    WITH items AS MATERIALIZED (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    sup AS MATERIALIZED (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    adj AS MATERIALIZED (
-      SELECT u AS node, v AS nb FROM sup
-      UNION ALL SELECT v AS node, u AS nb FROM sup),
+    oracle=f"""
+    WITH {_copurchase_sql(2)},
+    adj AS MATERIALIZED ({_both_directions_sql("pairs", "node", "nb")}),
     deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY 1),
     ends AS (
       SELECT du.d AS x, dv.d AS y
@@ -1053,21 +1009,12 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_transitivity",
-    oracle="""
-    WITH items AS MATERIALIZED (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS MATERIALIZED (
-      SELECT a.l_partkey AS pa, b.l_partkey AS pb
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-    tri AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS t
-      FROM e e1 JOIN e e2 ON e1.pb = e2.pa
-                JOIN e e3 ON e1.pa = e3.pa AND e2.pb = e3.pb),
+    oracle=f"""
+    WITH {_copurchase_sql(2)},
+    tri AS (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM ({_triangles_sql()})),
     deg AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS d
-      FROM (SELECT pa AS node FROM e UNION ALL SELECT pb FROM e)
+      FROM ({_both_directions_sql("pairs", "node", "nb")})
       GROUP BY 1),
     w AS (SELECT CAST(SUM(d * (d - 1)) AS BIGINT) AS w2 FROM deg)
     SELECT tri.t AS n_triangles, w.w2 // 2 AS n_wedges,
@@ -1114,27 +1061,13 @@ def graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LPA_ROUNDS = 4
 
-_LPA_EDGES_CTE = """
-    items AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    undirected AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    edges AS MATERIALIZED (
-      SELECT u AS node, v AS nb FROM undirected
-      UNION ALL
-      SELECT v AS node, u AS nb FROM undirected)
-"""
-
-
 def _lpa_oracle(k: int) -> str:
     """Unrolled synchronous label-propagation oracle: per round, neighbor-
     label frequency, then argmax by (count DESC, label ASC) via the
     max-count-filter + MIN(label) two-step (deterministic tie-break)."""
     parts = [
-        _LPA_EDGES_CTE,
-        """
+        f"""{_copurchase_sql()},
+    edges AS MATERIALIZED ({_both_directions_sql("pairs", "node", "nb")}),
     l0 AS MATERIALIZED (
       SELECT node, node AS lbl FROM (SELECT DISTINCT node FROM edges))""",
     ]

@@ -37,6 +37,7 @@ from wri_data_processing_spark.functions.text import (
     words,
     ws_tokens,
 )
+from wri_data_processing_spark.queries.llm_similarity import _idot, _idot_sql, _qv_sql, _qvec
 from wri_data_processing_spark.registry import query
 
 _TOKS_CTE = r"""
@@ -752,14 +753,12 @@ _RRF_W = tuple(1.0 / (_RRF_K0 + r) for r in range(1, _RRF_DEPTH + 1))
       FROM ({_BM25_TOP20_SQL})),
     qe AS (
       SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+             {_qv_sql("embedding")} AS qv
       FROM embeddings),
     q0 AS (SELECT qv AS q0 FROM qe WHERE vec_id = 0),
     drel AS (
       SELECT e.vec_id,
-             CAST(list_aggregate(list_transform(range(1, len(e.qv) + 1),
-               i -> e.qv[i] * q.q0[i]), 'sum') AS BIGINT) AS rel
+             {_idot_sql("e.qv", "q.q0")} AS rel
       FROM qe e, q0 q WHERE e.vec_id <> 0),
     dense20 AS (
       SELECT vec_id,
@@ -812,8 +811,6 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales (ln-space BM25 vs BIGINT dots) need no normalization — the
     reason RRF wins hybrid-search bakeoffs despite its simplicity.
     """
-    from wri_data_processing_spark.queries.llm_similarity import _idot, _qvec
-
     lex = text_bm25_rank(spark, sf_dir)  # 20 rows, deterministic order
     wl = Window.orderBy(F.col("score").desc(), "doc_id")
     lex_r = (

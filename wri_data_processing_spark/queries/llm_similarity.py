@@ -138,6 +138,11 @@ def _qvec(col: str | Column) -> Column:
     return F.transform(c, lambda x: F.floor(x.cast("double") * F.lit(1048576.0)).cast("long"))
 
 
+def _qv_sql(col: str) -> str:
+    """``_qvec`` in DuckDB SQL."""
+    return f"list_transform({col}, x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT))"
+
+
 def ivf_assign(e: DataFrame, nlist: int = _IVF_NLIST) -> DataFrame:
     """Deterministic coarse-quantizer assignment: (vec_id, cid).
 
@@ -187,8 +192,7 @@ def ivf_assign_ctes(nlist: int = _IVF_NLIST) -> str:
     return f"""
     qt AS (
       SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+             {_qv_sql("embedding")} AS qv
       FROM embeddings),
     cents AS (SELECT vec_id AS cid, qv AS cv FROM qt WHERE vec_id < {nlist}),
     cdist AS (
@@ -378,8 +382,7 @@ def _srp_oracle() -> str:
     return f"""
     WITH qt AS (
       SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+             {_qv_sql("embedding")} AS qv
       FROM embeddings),
     signs(j, sv) AS (VALUES {sign_values}),
     dots AS (
@@ -630,11 +633,10 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LABEL_DIST_CTES = """
+_LABEL_DIST_CTES = f"""
     WITH q AS (
       SELECT vec_id, label,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+             {_qv_sql("embedding")} AS qv
       FROM embeddings),
     comp AS (
       SELECT label, i, CAST(SUM(qv[i]) AS BIGINT) AS s,
@@ -875,8 +877,7 @@ def _lloyd_update(members: DataFrame, keys: list[str], vec: str) -> DataFrame:
     oracle=f"""
     WITH qt AS (
       SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+             {_qv_sql("embedding")} AS qv
       FROM embeddings),
     cents0 AS (SELECT vec_id AS cid, qv AS cv FROM qt WHERE vec_id < {_KM_K}),
     dist1 AS (
@@ -1082,8 +1083,7 @@ def _pq_train_sql(
     oracle=f"""
     WITH qt AS (
       SELECT vec_id, label,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+             {_qv_sql("embedding")} AS qv
       FROM embeddings),
     sub AS (
       SELECT vec_id, CAST(m.i AS BIGINT) AS m,
@@ -1439,8 +1439,7 @@ _PCA_Q = 1048576  # 2^20 fixed-point, the _qvec scale
 
 def _pca_oracle() -> str:
     parts = [f"""
-    q AS (SELECT list_transform(CAST(embedding AS DOUBLE[]),
-                 x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+    q AS (SELECT {_qv_sql("embedding")} AS qv
           FROM embeddings),
     cm AS (
       SELECT ui.i AS i, uj.j AS j,
@@ -1544,11 +1543,10 @@ def _kcenter_oracle() -> str:
     and DuckDB otherwise re-inlines the whole prefix chain per round
     (the graph_connected_components lesson)."""
     parts = [
-        """
+        f"""
     pts AS MATERIALIZED (
       SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+             {_qv_sql("embedding")} AS qv
       FROM embeddings),
     s1 AS MATERIALIZED (
       SELECT 1 AS round, vec_id, qv, CAST(0 AS BIGINT) AS d2
@@ -1710,6 +1708,14 @@ def _idot(a, b):
     return _fold_zip(a, b, lambda x, y: x * y, F.lit(0).cast("long"))
 
 
+def _idot_sql(a: str, b: str) -> str:
+    """``_idot`` in DuckDB SQL."""
+    return (
+        f"CAST(list_aggregate(list_transform(range(1, len({a}) + 1), "
+        f"i -> {a}[i] * {b}[i]), 'sum') AS BIGINT)"
+    )
+
+
 # (rel desc, vec_id asc) over pool structs — the pool-cut / first-pick order.
 _MMR_CMP_REL = """(pa, pb) ->
     CASE WHEN pa.rel > pb.rel THEN -1 WHEN pa.rel < pb.rel THEN 1
@@ -1788,10 +1794,7 @@ def _mmr_tail_sql() -> str:
     exact pool) and retrieval_pipeline (IVF-probed pool). lambda = 1/2,
     so the argmax is rel - maxsim; every CTE AS MATERIALIZED (each round
     references the pool and the growing chosen set repeatedly)."""
-    dot = (
-        "CAST(list_aggregate(list_transform(range(1, len(p.qv) + 1), "
-        "i -> p.qv[i] * c.qv[i]), 'sum') AS BIGINT)"
-    )
+    dot = _idot_sql("p.qv", "c.qv")
     parts = [
         """
     s1 AS MATERIALIZED (
@@ -1825,14 +1828,12 @@ def _mmr_oracle() -> str:
     return f"""
     pts AS MATERIALIZED (
       SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+             {_qv_sql("embedding")} AS qv
       FROM embeddings),
     q AS MATERIALIZED (SELECT qv FROM pts WHERE vec_id = 0),
     rel AS MATERIALIZED (
       SELECT p.vec_id, p.qv,
-             CAST(list_aggregate(list_transform(range(1, len(p.qv) + 1),
-               i -> p.qv[i] * c.qv[i]), 'sum') AS BIGINT) AS rel
+             {_idot_sql("p.qv", "c.qv")} AS rel
       FROM pts p, (SELECT qv FROM q) c
       WHERE p.vec_id <> 0),
     pool AS MATERIALIZED (
@@ -1887,8 +1888,7 @@ _RP_NPROBE = 3  # probed coarse cells (of _IVF_NLIST = 8)
     qv0 AS MATERIALIZED (SELECT qv FROM qt WHERE vec_id = 0),
     rel AS MATERIALIZED (
       SELECT p.vec_id, p.qv,
-             CAST(list_aggregate(list_transform(range(1, len(p.qv) + 1),
-               i -> p.qv[i] * c.qv[i]), 'sum') AS BIGINT) AS rel
+             {_idot_sql("p.qv", "c.qv")} AS rel
       FROM qt p
       JOIN assigned a ON p.vec_id = a.vec_id
       JOIN probes pr ON a.cid = pr.cid, (SELECT qv FROM qv0) c
@@ -1965,10 +1965,9 @@ def retrieval_pool(spark: SparkSession, sf_dir: str, checkpoint: bool = True) ->
 
 @query(
     "embed_dim_stats",
-    oracle="""
+    oracle=f"""
     WITH q AS (
-      SELECT list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+      SELECT {_qv_sql("embedding")} AS qv
       FROM embeddings),
     d AS (
       SELECT i - 1 AS dim, qv[i] AS qc
@@ -2037,11 +2036,10 @@ def embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embed_label_affinity",
-    oracle="""
+    oracle=f"""
     WITH q AS (
       SELECT label,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+             {_qv_sql("embedding")} AS qv
       FROM embeddings),
     comp AS (
       SELECT label, i, CAST(SUM(qv[i]) AS BIGINT) AS s,
@@ -2224,8 +2222,7 @@ _TRIPLET_TAIL = """
     oracle=f"""
     WITH q AS (
       SELECT vec_id, label,
-             list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)) AS qv
+             {_qv_sql("embedding")} AS qv
       FROM embeddings),{_TRIPLET_TAIL}""",
 )
 def embed_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2485,8 +2482,7 @@ _RBO_W = [(1.0 - _RBO_P) * _RBO_P**d for d in range(_RBO_D)]
     qv0 AS MATERIALIZED (SELECT qv FROM qt WHERE vec_id = 0),
     rel AS MATERIALIZED (
       SELECT p.vec_id,
-             CAST(list_aggregate(list_transform(range(1, len(p.qv) + 1),
-               i -> p.qv[i] * c.qv[i]), 'sum') AS BIGINT) AS rel
+             {_idot_sql("p.qv", "c.qv")} AS rel
       FROM qt p, (SELECT qv FROM qv0) c
       WHERE p.vec_id <> 0),
     probes AS MATERIALIZED (
@@ -2632,11 +2628,10 @@ _SEP_BOOST = 1 << 30  # Q20-grid label-dimension boost for the separation contro
     oracle=f"""
     WITH q AS (
       SELECT vec_id, label,
-             list_transform(embedding,
-               (x, i) -> CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT)
-                         + CASE WHEN i - 1 = label % len(embedding)
-                                THEN CAST({_SEP_BOOST} AS BIGINT)
-                                ELSE 0 END) AS qv
+             list_transform({_qv_sql("embedding")},
+               (x, i) -> x + CASE WHEN i - 1 = label % len(embedding)
+                                  THEN CAST({_SEP_BOOST} AS BIGINT)
+                                  ELSE 0 END) AS qv
       FROM embeddings),{_TRIPLET_TAIL}""",
 )
 def embed_separation_control(spark: SparkSession, sf_dir: str) -> DataFrame:
