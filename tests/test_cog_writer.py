@@ -91,7 +91,7 @@ def test_cog_convert_from_strip_source(tmp_path):
 
 
 def test_step01_with_real_converter(spark, tmp_path):
-    """End-to-end: the step-01 mapInPandas fan-out with NO injected stub —
+    """End-to-end: the step-01 Arrow row-map fan-out with NO injected stub —
     the default converter resolves to the pure-Python COG path (GDAL absent)
     and writes real COGs; guards still produce missing/skipped/failed rows."""
     from wri_data_processing_spark.steps.step01_cog import status_counts, step01_cog

@@ -12,6 +12,7 @@ import re
 
 import pytest
 
+from tests.test_python_boundary_sweep import PY_NODE
 from wri_data_processing_spark import registry
 
 registry.load_all()
@@ -20,6 +21,13 @@ registry.load_all()
 def _plan(spark, sf_dir, name: str) -> str:
     df = registry.REGISTRY[name](spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_no_python(plan: str, *context) -> None:
+    """No Python node of any form (the boundary sweep's PY_NODE: row-at-a-time,
+    pandas or Arrow) in ``plan``."""
+    nodes = PY_NODE.findall(plan)
+    assert not nodes, (*context, nodes)
 
 
 def _n_exchanges(plan: str) -> int:
@@ -78,7 +86,7 @@ def test_vocab_no_global_sort(spark, sf_dir):
 def test_json_extract_no_python(spark, sf_dir):
     """JSON extraction stays JVM-side: no Python/Arrow eval nodes."""
     plan = _plan(spark, sf_dir, "json_extract_kv")
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    _assert_no_python(plan)
 
 
 def test_q6_pushdown_reaches_scan(spark, sf_dir):
@@ -105,7 +113,7 @@ def test_basket_pairs_reuse_orderkey_exchange(spark, sf_dir):
     JVM-side."""
     plan = _plan(spark, sf_dir, "basket_pair_counts")
     assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    _assert_no_python(plan)
 
 
 def test_tfidf_broadcasts_vocabulary(spark, sf_dir):
@@ -134,7 +142,7 @@ def test_pagerank_no_python_and_hash_joins(spark, sf_dir):
     """Five unrolled iterations stay entirely JVM-side with equi joins —
     the iterative loop must not leak into Python or nested loops."""
     plan = _plan(spark, sf_dir, "graph_pagerank")
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    _assert_no_python(plan)
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
@@ -566,9 +574,7 @@ def test_lpa_round_shape(spark, sf_dir):
         .select("node", F.coalesce("jlbl", "lbl").alias("lbl"))
     )
     plan = new_labels._jdf.queryExecution().executedPlan().toString()
-    for node in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
-                 "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert _n_exchanges(plan) <= 7, plan
@@ -606,8 +612,7 @@ def test_bpe_round_shape(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan, plan
     assert "partial_sum" in plan, plan
     assert _n_exchanges(plan) == 1, plan
-    for node in ("BatchEvalPython", "ArrowEvalPython"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_pii_and_quality_ops_are_scan_stage_only(spark, sf_dir):
@@ -618,8 +623,7 @@ def test_pii_and_quality_ops_are_scan_stage_only(spark, sf_dir):
     for name in ("pii_detect_report", "pii_redact", "quality_classifier_score"):
         plan = _plan(spark, sf_dir, name)
         assert _n_exchanges(plan) == 0, (name, plan)
-        for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-            assert node not in plan, (name, node)
+        _assert_no_python(plan, name)
 
 
 def test_pii_prevalence_single_shuffle(spark, sf_dir):
@@ -639,8 +643,7 @@ def test_privacy_pipeline_single_shuffle(spark, sf_dir):
     plan = _plan(spark, sf_dir, "privacy_pipeline")
     assert _n_exchanges(plan) <= 3, plan
     assert "Join" not in plan
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_privacy_audits_bounded_exchanges(spark, sf_dir):
@@ -653,12 +656,10 @@ def test_privacy_audits_bounded_exchanges(spark, sf_dir):
     plan = _plan(spark, sf_dir, "privacy_k_anonymity")
     assert _n_exchanges(plan) <= 3, plan
     assert "Join" not in plan, plan
-    for node in ("BatchEvalPython", "ArrowEvalPython"):
-        assert node not in plan, node
+    _assert_no_python(plan)
     plan = _plan(spark, sf_dir, "privacy_l_diversity")
     assert _n_exchanges(plan) <= 4, plan
-    for node in ("BatchEvalPython", "ArrowEvalPython"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_bradley_terry_iterations_stay_broadcast(spark, sf_dir):
@@ -667,8 +668,7 @@ def test_bradley_terry_iterations_stay_broadcast(spark, sf_dir):
     iteration means a 25-row frame got shuffle-joined. No Python."""
     plan = _plan(spark, sf_dir, "eval_bradley_terry")
     assert "SortMergeJoin" not in plan, plan
-    for node in ("BatchEvalPython", "ArrowEvalPython"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_ngram_novelty_anti_join_carries_keys_not_text(spark, sf_dir):
@@ -683,8 +683,7 @@ def test_ngram_novelty_anti_join_carries_keys_not_text(spark, sf_dir):
     assert "partial_" in plan, plan
     for ex in re.findall(r"Exchange hashpartitioning\(([^)]*)", plan):
         assert "shingle" not in ex, ex
-    for node in ("BatchEvalPython", "ArrowEvalPython"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_r13_scan_stage_ops_zero_exchanges(spark, sf_dir):
@@ -701,8 +700,7 @@ def test_r13_scan_stage_ops_zero_exchanges(spark, sf_dir):
     for name in ("text_mattr",):
         plan = _plan(spark, sf_dir, name)
         assert _n_exchanges(plan) == 0, (name, plan)
-        for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-            assert node not in plan, (name, node)
+        _assert_no_python(plan, name)
 
 
 def test_r15_lang_id_single_doc_exchange(spark, sf_dir):
@@ -724,8 +722,7 @@ def test_r15_lang_id_single_doc_exchange(spark, sf_dir):
     assert "HashAggregate" in plan, plan
     assert "SortAggregate" not in plan, plan
     assert "Join" not in plan, plan
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_krippendorff_no_join(spark, sf_dir):
@@ -734,8 +731,7 @@ def test_krippendorff_no_join(spark, sf_dir):
     and category-bounded folds (broadcast joins close the scalar)."""
     plan = _plan(spark, sf_dir, "eval_krippendorff_alpha")
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_rbo_pools_are_take_ordered(spark, sf_dir):
@@ -744,8 +740,7 @@ def test_rbo_pools_are_take_ordered(spark, sf_dir):
     plan = _plan(spark, sf_dir, "eval_rank_biased_overlap")
     assert "TakeOrderedAndProject" in plan, plan
     assert "BroadcastHashJoin" in plan, plan
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_survival_family_single_user_shuffle(spark, sf_dir):
@@ -758,8 +753,7 @@ def test_survival_family_single_user_shuffle(spark, sf_dir):
     ):
         plan = _plan(spark, sf_dir, name)
         assert _n_exchanges(plan) <= 4, (name, _n_exchanges(plan), plan)
-        for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-            assert node not in plan, (name, node)
+        _assert_no_python(plan, name)
 
 
 def test_breusch_pagan_single_data_shuffle(spark, sf_dir):
@@ -769,8 +763,7 @@ def test_breusch_pagan_single_data_shuffle(spark, sf_dir):
     plan = _plan(spark, sf_dir, "stats_breusch_pagan")
     assert _n_exchanges(plan) <= 3, (_n_exchanges(plan), plan)
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_hybrid_rrf_no_data_shuffle(spark, sf_dir):
@@ -782,8 +775,7 @@ def test_hybrid_rrf_no_data_shuffle(spark, sf_dir):
     plan = _plan(spark, sf_dir, "retrieval_hybrid_rrf")
     assert _n_exchanges(plan) == 0, (_n_exchanges(plan), plan)
     assert "TakeOrderedAndProject" in plan, plan
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_bleu_one_gram_shuffle(spark, sf_dir):
@@ -796,8 +788,7 @@ def test_bleu_one_gram_shuffle(spark, sf_dir):
     assert _n_exchanges(plan) <= 2, (_n_exchanges(plan), plan)
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan, plan
     assert "partial_" in plan, plan  # map-side combine before the gram shuffle
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_chrf_one_gram_shuffle(spark, sf_dir):
@@ -810,8 +801,7 @@ def test_chrf_one_gram_shuffle(spark, sf_dir):
     assert _n_exchanges(plan) <= 3, (_n_exchanges(plan), plan)
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan, plan
     assert "partial_" in plan, plan  # map-side combine before the gram shuffle
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_token_f1_no_joins_two_folds(spark, sf_dir):
@@ -823,8 +813,7 @@ def test_token_f1_no_joins_two_folds(spark, sf_dir):
     assert _n_exchanges(plan) <= 3, (_n_exchanges(plan), plan)
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan, plan
     assert "partial_" in plan, plan
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_distinct_n_no_joins(spark, sf_dir):
@@ -834,8 +823,7 @@ def test_distinct_n_no_joins(spark, sf_dir):
     plan = _plan(spark, sf_dir, "eval_distinct_n")
     assert _n_exchanges(plan) <= 4, (_n_exchanges(plan), plan)
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan, plan
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_cer_one_pair_shuffle_no_python(spark, sf_dir):
@@ -849,8 +837,7 @@ def test_cer_one_pair_shuffle_no_python(spark, sf_dir):
     assert "Join" not in plan, plan
     assert "partial_" in plan, plan  # map-side combine before the pair shuffle
     assert "levenshtein" in plan, plan  # the JVM built-in, not a UDF
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)
 
 
 def test_dedup_pr_equi_joins_only(spark, sf_dir):
@@ -863,5 +850,4 @@ def test_dedup_pr_equi_joins_only(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "FullOuter" in plan, plan  # the pair-level TP/FP/FN join
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, node
+    _assert_no_python(plan)

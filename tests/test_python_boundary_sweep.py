@@ -3,13 +3,14 @@ only where declared.
 
 The engine's posture is JVM-side expressions everywhere, with Python
 appearing ONLY at declared Arrow-batched boundaries (pandas UDFs,
-mapInPandas, applyInPandas) — never as row-at-a-time ``BatchEvalPython``,
+applyInPandas, and the ``map_rows`` row map over mapInArrow) — never as
+row-at-a-time ``BatchEvalPython``,
 which is 10-100x slower and the classic silent scale killer. This sweep
 scans every registered query's physical plan:
 
 - ``BatchEvalPython`` (pickled row-at-a-time UDF) is banned EVERYWHERE,
   including whitelisted queries;
-- any Arrow node (``ArrowEvalPython``/``MapInPandas``/
+- any Arrow node (``ArrowEvalPython``/``MapInArrow``/``MapInPandas``/
   ``FlatMapGroupsInPandas``/``ArrowAggregatePython``...) is tolerated only
   for the ops below, each of which crosses the boundary for a documented
   reason (native-library edge, effectful source, or a deliberately
@@ -46,7 +47,7 @@ PYTHON_WHITELIST: dict[str, str] = {
     "multimodal_features_real": "media decode boundary, executed pure-Python "
     "BMP codec (sources/bmp_codec.py)",
     "multimodal_image_histogram": "media decode boundary, executed pure-Python "
-    "BMP codec inside mapInPandas — the multimodal_features_real shape",
+    "BMP codec inside the Arrow row map — the multimodal_features_real shape",
     "multimodal_dhash": "same executed decode boundary; integer dHash of "
     "decoded pixels",
     "multimodal_dhash_dedup": "banded pair join over multimodal_dhash "
@@ -62,10 +63,10 @@ PYTHON_WHITELIST: dict[str, str] = {
     "expression and no SQL twin — vectorized pandas UDF, scan-side only",
     "pandas_grouped_agg": "registered pandas GROUPED_AGG interface demo",
     "scan_parquet_footer_stats": "distributed parquet-footer read "
-    "(pyarrow inside mapInPandas over the 4-row file list) — the "
+    "(pyarrow inside the Arrow row map over the 4-row file list) — the "
     "manifest-builder pattern; footers have no JVM expression",
     "multimodal_patchify": "media decode boundary, executed pure-Python "
-    "BMP codec inside mapInPandas — the multimodal_features_real shape; "
+    "BMP codec inside the Arrow row map — the multimodal_features_real shape; "
     "ViT patch-grid accumulation on decoded pixels",
     "multimodal_phash": "same executed decode boundary; integer DCT "
     "perceptual hash of decoded pixels (pinned cosine table)",
@@ -76,12 +77,13 @@ PYTHON_WHITELIST: dict[str, str] = {
     "expression over the 8-column histogram frame",
 }
 
-_PY_NODE = re.compile(r"\b(\w*(?:Python|Pandas)\w*)")
+# Python/pandas nodes plus the Arrow map nodes (MapInArrow, *InArrow).
+PY_NODE = re.compile(r"\b(\w*(?:Python|Pandas|InArrow)\w*)")
 
 
 def python_boundary_problems(name: str, plan: str) -> list[str]:
     """The Python-boundary violations of one op's physical plan."""
-    nodes = sorted(set(_PY_NODE.findall(plan)))
+    nodes = sorted(set(PY_NODE.findall(plan)))
     if "BatchEvalPython" in nodes:
         return [
             f"{name} plans a row-at-a-time Python UDF (BatchEvalPython) — use a "
@@ -116,6 +118,14 @@ class TestSweepIsNotVacuous:
         for name in ("synthetic_udf", "pandas_grouped_map"):
             problems = python_boundary_problems(name, plan)
             assert len(problems) == 1 and "BatchEvalPython" in problems[0]
+
+    def test_arrow_map_is_a_python_boundary(self, spark):
+        df = spark.range(3).mapInArrow(lambda batches: batches, "id long")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, plan
+        problems = python_boundary_problems("synthetic_arrow_map", plan)
+        assert len(problems) == 1 and "not a declared boundary" in problems[0]
+        assert python_boundary_problems("scan_raster_header", plan) == []
 
     def test_stale_whitelist_entry_fails(self, spark):
         plan = spark.range(3)._jdf.queryExecution().executedPlan().toString()

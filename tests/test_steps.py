@@ -1,4 +1,5 @@
-"""Unit tests for the three pipeline steps with injected boundary callables."""
+"""Unit tests for the three pipeline steps with injected boundary callables,
+and for the Arrow row map their per-file stages run through."""
 
 from __future__ import annotations
 
@@ -7,8 +8,10 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from wri_data_processing_spark.operators.probe import hosted_counts, with_hosted_flag
+from wri_data_processing_spark.operators.row_map import map_rows
 from wri_data_processing_spark.sources.listing import scan_file_listing
 from wri_data_processing_spark.sources.tables import format_fs_bytes
 from wri_data_processing_spark.steps.step00_inventory import step00_inventory
@@ -263,3 +266,44 @@ def test_collection_doc_is_one_aggregation(spark):
     assert doc["summaries"]["wri_dimension"] == [" risk ", "status"]
     items = [link["href"] for link in doc["links"] if link["rel"] == "item"]
     assert items == [f"items/layer_{i:02d}.json" for i in range(16)]
+
+
+class TestMapRows:
+    """``map_rows``, the Arrow row map every per-row stage above runs through."""
+
+    ROWS = [
+        (1, 7, 1.5, "a", True, [1.0, None]),
+        (None, None, None, None, None, None),
+        (3, -2, -0.25, "", False, []),
+    ]
+    DDL = "n long, i int, d double, s string, b boolean, a array<double>"
+
+    def test_round_trips_values_and_nulls(self, spark):
+        df = spark.createDataFrame(self.ROWS, self.DDL)
+        out = map_rows(df, lambda *row: [row], self.DDL)
+        assert sorted(map(tuple, out.collect()), key=str) == sorted(self.ROWS, key=str)
+
+    def test_ddl_and_struct_schemas_agree(self, spark):
+        df = spark.createDataFrame(self.ROWS, self.DDL)
+        schema = StructType.fromDDL(self.DDL)
+        by_ddl = map_rows(df, lambda *row: [row], self.DDL)
+        by_struct = map_rows(df, lambda *row: [row], schema)
+        assert by_ddl.schema == by_struct.schema == schema
+        assert sorted(by_ddl.collect(), key=str) == sorted(by_struct.collect(), key=str)
+
+    def test_zero_one_or_many_rows_per_input(self, spark):
+        def fan(i):
+            return [] if i % 2 else [(i, k) for k in range(i // 2 + 1)]
+
+        out = map_rows(spark.range(5), fan, "id long, k int")
+        assert sorted(map(tuple, out.collect())) == [(0, 0), (2, 0), (2, 1), (4, 0), (4, 1), (4, 2)]
+
+    def test_empty_input(self, spark):
+        out = map_rows(spark.range(4).filter("id > 9"), lambda i: [(i,)], "id long")
+        assert out.collect() == []
+        assert map_rows(spark.range(3), lambda i: [], "id long").collect() == []
+
+    def test_plans_an_arrow_map_and_no_pandas(self, spark):
+        out = map_rows(spark.range(3), lambda i: [(i,)], "id long")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, plan

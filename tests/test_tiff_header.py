@@ -5,7 +5,7 @@ The fixtures are written byte-by-byte from the TIFF 6.0 / BigTIFF / GeoTIFF
 specs (no GDAL anywhere), covering: classic little-endian, classic
 big-endian, BigTIFF, out-of-line and inline tag values, the
 ModelTransformation alternative to scale+tiepoint, and corrupt inputs.
-The end-to-end test drives the real scan_raster_header mapInPandas path
+The end-to-end test drives the real scan_raster_header row-map path
 with the DEFAULT reader — the executed production path, not an injected
 stub — and checks the reference grid constants round-trip
 (utils.R:175-214 field-for-field).
@@ -108,7 +108,7 @@ def test_truncated_tiff_raises(tmp_path):
 
 
 def test_scan_raster_header_default_reader_end_to_end(spark, tmp_path):
-    """The production mapInPandas path with the DEFAULT reader over a mixed
+    """The production row-map path with the DEFAULT reader over a mixed
     directory: two valid rasters and one corrupt file -> error ROW, not a
     crashed job (utils.R:205-213 semantics)."""
     from wri_data_processing_spark.sources.raster import scan_raster_header

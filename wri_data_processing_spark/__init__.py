@@ -12,7 +12,10 @@ Design principles (see SURVEY.md §4/§7):
   selection — we never hand-schedule what the optimizer already does.
 - Every operator is a small composable function returning a DataFrame.
 - Python UDFs only at genuine boundaries (GDAL, pyproj, HTTP), always
-  Arrow-batched (pandas UDF / mapInPandas), never row-at-a-time in hot paths.
+  Arrow-batched, never row-at-a-time in hot paths: per-row stages (one file
+  or payload in, zero or more rows out) go through the one Arrow row map,
+  ``operators.row_map.map_rows`` (mapInArrow, no pandas); grouped and
+  vectorized work uses applyInPandas / pandas UDFs.
 - Designed for 100 TB: no driver-side collects in query paths, broadcast
   hints for dimension tables, AQE on, explicit partitioning notes per module.
 """

@@ -27,7 +27,7 @@ container layout (IFD entries, inline-or-offset values, classic vs BigTIFF
 widths, GeoKeys) is sources/tiff_writer.py's, shared with the GeoTIFF
 fixtures. Output verifies with sources/tiff_header.py (and with gdalinfo
 where GDAL exists). Scale shape: one file per task via step01_cog's
-mapInPandas fan-out — file-level parallelism, no shuffle.
+Arrow row-map fan-out — file-level parallelism, no shuffle.
 """
 
 from __future__ import annotations

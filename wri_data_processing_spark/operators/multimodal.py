@@ -1,9 +1,9 @@
 """Multimodal columns (SURVEY.md §2.12 L5): opaque binary + typed metadata.
 
 Pattern: media rides as a ``binary`` column with a typed metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages so bytes stay in columnar batches end-to-end (never
-row-at-a-time Python). The COG step (steps/step01_cog.py) follows the same
+decode / feature-extract / resize / frame-sample run through the one Arrow
+row map (``map_rows``, operators/row_map.py) so bytes stay in columnar
+batches end-to-end (never a row-at-a-time Python UDF). The COG step (steps/step01_cog.py) follows the same
 template with raster files.
 
 Codec libraries (PIL/ffmpeg/librosa) are NOT in this container, so decoders
@@ -20,9 +20,8 @@ never rescans media.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -35,6 +34,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from wri_data_processing_spark.operators.row_map import map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -79,29 +80,17 @@ def fake_decoder(payload: bytes, media_type: str) -> list[float]:
 
 
 def extract_features(media: DataFrame, decoder: Decoder | None = None) -> DataFrame:
-    """Decode + featurize each payload via mapInPandas (Arrow batches)."""
+    """Decode + featurize each payload through the Arrow row map."""
     dec = decoder or fake_decoder
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, digests = [], []
-            for payload, mtype in zip(pdf["payload"], pdf["media_type"]):
-                raw = bytes(payload)
-                digests.append(hashlib.sha256(raw).hexdigest())
-                try:
-                    feats.append([float(x) for x in dec(raw, mtype)])
-                except Exception:
-                    feats.append(None)  # tolerate-and-log: bad media != dead job
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "digest": digests,
-                    "feature": feats,
-                }
-            )
+    def features(media_id: int, media_type: str, payload: bytes) -> list[tuple]:
+        try:
+            feature = [float(x) for x in dec(payload, media_type)]
+        except Exception:
+            feature = None  # tolerate-and-log: bad media != dead job
+        return [(media_id, media_type, hashlib.sha256(payload).hexdigest(), feature)]
 
-    return media.select("media_id", "media_type", "payload").mapInPandas(run, FEATURE_SCHEMA)
+    return map_rows(media.select("media_id", "media_type", "payload"), features, FEATURE_SCHEMA)
 
 
 def frame_sample(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 16) -> DataFrame:

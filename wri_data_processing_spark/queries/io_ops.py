@@ -35,6 +35,7 @@ from wri_data_processing_spark.sources.listing import scan_file_listing, strip_s
 from wri_data_processing_spark.sources.raster import scan_raster_header
 from wri_data_processing_spark.sources.tables import scan_csv, sink_append_table, sink_overwrite_table
 from wri_data_processing_spark.operators.probe import with_hosted_flag
+from wri_data_processing_spark.operators.row_map import map_rows
 from wri_data_processing_spark.steps.step01_cog import status_counts, step01_cog
 
 # Per-PID root: two concurrent harness processes (e.g. the test suite run
@@ -98,7 +99,7 @@ def scan_file_listing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scan_raster_header_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2: header-only scan via mapInPandas with an injected reader.
+    """S2: header-only scan through the Arrow row map with an injected reader.
 
     GDAL is absent here, so the reader derives a deterministic header from
     the filename — the oracle recomputes the same arithmetic over the known
@@ -346,7 +347,8 @@ def sink_json_docs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sink_cog_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6: COG conversion fan-out via mapInPandas with an injected converter.
+    """S6: COG conversion fan-out through the Arrow row map with an injected
+    converter.
 
     Synthetic metadata points every third row at a real file (nation.parquet)
     and the rest at a missing path; the stub converter copies a byte marker.
@@ -485,8 +487,6 @@ def sink_cog_lzw_bigtiff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin proves decode(encode(x)) == x end-to-end; the LZW/predictor
     decoder is additionally proven against spec-constructed streams in
     tests/test_tiff_lzw.py."""
-    import pandas as pd
-
     out_dir = _scratch_dir("sink_cog_lzw", sf_dir)
     src = spark.createDataFrame(_LZW_COG_SPECS, "name string, w int, h int, seed int")
     schema = StructType(
@@ -500,7 +500,7 @@ def sink_cog_lzw_bigtiff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def run(batches):
+    def convert(name: str, w: int, h: int, seed: int) -> list[tuple]:
         from wri_data_processing_spark.geo.cog_writer import write_cog
         from wri_data_processing_spark.sources.tiff_fixture import write_geotiff_grid
         from wri_data_processing_spark.sources.tiff_header import (
@@ -508,44 +508,35 @@ def sink_cog_lzw_bigtiff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             read_geotiff_pixels,
         )
 
-        for pdf in batches:
-            rows = []
-            for name, w, h, seed in pdf[["name", "w", "h", "seed"]].itertuples(index=False):
-                arr = _lzw_arr(int(w), int(h), int(seed))
-                src_path = os.path.join(out_dir, f"{name}.tif")
-                write_geotiff_grid(
-                    src_path, arr, tiled=True, predictor=3, compression="lzw"
-                )
-                decoded = read_geotiff_pixels(src_path)
-                cog_path = os.path.join(out_dir, f"{name}_cog.tif")
-                write_cog(
-                    cog_path,
-                    decoded,
-                    xmin=0.0,
-                    ymax=float(h),
-                    res_x=1.0,
-                    res_y=1.0,
-                    epsg=5070,
-                    tile=16,
-                    predictor=3,
-                    compression="lzw",
-                    bigtiff=True,
-                )
-                hdr = read_geotiff_header(cog_path)
-                back = read_geotiff_pixels(cog_path)
-                rows.append(
-                    {
-                        "cog_filename": f"{name}_cog.tif",
-                        "nrows": hdr["nrows"],
-                        "ncols": hdr["ncols"],
-                        "crs_epsg": hdr["crs_epsg"],
-                        "datatype": hdr["datatype"],
-                        "px_checksum": _px_checksum(back),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        arr = _lzw_arr(w, h, seed)
+        src_path = os.path.join(out_dir, f"{name}.tif")
+        write_geotiff_grid(src_path, arr, tiled=True, predictor=3, compression="lzw")
+        decoded = read_geotiff_pixels(src_path)
+        cog_path = os.path.join(out_dir, f"{name}_cog.tif")
+        write_cog(
+            cog_path,
+            decoded,
+            xmin=0.0,
+            ymax=float(h),
+            res_x=1.0,
+            res_y=1.0,
+            epsg=5070,
+            tile=16,
+            predictor=3,
+            compression="lzw",
+            bigtiff=True,
+        )
+        hdr = read_geotiff_header(cog_path)
+        return [(
+            f"{name}_cog.tif",
+            hdr["nrows"],
+            hdr["ncols"],
+            hdr["crs_epsg"],
+            hdr["datatype"],
+            _px_checksum(read_geotiff_pixels(cog_path)),
+        )]
 
-    return src.repartition(len(_LZW_COG_SPECS)).mapInPandas(run, schema)
+    return map_rows(src.repartition(len(_LZW_COG_SPECS)), convert, schema)
 
 
 @query(
@@ -861,7 +852,7 @@ def scan_parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-then-audit of parquet FOOTER statistics — the metadata that
     makes partition pruning and row-group skipping work: range-bucket
     orders by key into one file per bucket, then read every written
-    file's footer DISTRIBUTIVELY (pyarrow inside mapInPandas — each task
+    file's footer DISTRIBUTIVELY (pyarrow inside the Arrow row map — each task
     opens only its own footers, the pattern a 100 TB manifest builder
     uses: a million footers are a million tiny reads you fan out, never
     a driver loop) and verify the recorded min/max/num_rows against the
@@ -896,29 +887,22 @@ def scan_parquet_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = sorted(_glob.glob(os.path.join(root, "bucket=*", "*.parquet")))
     fdf = spark.createDataFrame([(p,) for p in files], "path string")
 
-    def read_footers(batches):
-        import pandas as pd
+    def read_footers(path: str) -> list[tuple]:
         import pyarrow.parquet as pq
 
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                bucket = int(path.split("bucket=")[1].split("/")[0])
-                meta = pq.ParquetFile(path).metadata
-                for g in range(meta.num_row_groups):
-                    rg = meta.row_group(g)
-                    for ci in range(rg.num_columns):
-                        col = rg.column(ci)
-                        if col.path_in_schema == "o_orderkey":
-                            st = col.statistics
-                            rows.append(
-                                (bucket, rg.num_rows, int(st.min), int(st.max))
-                            )
-            yield pd.DataFrame(rows, columns=["bucket", "n", "mn", "mx"])
+        bucket = int(path.split("bucket=")[1].split("/")[0])
+        meta = pq.ParquetFile(path).metadata
+        rows = []
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            for ci in range(rg.num_columns):
+                col = rg.column(ci)
+                if col.path_in_schema == "o_orderkey":
+                    st = col.statistics
+                    rows.append((bucket, rg.num_rows, int(st.min), int(st.max)))
+        return rows
 
-    footer = fdf.mapInPandas(
-        read_footers, "bucket long, n long, mn long, mx long"
-    )
+    footer = map_rows(fdf, read_footers, "bucket long, n long, mn long, mx long")
     return (
         footer.groupBy("bucket")
         .agg(

@@ -17,6 +17,7 @@ from wri_data_processing_spark.operators.multimodal import (
     frame_sample,
     media_from_documents,
 )
+from wri_data_processing_spark.operators.row_map import map_rows
 from wri_data_processing_spark.registry import query
 
 _TYPE_SQL = """
@@ -91,7 +92,7 @@ def _hex_byte_sql(i: int) -> str:
     """,
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature extraction through the real mapInPandas decode boundary,
+    """Feature extraction through the real Arrow decode boundary,
     flattened to driver-safe scalar columns (no top-level arrays — the
     driver's canonicalizer can't sort list cells).
 
@@ -263,6 +264,43 @@ def _bmp_expected_values() -> str:
     return ", ".join(rows)
 
 
+def _media(spark: SparkSession, rows) -> DataFrame:
+    """The (media_id, filename, payload) frame of fixture payloads."""
+    return spark.createDataFrame(
+        [(mid, name, bytearray(payload)) for mid, name, payload in rows],
+        "media_id long, filename string, payload binary",
+    )
+
+
+def _bmp_media(spark: SparkSession) -> DataFrame:
+    """Every _BMP_FIXTURES image through the pure-Python BMP writer, plus
+    fixture 12: a 40-byte truncation the decoder rejects."""
+    from wri_data_processing_spark.sources.bmp_codec import write_bmp
+
+    rows = [(i, name, write_bmp(w, h, _bmp_pixel(i))) for i, name, w, h in _BMP_FIXTURES]
+    rows.append((12, "corrupt.bmp", write_bmp(16, 8, _bmp_pixel(0))[:40]))
+    return _media(spark, rows)
+
+
+def _decoded(decode, features, n_feat: int):
+    """The media quarantine contract as one ``map_rows`` row function.
+
+    A row ``(*key, payload)`` emits ``(*key, *f, TRUE)`` for each tuple ``f``
+    of ``features(*decode(payload))``. When the decode or the features raise
+    ValueError it emits one ``(*key, NULL x n_feat, FALSE)`` row instead: a
+    bad payload quarantines, it never kills the job.
+    """
+
+    def row(*key_payload):
+        *key, payload = key_payload
+        try:
+            return [(*key, *f, True) for f in features(*decode(payload))]
+        except ValueError:
+            return [(*key, *[None] * n_feat, False)]
+
+    return row
+
+
 @query(
     "multimodal_features_real",
     oracle=f"""
@@ -276,7 +314,7 @@ def _bmp_expected_values() -> str:
 def multimodal_features_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L5 feature extraction with NO stub: real 24-bit BMP payloads encoded
     and DECODED by the pure-Python codec (sources/bmp_codec.py), pixels
-    recovered inside the Arrow-batched mapInPandas boundary, statistics
+    recovered inside the Arrow row-map boundary, statistics
     checked against a VALUES oracle stated from independent arithmetic —
     the multimodal twin of scan_raster_header_real's executed-TIFF path.
     The reference behavior is utils.R:175-214's read-real-raster-bytes
@@ -287,57 +325,25 @@ def multimodal_features_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (bad media must quarantine, not kill the 100 TB job).
 
     Plan shape at scale: payloads never shuffle — decode runs in the scan
-    stage's mapInPandas and only fixed-width statistics leave it; the
+    stage's row map and only fixed-width statistics leave it; the
     output is a separate features table so downstream analytics never
     rescan media bytes (the operators/multimodal.py scale note).
     """
-    import pandas as pd
+    from wri_data_processing_spark.sources.bmp_codec import decode_bmp
 
-    from wri_data_processing_spark.sources.bmp_codec import decode_bmp, write_bmp
+    def stats(w: int, h: int, px: list) -> list[tuple]:
+        flat = [p for row in px for p in row]
+        means = [float(sum(p[c] for p in flat)) / (w * h) for c in range(3)]
+        return [(w, h, *means, px[0][0][0], px[h - 1][w - 1][2])]
 
-    rows = []
-    for i, name, w, h in _BMP_FIXTURES:
-        rows.append((i, name, bytearray(write_bmp(w, h, _bmp_pixel(i)))))
-    full = write_bmp(16, 8, _bmp_pixel(0))
-    rows.append((12, "corrupt.bmp", bytearray(full[:40])))
-    media = spark.createDataFrame(rows, "media_id long, filename string, payload binary")
-
-    out_schema = (
+    quarantined = _decoded(decode_bmp, stats, 7)
+    return map_rows(
+        _bmp_media(spark),
+        lambda mid, name, payload: quarantined(mid, name, len(payload), payload),
         "media_id long, filename string, n_bytes long, width int, height int, "
         "mean_r double, mean_g double, mean_b double, "
-        "first_px_r int, last_px_b int, success boolean"
+        "first_px_r int, last_px_b int, success boolean",
     )
-
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "filename", "n_bytes", "width",
-                                   "height", "mean_r", "mean_g", "mean_b",
-                                   "first_px_r", "last_px_b", "success")}
-            for mid, name, payload in zip(pdf["media_id"], pdf["filename"],
-                                          pdf["payload"]):
-                raw = bytes(payload)
-                out["media_id"].append(int(mid))
-                out["filename"].append(name)
-                out["n_bytes"].append(len(raw))
-                try:
-                    w, h, px = decode_bmp(raw)
-                    n = w * h
-                    flat = [p for row in px for p in row]
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    for c, k in enumerate(("mean_r", "mean_g", "mean_b")):
-                        out[k].append(float(sum(p[c] for p in flat)) / n)
-                    out["first_px_r"].append(px[0][0][0])
-                    out["last_px_b"].append(px[h - 1][w - 1][2])
-                    out["success"].append(True)
-                except ValueError:
-                    for k in ("width", "height", "mean_r", "mean_g", "mean_b",
-                              "first_px_r", "last_px_b"):
-                        out[k].append(None)
-                    out["success"].append(False)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, out_schema)
 
 
 # ---- Perceptual near-dup over the EXECUTED decode path (dHash) ----------
@@ -437,33 +443,27 @@ _DHASH_VALUES = ", ".join(
 )
 
 
+def _dhash_media(spark: SparkSession) -> DataFrame:
+    """Every _dhash_fixtures image through the pure-Python BMP writer."""
+    from wri_data_processing_spark.sources.bmp_codec import write_bmp
+
+    return _media(
+        spark,
+        [(mid, name, write_bmp(w, h, pxf)) for mid, name, w, h, pxf in _dhash_fixtures()],
+    )
+
+
 def _hashed_fixtures(spark: SparkSession, col: str, hash_rows) -> DataFrame:
-    """(media_id, filename, ``col``) for every _dhash_fixtures image: the
-    fixture is encoded with the pure-Python BMP writer, and inside
-    mapInPandas each payload is decoded and hashed by ``hash_rows``
+    """(media_id, filename, ``col``) for every _dhash_fixtures image: inside
+    the Arrow row map each payload is decoded and hashed by ``hash_rows``
     (decoded pixel rows -> signed int64)."""
-    import pandas as pd
+    from wri_data_processing_spark.sources.bmp_codec import decode_bmp
 
-    from wri_data_processing_spark.sources.bmp_codec import decode_bmp, write_bmp
-
-    rows = [
-        (mid, name, bytearray(write_bmp(w, h, pxf)))
-        for mid, name, w, h, pxf in _dhash_fixtures()
-    ]
-    media = spark.createDataFrame(rows, "media_id long, filename string, payload binary")
-
-    def run(batches):
-        for pdf in batches:
-            out = {"media_id": [], "filename": [], col: []}
-            for mid, name, payload in zip(pdf["media_id"], pdf["filename"],
-                                          pdf["payload"]):
-                _w, _h, px = decode_bmp(bytes(payload))
-                out["media_id"].append(int(mid))
-                out["filename"].append(name)
-                out[col].append(hash_rows(px))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, f"media_id long, filename string, {col} long")
+    return map_rows(
+        _dhash_media(spark),
+        lambda mid, name, payload: [(mid, name, hash_rows(decode_bmp(payload)[2]))],
+        f"media_id long, filename string, {col} long",
+    )
 
 
 def _banded_hamming_pairs(
@@ -533,7 +533,7 @@ def _banded_hamming_oracle(
 def multimodal_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-image 64-bit difference hash (dHash) computed from REAL decoded
     pixels: fixtures are encoded with the pure-Python BMP writer, decoded
-    inside mapInPandas (sources/bmp_codec.py), area-pooled onto a 9x8
+    inside the Arrow row map (sources/bmp_codec.py), area-pooled onto a 9x8
     integer grid, and hashed by adjacent-cell mean comparisons — the
     standard perceptual fingerprint, here with exact integer arithmetic so
     the VALUES oracle (stated from the pattern, not the codec) pins the
@@ -623,7 +623,7 @@ def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image RESIZE through the executed decode boundary — the third of
     the four L5 media operations (decode / feature-extract / RESIZE /
     frame-sample) made real: payloads decode with the pure-Python BMP
-    codec inside mapInPandas, downsample to an 8x8 nearest-neighbor
+    codec inside the Arrow row map, downsample to an 8x8 nearest-neighbor
     thumbnail with the integer index map src = dst * src_dim // dst_dim
     (the standard NN resize, all-integer so there is nothing to round),
     and emit integer channel sums + the two corner pixels. The VALUES
@@ -636,38 +636,20 @@ def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     A production variant emitting thumbnail BYTES writes them to a
     separate table in the same pass — media bytes still never shuffle.
     """
-    import pandas as pd
-
-    from wri_data_processing_spark.sources.bmp_codec import decode_bmp, write_bmp
+    from wri_data_processing_spark.sources.bmp_codec import decode_bmp
 
     t = _RESIZE_TARGET
-    rows = [
-        (mid, name, bytearray(write_bmp(w, h, pxf)))
-        for mid, name, w, h, pxf in _dhash_fixtures()
-    ]
-    media = spark.createDataFrame(rows, "media_id long, filename string, payload binary")
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "filename", "sum_r", "sum_g",
-                                   "sum_b", "tl_r", "br_b")}
-            for mid, name, payload in zip(pdf["media_id"], pdf["filename"],
-                                          pdf["payload"]):
-                w, h, px = decode_bmp(bytes(payload))
-                thumb = [[px[y * h // t][x * w // t] for x in range(t)]
-                         for y in range(t)]
-                flat = [p for row in thumb for p in row]
-                out["media_id"].append(int(mid))
-                out["filename"].append(name)
-                out["sum_r"].append(sum(p[0] for p in flat))
-                out["sum_g"].append(sum(p[1] for p in flat))
-                out["sum_b"].append(sum(p[2] for p in flat))
-                out["tl_r"].append(thumb[0][0][0])
-                out["br_b"].append(thumb[t - 1][t - 1][2])
-            yield pd.DataFrame(out)
+    def thumbnail(mid: int, name: str, payload: bytes) -> list[tuple]:
+        w, h, px = decode_bmp(payload)
+        thumb = [[px[y * h // t][x * w // t] for x in range(t)] for y in range(t)]
+        flat = [p for row in thumb for p in row]
+        sums = [sum(p[c] for p in flat) for c in range(3)]
+        return [(mid, name, *sums, thumb[0][0][0], thumb[t - 1][t - 1][2])]
 
-    return media.mapInPandas(
-        run,
+    return map_rows(
+        _dhash_media(spark),
+        thumbnail,
         "media_id long, filename string, sum_r long, sum_g long, sum_b long, "
         "tl_r int, br_b int",
     )
@@ -727,7 +709,7 @@ def multimodal_audio_features_real(spark: SparkSession, sf_dir: str) -> DataFram
     """Audio feature extraction with NO stub — the WAV sibling of
     multimodal_features_real: real RIFF/PCM16 payloads (one with an extra
     LIST chunk, the chunk-walking trap real files carry) decode with the
-    pure-Python codec (sources/wav_codec.py) inside mapInPandas;
+    pure-Python codec (sources/wav_codec.py) inside the Arrow row map;
     recovered sample statistics — amplitude min/max/sum, sign
     zero-crossing count (the classic cheap voiced/unvoiced signal) — are
     ALL-INTEGER and checked against a VALUES oracle stated from the
@@ -738,8 +720,6 @@ def multimodal_audio_features_real(spark: SparkSession, sf_dir: str) -> DataFram
     the scan stage's Arrow boundary, fixed-width statistics are all that
     leave it, audio bytes never shuffle.
     """
-    import pandas as pd
-
     from wri_data_processing_spark.sources.wav_codec import decode_wav, write_wav
 
     rows = []
@@ -754,42 +734,17 @@ def multimodal_audio_features_real(spark: SparkSession, sf_dir: str) -> DataFram
             extra = b"LIST" + _st.pack("<I", 10) + b"INFOhello "
             payload = payload[:data_at] + extra + payload[data_at:]
             payload = payload[:4] + _st.pack("<I", len(payload) - 8) + payload[8:]
-        rows.append((i, name, bytearray(payload)))
+        rows.append((i, name, payload))
     good = write_wav(_wav_samples(64, 7))
-    rows.append((8, "corrupt.wav", bytearray(good[: len(good) // 2])))
-    media = spark.createDataFrame(rows, "media_id long, filename string, payload binary")
+    rows.append((8, "corrupt.wav", good[: len(good) // 2]))
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "filename", "sample_rate",
-                                   "n_samples", "amp_min", "amp_max", "amp_sum",
-                                   "zero_crossings", "success")}
-            for mid, name, payload in zip(pdf["media_id"], pdf["filename"],
-                                          pdf["payload"]):
-                out["media_id"].append(int(mid))
-                out["filename"].append(name)
-                try:
-                    rate, _ch, s = decode_wav(bytes(payload))
-                    zc = sum(
-                        1 for k in range(1, len(s))
-                        if (s[k - 1] < 0) != (s[k] < 0)
-                    )
-                    out["sample_rate"].append(rate)
-                    out["n_samples"].append(len(s))
-                    out["amp_min"].append(min(s))
-                    out["amp_max"].append(max(s))
-                    out["amp_sum"].append(sum(s))
-                    out["zero_crossings"].append(zc)
-                    out["success"].append(True)
-                except ValueError:
-                    for k in ("sample_rate", "n_samples", "amp_min", "amp_max",
-                              "amp_sum", "zero_crossings"):
-                        out[k].append(None)
-                    out["success"].append(False)
-            yield pd.DataFrame(out)
+    def stats(rate: int, _ch: int, s: list) -> list[tuple]:
+        zc = sum(1 for k in range(1, len(s)) if (s[k - 1] < 0) != (s[k] < 0))
+        return [(rate, len(s), min(s), max(s), sum(s), zc)]
 
-    return media.mapInPandas(
-        run,
+    return map_rows(
+        _media(spark, rows),
+        _decoded(decode_wav, stats, 6),
         "media_id long, filename string, sample_rate int, n_samples long, "
         "amp_min int, amp_max int, amp_sum long, zero_crossings long, "
         "success boolean",
@@ -819,22 +774,21 @@ _VAD_FIXTURES = [
 
 
 def _vad_expected():
+    """Expected VAD rows restated sample by sample, in a different form from
+    the engine's row function so an error in either diverges: energy adds
+    into frame ``k // _VAD_FR``, speech runs come from ``groupby``."""
+    from itertools import groupby
+
     rows = []
     for i, name, rate, n, a in _VAD_FIXTURES:
-        s = _vad_samples(n, a)
         nf = n // _VAD_FR
-        en = [
-            sum(x * x for x in s[f * _VAD_FR:(f + 1) * _VAD_FR])
-            for f in range(nf)
-        ]
-        tot = sum(en)
-        sp = [e * nf * 2 > tot for e in en]
-        best = cur = 0
-        for b in sp:
-            cur = cur + 1 if b else 0
-            best = max(best, cur)
-        first = next((f for f, b in enumerate(sp) if b), -1)
-        rows.append((i, name, nf, sum(sp), best, first))
+        en = [0] * nf
+        for k, v in enumerate(_vad_samples(n, a)[: nf * _VAD_FR]):
+            en[k // _VAD_FR] += v * v
+        sp = [2 * nf * e > sum(en) for e in en]
+        runs = [len(list(g)) for speech, g in groupby(sp) if speech]
+        first = sp.index(True) if True in sp else -1
+        rows.append((i, name, nf, sp.count(True), max(runs, default=0), first))
     return rows
 
 
@@ -857,7 +811,7 @@ _VAD_VALUES = ", ".join(
 )
 def multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Voice-activity detection through the executed WAV decode path: real
-    PCM16 payloads decode inside mapInPandas, split into 64-sample frames
+    PCM16 payloads decode inside the Arrow row map, split into 64-sample frames
     (trailing partial frame dropped), and a frame is "speech" iff its
     energy exceeds HALF the mean frame energy — the comparison is kept
     ALL-INTEGER as E_f · n_frames · 2 > Σ E (no division, nothing to
@@ -875,47 +829,27 @@ def multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     are all that leave it, audio bytes never shuffle; the per-clip state
     is one frame-energy list bounded by clip length, never the corpus.
     """
-    import pandas as pd
-
     from wri_data_processing_spark.sources.wav_codec import decode_wav, write_wav
 
-    rows = [
-        (i, name, bytearray(write_wav(_vad_samples(n, a), sample_rate=rate)))
-        for i, name, rate, n, a in _VAD_FIXTURES
-    ]
-    media = spark.createDataFrame(rows, "media_id long, filename string, payload binary")
+    def vad(mid: int, name: str, payload: bytes) -> list[tuple]:
+        _rate, _ch, s = decode_wav(payload)
+        nf = len(s) // _VAD_FR
+        en = [sum(x * x for x in s[f * _VAD_FR:(f + 1) * _VAD_FR]) for f in range(nf)]
+        tot = sum(en)
+        sp = [e * nf * 2 > tot for e in en]
+        best = cur = 0
+        for b in sp:
+            cur = cur + 1 if b else 0
+            best = max(best, cur)
+        first = next((f for f, b in enumerate(sp) if b), -1)
+        return [(mid, name, nf, sum(sp), best, first)]
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "filename", "n_frames",
-                                   "speech_frames", "longest_run",
-                                   "first_speech")}
-            for mid, name, payload in zip(pdf["media_id"], pdf["filename"],
-                                          pdf["payload"]):
-                _rate, _ch, s = decode_wav(bytes(payload))
-                nf = len(s) // _VAD_FR
-                en = [
-                    sum(x * x for x in s[f * _VAD_FR:(f + 1) * _VAD_FR])
-                    for f in range(nf)
-                ]
-                tot = sum(en)
-                sp = [e * nf * 2 > tot for e in en]
-                best = cur = 0
-                for b in sp:
-                    cur = cur + 1 if b else 0
-                    best = max(best, cur)
-                out["media_id"].append(int(mid))
-                out["filename"].append(name)
-                out["n_frames"].append(nf)
-                out["speech_frames"].append(sum(sp))
-                out["longest_run"].append(best)
-                out["first_speech"].append(
-                    next((f for f, b in enumerate(sp) if b), -1)
-                )
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        run,
+    return map_rows(
+        _media(spark, [
+            (i, name, write_wav(_vad_samples(n, a), sample_rate=rate))
+            for i, name, rate, n, a in _VAD_FIXTURES
+        ]),
+        vad,
         "media_id long, filename string, n_frames long, speech_frames long, "
         "longest_run long, first_speech long",
     )
@@ -965,50 +899,26 @@ def multimodal_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL bins — tolerate-and-log, bad media must not kill the job.
 
     Plan: payloads never shuffle — decode and the whole histogram fold
-    run inside the scan stage's Arrow-batched mapInPandas, and only 8
+    run inside the scan stage's Arrow row map, and only 8
     fixed-width longs per image leave the boundary. At 100 TB histogram
     width, not image size, is the shuffle budget.
     """
-    import pandas as pd
+    from wri_data_processing_spark.sources.bmp_codec import decode_bmp
 
-    from wri_data_processing_spark.sources.bmp_codec import decode_bmp, write_bmp
+    def histogram(_w: int, _h: int, px: list) -> list[tuple]:
+        bins = [0] * 8
+        for row in px:
+            for r, g, b in row:
+                bins[((r * 299 + g * 587 + b * 114) // 1000) // 32] += 1
+        return [tuple(bins)]
 
-    rows = []
-    for i, name, w, h in _BMP_FIXTURES:
-        rows.append((i, name, bytearray(write_bmp(w, h, _bmp_pixel(i)))))
-    full = write_bmp(16, 8, _bmp_pixel(0))
-    rows.append((12, "corrupt.bmp", bytearray(full[:40])))
-    media = spark.createDataFrame(rows, "media_id long, filename string, payload binary")
-
-    bin_cols = [f"b{k}" for k in range(8)]
-    out_schema = "media_id long, filename string, " + ", ".join(
-        f"{c} long" for c in bin_cols
-    ) + ", success boolean"
-
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "filename", *bin_cols, "success")}
-            for mid, name, payload in zip(
-                pdf["media_id"], pdf["filename"], pdf["payload"]
-            ):
-                out["media_id"].append(int(mid))
-                out["filename"].append(name)
-                try:
-                    w, h, px = decode_bmp(bytes(payload))
-                    bins = [0] * 8
-                    for row in px:
-                        for r, g, b in row:
-                            bins[((r * 299 + g * 587 + b * 114) // 1000) // 32] += 1
-                    for k, c in enumerate(bin_cols):
-                        out[c].append(bins[k])
-                    out["success"].append(True)
-                except ValueError:
-                    for c in bin_cols:
-                        out[c].append(None)
-                    out["success"].append(False)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, out_schema)
+    return map_rows(
+        _bmp_media(spark),
+        _decoded(decode_bmp, histogram, 8),
+        "media_id long, filename string, "
+        + ", ".join(f"b{k} long" for k in range(8))
+        + ", success boolean",
+    )
 
 
 def _patchify_expected_values() -> str:
@@ -1066,66 +976,31 @@ def multimodal_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE division de-scaled by the exact 1000, ROUND-6.
 
     Plan shape at scale: payloads never shuffle — decode + patch
-    accumulation run inside the scan's mapInPandas and only the
+    accumulation run inside the scan's Arrow row map and only the
     fixed-width (patch, n, sum) rows leave the boundary; a real ViT
     pipeline swaps the statistics for the flattened patch tensor with
     the SAME partitioning and batch shape.
     """
-    import pandas as pd
+    from wri_data_processing_spark.sources.bmp_codec import decode_bmp
 
-    from wri_data_processing_spark.sources.bmp_codec import decode_bmp, write_bmp
+    def patches(w: int, h: int, px: list) -> list[tuple]:
+        acc = {}
+        for y, row in enumerate(px):
+            for x, (r, g, b) in enumerate(row):
+                key = (y * 2 // h, x * 2 // w)
+                n, s = acc.get(key, (0, 0))
+                acc[key] = (n + 1, s + (r * 299 + g * 587 + b * 114))
+        return [
+            (pr, pc, n, s, round(s / (n * 1000.0), 6))
+            for (pr, pc), (n, s) in sorted(acc.items())
+        ]
 
-    rows = []
-    for i, name, w, h in _BMP_FIXTURES:
-        rows.append((i, name, bytearray(write_bmp(w, h, _bmp_pixel(i)))))
-    full = write_bmp(16, 8, _bmp_pixel(0))
-    rows.append((12, "corrupt.bmp", bytearray(full[:40])))
-    media = spark.createDataFrame(
-        rows, "media_id long, filename string, payload binary"
-    )
-
-    cols = (
-        "media_id", "filename", "patch_row", "patch_col", "n_px",
-        "lum_sum_milli", "mean_lum", "success",
-    )
-    out_schema = (
+    return map_rows(
+        _bmp_media(spark),
+        _decoded(decode_bmp, patches, 5),
         "media_id long, filename string, patch_row int, patch_col int, "
-        "n_px long, lum_sum_milli long, mean_lum double, success boolean"
+        "n_px long, lum_sum_milli long, mean_lum double, success boolean",
     )
-
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for mid, name, payload in zip(
-                pdf["media_id"], pdf["filename"], pdf["payload"]
-            ):
-                try:
-                    w, h, px = decode_bmp(bytes(payload))
-                    acc = {}
-                    for y, row in enumerate(px):
-                        for x, (r, g, b) in enumerate(row):
-                            key = (y * 2 // h, x * 2 // w)
-                            n, s = acc.get(key, (0, 0))
-                            acc[key] = (n + 1, s + (r * 299 + g * 587 + b * 114))
-                    for (pr, pc), (n, s) in sorted(acc.items()):
-                        out["media_id"].append(int(mid))
-                        out["filename"].append(name)
-                        out["patch_row"].append(pr)
-                        out["patch_col"].append(pc)
-                        out["n_px"].append(n)
-                        out["lum_sum_milli"].append(s)
-                        out["mean_lum"].append(round(s / (n * 1000.0), 6))
-                        out["success"].append(True)
-                except ValueError:
-                    out["media_id"].append(int(mid))
-                    out["filename"].append(name)
-                    for c in ("patch_row", "patch_col", "n_px",
-                              "lum_sum_milli", "mean_lum"):
-                        out[c].append(None)
-                    out["success"].append(False)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, out_schema)
 
 
 _PHASH_N = 32  # DCT input grid (NN-resized luma)
@@ -1222,7 +1097,7 @@ def multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently).
 
     Plan shape at scale: the multimodal_features_real contract —
-    payloads decode inside the scan's mapInPandas, only the 8-byte hash
+    payloads decode inside the scan's Arrow row map, only the 8-byte hash
     leaves the boundary.
     """
     return _hashed_fixtures(spark, "phash", _phash_rows)
@@ -1310,8 +1185,8 @@ def multimodal_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop. The 8 c ln c terms sum in FIXED b0..b7 expression order on
     both sides (no unordered fold), ROUND-6.
 
-    Plan: decode + histogram inside the scan's Arrow-batched
-    mapInPandas (only 8 longs leave the boundary); the entropy algebra
+    Plan: decode + histogram inside the scan's Arrow row map (only 8
+    longs leave the boundary); the entropy algebra
     is a JVM-side column expression over the 8-column frame.
     """
     hist = multimodal_image_histogram(spark, sf_dir)

@@ -4,9 +4,9 @@ The container has no image libraries (PIL etc.), so — matching the TIFF
 precedent in sources/tiff_header.py / tiff_fixture.py — the engine ships a
 from-the-public-spec codec for one simple raster format and EXECUTES it:
 `multimodal_features_real` (queries/multimodal.py) writes real BMP bytes
-with `write_bmp`, decodes them with `decode_bmp` inside the Arrow-batched
-mapInPandas boundary, and checks the recovered pixel statistics against a
-VALUES oracle computed from independent arithmetic. A decode bug in any of
+with `write_bmp`, decodes them with `decode_bmp` inside the Arrow row-map
+boundary (operators/row_map.py), and checks the recovered pixel statistics
+against a VALUES oracle computed from independent arithmetic. A decode bug in any of
 the format's three classic traps — 4-byte row padding, BGR byte order,
 bottom-up row storage — shifts the statistics and fails the oracle.
 

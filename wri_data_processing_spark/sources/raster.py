@@ -2,8 +2,9 @@
 
 The reference opens each GeoTIFF header-only via terra/GDAL (no pixel I/O)
 and NEVER raises — failures become (success=FALSE, error=<msg>) rows. Here
-the scan is a ``mapInPandas`` over path partitions: per-partition batches,
-one GDAL handle at a time, error-tolerant per row.
+the scan is one ``map_rows`` call (operators/row_map.py) over the path
+listing: Arrow batches per partition, one GDAL handle at a time,
+error-tolerant per row.
 
 The GDAL call itself is injectable (``reader=``): rasterio when installed
 (the real path on a cluster), otherwise callers supply a reader; the default
@@ -17,10 +18,9 @@ Repartition the listing to ~#executors*4 before scanning.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BooleanType,
@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from wri_data_processing_spark.operators.row_map import map_rows
 
 RASTER_HEADER_SCHEMA = StructType(
     [
@@ -105,18 +107,14 @@ def scan_raster_header(paths: DataFrame, reader: HeaderReader | None = None) -> 
     import os
 
     rd = reader or default_reader
+    cols = [f.name for f in RASTER_HEADER_SCHEMA.fields]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in RASTER_HEADER_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                try:
-                    info = rd(path)
-                except Exception as exc:  # tolerate-and-log, never raise
-                    info = {"filepath": path, "success": False, "error": str(exc)}
-                info.setdefault("filename", os.path.basename(path))
-                rows.append({c: info.get(c) for c in cols})
-            yield pd.DataFrame(rows, columns=cols)
+    def header(path: str) -> list[tuple]:
+        try:
+            info = rd(path)
+        except Exception as exc:  # tolerate-and-log, never raise
+            info = {"filepath": path, "success": False, "error": str(exc)}
+        info.setdefault("filename", os.path.basename(path))
+        return [tuple(info.get(c) for c in cols)]
 
-    return paths.select("path").mapInPandas(run, RASTER_HEADER_SCHEMA)
+    return map_rows(paths.select("path"), header, RASTER_HEADER_SCHEMA)

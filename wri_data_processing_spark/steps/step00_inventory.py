@@ -4,14 +4,14 @@ One declarative job replaces the reference's serial per-file loop:
 
   listing -> classify filter (exclude pruned BEFORE any raster I/O, 00b:71)
           -> resume anti-join vs prior output (00b:57-74)
-          -> mapInPandas header scan (00b:90)
+          -> header scan through the Arrow row map (00b:90)
           -> classification columns (00b:96-99)
           -> assumption validation (00b:105-141)
           -> split by success/passes_assumptions (00b:163-165)
 
 Scale notes: the only shuffle is the optional resume anti-join (broadcast
 when the prior inventory is small). Everything else is narrow: filter,
-mapInPandas, column adds. Header reads parallelize per partition — the
+the header row map, column adds. Header reads parallelize per partition — the
 reference processed 82 files serially on a 300-core host; here parallelism
 is ``listing.repartition(n)``.
 """

@@ -3,9 +3,10 @@
 The reference loops serially over metadata rows shelling out to
 ``gdal_translate -of COG`` per file (01b:92-104), with skip-if-exists and
 missing-input guards. The Spark shape: per-row guards stay (they are
-filesystem probes), conversion fans out across executors via mapInPandas —
-file-level parallelism the reference never had — and each row yields a
-status record so A1 status accounting is a plain groupBy.
+filesystem probes), conversion fans out across executors through the Arrow
+row map (``map_rows``, operators/row_map.py) — file-level parallelism the
+reference never had — and each row yields a status record so A1 status
+accounting is a plain groupBy.
 
 The converter is injectable. With no converter given, ``gdal_translate``
 runs when it is on PATH (options mirror prototypes/01a_make_cog_one.R:26-31:
@@ -25,12 +26,13 @@ from __future__ import annotations
 
 import os
 import subprocess
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+
+from wri_data_processing_spark.operators.row_map import map_rows
 
 # prototypes/01a_make_cog_one.R:26-31
 DEFAULT_COG_OPTIONS = {
@@ -91,25 +93,19 @@ def step01_cog(
             converter = cog_convert
     conv = converter
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for src, name in zip(pdf["filepath"], pdf["cog_filename"]):
-                dst = os.path.join(out_dir, name)
-                if not os.path.exists(src):
-                    rows.append((name, "missing", None))
-                    continue
-                if os.path.exists(dst):
-                    rows.append((name, "skipped", None))
-                    continue
-                try:
-                    conv(src, dst)
-                    rows.append((name, "written", None))
-                except Exception as exc:
-                    rows.append((name, "failed", str(exc)))
-            yield pd.DataFrame(rows, columns=["cog_filename", "status", "detail"])
+    def status(src: str, name: str) -> list[tuple]:
+        dst = os.path.join(out_dir, name)
+        if not os.path.exists(src):
+            return [(name, "missing", None)]
+        if os.path.exists(dst):
+            return [(name, "skipped", None)]
+        try:
+            conv(src, dst)
+        except Exception as exc:
+            return [(name, "failed", str(exc))]
+        return [(name, "written", None)]
 
-    return meta.select("filepath", "cog_filename").mapInPandas(run, STATUS_SCHEMA)
+    return map_rows(meta.select("filepath", "cog_filename"), status, STATUS_SCHEMA)
 
 
 def status_counts(statuses: DataFrame) -> DataFrame:
